@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, BindReferences, Expression, Predicate, PredicateHelper, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, BasePredicate, BindReferences, Expression, Predicate, PredicateHelper, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
@@ -157,18 +157,30 @@ case class DynamicFilterExec(condition: Expression, child: SparkPlan)
     val cond = condition
     val childOutput = child.output
     child.execute().mapPartitionsWithIndex { (index, iter) =>
-      val predicate = Predicate.create(cond, childOutput)
-      predicate.initialize(index)
-      iter.filter { row =>
-        val keep = predicate.eval(row)
-        if (keep) numOutputRows += 1
-        keep
-      }
+      DynamicFilterExec.filterRows(Predicate.create(cond, childOutput), index, numOutputRows)(iter)
     }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): DynamicFilterExec =
     copy(child = newChild)
+}
+
+object DynamicFilterExec {
+
+  /** The rows of `iter` that `predicate` keeps, each counted in
+    * `numOutputRows`: the row loop shared by the job path
+    * ([[DynamicFilterExec.doExecute]]) and the driver tier
+    * ([[graft.prepared.DriverTier]]).
+    */
+  def filterRows(predicate: BasePredicate, partitionIndex: Int, numOutputRows: SQLMetric)(
+      iter: Iterator[InternalRow]): Iterator[InternalRow] = {
+    predicate.initialize(partitionIndex)
+    iter.filter { row =>
+      val keep = predicate.eval(row)
+      if (keep) numOutputRows += 1
+      keep
+    }
+  }
 }
 
 /** Session wiring (≡ the reference's SessionStateBuilder wiring in every

@@ -2,11 +2,14 @@ package graft.prepared
 
 import java.util.IdentityHashMap
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{BaseSubqueryExec, ExecSubqueryExpression, ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+import org.apache.spark.sql.types.DataType
 
 /** Placeholder detection and substitution (engine-neutral equivalent of the
   * reference's `replace_placeholders`, `src/param_resolver.rs:77-100`, and
@@ -69,6 +72,17 @@ object Params {
     throw new IllegalArgumentException(
       s"Placeholder '$id' was not provided a value")
 
+  /** The typed literal for one bound value. A value of the wrong type fails
+    * naming the placeholder and both types; values are never coerced.
+    */
+  private def literal(id: String, dt: DataType, v: Any): Literal =
+    try Literal.create(v, dt)
+    catch {
+      case NonFatal(e) =>
+        throw new IllegalArgumentException(
+          s"Placeholder '$id' expects ${dt.catalogString}, got ${v.getClass.getName} ($v)", e)
+    }
+
   /** All placeholder ids in a LOGICAL plan, descending into subquery plans
     * (the logical analog of the SparkPlan overload — [[SubqueryExpression]]
     * holds its plan outside the node's `children`).
@@ -97,7 +111,7 @@ object Params {
 
   private def bindLogicalUnchecked(plan: LogicalPlan, params: Map[String, Any]): LogicalPlan =
     plan.transformAllExpressions {
-      case ParamPlaceholder(id, dt) => Literal.create(params(id), dt)
+      case ParamPlaceholder(id, dt) => literal(id, dt, params(id))
       case s: SubqueryExpression if placeholderIds(s.plan).nonEmpty =>
         s.withNewPlan(bindLogicalUnchecked(s.plan, params))
     }
@@ -108,7 +122,7 @@ object Params {
   def substitute(e: Expression, params: Map[String, Any]): Expression =
     e.transform { case ParamPlaceholder(id, dt) =>
       params.get(id) match {
-        case Some(v) => Literal.create(v, dt)
+        case Some(v) => literal(id, dt, v)
         case None    => missing(id)
       }
     }
@@ -140,7 +154,7 @@ object Params {
         // BoundParam (not Literal) so every execution of the statement hits
         // the generated-code cache — a Literal would inline the value into
         // the source and force a janino recompile per execute
-        BoundParam(id, dt, Literal.create(params(id), dt).value)
+        BoundParam(id, dt, literal(id, dt, params(id)).value)
       case sub: ExecSubqueryExpression if placeholderIds(sub.plan).nonEmpty =>
         // clone the subquery plan with bound literals; the fresh instance
         // re-executes on next run (its result future is per-instance)

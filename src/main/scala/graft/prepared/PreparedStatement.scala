@@ -37,13 +37,6 @@ class PreparedStatement(
   /** Placeholder ids this statement expects (e.g. "$1", "$2"). */
   lazy val parameterIds: Seq[String] = Params.placeholderIds(physicalPlan)
 
-  /** True when this statement was prepared with `adaptive = true` — each
-    * execute re-plans from the cached analyzed plan under AQE instead of
-    * re-binding the frozen physical plan (see
-    * [[PreparedStatements.prepare]] for the trade).
-    */
-  def isAdaptive: Boolean = adaptiveLogical.isDefined
-
   /** Bind `params` and return a lazy DataFrame over the bound plan.
     *
     * Static mode (default): no Catalyst work here — one cheap plan-tree
@@ -86,6 +79,12 @@ class PreparedStatement(
     * DataFrame wrapper entirely (the reference's execute() likewise streams
     * record batches straight from the physical plan,
     * `parameterized_statement.rs:64-87`).
+    *
+    * Static mode runs on one of two tiers ([[Internals.collectPhysical]]):
+    * a bound plan that is a narrow project/filter chain over a driver-resident
+    * leaf — a keyed mem table answering the bound keys — is evaluated on the
+    * driver with no Spark job; any other plan runs as one job.
+    * [[DriverTier]] states the eligibility rule.
     */
   def executeCollect(params: Map[String, Any]): Array[Row] = adaptiveLogical match {
     case Some(_) => execute(params).collect()

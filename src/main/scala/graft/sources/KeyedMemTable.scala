@@ -16,18 +16,22 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** An in-memory keyed table as a DataSource V2 provider with key-lookup
   * pushdown: equality / IN filters on the key column are answered from a
-  * hash index on the driver — only the matching rows are ever shipped to an
-  * executor. This is the Spark analog of the reference's provider-side
-  * dynamic-filter optimization, where the "temporal database" provider
-  * served pushed point/IN lookups at 55×/116× over scanning
+  * hash index on the driver — only the matching rows are ever read. This is
+  * the Spark analog of the reference's provider-side dynamic-filter
+  * optimization, where the "temporal database" provider served pushed
+  * point/IN lookups at 55×/116× over scanning
   * (`/root/reference/datafusion-dynamic-filter/README.md:37-51`).
   *
   * Two pushdown paths:
-  *   - planning-time ([[KeyedScanBuilder.pushFilters]]) for ordinary SQL;
+  *   - planning-time ([[KeyedScanBuilder.pushFilters]]) for ordinary SQL,
+  *     which ships the matching rows to an executor in a one-task job;
   *   - execute-time for prepared statements: `ScanRebind` swaps a bound
   *     key set into the scan via [[KeyedMemScan.withKeys]], so every
   *     `execute(params)` is an index lookup even though the plan was built
-  *     with unresolved placeholders.
+  *     with unresolved placeholders. `executeCollect` then evaluates a
+  *     narrow project/filter chain over the keyed scan on the driver with
+  *     no job at all (`graft.prepared.DriverTier`); a full scan
+  *     (`keys = None`) or any wider plan still runs as a job.
   */
 object KeyedMemTables {
 

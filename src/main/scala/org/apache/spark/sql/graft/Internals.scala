@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
 
+import _root_.graft.prepared.DriverTier
+
 /** Thin access layer over Spark internal (`private[sql]`) APIs used by the
   * graft engine. Kept in one place so the rest of the codebase stays on the
   * public surface.
@@ -63,11 +65,17 @@ object Internals {
     * which costs ~20 ms per call) — the prepared-statement hot path's analog
     * of the reference streaming record batches straight out of
     * `ExecutionPlan::execute`.
+    *
+    * Two tiers, chosen from the plan alone: a narrow project/filter chain
+    * over a driver-resident leaf (a keyed mem scan with pushed keys) is
+    * evaluated on the driver with no Spark job ([[DriverTier]] states the
+    * exact rule); every other plan runs as a job through `executeCollect()`.
     */
   def collectPhysical(plan: SparkPlan): Array[org.apache.spark.sql.Row] = {
     val schema = org.apache.spark.sql.types.StructType(
       plan.output.map(a => org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable, a.metadata)))
     val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(schema)
-    plan.executeCollect().map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row])
+    val rows = DriverTier.rows(plan).getOrElse(plan.executeCollect().iterator)
+    rows.map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row]).toArray
   }
 }

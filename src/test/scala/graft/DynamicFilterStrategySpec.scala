@@ -1,11 +1,13 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.types.IntegerType
 
 import graft.plans.{DynamicFilterExec, DynamicFilterNode, DynamicFilterStrategy}
-import graft.prepared.ParamPlaceholder
+import graft.prepared.{ParamPlaceholder, PreparedStatements}
 
 /** Ports of the reference planner unit tests
   * (`/root/reference/datafusion-dynamic-filter/src/planner.rs:48-163`).
@@ -63,5 +65,48 @@ class DynamicFilterStrategySpec extends SparkTestBase {
     Internals.collectPhysical(plan) should have length 10
     exec.metrics("numOutputRows").value shouldBe 10L
     exec.metrics("bindTime").value should be > 0L
+  }
+
+  // plans whose leaf is not a keyed scan with pushed keys (a local relation
+  // included), or whose expressions cannot be evaluated once on the driver,
+  // keep the job path
+  test("other plans keep the Spark job") {
+    import spark.implicits._
+    val cached = (0L until 100L).map(i => (i, s"c_$i")).toDF("id", "name")
+    cached.cache().count()
+    cached.createOrReplaceTempView("dfs_cached")
+    val dir = Files.createTempDirectory("graft_dfs_parquet").toFile
+    dir.deleteOnExit()
+    spark.range(0, 100).selectExpr("id", "concat('p_', id) AS name")
+      .write.parquet(dir.getAbsolutePath + "/t")
+    spark.read.parquet(dir.getAbsolutePath + "/t").createOrReplaceTempView("dfs_parquet")
+    spark.range(0, 100).createOrReplaceTempView("dfs_range")
+    (0L until 200L).map(i => (i, s"t_${i % 7}")).toDF("id", "tag")
+      .createOrReplaceTempView("dfs_local")
+    try {
+      val single = Seq(
+        "SELECT id, name FROM dfs_cached WHERE id = $1",
+        "SELECT id, name FROM dfs_parquet WHERE id = $1",
+        "SELECT id FROM dfs_range WHERE id = $1",
+        "SELECT id, upper(tag) AS t FROM dfs_local WHERE id = $1",
+        "SELECT id, rand() AS r FROM dfs_local WHERE id = $1")
+      single.foreach { sql =>
+        val (rows, jobs) =
+          jobsRun(PreparedStatements.prepare(spark, sql).executeCollect(Map("$1" -> 7L)))
+        withClue(sql) {
+          jobs shouldBe 1
+          rows.map(_.getLong(0)).toSeq shouldBe Seq(7L)
+        }
+      }
+      // the scalar subquery runs as its own job before the main one
+      val sub = PreparedStatements.prepare(spark,
+        "SELECT id FROM dfs_local WHERE id = $1 AND tag = (SELECT max(tag) FROM dfs_local)")
+      val (rows, jobs) = jobsRun(sub.executeCollect(Map("$1" -> 6L)))
+      rows.map(_.getLong(0)).toSeq shouldBe Seq(6L)
+      jobs shouldBe 2
+    } finally {
+      spark.catalog.uncacheTable("dfs_cached")
+      Seq("dfs_cached", "dfs_parquet", "dfs_range", "dfs_local").foreach(spark.catalog.dropTempView)
+    }
   }
 }

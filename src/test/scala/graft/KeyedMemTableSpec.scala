@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.graft.Internals
 
+import graft.plans.DynamicFilterExec
 import graft.prepared.{Params, PreparedStatements, ScanRebind}
 import graft.sources.{KeyedMemScan, KeyedMemTables}
 
@@ -142,5 +144,66 @@ class KeyedMemTableSpec extends SparkTestBase {
     val ks = rebound.collectFirst { case b: BatchScanExec => b }.get
       .scan.asInstanceOf[KeyedMemScan]
     ks.keys.get.toSet shouldBe Set[Any](10L, 20L, 30L)
+  }
+
+  private def canon(rows: Array[Row]): Seq[String] = rows.map(_.toString).sorted.toSeq
+
+  // a prepared lookup whose keys the index answers never leaves the driver:
+  // the rows already sit in the driver-side hash map, so a Spark job would
+  // only add scheduling cost (DriverTier)
+  test("prepared keyed lookups run on the driver with no Spark job") {
+    setup
+    val point = PreparedStatements.prepare(spark, "SELECT k, name, score FROM kt WHERE k = $1")
+    val in = PreparedStatements.prepare(spark, "SELECT k, name FROM kt WHERE k IN ($1, $2, $3)")
+    val residual = PreparedStatements.prepare(
+      spark, "SELECT k FROM kt WHERE k IN ($1, $2, $3, $4) AND score >= $5")
+    val cases = Seq[(graft.prepared.PreparedStatement, Map[String, Any], String)](
+      (point, Map("$1" -> 42L), "SELECT k, name, score FROM kt WHERE k = 42"),
+      (point, Map("$1" -> null), "SELECT k, name, score FROM kt WHERE k = NULL"),
+      (point, Map("$1" -> 5000L), "SELECT k, name, score FROM kt WHERE k = 5000"),
+      (in, Map("$1" -> 1L, "$2" -> 5L, "$3" -> 900L),
+        "SELECT k, name FROM kt WHERE k IN (1, 5, 900)"),
+      (residual, Map("$1" -> 1L, "$2" -> 2L, "$3" -> 3L, "$4" -> 4L, "$5" -> 3.0),
+        "SELECT k FROM kt WHERE k IN (1, 2, 3, 4) AND score >= 3.0"))
+    cases.foreach { case (st, params, sql) =>
+      val (rows, jobs) = jobsRun(st.executeCollect(params))
+      withClue(sql) {
+        jobs shouldBe 0
+        canon(rows) shouldBe canon(spark.sql(sql).collect())
+      }
+    }
+    // without pushed keys the scan is a full table scan: it keeps the job
+    val unkeyed = PreparedStatements.prepare(spark, "SELECT k FROM kt WHERE score = $1")
+    val (rows, jobs) = jobsRun(unkeyed.executeCollect(Map("$1" -> 7.0)))
+    jobs shouldBe 1
+    rows.length shouldBe 20
+  }
+
+  test("driver-tier metrics equal the job path's") {
+    setup
+    val st = PreparedStatements.prepare(
+      spark, "SELECT k FROM kt WHERE k IN ($1, $2, $3, $4) AND score >= $5")
+    val params = Map[String, Any]("$1" -> 1L, "$2" -> 2L, "$3" -> 3L, "$4" -> 4L, "$5" -> 3.0)
+    def metricsOf(plan: org.apache.spark.sql.execution.SparkPlan) = {
+      val scan = plan.collectFirst { case b: BatchScanExec => b }.get
+      val filter = plan.collectFirst { case d: DynamicFilterExec => d }.get
+      (scan.metrics("numOutputRows").value, filter.metrics("numOutputRows").value,
+        filter.metrics("bindTime").value)
+    }
+
+    val driverPlan = st.boundPlan(params)
+    val (rows, jobs) = jobsRun(Internals.collectPhysical(driverPlan))
+    jobs shouldBe 0
+    rows.map(_.getLong(0)).sorted shouldBe Array(3L, 4L)
+    val (shipped, returned, bindTime) = metricsOf(driverPlan)
+    shipped shouldBe 4L
+    returned shouldBe 2L
+    bindTime should be > 0L
+
+    // the same bound plan run as a job fills the same counters
+    val jobPlan = st.boundPlan(params)
+    jobPlan.executeCollect() should have length 2
+    val (jobShipped, jobReturned, _) = metricsOf(jobPlan)
+    (jobShipped, jobReturned) shouldBe ((shipped, returned))
   }
 }

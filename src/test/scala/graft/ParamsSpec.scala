@@ -38,6 +38,30 @@ class ParamsSpec extends SparkTestBase {
     ex.getMessage should include("'$1' was not provided a value")
   }
 
+  // a wrong-typed value is an error naming the placeholder, never a silent
+  // coercion — through the static (Params.bind) and adaptive (bindLogical)
+  // paths alike
+  test("wrong-typed bind value raises with the placeholder name and both types") {
+    spark.range(0, 10).createOrReplaceTempView("params_t")
+    val sql = "SELECT id FROM params_t WHERE id = $1"
+    val static = graft.prepared.PreparedStatements.prepare(spark, sql)
+    val adaptive = graft.prepared.PreparedStatements.prepare(spark, sql, adaptive = true)
+    Seq[(Any, String)](
+      5 -> "java.lang.Integer (5)",
+      "abc" -> "java.lang.String (abc)",
+      5.0 -> "java.lang.Double (5.0)").foreach { case (v, got) =>
+      val expected = s"Placeholder '$$1' expects bigint, got $got"
+      intercept[IllegalArgumentException] {
+        static.executeCollect(Map("$1" -> v))
+      }.getMessage shouldBe expected
+      intercept[IllegalArgumentException] {
+        adaptive.execute(Map("$1" -> v))
+      }.getMessage shouldBe expected
+    }
+    static.executeCollect(Map("$1" -> 5L)).map(_.getLong(0)) shouldBe Array(5L)
+    static.executeCollect(Map("$1" -> null)) shouldBe empty
+  }
+
   // param_resolver.rs:170-178 — expressions without placeholders untouched
   test("non-placeholder expressions are untouched") {
     val e = EqualTo(id, Literal(3))

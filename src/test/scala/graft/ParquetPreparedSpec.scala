@@ -140,7 +140,6 @@ class ParquetPreparedSpec extends SparkTestBase {
     val sql = """SELECT count(*) AS n FROM pusers a JOIN pusers b ON a.id = b.id
                 |WHERE a.score >= $1""".stripMargin
     val st = PreparedStatements.prepare(spark, sql, adaptive = true)
-    st.isAdaptive shouldBe true
 
     val df = st.execute(Map("$1" -> 999.0))
     df.collect() shouldBe Array(Row(200L))
@@ -152,7 +151,6 @@ class ParquetPreparedSpec extends SparkTestBase {
     st.execute(Map("$1" -> 998.0)).collect() shouldBe Array(Row(400L))
 
     val static = prepare(sql)
-    static.isAdaptive shouldBe false
     static.execute(Map("$1" -> 999.0)).collect() shouldBe Array(Row(200L))
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.prepared.PreparedStatements
+import graft.sources.KeyedMemTables
 
 /** The semantic invariant the whole reference implicitly asserts (its bench
   * computes the same total_rows across all three paths,
@@ -53,6 +54,34 @@ object PreparedEquivalenceProps extends Properties("PreparedEquivalence") {
         .sql(s"SELECT count(*) AS n FROM prop_items WHERE id >= $a AND id <= $b")
         .head().getLong(0)
       prepared == unprepared
+    }
+
+  private lazy val keyedSts = {
+    val s = SparkTestBase.session
+    import s.implicits._
+    KeyedMemTables.register(s,
+      "prop_keyed",
+      (0L until 500L).map(i => (i, s"n_${i % 37}", (i % 91).toDouble)).toDF("id", "tag", "score"),
+      "id")
+    (PreparedStatements.prepare(s, "SELECT id, tag, score FROM prop_keyed WHERE id = $1"),
+      PreparedStatements.prepare(s, "SELECT id, tag FROM prop_keyed WHERE id IN ($1, $2, $3)"))
+  }
+
+  private def literalRows(sql: String): Seq[String] =
+    SparkTestBase.session.sql(sql).collect().map(_.toString).sorted.toSeq
+
+  // the keyed source answers prepared lookups on the driver (no job); for
+  // any keys — present, absent or negative — the rows must equal
+  // the literal SQL, which plans its own pushdown
+  property("prepared keyed point and IN lookups == unprepared literal SQL") =
+    Prop.forAll(Gen.choose(-50L, 600L), Gen.choose(-50L, 600L), Gen.choose(-50L, 600L)) {
+      (a, b, c) =>
+        val (pointSt, inSt) = keyedSts
+        val point = pointSt.executeCollect(Map("$1" -> a)).map(_.toString).sorted.toSeq
+        val in = inSt.executeCollect(Map("$1" -> a, "$2" -> b, "$3" -> c))
+          .map(_.toString).sorted.toSeq
+        point == literalRows(s"SELECT id, tag, score FROM prop_keyed WHERE id = $a") &&
+        in == literalRows(s"SELECT id, tag FROM prop_keyed WHERE id IN ($a, $b, $c)")
     }
 
   private lazy val adaptiveSt = {

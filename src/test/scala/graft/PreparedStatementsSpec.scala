@@ -262,4 +262,49 @@ class PreparedStatementsSpec extends SparkTestBase {
       }), 2.minutes)
     results shouldBe (1 to 5).map(Seq(_))
   }
+
+  // both execution tiers under contention: the keyed statement runs on the
+  // driver, the parquet one as a Spark job; every result is checked against
+  // the literal-inlined query for its key (run once per key up front, so the
+  // threads contend on the prepared statements, not on SQL planning)
+  test("16 threads x 100 executeCollects stay independent on both tiers") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+    import spark.implicits._
+    val df = (0L until 2000L).map(i => (i, s"v_$i")).toDF("k", "name")
+    graft.sources.KeyedMemTables.register(spark, "cc_keyed", df, "k")
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_parquet").toFile
+    dir.deleteOnExit()
+    df.write.parquet(dir.getAbsolutePath + "/t")
+    spark.read.parquet(dir.getAbsolutePath + "/t").createOrReplaceTempView("cc_parquet")
+    val views = Seq("cc_keyed", "cc_parquet")
+    val statements = views.map { view =>
+      PreparedStatements.prepare(spark, s"SELECT k, name FROM $view WHERE k = $$1")
+    }
+    // present, absent and negative keys
+    val keys = (0 until 40).map(i => i * 53L - 60L)
+    val literal = (for (view <- views; k <- keys) yield (view, k) ->
+      spark.sql(s"SELECT k, name FROM $view WHERE k = $k").collect().map(_.toString).toSeq).toMap
+    val mismatches = new ConcurrentLinkedQueue[String]()
+    val pool = Executors.newFixedThreadPool(16)
+    try {
+      val runs = (0 until 16).map { t =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            val rnd = new scala.util.Random(t)
+            for (_ <- 0 until 100; (view, st) <- views.zip(statements)) {
+              val k = keys(rnd.nextInt(keys.length))
+              val got = st.executeCollect(Map("$1" -> k)).map(_.toString).toSeq
+              if (got != literal((view, k))) mismatches.add(s"$view k=$k: $got")
+            }
+          }
+        })
+      }
+      runs.foreach(_.get(10, TimeUnit.MINUTES))
+    } finally {
+      pool.shutdown()
+      graft.sources.KeyedMemTables.unregister(spark, "cc_keyed")
+      spark.catalog.dropTempView("cc_parquet")
+    }
+    mismatches.toArray.toSeq shouldBe empty
+  }
 }

@@ -10,6 +10,10 @@ import org.scalatest.matchers.should.Matchers
   */
 trait SparkTestBase extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Runs `body` and counts the Spark jobs it started. */
+  def jobsRun[T](body: => T): (T, Int) =
+    org.apache.spark.graft.JobCounter.jobsRun(spark.sparkContext)(body)
 }
 
 object SparkTestBase {
