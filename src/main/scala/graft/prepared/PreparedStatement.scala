@@ -82,8 +82,10 @@ class PreparedStatement(
     *
     * Static mode runs on one of two tiers ([[Internals.collectPhysical]]):
     * a bound plan that is a narrow project/filter chain over a driver-resident
-    * leaf — a keyed mem table answering the bound keys — is evaluated on the
-    * driver with no Spark job; any other plan runs as one job.
+    * leaf — a keyed mem table answering the bound keys, or a materialized
+    * cached table whose blocks are all in the driver's block manager — is
+    * evaluated on the driver with no Spark job; any other plan runs as one
+    * job.
     * [[DriverTier]] states the eligibility rule.
     */
   def executeCollect(params: Map[String, Any]): Array[Row] = adaptiveLogical match {

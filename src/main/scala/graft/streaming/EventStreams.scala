@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -27,14 +27,6 @@ object EventStreams {
   case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
 
   case class UserRunning(user_id: Long, n_events: Long, total_value: Double)
-
-  /** File-source entry point: stream the events parquet directory with the
-    * batch table's schema (`readStream` needs it declared).
-    */
-  def fromParquetDir(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    spark.readStream.schema(schema).parquet(s"$dir/events.parquet")
-  }
 
   /** Event-time tumbling-window counts with a watermark: late events beyond
     * `lateness` are dropped and closed windows are emitted exactly once in

@@ -1,12 +1,21 @@
 package org.apache.spark.sql.graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.columnar.CachedBatch
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.columnar.{
+  DefaultCachedBatch, DefaultCachedBatchSerializer, GenerateColumnAccessor, InMemoryTableScanExec}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.UserDefinedType
+import org.apache.spark.storage.{BlockId, BlockManager, RDDBlockId}
 
 import _root_.graft.prepared.DriverTier
 
@@ -66,10 +75,12 @@ object Internals {
     * of the reference streaming record batches straight out of
     * `ExecutionPlan::execute`.
     *
-    * Two tiers, chosen from the plan alone: a narrow project/filter chain
-    * over a driver-resident leaf (a keyed mem scan with pushed keys) is
-    * evaluated on the driver with no Spark job ([[DriverTier]] states the
-    * exact rule); every other plan runs as a job through `executeCollect()`.
+    * Two tiers, chosen from the plan and the cache alone: a narrow
+    * project/filter chain over a driver-resident leaf (a keyed mem scan with
+    * pushed keys, or a row-based scan of a materialized cache whose blocks
+    * all sit in this JVM's block manager) is evaluated on the driver with no
+    * Spark job ([[DriverTier]] states the exact rule); every other plan runs
+    * as a job through `executeCollect()`.
     */
   def collectPhysical(plan: SparkPlan): Array[org.apache.spark.sql.Row] = {
     val schema = org.apache.spark.sql.types.StructType(
@@ -77,5 +88,84 @@ object Internals {
     val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(schema)
     val rows = DriverTier.rows(plan).getOrElse(plan.executeCollect().iterator)
     rows.map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row]).toArray
+  }
+
+  /** The rows of a cached-table scan read straight out of this JVM's block
+    * manager, or `None` when the scan must keep its job: the cache uses a
+    * serializer other than [[DefaultCachedBatchSerializer]], is not
+    * materialized (or was cleared by an unpersist), or any of its blocks is
+    * not local — in a cluster they live on the executors.
+    *
+    * Mirrors `InMemoryTableScanExec.doExecute` minus the RDD: the scan's own
+    * batch pruning (`buildFilter` over `predicates`), `numOutputRows` counted
+    * per surviving batch, and `convertCachedBatchToInternalRow`'s decode of
+    * just the scan's `attributes`. Every block is read before any row is
+    * decoded, so a `None` leaves no metric changed. Rows are lazy and reuse
+    * one buffer: a row is valid until the next `next()`.
+    */
+  def driverLocalCacheRows(scan: InMemoryTableScanExec): Option[Iterator[InternalRow]] = {
+    val builder = scan.relation.cacheBuilder
+    // atomic, so a concurrent unpersist cannot make `cachedColumnBuffers`
+    // rebuild (and re-cache) the buffers it just cleared
+    val buffers = builder.synchronized {
+      if (builder.isCachedColumnBuffersLoaded) Some(builder.cachedColumnBuffers) else None
+    }
+    val bm = SparkEnv.get.blockManager
+    (builder.serializer, buffers) match {
+      case (serializer: DefaultCachedBatchSerializer, Some(rdd)) =>
+        // the first block not in this block manager ends the read; the
+        // blocks read before it have already released their locks
+        val ids = rdd.partitions.indices.map(RDDBlockId(rdd.id, _))
+        val blocks =
+          ids.iterator.map(localBatches(bm, _)).takeWhile(_.isDefined).map(_.get).toVector
+        if (blocks.length < ids.length) None
+        else Some(decodeCached(scan, serializer, blocks))
+      case _ => None
+    }
+  }
+
+  /** The cached batches of one block, or `None` when this block manager
+    * does not hold it (an evicted or remote block). The read lock
+    * `getLocalValues` takes is released when its iterator is drained, and
+    * explicitly when the read fails, so no exit path leaks it (a leaked lock
+    * would block the block's removal forever). Decoding happens after the
+    * lock is released.
+    */
+  private def localBatches(bm: BlockManager, id: BlockId): Option[ArrayBuffer[CachedBatch]] =
+    bm.getLocalValues(id).map { block =>
+      val batches = ArrayBuffer.empty[CachedBatch]
+      var drained = false
+      try {
+        while (block.data.hasNext) batches += block.data.next().asInstanceOf[CachedBatch]
+        drained = true
+      } finally if (!drained) bm.releaseLock(id)
+      batches
+    }
+
+  private def decodeCached(
+      scan: InMemoryTableScanExec,
+      serializer: DefaultCachedBatchSerializer,
+      blocks: Seq[Iterable[CachedBatch]]): Iterator[InternalRow] = {
+    val cachedOutput = scan.relation.output
+    val prune =
+      if (SQLConf.get.inMemoryPartitionPruning) {
+        serializer.buildFilter(scan.predicates, cachedOutput)
+      } else (_: Int, batches: Iterator[CachedBatch]) => batches
+    val numOutputRows = scan.longMetric("numOutputRows")
+    val batches = blocks.iterator.zipWithIndex
+      .flatMap { case (b, i) => prune(i, b.iterator) }
+      .map { b =>
+        numOutputRows += b.numRows
+        b.asInstanceOf[DefaultCachedBatch]
+      }
+    val (ordinals, types) = scan.attributes.map { a =>
+      cachedOutput.indexWhere(_.exprId == a.exprId) -> (a.dataType match {
+        case udt: UserDefinedType[_] => udt.sqlType
+        case other                   => other
+      })
+    }.unzip
+    val rows = GenerateColumnAccessor.generate(types)
+    rows.initialize(batches, types.toArray, ordinals.toArray)
+    rows
   }
 }

@@ -4,6 +4,9 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.graft.Internals
 import org.apache.spark.sql.types.IntegerType
 
 import graft.plans.{DynamicFilterExec, DynamicFilterNode, DynamicFilterStrategy}
@@ -55,7 +58,6 @@ class DynamicFilterStrategySpec extends SparkTestBase {
   // ExecutionPlanMetricsSet; ours populates numOutputRows from tasks and
   // bindTime from the driver-side parameter substitution
   test("SQLMetrics populated after an execute") {
-    import org.apache.spark.sql.graft.Internals
     spark.range(0, 100).selectExpr("id").createOrReplaceTempView("metrics_t")
     val st = graft.prepared.PreparedStatements.prepare(
       spark, "SELECT id FROM metrics_t WHERE id >= $1")
@@ -67,9 +69,9 @@ class DynamicFilterStrategySpec extends SparkTestBase {
     exec.metrics("bindTime").value should be > 0L
   }
 
-  // plans whose leaf is not a keyed scan with pushed keys (a local relation
-  // included), or whose expressions cannot be evaluated once on the driver,
-  // keep the job path
+  // plans whose leaf is neither a keyed scan with pushed keys nor a
+  // materialized driver-local cache (a local relation included), or whose
+  // expressions cannot be evaluated once on the driver, keep the job path
   test("other plans keep the Spark job") {
     import spark.implicits._
     val cached = (0L until 100L).map(i => (i, s"c_$i")).toDF("id", "name")
@@ -84,8 +86,13 @@ class DynamicFilterStrategySpec extends SparkTestBase {
     (0L until 200L).map(i => (i, s"t_${i % 7}")).toDF("id", "tag")
       .createOrReplaceTempView("dfs_local")
     try {
+      // a materialized cache in this JVM answers on the driver
+      val cachedSt =
+        PreparedStatements.prepare(spark, "SELECT id, name FROM dfs_cached WHERE id = $1")
+      val (cachedRows, cachedJobs) = jobsRun(cachedSt.executeCollect(Map("$1" -> 7L)))
+      cachedJobs shouldBe 0
+      cachedRows.map(_.toString).toSeq shouldBe Seq("[7,c_7]")
       val single = Seq(
-        "SELECT id, name FROM dfs_cached WHERE id = $1",
         "SELECT id, name FROM dfs_parquet WHERE id = $1",
         "SELECT id FROM dfs_range WHERE id = $1",
         "SELECT id, upper(tag) AS t FROM dfs_local WHERE id = $1",
@@ -104,9 +111,100 @@ class DynamicFilterStrategySpec extends SparkTestBase {
       val (rows, jobs) = jobsRun(sub.executeCollect(Map("$1" -> 6L)))
       rows.map(_.getLong(0)).toSeq shouldBe Seq(6L)
       jobs shouldBe 2
+      // an unpersisted cache has no blocks to read: the statement keeps its
+      // frozen plan and answers through the job path
+      spark.catalog.uncacheTable("dfs_cached")
+      val (uncachedRows, uncachedJobs) = jobsRun(cachedSt.executeCollect(Map("$1" -> 9L)))
+      uncachedJobs should be >= 1
+      uncachedRows.map(_.toString).toSeq shouldBe
+        spark.sql("SELECT id, name FROM dfs_cached WHERE id = 9").collect().map(_.toString).toSeq
     } finally {
       spark.catalog.uncacheTable("dfs_cached")
       Seq("dfs_cached", "dfs_parquet", "dfs_range", "dfs_local").foreach(spark.catalog.dropTempView)
+    }
+  }
+
+  // a cache that was declared but never materialized has no blocks: the
+  // first execute runs the job that fills them, the next reads them
+  test("an unmaterialized cache runs one job, then answers on the driver") {
+    import spark.implicits._
+    val lazyCached = (0L until 50L).map(i => (i, s"l_$i")).toDF("id", "name").cache()
+    lazyCached.createOrReplaceTempView("dfs_lazy_cached")
+    try {
+      val st =
+        PreparedStatements.prepare(spark, "SELECT id, name FROM dfs_lazy_cached WHERE id = $1")
+      val (first, firstJobs) = jobsRun(st.executeCollect(Map("$1" -> 3L)))
+      firstJobs shouldBe 1
+      first.map(_.toString).toSeq shouldBe Seq("[3,l_3]")
+      val (second, secondJobs) = jobsRun(st.executeCollect(Map("$1" -> 4L)))
+      secondJobs shouldBe 0
+      second.map(_.toString).toSeq shouldBe Seq("[4,l_4]")
+    } finally {
+      lazyCached.unpersist(blocking = true)
+      spark.catalog.dropTempView("dfs_lazy_cached")
+    }
+  }
+
+  // the static conjunct prunes the cache's batches by their stats on both
+  // tiers, so the scan emits one partition's rows
+  test("driver-tier cached-scan metrics equal the job path's") {
+    val cached = spark.range(0, 300, 1, 3).selectExpr("id", "concat('m_', id) AS name").cache()
+    cached.count()
+    cached.createOrReplaceTempView("dfs_metrics_cached")
+    try {
+      val st = PreparedStatements.prepare(
+        spark, "SELECT id, name FROM dfs_metrics_cached WHERE id < 100 AND id >= $1")
+      val params = Map[String, Any]("$1" -> 95L)
+      // the bind keeps the scan node, so its counter accumulates across
+      // executes: compare per-execute deltas
+      def run(plan: SparkPlan)(collect: => Array[_]): (Int, Long, Long, Long) = {
+        val scan = plan.collectFirst { case m: InMemoryTableScanExec => m }
+          .getOrElse(fail(s"no InMemoryTableScanExec in\n$plan"))
+        val filter = plan.collectFirst { case d: DynamicFilterExec => d }.get
+        val before = scan.metrics("numOutputRows").value
+        val n = collect.length
+        (n, scan.metrics("numOutputRows").value - before, filter.metrics("numOutputRows").value,
+          filter.metrics("bindTime").value)
+      }
+
+      val driverPlan = st.boundPlan(params)
+      val (driver, jobs) = jobsRun(run(driverPlan)(Internals.collectPhysical(driverPlan)))
+      jobs shouldBe 0
+      val (returned, scanned, filtered, bindTime) = driver
+      returned shouldBe 5
+      scanned shouldBe 100L
+      filtered shouldBe 5L
+      bindTime should be > 0L
+
+      // the same bound plan run as a job fills the same counters
+      val jobPlan = st.boundPlan(params)
+      val (jobReturned, jobScanned, jobFiltered, _) = run(jobPlan)(jobPlan.executeCollect())
+      (jobReturned, jobScanned, jobFiltered) shouldBe ((returned, scanned, filtered))
+    } finally {
+      cached.unpersist(blocking = true)
+      spark.catalog.dropTempView("dfs_metrics_cached")
+    }
+  }
+
+  // a driver-tier read that kept a block's read lock would make removing
+  // the block wait forever
+  test("driver-tier cached reads release their block locks") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val cached = spark.range(0, 200, 1, 2).selectExpr("id", "id * 2 AS twice").cache()
+    cached.count()
+    cached.createOrReplaceTempView("dfs_lock_cached")
+    try {
+      val st =
+        PreparedStatements.prepare(spark, "SELECT id, twice FROM dfs_lock_cached WHERE id = $1")
+      val (results, jobs) =
+        jobsRun((0 until 200).map(i => st.executeCollect(Map("$1" -> (i - 5).toLong))))
+      jobs shouldBe 0
+      results.map(_.length).sum shouldBe 195
+      Await.result(Future(cached.unpersist(blocking = true)), 30.seconds)
+    } finally {
+      spark.catalog.dropTempView("dfs_lock_cached")
     }
   }
 }

@@ -84,6 +84,25 @@ object PreparedEquivalenceProps extends Properties("PreparedEquivalence") {
         in == literalRows(s"SELECT id, tag FROM prop_keyed WHERE id IN ($a, $b, $c)")
     }
 
+  private lazy val cachedSt = {
+    val s = SparkTestBase.session
+    import s.implicits._
+    val cached = (0L until 500L).map(i => (i, s"c_${i % 29}", (i % 83).toDouble))
+      .toDF("id", "tag", "score").repartition(4).cache()
+    cached.count()
+    cached.createOrReplaceTempView("prop_cached")
+    PreparedStatements.prepare(s, "SELECT id, tag, score FROM prop_cached WHERE id = $1")
+  }
+
+  // a materialized cache answers prepared lookups on the driver (no job)
+  // from its blocks; present, absent and negative keys must all read what
+  // the literal SQL reads
+  property("prepared cached point lookup == unprepared literal SQL") =
+    Prop.forAll(Gen.choose(-50L, 600L)) { k =>
+      cachedSt.executeCollect(Map("$1" -> k)).map(_.toString).sorted.toSeq ==
+        literalRows(s"SELECT id, tag, score FROM prop_cached WHERE id = $k")
+    }
+
   private lazy val adaptiveSt = {
     spark
     PreparedStatements.prepare(

@@ -263,8 +263,8 @@ class PreparedStatementsSpec extends SparkTestBase {
     results shouldBe (1 to 5).map(Seq(_))
   }
 
-  // both execution tiers under contention: the keyed statement runs on the
-  // driver, the parquet one as a Spark job; every result is checked against
+  // both execution tiers under contention: the keyed and cached statements
+  // run on the driver, the parquet one as a Spark job; every result is checked against
   // the literal-inlined query for its key (run once per key up front, so the
   // threads contend on the prepared statements, not on SQL planning)
   test("16 threads x 100 executeCollects stay independent on both tiers") {
@@ -276,7 +276,10 @@ class PreparedStatementsSpec extends SparkTestBase {
     dir.deleteOnExit()
     df.write.parquet(dir.getAbsolutePath + "/t")
     spark.read.parquet(dir.getAbsolutePath + "/t").createOrReplaceTempView("cc_parquet")
-    val views = Seq("cc_keyed", "cc_parquet")
+    val cached = df.repartition(3).cache()
+    cached.count()
+    cached.createOrReplaceTempView("cc_cached")
+    val views = Seq("cc_keyed", "cc_parquet", "cc_cached")
     val statements = views.map { view =>
       PreparedStatements.prepare(spark, s"SELECT k, name FROM $view WHERE k = $$1")
     }
@@ -304,6 +307,8 @@ class PreparedStatementsSpec extends SparkTestBase {
       pool.shutdown()
       graft.sources.KeyedMemTables.unregister(spark, "cc_keyed")
       spark.catalog.dropTempView("cc_parquet")
+      cached.unpersist(blocking = true)
+      spark.catalog.dropTempView("cc_cached")
     }
     mismatches.toArray.toSeq shouldBe empty
   }
