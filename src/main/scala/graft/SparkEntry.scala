@@ -1089,8 +1089,8 @@ object SparkEntry {
     // Z-order clustering key (operators/ZOrder.scala): Morton interleave of
     // (o_custkey, o_orderkey) — the multi-column skipping layout key. The
     // oracle replays the SAME generated bit arithmetic; the file-skipping
-    // effect of clusterByZ on parquet min/max stats is asserted in
-    // ZOrderSpec (both columns prune, which no single-column sort gives).
+    // effect of a range write on this key is asserted in BloomZOrderSpec
+    // (both columns prune, which no single-column sort gives).
     "q_zorder_key" -> ((s, dir) =>
       t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"),

@@ -549,83 +549,6 @@ case class RepetitionProfile(child: Expression, n: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Smoothed bigram log-probability sum of a TEXT column under a broadcast
-  * unigram-context model: Σ over the doc's word bigrams of
-  * `ln((c2(bigram) + alpha) / (c1(first word) + denomAdd))`, returned with
-  * the bigram count as `struct(lp_sum, n_bigrams)` (fewer than 2 tokens →
-  * (0.0, 0), null text → null; the caller's gate drops both).
-  *
-  * Bit-parity contract with the declarative form it replaces —
-  * `aggregate(shingles(text, 2), 0.0, (acc, g) -> acc + log(...))` over
-  * `element_at` map lookups, which the DuckDB oracle replays term for
-  * term: tokenization is UTF8String.toLowerCase + split(" ", -1) (the
-  * [[WordShingleHashes]] semantics), the fold is the same left-to-right
-  * IEEE add order, lookups miss to 0, and log is the same Math.log. The
-  * HOF form interprets the lambda per ELEMENT with a projection allocation
-  * (the r12 lesson) — this is a tight JVM loop over a java.util.HashMap.
-  *
-  * The model maps ride the expression instance (top-k bounded broadcasts,
-  * the same size class as the typedLit maps they replace).
-  */
-case class BigramLogProb(
-    child: Expression,
-    bigramCounts: Map[String, Long],
-    contextCounts: Map[String, Long],
-    alpha: Double,
-    denomAdd: Double)
-  extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("lp_sum", DoubleType, nullable = false),
-    StructField("n_bigrams", IntegerType, nullable = false)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "bigram_log_prob"
-
-  @transient private lazy val bg = {
-    val m = new java.util.HashMap[String, java.lang.Long](bigramCounts.size * 2)
-    bigramCounts.foreach { case (k, v) => m.put(k, v) }
-    m
-  }
-  @transient private lazy val cx = {
-    val m = new java.util.HashMap[String, java.lang.Long](contextCounts.size * 2)
-    contextCounts.foreach { case (k, v) => m.put(k, v) }
-    m
-  }
-
-  private val space = UTF8String.fromString(" ")
-
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-
-  def compute(text: UTF8String): Any = {
-    val tokens = text.toLowerCase.split(space, -1)
-    val nB = tokens.length - 1
-    var lp = 0.0
-    var i = 0
-    while (i < nB) {
-      val a = tokens(i).toString
-      val g = a + " " + tokens(i + 1).toString
-      val c2 = bg.get(g)
-      val c1 = cx.get(a)
-      lp += Math.log(
-        ((if (c2 == null) 0L else c2.longValue).toDouble + alpha) /
-          ((if (c1 == null) 0L else c1.longValue).toDouble + denomAdd))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](lp, math.max(nB, 0)))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bigramlp", this, classOf[BigramLogProb].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (${CodeGenerator.javaType(dataType)}) $ref.compute($c);
-      ${ev.isNull} = (${ev.value} == null);""")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** Unicode normalization (`java.text.Normalizer`, in every JDK) — the
   * canonicalization step corpus pipelines run before dedup/fingerprinting
   * so composed vs decomposed accents (NFC) and compatibility variants
@@ -790,9 +713,6 @@ object TextFunctions {
     colOf(BandHashes(exprOf(sig), bands))
   def simhashBucketKeys(sh: Column, maxHamming: Int): Column =
     colOf(SimHashBucketKeys(exprOf(sh), maxHamming))
-  def bigramLogProb(text: Column, bigramCounts: Map[String, Long],
-      contextCounts: Map[String, Long], alpha: Double, denomAdd: Double): Column =
-    colOf(BigramLogProb(exprOf(text), bigramCounts, contextCounts, alpha, denomAdd))
   def unicodeNormalize(text: Column, form: String = "NFC"): Column =
     colOf(UnicodeNormalize(exprOf(text), form))
   def hashEmbedVector(text: Column, dim: Int): Column =

@@ -244,8 +244,6 @@ case class DequantizeInt8(codes: Expression, scale: Expression)
 object VectorFunctions {
   def cosineSimilarity(a: Column, b: Column): Column =
     colOf(CosineSimilarity(exprOf(a), exprOf(b)))
-  def dotProduct(a: Column, b: Column): Column =
-    colOf(DotProduct(exprOf(a), exprOf(b)))
   def hyperplaneBucket(v: Column, bits: Int, seed: Long): Column =
     colOf(HyperplaneBucket(exprOf(v), bits, seed))
   def nearestCentroid(v: Column, centroids: Seq[Seq[Float]]): Column =

@@ -52,8 +52,8 @@ object LabelPropagation {
     * collect and a driver replay of the exact same synchronous
     * integer-argmax updates. LPA is pure integer arithmetic with
     * deterministic (count, smallest-label) tie-breaks, so the replay is
-    * bit-parity with the distributed rounds — spec-pinned. Defaults to conf
-    * `spark.graft.lpa.driverFinishEdges` (2²⁰ directed edges; 0 disables).
+    * bit-parity with the distributed rounds — spec-pinned. Defaults to 2²⁰
+    * directed edges; 0 forces the distributed rounds.
     * Warm starts (`initialLabels`) always take the distributed rounds: the
     * seed frame is label-sized, not bounded by the edge threshold.
     */
@@ -63,7 +63,7 @@ object LabelPropagation {
       dstCol: String,
       iterations: Int = 2,
       initialLabels: Option[DataFrame] = None,
-      driverFinishEdges: Long = -1L): DataFrame = {
+      driverFinishEdges: Long = 1L << 20): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val sess = edges.sparkSession
     def ckpt(df: DataFrame): DataFrame = Dedup.lazyCheckpoint(df)
@@ -83,11 +83,7 @@ object LabelPropagation {
     val nParts = Dedup.layoutPartitionCount(symmetrized)
     val e = Dedup.withAqeOff(sess)(ckpt(
       Dedup.distinctLayout(symmetrized, nParts, "src")))
-    val driverCap =
-      if (driverFinishEdges >= 0L) driverFinishEdges
-      else edges.sparkSession.conf
-        .get("spark.graft.lpa.driverFinishEdges", (1L << 20).toString).toLong
-    if (initialLabels.isEmpty && driverCap > 0 && e.count() <= driverCap)
+    if (initialLabels.isEmpty && driverFinishEdges > 0 && e.count() <= driverFinishEdges)
       return driverReplay(e, iterations)
     val verts =
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()

@@ -1,20 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton) clustering — multi-column data skipping for the lakehouse
+/** Z-order (Morton) keys — multi-column data skipping for the lakehouse
   * layout step: interleaving the bits of two sort keys gives a single
   * clustering key under which a range predicate on EITHER column touches
   * only ~√(files) of the layout, where a plain lexicographic sort can skip
-  * on its leading column alone. The standard recipe behind Delta/Iceberg
-  * `OPTIMIZE ZORDER BY`, built here from codegen'd bit arithmetic plus
-  * [[graft.pipeline.Compaction.compactByRange]] for the sized range-write.
-  *
-  * Scale shape: the z-value is a map-side expression; the clustered write
-  * is one range exchange sized by Catalyst's own statistics (see
-  * Compaction). Skipping then happens in every engine that reads parquet
-  * row-group/file min-max stats — no index structure to maintain.
+  * on its leading column alone. The key behind Delta/Iceberg
+  * `OPTIMIZE ZORDER BY`, built here from codegen'd bit arithmetic: a
+  * map-side expression that a range-partitioned write sorts on, after
+  * which every engine that reads parquet row-group/file min-max stats
+  * skips on both columns — no index structure to maintain.
   */
 object ZOrder {
 
@@ -46,24 +43,5 @@ object ZOrder {
         s"(((CAST($a AS BIGINT) >> $i) & 1) << ${2 * i})",
         s"(((CAST($b AS BIGINT) >> $i) & 1) << ${2 * i + 1})")
     }.mkString("(", " | ", ")")
-  }
-
-  /** The input range-clustered by z-value into data-volume-sized
-    * partitions, ready for a parquet write whose per-file (a, b) min/max
-    * stats both prune. The helper z column is dropped after clustering —
-    * parquet files keep the original schema.
-    */
-  def clusterByZ(
-      df: DataFrame,
-      colA: String,
-      colB: String,
-      bits: Int,
-      targetBytes: Long): DataFrame = {
-    require(!df.columns.contains("__z"), "__z is reserved by ZOrder")
-    graft.pipeline.Compaction
-      .compactByRange(df.withColumn("__z", zValue(col(colA), col(colB), bits)),
-        targetBytes, Seq(col("__z")))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
   }
 }

@@ -37,15 +37,6 @@ object Decontamination {
         s"rule negates it), got ${dt.simpleString}")
   }
 
-  /** Word n-gram shingles of the lowercased text — same definition as
-    * [[graft.functions.WordShingles]] (split on single spaces, n
-    * consecutive words re-joined by a space); docs shorter than n words
-    * yield none. The CASE guards Spark's `sequence(1, 0)` producing a
-    * DESCENDING [1, 0] rather than an empty array.
-    */
-  private def shinglesOfWords(words: Column, n: Int): Column =
-    TextAnalysis.shinglesOfWords(words, n)
-
   /** Explodes `textCol`'s shingles through the JVM-speed
     * [[graft.functions.WordShingleHashes]] generator — one tokenization
     * per row with no interpreted HOF in the corpus-wide fan-out (the r12
@@ -59,7 +50,7 @@ object Decontamination {
     */
   private def explodedShingles(
       df: DataFrame, textCol: String, n: Int, keep: Seq[Column],
-      withHashes: Boolean = true): DataFrame =
+      withHashes: Boolean): DataFrame =
     df.select(keep :+
       graft.functions.WordShingleHashesFunction
         .wordShingleHashes(col(textCol), n, withHashes, withSpans = !withHashes)
@@ -284,28 +275,12 @@ object Decontamination {
     * set beyond THAT ceiling splits into broadcast-sized slices whose
     * reports union and re-aggregate with the same max(struct) — each
     * slice replays this exact plan.
-    */
-  def semanticReportIvf(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      evalDocs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      evalIdCol: String,
-      minCosine: Double,
-      nprobe: Int,
-      corpusFilter: Column = lit(true)): DataFrame =
-    semanticReportIvfOn(spark.read.parquet(indexPath),
-      spark.read.parquet(indexPath + "__centroids"),
-      evalDocs, idCol, vecCol, evalIdCol, minCosine, nprobe, corpusFilter,
-      where = s"the index at $indexPath")
-
-  /** [[semanticReportIvf]] over already-resolved index/centroid frames —
-    * the repeated-probe form (r22, the [[Similarity.ivfTopKBatchOn]]
-    * rationale): the path form paid a schema-inference job for the
-    * `.columns` contract check plus a listing per construction; a caller
-    * probing a frozen index repeatedly resolves the frames once. Probe
-    * data is still read per call.
+    *
+    * `index` is `spark.read.parquet(path)` of the [[Similarity.buildIvfIndex]]
+    * layout and `centroids` its `path + "__centroids"` table, resolved once
+    * by a caller probing a frozen index repeatedly (the
+    * [[Similarity.ivfTopKBatchOn]] rationale); probe data is still read per
+    * call.
     */
   def semanticReportIvfOn(
       index: DataFrame,
@@ -316,13 +291,12 @@ object Decontamination {
       evalIdCol: String,
       minCosine: Double,
       nprobe: Int,
-      corpusFilter: Column = lit(true),
-      where: String = "the index frame"): DataFrame = {
+      corpusFilter: Column = lit(true)): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val cos = graft.functions.VectorFunctions.cosineSimilarity _
     val idxCols = index.columns.toSet
     require(Seq(idCol, vecCol, "cid").forall(idxCols),
-      s"semanticReportIvf: $where must carry '$idCol', " +
+      s"semanticReportIvf: the index frame must carry '$idCol', " +
         s"'$vecCol' and 'cid' — found [${idxCols.mkString(", ")}]; build it " +
         "with Similarity.buildIvfIndex over the training corpus")
     require(!idxCols.exists(Set("__q", "__qvec", "__cos", "__m")),
@@ -353,83 +327,6 @@ object Decontamination {
       .select(col(idCol), col("__m.__cos").as("max_cosine"),
         (-col("__m.__nq")).as("nearest_eval"))
   }
-
-  /** [[semanticReportIvf]] for eval sets beyond even the PROBE-broadcast
-    * ceiling (eval × nprobe vectors): the eval set splits into `slices`
-    * deterministic hash slices and each slice runs as its OWN job whose
-    * report lands under `scratchDir` — sequential actions, so at most one
-    * slice's probe broadcast is alive at a time (a lazy union of slice
-    * plans would hold every broadcast simultaneously and buy nothing).
-    * The slice reports then re-aggregate with the same max(struct) tie
-    * rule, which is associative across slices — result ≡ the unsliced
-    * form (spec-pinned). Corpus cost: `slices` partition-pruned passes
-    * over the probed fraction; per-doc flagged rows per slice, not the
-    * corpus, reach the final aggregate.
-    */
-  def semanticReportIvfSliced(
-      spark: org.apache.spark.sql.SparkSession,
-      indexPath: String,
-      evalDocs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      evalIdCol: String,
-      minCosine: Double,
-      nprobe: Int,
-      slices: Int,
-      scratchDir: String,
-      corpusFilter: Column = lit(true)): DataFrame = {
-    require(slices >= 1, s"slices must be >= 1, got $slices")
-    require(scratchDir.nonEmpty, "semanticReportIvfSliced needs a scratchDir " +
-      "for the per-slice reports (each slice is its own job)")
-    (0 until slices).foreach { i =>
-      semanticReportIvf(spark, indexPath,
-        evalDocs.filter(pmod(xxhash64(col(evalIdCol)), lit(slices)) === i),
-        idCol, vecCol, evalIdCol, minCosine, nprobe, corpusFilter)
-        // overwrite on the first slice clears a stale scratch dir; later
-        // slices append — each write is the slice's materializing action
-        .write.mode(if (i == 0) "overwrite" else "append").parquet(scratchDir)
-    }
-    spark.read.parquet(scratchDir)
-      .groupBy(col(idCol))
-      .agg(max(struct(col("max_cosine"), (-col("nearest_eval")).as("__nq"))).as("__m"))
-      .select(col(idCol), col("__m.max_cosine").as("max_cosine"),
-        (-col("__m.__nq")).as("nearest_eval"))
-  }
-
-  /** [[semanticReportIvf]] as a drop over the caller's training frame —
-    * the [[dropSemanticContaminated]] shape at index scale.
-    */
-  def dropSemanticContaminatedIvf(
-      train: DataFrame,
-      indexPath: String,
-      evalDocs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      evalIdCol: String,
-      minCosine: Double,
-      nprobe: Int,
-      corpusFilter: Column = lit(true)): DataFrame =
-    train.join(
-      semanticReportIvf(train.sparkSession, indexPath, evalDocs, idCol,
-        vecCol, evalIdCol, minCosine, nprobe, corpusFilter)
-        .select(col(idCol)),
-      Seq(idCol), "left_anti")
-
-  /** [[semanticReport]] as a drop: training rows whose nearest eval item
-    * scores at or above `minCosine` are removed (anti join on the flagged
-    * ids — the [[dropContaminated]] shape).
-    */
-  def dropSemanticContaminated(
-      train: DataFrame,
-      evalDocs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      evalIdCol: String,
-      minCosine: Double): DataFrame =
-    train.join(
-      semanticReport(train, evalDocs, idCol, vecCol, evalIdCol, minCosine)
-        .select(col(idCol)),
-      Seq(idCol), "left_anti")
 
   /** The reverse direction of [[contaminationReport]] — per EVAL item, how
     * exposed is it in the training corpus: the number of distinct training
@@ -550,140 +447,5 @@ object Decontamination {
       .filter(col("n_shared") > maxShared)
       .select(col(idCol))
     train.join(flagged, Seq(idCol), "left_anti")
-  }
-
-  /** The distinct xxhash64'd shingles of an eval corpus, collected to the
-    * driver — the bounded prep step for [[dropContaminatedStreaming]]. An
-    * eval set is benchmark-sized (thousands of docs), so its distinct
-    * shingle hashes are a few MB; this is the same bounded-collect class as
-    * the ANN centroid table, NOT a corpus-sized collect.
-    */
-  def evalShingleHashes(evalDocs: DataFrame, textCol: String, n: Int): Array[Long] =
-    explodedShingles(evalDocs, textCol, n, keep = Nil)
-      .select(col("__sh").as("h")).distinct()
-      .collect().map(_.getLong(0)).sorted
-
-  /** Ingestion-time decontamination: a PURE map-side gate (per-row
-    * `arrays_overlap` of the doc's hashed shingles against the eval-set
-    * hash array) that composes onto a STREAM with zero state — the
-    * per-batch cost is ∝ batch size, like the other streaming curation
-    * gates. Semantics ≡ `dropContaminated(..., maxShared = 0)` modulo the
-    * 64-bit hash (a collision can only drop a clean doc spuriously, with
-    * ~n²/2⁻⁶⁴ probability). For eval sets beyond ~10⁶ shingles, prefer the
-    * stream-static left_anti join over a bucketed shingle table — same
-    * statelessness, no literal-size concern.
-    */
-  def dropContaminatedStreaming(
-      docs: DataFrame,
-      evalHashes: Array[Long],
-      textCol: String,
-      n: Int): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val shingleHashes = transform(
-      shinglesOfWords(split(lower(col(textCol)), " "), n), s => xxhash64(s))
-    // coalesce: a NULL text propagates null through split → shingles →
-    // arrays_overlap, and filter(!NULL) would DROP the row — while the batch
-    // [[dropContaminated]] keeps null-text docs (they never flag in the
-    // anti-join). Null-text rows have no shingles, so they are kept.
-    docs.filter(coalesce(!arrays_overlap(shingleHashes, lit(evalHashes)), lit(true)))
-  }
-
-  /** [[maskContaminatedSpans]] as a STATELESS STREAMING gate — the
-    * ingestion-time form ([[dropContaminatedStreaming]]'s pattern applied
-    * to masking): the eval set ships as the driver-collected xxhash64
-    * shingle array ([[evalShingleHashes]]) and each row masks its own
-    * leaked spans entirely within the row — no per-doc aggregation, no
-    * state, per-batch cost ∝ batch size like every streaming curation
-    * gate here (the HOF chain is per-row over one document's words, not
-    * a corpus-wide fan-out). Word i masks when ANY n-gram window
-    * starting in [i−n+1, i] hits the eval set — the batch form's
-    * coverage rule, modulo the 64-bit hash (a collision can only
-    * over-mask, with ~n²/2⁻⁶⁴ probability). Unlike the batch REPORT
-    * form, every row passes through (a stream cannot drop-and-report):
-    * clean rows keep `textCol` verbatim with `n_masked_words = 0`, and
-    * null text stays null with 0.
-    */
-  def maskContaminatedStreaming(
-      docs: DataFrame,
-      evalHashes: Array[Long],
-      textCol: String,
-      n: Int,
-      maskToken: String = "<mask>"): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    require(maskToken.nonEmpty && !maskToken.contains(" "),
-      s"maskToken must be one space-free token, got '$maskToken'")
-    require(!docs.columns.exists(Set("masked_text", "n_masked_words")),
-      "masked_text/n_masked_words are reserved by maskContaminatedStreaming")
-    val words = split(col(textCol), " ")
-    val hitFlags = transform(
-      shinglesOfWords(split(lower(col(textCol)), " "), n),
-      s => array_contains(lit(evalHashes), xxhash64(s)))
-    // word i is covered iff some flagged n-gram STARTS within n-1 words
-    // before it; the window start range is non-empty whenever any shingle
-    // exists (i - n + 1 <= numShingles - 1 for every word index). The
-    // no-shingle case guards through CASE, not &&: a short doc's
-    // sequence(0, -1) would otherwise build a DESCENDING range whose -1
-    // feeds element_at(…, 0) — an ANSI-mode job failure
-    val covered = (i: Column) =>
-      when(size(hitFlags) > 0, exists(
-        sequence(greatest(i - n + 1, lit(0)), least(i, size(hitFlags) - 1)),
-        h => element_at(hitFlags, h + 1))).otherwise(lit(false))
-    val idxs = sequence(lit(0), size(words) - 1)
-    docs
-      .withColumn("masked_text", array_join(
-        zip_with(words, idxs,
-          (w, i) => when(covered(i), lit(maskToken)).otherwise(w)), " "))
-      .withColumn("n_masked_words",
-        coalesce(size(filter(idxs, covered)).cast("long"), lit(0L)))
-  }
-
-  /** The eval shingle index persisted as a hash-bucketed managed table —
-    * the [[dropContaminatedStreaming]] form for eval sets too large to ship
-    * as a literal array: every micro-batch's stream-static anti join then
-    * plans with ZERO exchange on the index side (the table's bucketing IS
-    * the join partitioning), so per-batch cost stays ∝ batch size whatever
-    * the eval set's size. Same layout recipe as the streaming near-dup
-    * corpus index.
-    */
-  def writeBucketedEvalShingleIndex(
-      evalDocs: DataFrame,
-      tableName: String,
-      textCol: String,
-      n: Int,
-      numBuckets: Int = 16): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val spark = evalDocs.sparkSession
-    graft.Tables.dropManaged(spark, tableName)
-    explodedShingles(evalDocs, textCol, n, keep = Nil)
-      .select(col("__sh").as("shingle_hash")).distinct()
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "shingle_hash")
-      .sortBy("shingle_hash")
-      .saveAsTable(tableName)
-    spark.table(tableName)
-  }
-
-  /** Drop docs sharing any n-gram with the bucketed eval index: explode the
-    * input's shingle hashes, LEFT SEMI against the index to find
-    * contaminated ids, LEFT ANTI back onto the input — the index side is
-    * never reshuffled (its bucketing IS the join partitioning). A batch
-    * operator; for streams run it per micro-batch inside `foreachBatch`
-    * (the flag aggregates over a doc's shingles, which a continuous query
-    * cannot do statelessly — the literal-array gate
-    * [[dropContaminatedStreaming]] is the continuous form).
-    */
-  def dropContaminatedAgainstIndex(
-      docs: DataFrame,
-      evalIndex: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val docShingles = explodedShingles(docs, textCol, n, keep = Seq(col(idCol)))
-      .select(col(idCol), col("__sh").as("shingle_hash"))
-    val contaminated = docShingles
-      .join(evalIndex, Seq("shingle_hash"), "left_semi")
-      .select(col(idCol)).distinct()
-    docs.join(contaminated, Seq(idCol), "left_anti")
   }
 }

@@ -319,9 +319,8 @@ object Dedup {
     * it across batches (pass `filterBytes`), growing `expectedItems` to the
     * corpus's key count; the history side never reshuffles regardless of
     * batch dupe rate — at worst the candidate-sized hash-matched slice
-    * shuffles into the confirm join. For a standing high-dupe ingest the
-    * bucketed-index form ([[Decontamination.writeBucketedEvalShingleIndex]]'s
-    * layout over history keys) amortizes even that.
+    * shuffles into the confirm join. For a standing high-dupe ingest, the
+    * history keys written bucketed by key amortize even that.
     */
   def dropSeenBefore(
       incoming: DataFrame,
@@ -604,7 +603,7 @@ object Dedup {
     */
   def connectedComponents(
       pairs: DataFrame, maxIters: Int = 20, jumps: Int = 2,
-      driverFinishEdges: Long = -1L): DataFrame =
+      driverFinishEdges: Long = 1L << 20): DataFrame =
     connectedComponentsIters(pairs, maxIters, jumps, driverFinishEdges)._1
 
   /** [[connectedComponents]] also returning the round count it took to
@@ -631,11 +630,10 @@ object Dedup {
     * that is by definition driver-sized. The result comes back as a
     * LocalRelation with exact size stats, so downstream joins (the
     * keep-representatives anti join) auto-broadcast instead of shuffling
-    * the corpus side against a tiny label table. Defaults to the session
-    * conf `spark.graft.cc.driverFinishEdges` (2²⁰ directed edges ≈ a few
-    * tens of MB collected; 0 disables); pass an explicit value to override,
-    * 0 to force the distributed loop. At 100 TB the near-dup graph is far
-    * above any sane threshold and the bucketed-checkpoint loop runs — the
+    * the corpus side against a tiny label table. Defaults to 2²⁰ directed
+    * edges (≈ a few tens of MB collected); 0 forces the distributed loop.
+    * At 100 TB the near-dup graph is far above any sane threshold and the
+    * bucketed-checkpoint loop runs — the
     * tier only catches the converged/tail case (a re-cluster of survivors,
     * a per-partition shard's residue) where barrier-job overhead dominates
     * data cost. Label parity between the two tiers is spec-pinned on random
@@ -645,7 +643,7 @@ object Dedup {
     */
   def connectedComponentsIters(
       pairs: DataFrame, maxIters: Int = 20, jumps: Int = 2,
-      driverFinishEdges: Long = -1L): (DataFrame, Int) = {
+      driverFinishEdges: Long = 1L << 20): (DataFrame, Int) = {
     require(maxIters > 0, s"maxIters must be positive, got $maxIters")
     require(jumps >= 1 && jumps <= 4,
       s"jumps must be in [1, 4] (each extra jump is a label-sized exchange " +
@@ -772,10 +770,7 @@ object Dedup {
     // Small-graph tier (see the scaladoc): when every directed edge fits a
     // bounded driver budget, one collect of the just-materialized edge
     // blocks + a union-find replaces the remaining barrier rounds.
-    val driverCap =
-      if (driverFinishEdges >= 0L) driverFinishEdges
-      else sess.conf.get("spark.graft.cc.driverFinishEdges", (1L << 20).toString).toLong
-    if (changed > 0 && edgeCount <= driverCap) {
+    if (changed > 0 && edgeCount <= driverFinishEdges) {
       externalIdOrdering(edges.schema("src").dataType) match {
         case Some(ord) =>
           val labelsOut = driverFinishUnionFind(edges, ord)

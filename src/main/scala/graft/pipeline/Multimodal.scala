@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * decoded image. Payloads that are not decodable images (this corpus's
   * text-derived payloads, truncated files, audio) fall back to the
   * deterministic byte-sum arithmetic — which is also what keeps the
-  * registered query DuckDB-replayable on the text corpus. The perceptual
-  * hash ([[imagePHash]]) and resize ([[resizePayload]]) follow the same
-  * tier split: real pixel work (8×8 average-hash; box-average resampling)
-  * for decodable images, the bit-replayable fallback otherwise. Frame
+  * registered query DuckDB-replayable on the text corpus. Resize
+  * ([[resizePayload]]) follows the same tier split: real box-average
+  * resampling for decodable images, the bit-replayable fallback
+  * otherwise. Frame
   * sampling ([[frameSamplePayload]]) decodes REAL frames for animated
   * GIFs and for AVI video containers (RIFF chunk walk to true frame
   * boundaries; MJPEG frames decode to pixels via the JDK's JPEG codec),
@@ -446,93 +446,10 @@ object Multimodal {
     media.select(col(idCol),
       conv(substring(md5(col("payload")), 1, 15), 16, 10).cast("long").as("phash"))
 
-  /** 60-bit average-hash of a decoded image: block-average the pixel grid
-    * to 8×8 grayscale cells, then bit i = (cell i ≥ mean of the 64 cells).
-    * Classic aHash — deterministic pure-integer block sums over the
-    * decoded raster, one double division per cell; visually similar
-    * images (resamples, small edits) land within a few bits, unrelated
-    * compositions far apart. The 64 cell bits are folded to the LOW 60 so
-    * the value drops into [[phashNearDupPairs]]'s 60-bit banding
-    * unchanged.
+  /** The (id, phash, band, bits) band explode of [[phashNearDupPairs]] —
+    * one struct per pigeonhole band of the 60-bit hash, map-side.
     */
-  private def aHash60(img: java.awt.image.BufferedImage): Long = {
-    val w = img.getWidth
-    val h = img.getHeight
-    val sums = new Array[Long](64)
-    val counts = new Array[Long](64)
-    var y = 0
-    while (y < h) {
-      // long bin math: x * 8 overflows Int past ~2^28 px sides
-      val cy = (y.toLong * 8 / h).toInt
-      var x = 0
-      while (x < w) {
-        val rgb = img.getRGB(x, y)
-        val gray = ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-        val c = cy * 8 + (x.toLong * 8 / w).toInt
-        sums(c) += gray
-        counts(c) += 1
-        x += 1
-      }
-      y += 1
-    }
-    val cells = Array.tabulate(64)(i => if (counts(i) == 0) 0.0 else sums(i).toDouble / counts(i))
-    val mean = cells.sum / 64.0
-    var hash = 0L
-    var i = 0
-    while (i < 64) {
-      if (cells(i) >= mean) hash |= (1L << (i % 60)) // fold 60..63 onto 0..3
-      i += 1
-    }
-    hash & ((1L << 60) - 1)
-  }
-
-  /** The REAL perceptual-hash leg (r16): image payloads (PNG/JPEG/BMP/GIF)
-    * hash by [[aHash60]] over their decoded pixels; non-image payloads
-    * keep the md5-head fallback BIT-EQUAL to [[pHashStub]]'s SQL form
-    * (identical payloads still collide exactly, and the value is
-    * engine-replayable). Output schema matches pHashStub, so
-    * [[phashNearDupPairs]]' banding/verification consumes either
-    * unchanged — the "swap one projection for a real pHash" promise,
-    * kept.
-    */
-  def imagePHash(media: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(idCol).cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        javax.imageio.ImageIO.setUseCache(false)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        batch.map { case (id, bytes) =>
-          val fromImage: Option[Long] =
-            if (!sniffImage(bytes)) None
-            else readImageGuarded(bytes).map(aHash60)
-          val phash = fromImage.getOrElse {
-            md.reset()
-            val hex = md.digest(bytes).map(b => f"$b%02x").mkString
-            java.lang.Long.parseLong(hex.substring(0, 15), 16)
-          }
-          (id, phash)
-        }
-      }
-      .toDF(idCol, "phash")
-  }
-
-  /** Near-duplicate media pairs at Hamming distance ≤ `maxHamming` over the
-    * 60-bit perceptual hash — the image-dedup step of a multimodal
-    * pipeline. Pigeonhole banding: the 60 bits split into `maxHamming + 1`
-    * contiguous bands, so any pair within distance k agrees on at least
-    * one whole band; candidates equi-join on (band, bits) — map-side band
-    * explode, signature-not-pixels over the shuffle, buckets capped like
-    * every other dedup join here (`graft_cap_*` observes shed rows) — and
-    * the exact `bit_count(xor)` decides. Exact over the capped candidate
-    * set; returns (id_a < id_b, hamming).
-    */
-  /** The (id, phash, band, bits) band explode shared by the batch
-    * self-join and the streaming gate — one struct per pigeonhole band of
-    * the 60-bit hash, map-side.
-    */
-  private[graft] def phashBands(
+  private def phashBands(
       hashed: DataFrame,
       maxHamming: Int,
       idCol: String): DataFrame = {
@@ -553,6 +470,16 @@ object Multimodal {
         col("bd.band").as("band"), col("bd.bits").as("bits"))
   }
 
+  /** Near-duplicate media pairs at Hamming distance ≤ `maxHamming` over the
+    * 60-bit perceptual hash — the image-dedup step of a multimodal
+    * pipeline. Pigeonhole banding: the 60 bits split into `maxHamming + 1`
+    * contiguous bands, so any pair within distance k agrees on at least
+    * one whole band; candidates equi-join on (band, bits) — map-side band
+    * explode, signature-not-pixels over the shuffle, buckets capped like
+    * every other dedup join here (`graft_cap_*` observes shed rows) — and
+    * the exact `bit_count(xor)` decides. Exact over the capped candidate
+    * set; returns (id_a < id_b, hamming).
+    */
   def phashNearDupPairs(
       hashed: DataFrame,
       maxHamming: Int = 5,
@@ -798,105 +725,4 @@ object Multimodal {
     */
   def decodeAudio(docs: DataFrame): Dataset[DecodedAudio] =
     decodeAudioPayload(docs.select(col("doc_id"), col("text").cast("binary").as("payload")))
-
-  /** Typed record produced by [[inflatePayload]]. `payload` is the inflated
-    * bytes (or the original bytes when `codec` is "none"); `truncated`
-    * marks payloads cut at the decompression-bomb cap.
-    */
-  case class InflatedPayload(
-      doc_id: Long,
-      payload: Array[Byte],
-      codec: String,
-      n_bytes_stored: Int,
-      n_bytes_raw: Int,
-      truncated: Boolean)
-
-  /** gzip magic `1f 8b`. */
-  private[graft] def sniffGzip(bytes: Array[Byte]): Boolean =
-    bytes.length >= 2 && bytes(0) == 0x1f.toByte && bytes(1) == 0x8b.toByte
-
-  /** zlib two-byte header: CMF low nibble 8 (deflate) and the CMF·256+FLG
-    * checksum divisible by 31 (RFC 1950) — the framing WARC/HTTP bodies
-    * commonly arrive in alongside gzip.
-    */
-  private[graft] def sniffZlib(bytes: Array[Byte]): Boolean =
-    bytes.length >= 2 && (bytes(0) & 0x0f) == 8 && (bytes(0) & 0xff) <= 0x7f &&
-      (((bytes(0) & 0xff) << 8) | (bytes(1) & 0xff)) % 31 == 0
-
-  /** Transparent payload decompression — the ingest step a web-scale corpus
-    * needs before any text/media tier runs, since WARC/WET captures and
-    * HTTP bodies arrive gzip- or zlib-framed. REAL decompression via
-    * `java.util.zip` (in every standard JDK): gzip (`1f 8b`) through
-    * `GZIPInputStream` — multi-member streams read member-by-member the
-    * way `wget`-style tooling concatenates them — and zlib (RFC 1950
-    * header) through `Inflater`. Everything else passes through untouched
-    * with `codec = "none"`.
-    *
-    * Decompression-BOMB guarded: inflation stops at `maxInflatedBytes`
-    * output bytes and marks the row `truncated` instead of buffering an
-    * unbounded expansion into executor memory — at 100 TB a single hostile
-    * 42.zip-style payload must not OOM a task. Malformed compressed bytes
-    * (sniff hit, inflate failure) pass through as "none" like every other
-    * tier's fallback. Partition-wise `mapPartitions`, no shuffle; one
-    * `Inflater` reused across a partition's zlib rows.
-    */
-  def inflatePayload(
-      media: DataFrame, maxInflatedBytes: Int = 64 << 20): Dataset[InflatedPayload] = {
-    require(maxInflatedBytes >= 1, s"maxInflatedBytes must be >= 1, got $maxInflatedBytes")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        val buf = new Array[Byte](64 * 1024)
-        // explicit-Inflater streams do not end() it on close, so one
-        // native zlib context serves the whole partition via reset()
-        val inflater = new java.util.zip.Inflater()
-        def drain(in: java.io.InputStream): (Array[Byte], Boolean) = {
-          val out = new java.io.ByteArrayOutputStream()
-          var truncated = false
-          var eof = false
-          while (!eof && !truncated) {
-            val n = in.read(buf)
-            if (n < 0) eof = true
-            else {
-              val room = maxInflatedBytes - out.size()
-              if (n > room) { out.write(buf, 0, room); truncated = true }
-              else {
-                out.write(buf, 0, n)
-                if (out.size() == maxInflatedBytes) {
-                  // exactly at the cap: truncated only if bytes FOLLOW —
-                  // a payload inflating to the cap precisely is complete
-                  if (in.read(buf) >= 0) truncated = true else eof = true
-                }
-              }
-            }
-          }
-          (out.toByteArray, truncated)
-        }
-        batch.map { case (id, bytes) =>
-          def passthrough = InflatedPayload(id, bytes, "none", bytes.length, bytes.length, false)
-          if (sniffGzip(bytes)) {
-            try {
-              val in = new java.util.zip.GZIPInputStream(
-                new java.io.ByteArrayInputStream(bytes), 64 * 1024)
-              try {
-                val (raw, truncated) = drain(in)
-                InflatedPayload(id, raw, "gzip", bytes.length, raw.length, truncated)
-              } finally in.close()
-            } catch { case scala.util.control.NonFatal(_) => passthrough }
-          } else if (sniffZlib(bytes)) {
-            try {
-              inflater.reset()
-              val in = new java.util.zip.InflaterInputStream(
-                new java.io.ByteArrayInputStream(bytes), inflater, 64 * 1024)
-              try {
-                val (raw, truncated) = drain(in)
-                InflatedPayload(id, raw, "zlib", bytes.length, raw.length, truncated)
-              } finally in.close()
-            } catch { case scala.util.control.NonFatal(_) => passthrough }
-          } else passthrough
-        }
-      }
-  }
 }

@@ -92,9 +92,6 @@ object Profile {
     * short (adversarially small capacity), recall degrades gracefully: the
     * result is still the exact counts of the candidates found
     * (spec-asserted ≥ k recall on a Zipf fixture).
-    *
-    * For a single-pass ESTIMATE instead (streams, no second scan), see
-    * [[approxHeavyHittersOnePass]].
     */
   def approxHeavyHitters(
       df: DataFrame,
@@ -119,43 +116,6 @@ object Profile {
       .agg(count(lit(1)).as("n_rows"))
       .orderBy(col("n_rows").desc, col(keyCol).cast("string"))
       .limit(k)
-  }
-
-  /** One-pass approximate top-k: Misra–Gries candidates and a count-min
-    * sketch (Spark's built-in `count_min_sketch` aggregate — codegen'd
-    * partials, mergeable binary) computed in the SAME aggregation, then the
-    * candidates' frequencies estimated from the sketch driver-side. One
-    * scan, bounded state everywhere — the form for when a second pass is
-    * unavailable (a stream's foreachBatch profile) or the corpus scan
-    * dominates. Counts are CMS estimates: never below the true frequency,
-    * above it by at most eps·n with probability ≥ confidence. Keys are
-    * reported as strings (the sketch hashes the rendered key).
-    */
-  def approxHeavyHittersOnePass(
-      df: DataFrame,
-      keyCol: String,
-      k: Int = 20,
-      capacity: Int = 65536,
-      eps: Double = 0.0001,
-      confidence: Double = 0.99): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(capacity >= k, s"capacity ($capacity) must be >= k ($k)")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val mg = udaf(new graft.functions.MisraGries(capacity))
-    val row = df
-      .select(coalesce(col(keyCol).cast("string"), lit(NullKeySentinel)).as("__k"))
-      .agg(
-        mg(col("__k")).as("cand"),
-        expr(s"count_min_sketch(__k, ${eps}d, ${confidence}d, 42)").as("cms"))
-      .head()
-    val sketch = org.apache.spark.util.sketch.CountMinSketch.readFrom(row.getAs[Array[Byte]](1))
-    row.getSeq[org.apache.spark.sql.Row](0).map(_.getString(0))
-      .map(key => (key, sketch.estimateCount(key)))
-      .sortBy { case (key, est) => (-est, key) }
-      .take(k)
-      .map { case (key, est) => (if (key == NullKeySentinel) null else key, est) }
-      .toDF(keyCol, "est_rows")
   }
 
   /** Categorical-distribution drift between two corpus snapshots — the

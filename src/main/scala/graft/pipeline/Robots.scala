@@ -136,7 +136,7 @@ object Robots {
   }
 
   /** The `Crawl-delay` seconds the applicable group (same selection rule
-    * as [[isAllowed]]) declares for this crawler, or None — the per-host
+    * as [[isAllowedParsed]]) declares for this crawler, or None — the per-host
     * politeness interval a frontier scheduler feeds its rate limiter.
     * Merged groups at equal specificity take the MINIMUM declared delay.
     */
@@ -228,12 +228,9 @@ object Robots {
     p == pat.length
   }
 
-  /** The RFC 9309 allow/deny decision for one (robots body, crawler
-    * product token, URL path).
+  /** The RFC 9309 allow/deny decision for one (robots body [[parse]]d into
+    * groups, crawler product token, URL path).
     */
-  def isAllowed(robotsTxt: String, userAgent: String, path: String): Boolean =
-    isAllowedParsed(parse(robotsTxt), userAgent, path)
-
   private[graft] def isAllowedParsed(
       groups: Seq[Group], userAgent: String, path: String): Boolean =
     decideAllowed(applicableGroups(groups, userAgent),
@@ -306,8 +303,7 @@ object Robots {
     * one-window-per-host plan with no extra exchanges. `maxPerWave = 0`
     * disables slicing OUTRIGHT (a caller that knows its frontier is
     * cycle-bounded also skips the plan-deciding count job below — r22);
-    * `maxPerWave < 0` ⇒ session conf `spark.graft.crawl.maxPerWave`
-    * (default 2¹⁸ rows; 0 likewise disables).
+    * the default is 2¹⁸ rows.
     *
     * '''Cost note — CONSTRUCTION ITSELF TRIGGERS A JOB:''' with a positive
     * cap (the default), calling this method runs one eager row-count job
@@ -334,7 +330,7 @@ object Robots {
       hostCol: String = "host",
       pathCol: String = "path",
       robotsCol: String = "robots_txt",
-      maxPerWave: Long = -1L,
+      maxPerWave: Long = 1L << 18,
       rowCount: Long = -1L): DataFrame = {
     require(defaultDelaySec >= 0, s"defaultDelaySec must be >= 0, got $defaultDelaySec")
     val reserved = Set("__delay", "__surt", "__wave", "__wave_rows", "__nw", "__seq_off",
@@ -357,18 +353,15 @@ object Robots {
       .groupBy(col(hostCol)).agg(max(col("__delay")).as("__delay"))
     val withDelay = hosted.join(delays, Seq(hostCol))
       .withColumn("__surt", Urls.surtOf(col(hostCol), col(pathCol)))
-    val cap =
-      if (maxPerWave >= 0) maxPerWave
-      else spark.conf.get("spark.graft.crawl.maxPerWave", (1L << 18).toString).toLong
     // one cheap aggregate job decides the plan: a frontier that fits one
     // wave keeps the plain per-host window (no extra exchanges). A caller
     // that already knows the frontier's row count passes it via rowCount
     // and skips the job entirely.
     val nWaves =
-      if (cap <= 0) 1L
+      if (maxPerWave <= 0) 1L
       else {
         val n = if (rowCount >= 0) rowCount else hosted.count()
-        math.min((n + cap - 1) / cap, 1L << 20)
+        math.min((n + maxPerWave - 1) / maxPerWave, 1L << 20)
       }
     if (nWaves <= 1) {
       val w = org.apache.spark.sql.expressions.Window

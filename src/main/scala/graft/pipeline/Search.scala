@@ -5,19 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Term search over a document corpus — the retrieval side of a training
   *-data pipeline (find contaminated subsets, audit what the corpus says
-  * about a topic, seed curriculum buckets by keyword). Two access paths:
-  *
-  *   - ad hoc over the corpus ([[searchAll]] / [[searchRanked]]): one
-  *     explode + a map-side `isin` prune to the (tiny) query-term set, so
-  *     only matching (doc, term) rows ever reach an exchange;
-  *   - a persisted inverted index ([[writeInvertedIndex]]): postings
-  *     (term, doc_id, tf) written hash-BUCKETED by term —
-  *     [[searchIndex]]'s per-term lookups then prune buckets at the scan
-  *     and join with no index-side shuffle, the
-  *     [[Decontamination.writeBucketedEvalShingleIndex]] layout applied to
-  *     retrieval. Build once (one explode + one aggregation over the
-  *     corpus), query many — the 100 TB shape, where re-exploding the
-  *     corpus per query would dwarf the lookup.
+  * about a topic, seed curriculum buckets by keyword). Ad hoc over the
+  * corpus ([[searchAll]] / [[searchRanked]]): one explode + a map-side
+  * `isin` prune to the (tiny) query-term set, so only matching (doc, term)
+  * rows ever reach an exchange.
   */
 object Search {
 
@@ -25,33 +16,6 @@ object Search {
     docs.select(col(idCol), explode(split(lower(col(textCol)), " ")).as("term"))
       .groupBy(col("term"), col(idCol))
       .agg(count(lit(1)).as("tf"))
-
-  /** Build + persist the postings table (term, doc_id, tf), bucketed and
-    * sorted by term: joins keyed on term see the bucketing as their
-    * distribution (no index-side shuffle), and point lookups bucket-prune
-    * at the scan — note Spark's planner only keeps the bucketed scan (and
-    * with it bucket pruning) when something downstream wants the term
-    * distribution; a lookup-heavy deployment sets
-    * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false`
-    * (spec-demonstrated: 2 query terms read ≤2 of the buckets). Either
-    * way the IN filter pushes to parquet and the per-bucket term sort
-    * makes row-group pruning effective. Returns the registered table.
-    */
-  def writeInvertedIndex(
-      docs: DataFrame,
-      tableName: String,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numBuckets: Int = 16): DataFrame = {
-    val spark = docs.sparkSession
-    graft.Tables.dropManaged(spark, tableName)
-    postings(docs, idCol, textCol)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "term")
-      .sortBy("term")
-      .saveAsTable(tableName)
-    spark.table(tableName)
-  }
 
   /** Conjunctive (AND) search: documents containing EVERY query term, with
     * the total occurrence count of the query terms in the doc. The term
@@ -62,20 +26,10 @@ object Search {
       docs: DataFrame,
       terms: Seq[String],
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    matchAll(postings(docs, idCol, textCol), terms, idCol)
-
-  /** [[searchAll]] against a persisted [[writeInvertedIndex]] table: the
-    * postings are pre-aggregated and bucket-pruned, so the whole lookup
-    * moves query-term-sized data.
-    */
-  def searchIndex(index: DataFrame, terms: Seq[String], idCol: String = "doc_id"): DataFrame =
-    matchAll(index, terms, idCol)
-
-  private def matchAll(postings: DataFrame, terms: Seq[String], idCol: String): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val distinctTerms = terms.map(_.toLowerCase).distinct
     require(distinctTerms.nonEmpty, "terms must be non-empty")
-    postings.filter(col("term").isin(distinctTerms: _*))
+    postings(docs, idCol, textCol).filter(col("term").isin(distinctTerms: _*))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("__hits"), sum(col("tf")).as("total_tf"))
       // postings are (term, doc)-unique, so count(*) counts distinct terms

@@ -75,10 +75,10 @@ object Snapshot {
     *
     * Shape: ONE full-outer join keyed on `idCol` — both sides shuffle by
     * id once, everything else is map-side. With both snapshots written
-    * bucketed by id (the [[Search.writeInvertedIndex]] layout discipline),
-    * the join is exchange-free end to end. Ids are assumed unique within a
-    * snapshot (the corpus contract everywhere in this library); duplicate
-    * ids would cross-multiply through the join like any keyed join.
+    * bucketed by id, the join is exchange-free end to end. Ids are assumed
+    * unique within a snapshot (the corpus contract everywhere in this
+    * library); duplicate ids would cross-multiply through the join like any
+    * keyed join.
     */
   def diff(
       oldSnap: DataFrame,
@@ -95,15 +95,4 @@ object Snapshot {
           .when(col("__o_c") <=> col("__n_c"), "unchanged")
           .otherwise("changed").as("status"))
   }
-
-  /** The summary form: status → row count (four rows at most) — the
-    * per-batch monitoring number.
-    */
-  def diffCounts(
-      oldSnap: DataFrame,
-      newSnap: DataFrame,
-      idCol: String = "doc_id",
-      contentCol: String = "text"): DataFrame =
-    diff(oldSnap, newSnap, idCol, contentCol)
-      .groupBy(col("status")).agg(count(lit(1)).as("n_docs"))
 }

@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
   *     `monotonically_increasing_id` ban);
   *   - auditable — [[md5Bucket]] uses a hash any engine can replay
   *     (`md5(cast(id as string))`, first 4 hex digits as an integer), so an
-  *     external system can verify membership row by row. [[hashBucket]] is
-  *     the cheaper in-engine path (xxhash64, no string round-trip) for
-  *     splits that only Spark jobs will consume.
+  *     external system can verify membership row by row.
   */
 object Splits {
 
@@ -35,15 +33,6 @@ object Splits {
       s"md5Bucket draws 16 bits of hash; buckets must be in (0, 1000] to keep " +
         s"occupancy skew under 2% of the 65536-value space, got $buckets")
     conv(substring(md5(id.cast("string")), 1, 4), 16, 10).cast("int") % buckets
-  }
-
-  /** Bucket in [0, buckets) from `xxhash64(id, seed)` — the in-engine scale
-    * path: one codegen'd long hash, no string materialization. Different
-    * seeds give independent splits (e.g. a cross-validation re-fold).
-    */
-  def hashBucket(id: Column, buckets: Int, seed: Int = 42): Column = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    pmod(xxhash64(id, lit(seed)), lit(buckets.toLong)).cast("int")
   }
 
   /** Assign each row a split label by cumulative bucket ranges:
@@ -88,14 +77,4 @@ object Splits {
       buckets: Int = 100,
       splitCol: String = "split"): DataFrame =
     assign(df, fractions, md5Bucket(col(idCol), buckets), buckets, splitCol)
-
-  /** [[assign]] with the in-engine [[hashBucket]]. */
-  def assignByHash(
-      df: DataFrame,
-      idCol: String,
-      fractions: Seq[(String, Double)],
-      buckets: Int = 100,
-      seed: Int = 42,
-      splitCol: String = "split"): DataFrame =
-    assign(df, fractions, hashBucket(col(idCol), buckets, seed), buckets, splitCol)
 }

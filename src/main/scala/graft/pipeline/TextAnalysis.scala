@@ -13,20 +13,6 @@ import graft.functions.TextFunctions._
   */
 object TextAnalysis {
 
-  /** Word n-gram spans of a word-array column (split lowercased text on
-    * single spaces upstream): n consecutive words re-joined with a space;
-    * arrays shorter than n yield none. Shared by [[duplicatedSpans]],
-    * [[Repetition]], and [[Decontamination]] — the one n-gram definition
-    * every shingle-based operator (and every DuckDB oracle CTE) agrees on.
-    * The CASE guards Spark's `sequence(1, 0)` producing a descending
-    * [1, 0] rather than an empty array.
-    */
-  private[pipeline] def shinglesOfWords(words: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
-    when(size(words) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(1), size(words) - (n - 1)),
-        i => array_join(slice(words, i, lit(n)), " ")))
-
   /** Per-document token statistics (whitespace tokenization). The average is
     * left as the raw IEEE division of two exact ints — both engines divide
     * the same integers and get bitwise-identical doubles; rounding it would
@@ -467,97 +453,6 @@ object TextAnalysis {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), round(avg(col("__lp")), 6).as("avg_logprob"))
       .withColumn("perplexity", round(exp(-col("avg_logprob")), 6))
-  }
-
-  /** A frozen bigram LM: the top-K count tables and smoothing constants of
-    * [[bigramLogProb]], collected to the driver. Bounded by construction
-    * (`bigramK + contextK` entries — the eval-shingle / ANN-centroid
-    * collect class, NOT corpus-sized), so it can ship as literal maps
-    * inside a streaming gate.
-    */
-  final case class BigramLm(
-      bigramCounts: Map[String, Long],
-      contextCounts: Map[String, Long],
-      vSize: Long,
-      alpha: Double)
-
-  /** Train the [[BigramLm]] on a reference corpus — the bounded prep step
-    * for [[dropByPerplexityStreaming]] (train once on the trusted corpus,
-    * gate every crawl increment against it).
-    */
-  def bigramModel(
-      docs: DataFrame,
-      bigramK: Int = 5000,
-      contextK: Int = 1000,
-      alpha: Double = 1.0): BigramLm = {
-    require(bigramK > 0, s"bigramK must be positive, got $bigramK")
-    require(contextK > 0, s"contextK must be positive, got $contextK")
-    require(alpha > 0, s"alpha must be positive, got $alpha")
-    // uncached for the same reason as bigramLogProb's fan-out (r21);
-    // both tables from ONE distinct-bigram aggregation collected in ONE
-    // action (r22): the ctx totals are the exact long sums of its
-    // bigrams' counts, the two cuts union behind a side tag, and within
-    // the single job AQE reuses the shared groupBy(bigram) exchange — one
-    // corpus generator pass instead of two (separate collects would each
-    // re-run it: cross-ACTION reuse needs a cache, which r21 rejected)
-    val bgAll = docs.select(
-      graft.functions.WordShingleHashesFunction
-        .wordShingleHashes(col("text"), 2, withHashes = false)
-        .as(Seq("bigram")))
-    val pairCounts = bgAll.groupBy(col("bigram")).agg(count(lit(1)).as("c2"))
-    val b2Cut = pairCounts
-      .orderBy(col("c2").desc, col("bigram")).limit(bigramK)
-      .select(lit("b").as("side"), col("bigram").as("key"), col("c2").as("n"))
-    val c1Cut = pairCounts
-      .groupBy(substring_index(col("bigram"), " ", 1).as("ctx"))
-      .agg(sum(col("c2")).as("c1"))
-      .orderBy(col("c1").desc, col("ctx")).limit(contextK)
-      .select(lit("c").as("side"), col("ctx").as("key"), col("c1").as("n"))
-    val rows = b2Cut.union(c1Cut).collect()
-    val b2 = rows.filter(_.getString(0) == "b")
-      .map(r => r.getString(1) -> r.getLong(2)).toMap
-    val c1 = rows.filter(_.getString(0) == "c")
-      .map(r => r.getString(1) -> r.getLong(2)).toMap
-    val v = docs.select(explode(split(lower(col("text")), " ")).as("term"))
-      .agg(countDistinct(col("term"))).collect()(0).getLong(0)
-    BigramLm(b2, c1, v, alpha)
-  }
-
-  /** Ingestion-time perplexity gate: a PURE map-side filter (the frozen
-    * model rides as literal maps, per-row cost is one map probe per
-    * bigram) that composes onto a STREAM with zero state, like the other
-    * streaming curation gates. Keeps rows whose perplexity under the
-    * frozen model is ≤ `maxPerplexity`; unscoreable rows (null text,
-    * fewer than 2 tokens) FAIL the gate, matching [[dropByPerplexity]].
-    * Rounding matches the batch scorer (round-6 avg, then exp), so the
-    * two agree doc for doc when the model matches.
-    *
-    * Scoring is the native codegen'd
-    * [[graft.functions.BigramLogProb]] expression (tight JVM loop over
-    * HashMap probes; bit-parity with the interpreted
-    * `aggregate`/`element_at` HOF form it replaced — same tokenization,
-    * fold order, and Math.log); the round/exp/threshold stay in-plan so
-    * the gate's arithmetic remains engine-replayable.
-    */
-  def dropByPerplexityStreaming(
-      docs: DataFrame,
-      model: BigramLm,
-      maxPerplexity: Double,
-      textCol: String = "text"): DataFrame = {
-    require(maxPerplexity > 0, s"maxPerplexity must be positive, got $maxPerplexity")
-    require(!docs.columns.contains("__lm"), "__lm is reserved by the perplexity gate")
-    val denomAdd = model.alpha * (model.vSize.toDouble + 1.0)
-    val lm = graft.functions.TextFunctions.bigramLogProb(
-      col(textCol), model.bigramCounts, model.contextCounts, model.alpha, denomAdd)
-    // project the struct ONCE and filter on its fields — referencing the
-    // expression three times inside one Filter would tokenize and probe
-    // every row ~3× (predicate codegen does no subexpression elimination)
-    val nB = col("__lm").getField("n_bigrams")
-    val avg = round(col("__lm").getField("lp_sum") / nB.cast("double"), 6)
-    val ppl = round(exp(-avg), 6)
-    docs.withColumn("__lm", lm)
-      .filter(coalesce(nB > 0 && ppl <= maxPerplexity, lit(false)))
-      .drop("__lm")
   }
 
   /** The act step of [[bigramLogProb]]: keep documents whose corpus-LM

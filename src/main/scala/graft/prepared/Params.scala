@@ -116,17 +116,6 @@ object Params {
         s.withNewPlan(bindLogicalUnchecked(s.plan, params))
     }
 
-  /** Replace every [[ParamPlaceholder]] in the expression with a literal from
-    * `params`; error on a missing id.
-    */
-  def substitute(e: Expression, params: Map[String, Any]): Expression =
-    e.transform { case ParamPlaceholder(id, dt) =>
-      params.get(id) match {
-        case Some(v) => literal(id, dt, v)
-        case None    => missing(id)
-      }
-    }
-
   /** Bind a cached physical plan: clone-and-substitute every placeholder with
     * a literal, recursing into subquery plans. Fails fast if any referenced
     * placeholder has no value.

@@ -1,14 +1,15 @@
 package graft.prepared
 
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Expression, In, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{
+  AttributeReference, AttributeSet, EqualTo, Expression, In, Literal, PredicateHelper}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.graft.Internals
 
 import graft.plans.DynamicFilterExec
-import graft.sources.KeyedMemScan
+import graft.sources.{KeyedMemScan, KeyedMemTables}
 
 /** Execute-time parquet pushdown for freshly bound predicates.
   *
@@ -24,6 +25,22 @@ import graft.sources.KeyedMemScan
   * scan node, so nothing shared is mutated.
   */
 object ScanRebind extends PredicateHelper {
+
+  /** The key values a bound conjunct pins, if it is `key = literal` (either
+    * side) or `key IN (literals)` on the scan's `keyCol`.
+    */
+  private def keySet(c: Expression, keyCol: String, output: AttributeSet): Option[Set[Any]] = {
+    val operands = c match {
+      case EqualTo(a: AttributeReference, l: Literal) => Some((a, Seq(l)))
+      case EqualTo(l: Literal, a: AttributeReference) => Some((a, Seq(l)))
+      case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        Some((a, vs.map(_.asInstanceOf[Literal])))
+      case _ => None
+    }
+    operands.collect { case (a, ls) if a.name.equalsIgnoreCase(keyCol) && output.contains(a) =>
+      ls.map(l => CatalystTypeConverters.convertToScala(l.value, l.dataType)).toSet[Any]
+    }
+  }
 
   def rebind(bound: SparkPlan): SparkPlan = {
     // Conjuncts of every (now concrete) dynamic filter in the plan. The
@@ -53,29 +70,10 @@ object ScanRebind extends PredicateHelper {
       case b: BatchScanExec =>
         b.scan match {
           case ks: KeyedMemScan if ks.keys.isEmpty =>
-            val keyCol = graft.sources.KeyedMemTables.registry(ks.table).keyCol
-            def external(l: Literal): Any =
-              CatalystTypeConverters.convertToScala(l.value, l.dataType)
-            val keySets = conjuncts.collect {
-              case EqualTo(a: AttributeReference, l: Literal)
-                  if a.name.equalsIgnoreCase(keyCol) && a.references.subsetOf(b.outputSet) =>
-                Set(external(l))
-              case EqualTo(l: Literal, a: AttributeReference)
-                  if a.name.equalsIgnoreCase(keyCol) && a.references.subsetOf(b.outputSet) =>
-                Set(external(l))
-              case In(a: AttributeReference, vs)
-                  if a.name.equalsIgnoreCase(keyCol) && a.references.subsetOf(b.outputSet) &&
-                    vs.forall(_.isInstanceOf[Literal]) =>
-                vs.map(v => external(v.asInstanceOf[Literal])).toSet
-            }
+            val keyCol = KeyedMemTables.registry(ks.table).keyCol
+            val keySets = conjuncts.flatMap(keySet(_, keyCol, b.outputSet))
             if (keySets.isEmpty) b
-            // NULL keys never match under SQL semantics (`k = NULL` is
-            // NULL → filtered); the retained row-level predicate above the
-            // scan keeps correctness either way, but shipping byKey(null)'s
-            // rows just to discard them wastes the lookup (the same rule
-            // KeyedScanBuilder applies to planner-pushed filters)
-            else b.copy(scan = ks.withKeys(
-              keySets.reduce(_ intersect _).filter(_ != null).toSeq))
+            else b.copy(scan = ks.withKeys(KeyedMemTables.intersectKeys(keySets)))
           // DSv2 parquet: the protocol is source-agnostic (the reference
           // pushes its DynamicFilterPhysicalExpr to ANY provider,
           // physical.rs:270-336), so a session reading parquet through v2

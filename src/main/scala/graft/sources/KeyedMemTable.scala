@@ -77,8 +77,16 @@ object KeyedMemTables {
   def clear(spark: SparkSession): Unit =
     registry.keys.toSeq.foreach(unregister(spark, _))
 
-  private[sources] def intersectKeys(sets: Seq[Set[Any]]): Seq[Any] =
-    sets.reduce(_ intersect _).toSeq
+  /** The keys a lookup ships: those every pushed key set allows, without
+    * NULL. A NULL value never MATCHES under SQL semantics (`k = NULL` is
+    * NULL, and `k IN ('a', NULL)` is NULL — filtered — for a NULL key), and
+    * planner-pushed filters are not re-applied after the scan, so shipping
+    * byKey(null)'s rows would RETURN rows a correct engine excludes. Both
+    * pushdown paths (planning-time [[KeyedScanBuilder]], execute-time
+    * `ScanRebind`) go through here.
+    */
+  private[graft] def intersectKeys(sets: Seq[Set[Any]]): Seq[Any] =
+    sets.reduce(_ intersect _).filter(_ != null).toSeq
 }
 
 class KeyedMemSource extends TableProvider {
@@ -119,14 +127,9 @@ class KeyedScanBuilder(table: String) extends ScanBuilder with SupportsPushDownF
   override def build(): Scan = {
     val keys =
       if (pushed.isEmpty) None
-      // NULL values in a pushed filter never MATCH under SQL semantics
-      // (`k IN ('a', NULL)` is NULL — i.e. filtered — for a NULL key;
-      // `k = NULL` matches nothing), and because pushed filters are not
-      // re-applied after the scan, shipping byKey(null)'s rows here would
-      // RETURN rows a correct engine excludes (r19 review catch)
       else Some(KeyedMemTables.intersectKeys(pushed.toSeq.map {
-        case SrcEqualTo(_, v) => Set[Any](v).filter(_ != null)
-        case SrcIn(_, vs)     => vs.toSet[Any].filter(_ != null)
+        case SrcEqualTo(_, v) => Set[Any](v)
+        case SrcIn(_, vs)     => vs.toSet[Any]
         case _                => Set.empty[Any]
       }))
     KeyedMemScan(table, keys)

@@ -15,9 +15,7 @@ import org.apache.spark.sql.functions._
   * input: DTD support and external-entity resolution are OFF (no XXE, no
   * billion-laughs expansion), and a malformed document yields the
   * entries parsed so far instead of failing the task — the same
-  * stop-at-last-whole-record stance as [[Warc.parseRecords]]. Gzipped
-  * sitemaps (`.xml.gz`) compose upstream with
-  * [[graft.pipeline.Multimodal.inflatePayload]].
+  * stop-at-last-whole-record stance as [[Warc.parseRecords]].
   */
 object Sitemaps {
 

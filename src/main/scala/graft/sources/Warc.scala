@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   * segment is ~1 GiB so tasks are chunky but bounded; at 100 TB that is
   * ~100k files = ~100k tasks). Per-record payloads are capped at
   * `maxRecordBytes` (truncated, stream stays aligned) so one hostile
-  * record cannot OOM a task — same bomb-guard stance as
-  * [[graft.pipeline.Multimodal.inflatePayload]]. Malformed bytes stop the
+  * record cannot OOM a task. Malformed bytes stop the
   * file's parse at the last whole record instead of failing the task.
   */
 object Warc {

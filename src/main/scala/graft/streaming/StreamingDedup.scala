@@ -20,10 +20,7 @@ import graft.pipeline.Dedup
   * against the static index. The index carries signatures, not text
   * (numHashes longs per distinct doc); hot bands (boilerplate) are capped
   * at build time with the same [[Dedup.capBuckets]] budget the batch
-  * operators use, bounding any band's join fan-out. For a corpus that
-  * outgrows broadcast size, [[writeBucketedCorpusBandIndex]] persists the
-  * index bucketed by (band, band_hash) so micro-batches join against a
-  * fixed layout with no index-side shuffle.
+  * operators use, bounding any band's join fan-out.
   *
   * Both entry points also accept batch frames unchanged (stream-static
   * joins and map-side expressions are the same operators in either mode) —
@@ -64,48 +61,6 @@ object StreamingDedup {
       .select(col("band"), col("band_hash"),
         col("id").as("corpus_id"), col("sig").as("corpus_sig"))
 
-  /** The scale path for a corpus index that outgrows broadcast: write the
-    * band index as a managed table hash-BUCKETED by its join keys
-    * (band, band_hash), so every micro-batch's stream-static join plans
-    * with ZERO exchange on the index side — the bucketed scan already
-    * satisfies the join's required distribution, and only the (small)
-    * micro-batch is shuffled, into `numBuckets` partitions. Without this
-    * layout the full index would be re-shuffled (or re-broadcast) on every
-    * micro-batch; with it the per-batch cost is ∝ batch size, independent
-    * of corpus size. Buckets are additionally sorted by the join keys at
-    * write time — Spark's reader does not consume sortBy metadata (so the
-    * plan still carries an index-side sort node), but sorting nearly-sorted
-    * runs is cheap and keeps bucket files compressible.
-    *
-    * Rebuild when the corpus changes (the write replaces the table); pass
-    * the returned frame — or `spark.table(tableName)` in a later session
-    * with the same warehouse — to [[nearDupMatches]]. Signature parameters
-    * MUST match the matching call, as with [[corpusBandIndex]].
-    *
-    * Sizing: `numBuckets` bounds per-task index volume at match time —
-    * choose ≈ index_rows × row_width / target_partition_bytes (e.g. 10⁹
-    * docs × 16 bands ≈ 1.6·10¹⁰ rows × ~100 B ≈ 1.6 TB → ~12k buckets of
-    * ~128 MB).
-    */
-  def writeBucketedCorpusBandIndex(
-      corpus: DataFrame,
-      tableName: String,
-      numBuckets: Int = 16,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 64,
-      bands: Int = 16,
-      bucketCap: Int = Dedup.defaultBucketCap): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.Tables.dropManaged(spark, tableName)
-    corpusBandIndex(corpus, idCol, textCol, numHashes, bands, bucketCap)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "band", "band_hash")
-      .sortBy("band", "band_hash")
-      .saveAsTable(tableName)
-    spark.table(tableName)
-  }
-
   /** Match incoming documents against the corpus index: map-side signature +
     * band explode on the stream side, stream-static equi join on
     * (band, band_hash), exact signature-agreement verify to estimated
@@ -131,41 +86,4 @@ object StreamingDedup {
       .withColumn("est_jaccard", signatureAgreement(col("sig"), col("corpus_sig")))
       .filter(col("est_jaccard") >= threshold)
       .select(col("id"), col("corpus_id"), round(col("est_jaccard"), 4).as("est_jaccard"))
-
-  /** The media analog of [[corpusBandIndex]]: one row per pigeonhole band
-    * of each corpus item's 60-bit perceptual hash —
-    * (band, bits, corpus_id, corpus_phash). Build once offline; the
-    * `maxHamming` MUST match the [[phashMatches]] call (it fixes the band
-    * split). Same bucketed-table scale path applies (write with
-    * `bucketBy(n, "band", "bits")`).
-    */
-  def corpusPhashIndex(
-      corpus: DataFrame,
-      maxHamming: Int = 5,
-      idCol: String = "doc_id",
-      bucketCap: Int = Dedup.defaultBucketCap): DataFrame =
-    Dedup.capBuckets(
-        graft.pipeline.Multimodal.phashBands(
-          graft.pipeline.Multimodal.pHashStub(corpus, idCol), maxHamming, idCol),
-        bucketCap, "band", "bits")
-      .select(col("band"), col("bits"),
-        col("id").as("corpus_id"), col("phash").as("corpus_phash"))
-
-  /** Ingestion-time media near-dup gate: incoming payloads hash and band
-    * map-side, stream-static equi join on (band, bits), exact
-    * `bit_count(xor)` verify — ZERO streaming state, per-batch cost ∝
-    * batch size. Multiset semantics like [[nearDupMatches]] (one row per
-    * colliding band); aggregate downstream.
-    */
-  def phashMatches(
-      media: DataFrame,
-      phashIndex: DataFrame,
-      maxHamming: Int = 5,
-      idCol: String = "doc_id"): DataFrame =
-    graft.pipeline.Multimodal.phashBands(
-        graft.pipeline.Multimodal.pHashStub(media, idCol), maxHamming, idCol)
-      .join(phashIndex, Seq("band", "bits"))
-      .withColumn("hamming", bit_count(col("phash").bitwiseXOR(col("corpus_phash"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id"), col("corpus_id"), col("hamming"))
 }

@@ -6,11 +6,12 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.columnar.CachedBatch
-import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{
+  ColumnarToRowExec, LogicalRDD, ProjectExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.columnar.{
   DefaultCachedBatch, DefaultCachedBatchSerializer, GenerateColumnAccessor, InMemoryTableScanExec}
 import org.apache.spark.sql.internal.SQLConf
@@ -55,7 +56,7 @@ object Internals {
     * output RDD. No job runs until an action is invoked on the result.
     */
   def dfFromPhysical(spark: SparkSession, plan: SparkPlan): DataFrame =
-    dfFromInternalRDD(spark, plan.output, plan.execute())
+    dfFromInternalRDD(spark, plan.output, withoutDroppedCaches(plan).execute())
 
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
     classicSession(spark).sessionState.sqlParser.parsePlan(sql)
@@ -80,14 +81,49 @@ object Internals {
     * pushed keys, or a row-based scan of a materialized cache whose blocks
     * all sit in this JVM's block manager) is evaluated on the driver with no
     * Spark job ([[DriverTier]] states the exact rule); every other plan runs
-    * as a job through `executeCollect()`.
+    * as a job through `executeCollect()`, reading any cache dropped since the
+    * plan was built from its source ([[withoutDroppedCaches]]).
     */
   def collectPhysical(plan: SparkPlan): Array[org.apache.spark.sql.Row] = {
     val schema = org.apache.spark.sql.types.StructType(
       plan.output.map(a => org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable, a.metadata)))
     val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(schema)
-    val rows = DriverTier.rows(plan).getOrElse(plan.executeCollect().iterator)
+    val rows =
+      DriverTier.rows(plan).getOrElse(withoutDroppedCaches(plan).executeCollect().iterator)
     rows.map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row]).toArray
+  }
+
+  /** `plan` with each scan of a cache that was dropped since the plan was
+    * built replaced by the cache's own source plan. A frozen prepared plan
+    * keeps its `InMemoryRelation` after `uncacheTable`, and scanning it
+    * calls `cachedColumnBuffers`, which would rebuild and persist the
+    * cleared buffers outside the cache manager. A scan counts as dropped
+    * when its buffers are not loaded and the session's cache manager no
+    * longer holds its builder; a loaded cache costs one flag read, and a
+    * registered but unmaterialized cache still fills on this run. Only
+    * row-based scans are replaced: a columnar one feeds a `ColumnarToRowExec`
+    * that cannot take rows.
+    */
+  private def withoutDroppedCaches(plan: SparkPlan): SparkPlan = {
+    def dropped(scan: InMemoryTableScanExec): Boolean = {
+      val builder = scan.relation.cacheBuilder
+      !builder.isCachedColumnBuffersLoaded && {
+        val session = classicSession(SparkSession.active)
+        !session.sharedState.cacheManager.lookupCachedData(session, builder.logicalPlan)
+          .exists(_.cachedRepresentation.cacheBuilder eq builder)
+      }
+    }
+    // the relation's output maps position for position onto its cached
+    // plan's; the projection keeps the scan's attribute ids for the parents
+    def source(scan: InMemoryTableScanExec): ProjectExec = {
+      val cached = scan.relation.cacheBuilder.cachedPlan.clone()
+      val rows = if (cached.supportsColumnar) ColumnarToRowExec(cached) else cached
+      val byId = scan.relation.output.map(_.exprId).zip(rows.output).toMap
+      ProjectExec(scan.attributes.map(a => Alias(byId(a.exprId), a.name)(a.exprId)), rows)
+    }
+    plan.transformUp {
+      case scan: InMemoryTableScanExec if !scan.supportsColumnar && dropped(scan) => source(scan)
+    }
   }
 
   /** The rows of a cached-table scan read straight out of this JVM's block

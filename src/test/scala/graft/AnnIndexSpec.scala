@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.{cosineSimilarity, hyperplaneBucket}
 import graft.pipeline.Similarity
 
 /** The ANN index must behave like an index: a probe reads only the probed
@@ -24,6 +26,32 @@ class AnnIndexSpec extends SparkTestBase {
     case s: FileSourceScanExec    => Some(s)
     case other                    => other.children.view.flatMap(findScan(_)).headOption
   }
+
+  /** The live probe entry points take resolved frames; these resolve an
+    * index path once per call, as a query over a frozen index would.
+    */
+  private def lshProbe(path: String, q: Seq[Float], k: Int, bits: Int, seed: Long = 7L,
+      tables: Int = 2) =
+    Similarity.lshTopKIndexedOn(spark.read.parquet(path), q, k, bits, seed, tables)
+
+  private def ivfProbe(path: String, q: Seq[Float], k: Int, nprobe: Int = 3) =
+    Similarity.ivfTopKOn(spark.read.parquet(path),
+      spark.read.parquet(path + "__centroids")
+        .collect().map(r => (r.getInt(0), r.getSeq[Float](1))).toSeq,
+      q, k, nprobe)
+
+  /** Full-scan LSH oracle for the indexed probe: every row's bucket is
+    * computed, then filtered to the query's probe set — the same answer
+    * the pruned index read must give, at the cost of a full scan.
+    */
+  private def lshScan(embs: DataFrame, q: Seq[Float], k: Int, bits: Int, seed: Long) =
+    embs.select(col("vec_id"), col("embedding"),
+        hyperplaneBucket(col("embedding"), bits, seed).as("bucket"))
+      .filter(col("bucket").isin(Similarity.probesOf(q, bits, seed): _*))
+      .select(col("vec_id"),
+        round(cosineSimilarity(col("embedding"), typedLit(q)), 6).as("cosine"))
+      .orderBy(col("cosine").desc, col("vec_id"))
+      .limit(k)
 
   private lazy val (indexPath, query, nPartitions) = {
     import spark.implicits._
@@ -45,7 +73,7 @@ class AnnIndexSpec extends SparkTestBase {
   }
 
   test("probe prunes to the probed bucket partitions") {
-    val df = Similarity.lshTopKIndexed(spark, indexPath, query, k = 5, bits = 4, seed = 7L, tables = 1)
+    val df = lshProbe(indexPath, query, k = 5, bits = 4, tables = 1)
     val rows = df.collect()
     rows.length shouldBe 5
     rows.head.getLong(0) shouldBe 3L // the query vector itself ranks first
@@ -67,9 +95,9 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("indexed probe agrees with the unindexed scan path") {
     val embs = spark.read.parquet(indexPath).select(col("vec_id"), col("embedding"))
-    val indexed = Similarity.lshTopKIndexed(spark, indexPath, query, k = 5, bits = 4, seed = 7L)
+    val indexed = lshProbe(indexPath, query, k = 5, bits = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val scanned = Similarity.lshTopK(embs, query, k = 5, bits = 4, seed = 7L)
+    val scanned = lshScan(embs, query, k = 5, bits = 4, seed = 7L)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     indexed shouldBe scanned
   }
@@ -100,9 +128,9 @@ class AnnIndexSpec extends SparkTestBase {
     Similarity.buildLshIndex(embs, lshPath, bits = 4, tables = 4)
     Similarity.buildIvfIndex(embs, ivfPath)
 
-    val lsh = Similarity.lshTopKIndexed(spark, lshPath, q, k = 10, bits = 4, tables = 4)
+    val lsh = lshProbe(lshPath, q, k = 10, bits = 4, tables = 4)
       .collect().map(_.getLong(0)).toSet
-    val ivf = Similarity.ivfTopK(spark, ivfPath, q, k = 10)
+    val ivf = ivfProbe(ivfPath, q, k = 10)
       .collect().map(_.getLong(0)).toSet
 
     withClue(s"LSH overlap@10 vs brute force (exact=$exact lsh=$lsh): ") {
@@ -127,107 +155,17 @@ class AnnIndexSpec extends SparkTestBase {
     val exact = Similarity.bruteForceTopKBatch(corpus, queries, k = 8)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     // probing every centroid = exhaustive: must match brute force row for row
-    val all = Similarity.ivfTopKBatch(spark, path, queries, k = 8, nprobe = 16,
+    val index = spark.read.parquet(path)
+    val centroids = spark.read.parquet(path + "__centroids")
+    val all = Similarity.ivfTopKBatchOn(index, centroids, queries, k = 8, nprobe = 16,
         corpusFilter = col("vec_id") >= 6)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     all shouldBe exact
     // a partial probe keeps high overlap on this adversarially random corpus
-    val partial = Similarity.ivfTopKBatch(spark, path, queries, k = 8, nprobe = 8,
+    val partial = Similarity.ivfTopKBatchOn(index, centroids, queries, k = 8, nprobe = 8,
         corpusFilter = col("vec_id") >= 6)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     partial.intersect(exact).size should be >= (exact.size * 3) / 4
-  }
-
-  test("appendToIvfIndex ingests new vectors without a rebuild, exact at full probe") {
-    import spark.implicits._
-    val embs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val first = embs.filter(col("vec_id") % 2 === 0)
-    val second = embs.filter(col("vec_id") % 2 === 1)
-    val dir = Files.createTempDirectory("graft_ivf_append").toFile
-    dir.deleteOnExit()
-    val path = dir.getAbsolutePath + "/ivf"
-    Similarity.buildIvfIndex(first, path, k = 8)
-    Similarity.appendToIvfIndex(second, path)
-    // the appended index covers the FULL corpus: an exhaustive probe must
-    // equal brute force over the union, old and new vectors alike
-    val queries = embs.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val corpus = embs.filter(col("vec_id") >= 4)
-    val exact = Similarity.bruteForceTopKBatch(corpus, queries, k = 6)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val probed = Similarity.ivfTopKBatch(spark, path, queries, k = 6, nprobe = 8,
-        corpusFilter = col("vec_id") >= 4)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    probed shouldBe exact
-    // and the append reused the existing layout: centroid table unchanged,
-    // rows landed in existing cid partitions
-    spark.read.parquet(path + "__centroids").count() shouldBe 8L
-    spark.read.parquet(path).count() shouldBe embs.count()
-
-    // --- compaction: repeated appends accumulate one file per batch per
-    // touched partition; compact collapses them with probes unchanged ---
-    def dataFiles(): Seq[java.io.File] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-        else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-      walk(new java.io.File(path))
-    }
-    Similarity.appendToIvfIndex(second.limit(0), path) // touch nothing (empty)
-    val before = dataFiles().length
-    before should be > 8 // 2+ batches over 8 partitions left > one file each
-    Similarity.compactIvfIndex(spark, path)
-    val after = dataFiles().length
-    after should be < before
-    after should be <= 8 // at most one file per cid at this tiny size
-    // probe results identical through the rewrite: same rows, same top-k
-    spark.read.parquet(path).count() shouldBe embs.count()
-    spark.read.parquet(path + "__centroids").count() shouldBe 8L
-    val probedAfter = Similarity.ivfTopKBatch(spark, path, queries, k = 6, nprobe = 8,
-        corpusFilter = col("vec_id") >= 4)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    probedAfter shouldBe exact
-  }
-
-  test("versioned index catalog: pointer flips atomically, readers' files never move") {
-    import graft.pipeline.IndexCatalog
-    import spark.implicits._
-    val embs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val dir = Files.createTempDirectory("graft_ivf_versioned").toFile
-    dir.deleteOnExit()
-    val root = dir.getAbsolutePath + "/ivf"
-    // unpublished root: resolve fails loudly, not with a phantom path
-    an[IllegalStateException] should be thrownBy IndexCatalog.resolve(spark, root)
-    val v1 = Similarity.buildIvfIndexVersioned(embs, root, k = 8)
-    v1 shouldBe 1
-    IndexCatalog.currentVersion(spark, root) shouldBe Some(1)
-    val live1 = IndexCatalog.resolve(spark, root)
-    val queries = embs.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val before = Similarity.ivfTopKBatch(spark, live1, queries, k = 6, nprobe = 8,
-        corpusFilter = col("vec_id") >= 4)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    // compact publishes v2 WITHOUT touching v1's files (the race the
-    // move-aside swap had): a reader still holding v1's path keeps working
-    val v2 = Similarity.compactIvfIndexVersioned(spark, root)
-    v2 shouldBe 2
-    IndexCatalog.resolve(spark, root) should endWith("v=2")
-    val stillV1 = Similarity.ivfTopKBatch(spark, live1, queries, k = 6, nprobe = 8,
-        corpusFilter = col("vec_id") >= 4)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    stillV1 shouldBe before
-    // the flipped version answers identically
-    val viaV2 = Similarity.ivfTopKBatch(spark, IndexCatalog.resolve(spark, root),
-        queries, k = 6, nprobe = 8, corpusFilter = col("vec_id") >= 4)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    viaV2 shouldBe before
-    // one more cycle prunes v1 (bounded two-version footprint), keeps v2
-    val v3 = Similarity.compactIvfIndexVersioned(spark, root)
-    v3 shouldBe 3
-    new java.io.File(IndexCatalog.versionDir(root, 1)).exists() shouldBe false
-    new java.io.File(IndexCatalog.versionDir(root, 1) + "__centroids").exists() shouldBe false
-    new java.io.File(IndexCatalog.versionDir(root, 2)).exists() shouldBe true
   }
 
   test("int8 quantization: bounded codes, tight reconstruction, high probe recall") {
@@ -319,40 +257,6 @@ class AnnIndexSpec extends SparkTestBase {
       .elementType shouldBe org.apache.spark.sql.types.ByteType
   }
 
-  test("IVF-PQ composes pruning with compression: full probe equals pqTopK, low probe prunes") {
-    import spark.implicits._
-    def vec(id: Long): Seq[Float] = {
-      val axis = (id % 4).toInt
-      val rnd = new scala.util.Random(id)
-      Seq.tabulate(8)(d => (if (d == axis * 2) 1.0f else 0.0f) + (rnd.nextFloat() - 0.5f) * 0.1f)
-    }
-    val base = (0L until 120L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
-    val dir = Files.createTempDirectory("graft_ivfpq").toFile
-    dir.deleteOnExit()
-    val path = dir.getAbsolutePath + "/idx"
-    Similarity.buildIvfPqIndex(base, path, k = 4, m = 2, ksub = 8)
-    val q7 = vec(7L)
-    // at FULL nprobe the cell pruning is a no-op and the result must equal
-    // the flat pqTopK over the whole encoded corpus with the same
-    // (deterministically re-learned) codebooks — pruning and compression
-    // compose orthogonally
-    val cbs = Similarity.learnPqCodebooks(base, m = 2, ksub = 8)
-    val full = Similarity.ivfPqTopK(spark, path, q7, k = 10, nprobe = 4)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val flat = Similarity.pqTopK(Similarity.encodePq(base, cbs), cbs, q7, k = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    full shouldBe flat
-    // at nprobe 1 the scan reads strictly fewer cell directories than exist
-    val pruned = Similarity.ivfPqTopK(spark, path, q7, k = 5, nprobe = 1)
-    pruned.collect().length shouldBe 5
-    val scan = findScan(pruned.queryExecution.executedPlan).get
-    assert(scan.partitionFilters.nonEmpty, "cid probe must be a partition filter")
-    def parquetFiles(f: java.io.File): Long =
-      if (f.isDirectory) f.listFiles().map(parquetFiles).sum
-      else if (f.getName.endsWith(".parquet")) 1L else 0L
-    scan.metrics("numFiles").value should be < parquetFiles(new java.io.File(path))
-  }
-
   test("IVF sample-based centroid learning keeps recall and index shape") {
     // the scale lever: Lloyd passes scan only a seeded sample while
     // assignment + write stay full-corpus. The index must still hold every
@@ -370,7 +274,7 @@ class AnnIndexSpec extends SparkTestBase {
 
     spark.read.parquet(path + "__centroids").count() shouldBe 16L
     spark.read.parquet(path).count() shouldBe embs.count()
-    val ivf = Similarity.ivfTopK(spark, path, q, k = 10)
+    val ivf = ivfProbe(path, q, k = 10)
       .collect().map(_.getLong(0)).toSet
     withClue(s"sample-learned IVF overlap@10 vs brute force (exact=$exact ivf=$ivf): ") {
       exact.intersect(ivf).size should be >= 8
@@ -407,7 +311,7 @@ class AnnIndexSpec extends SparkTestBase {
     spark.read.parquet(path + "__centroids").count() shouldBe 8L
 
     val q = embs.filter(col("vec_id") === 42).head().getSeq[Float](1)
-    val df = Similarity.ivfTopK(spark, path, q, k = 5, nprobe = 2)
+    val df = ivfProbe(path, q, k = 5, nprobe = 2)
     val rows = df.collect()
     rows.head.getLong(0) shouldBe 42L // the vector itself is in a probed list
     rows.head.getDouble(1) shouldBe (1.0 +- 1e-6)

@@ -71,7 +71,9 @@ class BloomZOrderSpec extends SparkTestBase {
       (col("id") / 128).as("b"),
       col("id").as("payload"))
     val out = Files.createTempDirectory("graft_zorder").toString
-    ZOrder.clusterByZ(df.repartition(8), "a", "b", bits = 7, targetBytes = 8 * 1024)
+    // 48 range partitions: ~8 KB files of this ~384 KB frame
+    val z = ZOrder.zValue(col("a"), col("b"), bits = 7)
+    df.repartitionByRange(48, z).sortWithinPartitions(z)
       .write.mode("overwrite").parquet(out)
     def scannedRows(pred: org.apache.spark.sql.Column): Long = {
       val q = spark.read.parquet(out).filter(pred)

@@ -8,6 +8,13 @@ class DecontaminationSpec extends SparkTestBase {
 
   import spark.implicits._
 
+  /** [[Decontamination.semanticReportIvfOn]] over the IVF index at `idx`. */
+  private def ivfReport(idx: String, eval: org.apache.spark.sql.DataFrame,
+      minCosine: Double, nprobe: Int) =
+    Decontamination.semanticReportIvfOn(spark.read.parquet(idx),
+      spark.read.parquet(idx + "__centroids"), eval, "vec_id", "embedding", "vec_id",
+      minCosine, nprobe)
+
   private val evalDocs = Seq(
     (100L, "the quick brown fox jumps over the lazy dog")
   ).toDF("doc_id", "text")
@@ -40,21 +47,13 @@ class DecontaminationSpec extends SparkTestBase {
     lenient shouldBe Set(2L, 3L, 4L)
   }
 
-  test("null-text rows are kept by batch AND streaming gates alike") {
+  test("null-text rows are kept by the batch gate") {
     val withNull = train.union(
       Seq((9L, null.asInstanceOf[String])).toDF("doc_id", "text"))
     val batchKept = Decontamination
       .dropContaminated(withNull, evalDocs, "doc_id", "text", n = 5)
       .select("doc_id").as[Long].collect().toSet
     batchKept should contain(9L)
-    // the streaming gate must agree: split(NULL) propagates null through
-    // arrays_overlap, and !NULL would silently DROP the row without the
-    // coalesce (ADVICE r12)
-    val evalHashes = Decontamination.evalShingleHashes(evalDocs, "text", n = 5)
-    val streamKept = Decontamination
-      .dropContaminatedStreaming(withNull, evalHashes, "text", n = 5)
-      .select("doc_id").as[Long].collect().toSet
-    streamKept shouldBe batchKept
   }
 
   test("hashed-shingle variant matches the exact report") {
@@ -68,41 +67,6 @@ class DecontaminationSpec extends SparkTestBase {
         "doc_id", "text", n = 5, hashed = true)
       .as[(Long, Long)].collect().toMap
     hashed shouldBe exact
-  }
-
-  test("bucketed eval index: no index-side shuffle, verdicts match the exact operator") {
-    val s = spark
-    import s.implicits._
-    val evalDocs = Seq((100L, "the secret benchmark answer is forty two exactly today"))
-      .toDF("doc_id", "text")
-    val train = Seq(
-      (1L, "a clean document about fishing boats and calm weather patterns"),
-      (2L, "we learned the secret benchmark answer is forty two exactly today somehow"),
-      (3L, "another clean one describing mountain trails in early spring light"))
-      .toDF("doc_id", "text")
-    val idx = Decontamination.writeBucketedEvalShingleIndex(
-      evalDocs, "decont_idx_bucketed", "text", n = 5, numBuckets = 4)
-    try {
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val kept = Decontamination.dropContaminatedAgainstIndex(
-          train, idx, "doc_id", "text", n = 5)
-        val plan = kept.queryExecution
-          .explainString(org.apache.spark.sql.execution.SimpleMode)
-        plan should include("Bucketed: true")
-        // exactly ONE shuffle keyed on the shingle hash — the doc side's
-        // (printed under the generator's pre-alias name __sh since the
-        // hash-first rewire). If the index side were reshuffled for the
-        // semi join there would be a second such exchange; its bucketed
-        // layout satisfies the join's distribution instead.
-        "Exchange hashpartitioning\\((shingle_hash|__sh)".r.findAllIn(plan).size shouldBe 1
-        kept.select("doc_id").as[Long].collect().toSet shouldBe
-          Decontamination.dropContaminated(train, evalDocs, "doc_id", "text", n = 5)
-            .select("doc_id").as[Long].collect().toSet
-        kept.select("doc_id").as[Long].collect().toSet shouldBe Set(1L, 3L)
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-    } finally Tables.dropManaged(s, "decont_idx_bucketed")
   }
 
   test("evalExposureReport counts leaking docs and shingles per eval item") {
@@ -130,7 +94,7 @@ class DecontaminationSpec extends SparkTestBase {
       Decontamination.contaminationReport(train, evalDocs, "doc_id", "text", n = 0)
   }
 
-  test("semanticReport: nearest eval by cosine, smallest-id ties, threshold; drop variant") {
+  test("semanticReport: nearest eval by cosine, smallest-id ties, threshold") {
     import spark.implicits._
     val r2 = (1.0 / math.sqrt(2)).toFloat
     val eval = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f)))
@@ -153,10 +117,11 @@ class DecontaminationSpec extends SparkTestBase {
     Decontamination.semanticReport(
       corpus, eval, "vec_id", "embedding", "vec_id", minCosine = 0.5)
       .collect().map(_.getLong(0)).sorted shouldBe Array(10L, 11L, 13L)
-    // ...and the drop form removes exactly the flagged rows from training
-    Decontamination.dropSemanticContaminated(
-      corpus, eval, "vec_id", "embedding", "vec_id", minCosine = 0.9)
-      .collect().map(_.getLong(0)).sorted shouldBe Array(11L, 12L, 13L)
+    // string eval ids are rejected at the API edge (the tie rule negates)
+    an[IllegalArgumentException] should be thrownBy
+      Decontamination.semanticReport(
+        corpus, eval.withColumn("vec_id", col("vec_id").cast("string")),
+        "vec_id", "embedding", "vec_id", 0.0)
   }
 
   test("contaminationPairs: the (train, eval) provenance table and its marginals") {
@@ -206,31 +171,6 @@ class DecontaminationSpec extends SparkTestBase {
         .as(Seq("pos", "s")))
       .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
     gen shouldBe Seq((0, "a b"), (1, "b a"), (2, "a b"), (3, "b c"))
-  }
-
-  test("maskContaminatedStreaming ≡ the batch mask, stateless and pass-through") {
-    import spark.implicits._
-    val hashes = Decontamination.evalShingleHashes(evalDocs, "text", n = 5)
-    val got = Decontamination.maskContaminatedStreaming(
-      train, hashes, "text", n = 5)
-      .collect().map(r => (r.getAs[Long]("doc_id"),
-        (r.getAs[String]("masked_text"), r.getAs[Long]("n_masked_words")))).toMap
-    // contaminated docs agree row-for-row with the batch report form
-    val batch = Decontamination.maskContaminatedSpans(
-      train, evalDocs, "doc_id", "text", n = 5)
-      .collect().map(r => (r.getLong(0), (r.getString(1), r.getLong(2)))).toMap
-    batch.foreach { case (id, m) => got(id) shouldBe m }
-    // clean and too-short docs PASS THROUGH verbatim with 0 (the stream
-    // cannot drop-and-report)
-    got(2L)._1 shouldBe "completely different sentence about cooking pasta with olive oil"
-    got(2L)._2 shouldBe 0L
-    got(4L) shouldBe (("too short", 0L))
-    // null text stays null/0 rather than erroring the batch
-    val nulls = Decontamination.maskContaminatedStreaming(
-      Seq((9L, null: String)).toDF("doc_id", "text"), hashes, "text", n = 5)
-      .collect().head
-    nulls.isNullAt(nulls.fieldIndex("masked_text")) shouldBe true
-    nulls.getAs[Long]("n_masked_words") shouldBe 0L
   }
 
   test("semanticExposureReport: per-eval exposure counts, nearest train, threshold") {
@@ -307,62 +247,18 @@ class DecontaminationSpec extends SparkTestBase {
         corpus, eval, "vec_id", "embedding", "vec_id", threshold)
         .collect().map(_.toString).sorted
       // nprobe = nlist → exhaustive probing: row-for-row the broadcast form
-      Decontamination.semanticReportIvf(
-        spark, idx, eval, "vec_id", "embedding", "vec_id", threshold, nprobe = 2)
+      ivfReport(idx, eval, threshold, nprobe = 2)
         .collect().map(_.toString).sorted shouldBe exact
     }
-    // drop form agrees too
-    Decontamination.dropSemanticContaminatedIvf(
-      corpus, idx, eval, "vec_id", "embedding", "vec_id",
-      minCosine = 0.9, nprobe = 2)
-      .collect().map(_.getLong(0)).sorted shouldBe Array(11L, 12L, 13L)
     // the scale contract, structurally: the corpus side joins the
     // broadcast probe list and pre-aggregates — no sort-merge or
     // shuffled-hash join anywhere, so no corpus vector crosses an
     // exchange (the one data shuffle carries flagged triples)
-    val plan = Decontamination.semanticReportIvf(
-      spark, idx, eval, "vec_id", "embedding", "vec_id", 0.5, nprobe = 2)
+    val plan = ivfReport(idx, eval, 0.5, nprobe = 2)
       .queryExecution.executedPlan.toString
     plan should include("BroadcastHashJoin")
     plan should not include "SortMergeJoin"
     plan should not include "ShuffledHashJoin"
-  }
-
-  test("semanticReportIvfSliced ≡ unsliced: sequential slice jobs, same tie rule") {
-    import spark.implicits._
-    val r2 = (1.0 / math.sqrt(2)).toFloat
-    // five eval items so three hash slices are all non-trivial; 13 ties
-    // between eval 1 and 2 ACROSS slices — the re-aggregation must
-    // reproduce the global smallest-id rule, not a per-slice artifact
-    val eval = Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f)),
-      (3L, Array(0.8f, 0.6f)), (4L, Array(0.6f, 0.8f)), (5L, Array(-1f, 0f)))
-      .toDF("vec_id", "embedding")
-    val corpus = Seq(
-      (10L, Array(1f, 0f)), (11L, Array(0.6f, 0.8f)),
-      (12L, Array(-1f, 0f)), (13L, Array(r2, r2)))
-      .toDF("vec_id", "embedding")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_decontam_sliced").toString
-    graft.pipeline.Similarity.buildIvfIndex(corpus, s"$base/idx", k = 2, iters = 2)
-    for (threshold <- Seq(0.0, 0.7)) {
-      val unsliced = Decontamination.semanticReportIvf(
-        spark, s"$base/idx", eval, "vec_id", "embedding", "vec_id",
-        threshold, nprobe = 2)
-        .collect().map(_.toString).sorted
-      Decontamination.semanticReportIvfSliced(
-        spark, s"$base/idx", eval, "vec_id", "embedding", "vec_id",
-        threshold, nprobe = 2, slices = 3, scratchDir = s"$base/scratch")
-        .collect().map(_.toString).sorted shouldBe unsliced
-    }
-    an[IllegalArgumentException] should be thrownBy
-      Decontamination.semanticReportIvfSliced(
-        spark, s"$base/idx", eval, "vec_id", "embedding", "vec_id",
-        0.0, nprobe = 2, slices = 0, scratchDir = s"$base/scratch")
-    // string eval ids are rejected at the API edge (the tie rule negates)
-    an[IllegalArgumentException] should be thrownBy
-      Decontamination.semanticReport(
-        corpus, eval.withColumn("vec_id", col("vec_id").cast("string")),
-        "vec_id", "embedding", "vec_id", 0.0)
   }
 
   test("semanticReportIvf at nprobe < nlist: planted same-cluster leaks are found") {
@@ -380,14 +276,10 @@ class DecontaminationSpec extends SparkTestBase {
     // nprobe = 1 each probes only ITS cluster — both leaks still surface
     val eval = Seq((100L, Array(1f, 0f)), (200L, Array(0f, 1f)))
       .toDF("vec_id", "embedding")
-    val got = Decontamination.semanticReportIvf(
-      spark, idx, eval, "vec_id", "embedding", "vec_id",
-      minCosine = 0.99, nprobe = 1)
+    val got = ivfReport(idx, eval, minCosine = 0.99, nprobe = 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
     got(1L) shouldBe 100L
     got(2L) shouldBe 200L
-    an[IllegalArgumentException] should be thrownBy
-      Decontamination.semanticReportIvf(
-        spark, idx, eval, "vec_id", "embedding", "vec_id", 0.5, nprobe = 0)
+    an[IllegalArgumentException] should be thrownBy ivfReport(idx, eval, 0.5, nprobe = 0)
   }
 }

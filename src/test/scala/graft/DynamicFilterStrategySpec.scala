@@ -145,6 +145,26 @@ class DynamicFilterStrategySpec extends SparkTestBase {
     }
   }
 
+  // a frozen plan keeps the InMemoryRelation it was planned over; after
+  // uncacheTable it must read the table's source, not rebuild and persist
+  // the cleared buffers behind the cache manager's back
+  test("after uncacheTable a prepared lookup reads the source and re-caches nothing") {
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    spark.range(0, 60, 1, 2).selectExpr("id", "concat('u_', id) AS name")
+      .createOrReplaceTempView("dfs_uncached")
+    spark.catalog.cacheTable("dfs_uncached")
+    try {
+      val sql = "SELECT id, name FROM dfs_uncached WHERE id = "
+      val st = PreparedStatements.prepare(spark, sql + "$1")
+      st.executeCollect(Map("$1" -> 3L)) shouldBe spark.sql(sql + "3").collect()
+      spark.catalog.uncacheTable("dfs_uncached")
+      Seq(4L, 5L).foreach { k =>
+        st.executeCollect(Map("$1" -> k)) shouldBe spark.sql(sql + k).collect()
+      }
+      spark.sparkContext.getPersistentRDDs.size shouldBe persistedBefore
+    } finally spark.catalog.dropTempView("dfs_uncached")
+  }
+
   // the static conjunct prunes the cache's batches by their stats on both
   // tiers, so the scan emits one partition's rows
   test("driver-tier cached-scan metrics equal the job path's") {

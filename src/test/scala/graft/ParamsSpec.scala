@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.execution.{FilterExec, LocalTableScanExec}
 import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.prepared.{ParamPlaceholder, Params}
+import graft.prepared.{BoundParam, ParamPlaceholder, Params}
 
 /** Ports of the reference substitution unit tests
   * (`/root/reference/datafusion-dynamic-filter/src/param_resolver.rs:102-179`).
@@ -13,11 +15,19 @@ import graft.prepared.{ParamPlaceholder, Params}
 class ParamsSpec extends SparkTestBase {
 
   private val id = AttributeReference("id", IntegerType)()
+  private val name = AttributeReference("name", StringType)()
+
+  /** [[Params.bind]] over a filter on an empty scan: the bound condition,
+    * with each placeholder replaced by its [[BoundParam]].
+    */
+  private def bindCondition(e: Expression, params: Map[String, Any]): Expression =
+    Params.bind(FilterExec(e, LocalTableScanExec(Seq(id, name), Nil, None)), params)
+      .asInstanceOf[FilterExec].condition
 
   // param_resolver.rs:126-140 — single placeholder substituted
   test("substitute a single placeholder") {
     val e = EqualTo(id, ParamPlaceholder("$1", IntegerType))
-    Params.substitute(e, Map("$1" -> 42)) shouldBe EqualTo(id, Literal(42))
+    bindCondition(e, Map("$1" -> 42)) shouldBe EqualTo(id, BoundParam("$1", IntegerType, 42))
   }
 
   // param_resolver.rs:142-154 — multiple placeholders substituted
@@ -25,15 +35,16 @@ class ParamsSpec extends SparkTestBase {
     val e = And(
       GreaterThanOrEqual(id, ParamPlaceholder("$1", IntegerType)),
       LessThanOrEqual(id, ParamPlaceholder("$2", IntegerType)))
-    Params.substitute(e, Map("$1" -> 1, "$2" -> 9)) shouldBe
-      And(GreaterThanOrEqual(id, Literal(1)), LessThanOrEqual(id, Literal(9)))
+    bindCondition(e, Map("$1" -> 1, "$2" -> 9)) shouldBe
+      And(GreaterThanOrEqual(id, BoundParam("$1", IntegerType, 1)),
+        LessThanOrEqual(id, BoundParam("$2", IntegerType, 9)))
   }
 
   // param_resolver.rs:156-168 — missing param errors, naming the placeholder
   test("missing parameter raises with the placeholder name") {
     val e = EqualTo(id, ParamPlaceholder("$1", IntegerType))
     val ex = intercept[IllegalArgumentException] {
-      Params.substitute(e, Map("$2" -> 42))
+      bindCondition(e, Map("$2" -> 42))
     }
     ex.getMessage should include("'$1' was not provided a value")
   }
@@ -65,7 +76,7 @@ class ParamsSpec extends SparkTestBase {
   // param_resolver.rs:170-178 — expressions without placeholders untouched
   test("non-placeholder expressions are untouched") {
     val e = EqualTo(id, Literal(3))
-    Params.substitute(e, Map("$1" -> 42)) shouldBe e
+    bindCondition(e, Map("$1" -> 42)) shouldBe e
   }
 
   test("placeholderIds collects distinct ids") {
@@ -78,9 +89,8 @@ class ParamsSpec extends SparkTestBase {
   }
 
   test("string-typed placeholder binds a string literal") {
-    val name = AttributeReference("name", StringType)()
     val e = EqualTo(name, ParamPlaceholder("$1", StringType))
-    Params.substitute(e, Map("$1" -> "bob")) shouldBe
-      EqualTo(name, Literal.create("bob", StringType))
+    bindCondition(e, Map("$1" -> "bob")) shouldBe
+      EqualTo(name, BoundParam("$1", StringType, UTF8String.fromString("bob")))
   }
 }

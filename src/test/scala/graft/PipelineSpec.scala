@@ -366,12 +366,6 @@ class PipelineSpec extends SparkTestBase {
     // 62 directed edges over a 5-edge budget → the distributed loop runs
     val (_, loopIters) = Dedup.connectedComponentsIters(edges, driverFinishEdges = 5L)
     loopIters should be > 1
-    // the default (-1) reads the session conf: 0 there disables the tier too
-    spark.conf.set("spark.graft.cc.driverFinishEdges", "0")
-    try {
-      val (_, confIters) = Dedup.connectedComponentsIters(edges)
-      confIters should be > 1
-    } finally spark.conf.unset("spark.graft.cc.driverFinishEdges")
     Dedup.clearCheckpoints()
   }
 
@@ -504,45 +498,6 @@ class PipelineSpec extends SparkTestBase {
     val d = Multimodal.decodePayload(media.filter($"doc_id" === 4L)).collect().head
     out(3).src_width shouldBe d.width
     out(3).resized_mean_intensity shouldBe d.mean_intensity
-  }
-
-  test("imagePHash: real aHash clusters similar images; fallback is bit-equal to the stub") {
-    import java.awt.image.BufferedImage
-    import javax.imageio.ImageIO
-    def png(paint: (Int, Int) => Int): Array[Byte] = {
-      val img = new BufferedImage(16, 16, BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 16; x <- 0 until 16) {
-        val v = paint(x, y)
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      val out = new java.io.ByteArrayOutputStream()
-      ImageIO.write(img, "png", out)
-      out.toByteArray
-    }
-    val leftDark = png((x, _) => if (x < 8) 30 else 220)
-    // one subtly brighter pixel — a visually-identical near-duplicate
-    val leftDarkTweaked = png((x, y) => (if (x < 8) 30 else 220) + (if (x == 3 && y == 3) 4 else 0))
-    val topDark = png((_, y) => if (y < 8) 30 else 220)
-    import spark.implicits._
-    val media = Seq((1L, leftDark), (2L, leftDarkTweaked), (3L, topDark))
-      .toDF("doc_id", "payload")
-    val h = Multimodal.imagePHash(media).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    java.lang.Long.bitCount(h(1L) ^ h(2L)) should be <= 2 // near-dup pair
-    java.lang.Long.bitCount(h(1L) ^ h(3L)) should be >= 10 // different layout
-    // the banding machinery consumes real hashes unchanged
-    val pairs = Multimodal.phashNearDupPairs(
-        Multimodal.imagePHash(media), maxHamming = 2)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    pairs shouldBe Set((1L, 2L))
-    // non-image payloads: the JVM fallback must be bit-equal to the SQL stub
-    val texts = Seq((10L, "plain payload".getBytes("UTF-8")),
-      (11L, "another one".getBytes("UTF-8"))).toDF("doc_id", "payload")
-    val fromJvm = Multimodal.imagePHash(texts).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fromSql = Multimodal.pHashStub(texts).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    fromJvm shouldBe fromSql
   }
 
   test("decodeAudio reads REAL PCM from WAV/AIFF/AU payloads; non-audio falls back") {
@@ -808,61 +763,6 @@ class PipelineSpec extends SparkTestBase {
     // asking for more frames than exist returns every source frame once
     Multimodal.frameSamplePayload(media.filter($"doc_id" === 1L), maxFrames = 9)
       .collect().map(_.frame_idx).sorted shouldBe Array(0, 1, 2, 3, 4)
-  }
-
-  test("inflatePayload decompresses gzip/zlib payloads with a bomb guard") {
-    import java.util.zip.{Deflater, DeflaterOutputStream, GZIPOutputStream}
-    def gzip(raw: Array[Byte]): Array[Byte] = {
-      val baos = new java.io.ByteArrayOutputStream()
-      val out = new GZIPOutputStream(baos)
-      out.write(raw); out.close(); baos.toByteArray
-    }
-    def zlib(raw: Array[Byte]): Array[Byte] = {
-      val baos = new java.io.ByteArrayOutputStream()
-      val out = new DeflaterOutputStream(baos, new Deflater())
-      out.write(raw); out.close(); baos.toByteArray
-    }
-    val textA = ("the quick brown fox " * 50).getBytes("UTF-8")
-    val textB = ("jumps over the lazy dog " * 40).getBytes("UTF-8")
-    val plain = "already raw".getBytes("UTF-8")
-    import spark.implicits._
-    val media = Seq(
-      (1L, gzip(textA)), (2L, zlib(textB)), (3L, plain),
-      // two gzip members back to back — the WARC/wget concatenation shape
-      (4L, gzip(textA) ++ gzip(textB)),
-      // gzip magic but garbage after: inflate fails → passthrough
-      (5L, Array[Byte](0x1f, 0x8b.toByte, 77, 77, 77))).toDF("doc_id", "payload")
-    val out = Multimodal.inflatePayload(media).collect()
-      .map(r => r.doc_id -> r).toMap
-    out(1L).codec shouldBe "gzip"
-    out(1L).payload shouldBe textA
-    out(1L).n_bytes_raw shouldBe textA.length
-    out(1L).n_bytes_stored shouldBe gzip(textA).length
-    out(1L).truncated shouldBe false
-    out(2L).codec shouldBe "zlib"
-    out(2L).payload shouldBe textB
-    out(3L).codec shouldBe "none"
-    out(3L).payload shouldBe plain
-    out(4L).codec shouldBe "gzip"
-    out(4L).payload shouldBe (textA ++ textB)
-    out(5L).codec shouldBe "none"
-    out(5L).payload.length shouldBe 5
-    // the decompression-bomb cap: a megabyte of zeros gzips tiny but must
-    // stop inflating at the cap instead of buffering the full expansion
-    val bomb = gzip(new Array[Byte](1 << 20))
-    val capped = Multimodal.inflatePayload(
-        Seq((9L, bomb)).toDF("doc_id", "payload"), maxInflatedBytes = 1000)
-      .collect().head
-    capped.truncated shouldBe true
-    capped.payload.length shouldBe 1000
-    capped.codec shouldBe "gzip"
-    // a payload inflating to EXACTLY the cap is complete, not truncated
-    val exact = Multimodal.inflatePayload(
-        Seq((10L, gzip(new Array[Byte](1000)))).toDF("doc_id", "payload"),
-        maxInflatedBytes = 1000)
-      .collect().head
-    exact.truncated shouldBe false
-    exact.payload.length shouldBe 1000
   }
 
   test("bpe token stats count subword-ish runs") {

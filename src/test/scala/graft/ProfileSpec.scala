@@ -95,21 +95,6 @@ class ProfileSpec extends SparkTestBase {
     exact.map(r => if (r.isNullAt(0)) -1L else r.getLong(0)) should contain(-1L)
   }
 
-  test("one-pass CMS estimates never undercount and bound the overcount") {
-    val n = zipf.count()
-    val eps = 0.001
-    val exactCounts = zipf.groupBy("key").count()
-      .collect().map(r => r.getLong(0).toString -> r.getLong(1)).toMap
-    val est = Profile.approxHeavyHittersOnePass(
-      zipf, "key", k = 10, capacity = 64, eps = eps).collect()
-    est.length shouldBe 10
-    est.foreach { r =>
-      val (key, e) = (r.getString(0), r.getLong(1))
-      e should be >= exactCounts(key)
-      e should be <= exactCounts(key) + math.ceil(eps * n).toLong
-    }
-  }
-
   test("heavy-hitter input validation") {
     an[IllegalArgumentException] should be thrownBy
       Profile.approxHeavyHitters(zipf, "key", k = 0)

@@ -11,6 +11,12 @@ class RobotsSpec extends SparkTestBase {
 
   import spark.implicits._
 
+  /** The RFC 9309 decision for one robots body, as the frontier gate makes
+    * it: parse once, then decide per (product token, path).
+    */
+  private def allowed(robotsTxt: String, userAgent: String, path: String): Boolean =
+    Robots.isAllowedParsed(Robots.parse(robotsTxt), userAgent, path)
+
   private val body =
     """# corpus crawler policy
       |User-agent: graft
@@ -26,25 +32,25 @@ class RobotsSpec extends SparkTestBase {
 
   test("group selection: longest named match wins; * only as fallback") {
     // "graft" matches the named group, not the catch-all deny
-    Robots.isAllowed(body, "graft", "/anything") shouldBe true
-    Robots.isAllowed(body, "graft", "/private/x") shouldBe false
+    allowed(body, "graft", "/anything") shouldBe true
+    allowed(body, "graft", "/private/x") shouldBe false
     // a longer product token still prefix-matches its group
-    Robots.isAllowed(body, "graftbot-images/1.0", "/private/x") shouldBe false
+    allowed(body, "graftbot-images/1.0", "/private/x") shouldBe false
     // unknown agents land on the * group: everything but the Allow denies
-    Robots.isAllowed(body, "otherbot", "/page") shouldBe false
-    Robots.isAllowed(body, "otherbot", "/index.html") shouldBe true
+    allowed(body, "otherbot", "/page") shouldBe false
+    allowed(body, "otherbot", "/index.html") shouldBe true
     // agent matching is case-insensitive
-    Robots.isAllowed(body, "GRAFT", "/private/x") shouldBe false
+    allowed(body, "GRAFT", "/private/x") shouldBe false
   }
 
   test("rule precedence: longest pattern wins, Allow beats Disallow on ties") {
     // Allow /private/pub$ (13) outranks Disallow /private/* (10)
-    Robots.isAllowed(body, "graft", "/private/pub") shouldBe true
+    allowed(body, "graft", "/private/pub") shouldBe true
     // but the anchor holds: a longer path falls back to the Disallow
-    Robots.isAllowed(body, "graft", "/private/pubx") shouldBe false
+    allowed(body, "graft", "/private/pubx") shouldBe false
     // equal-length tie → Allow
     val tie = "User-agent: *\nDisallow: /a/\nAllow: /a/"
-    Robots.isAllowed(tie, "any", "/a/x") shouldBe true
+    allowed(tie, "any", "/a/x") shouldBe true
   }
 
   test("pattern matching: wildcards, anchors, prefix semantics") {
@@ -71,30 +77,30 @@ class RobotsSpec extends SparkTestBase {
     // an escaped %2F is NOT a path slash: reserved escapes stay escapes
     Robots.patternMatches("/a%2Fb", "/a/b") shouldBe false
     val b = "User-agent: *\nDisallow: /café"
-    Robots.isAllowed(b, "x", "/caf%C3%A9") shouldBe false
-    Robots.isAllowed(b, "x", "/cafe") shouldBe true
+    allowed(b, "x", "/caf%C3%A9") shouldBe false
+    allowed(b, "x", "/cafe") shouldBe true
   }
 
   test("unknown fields between groups do not split user-agent merging") {
     // per the RFC, Sitemap between User-agent lines is IGNORED: agents a
     // and b share the rule block that follows
     val b = "User-agent: a\nSitemap: http://x/s.xml\nUser-agent: b\nDisallow: /"
-    Robots.isAllowed(b, "a", "/anything") shouldBe false
-    Robots.isAllowed(b, "b", "/anything") shouldBe false
+    allowed(b, "a", "/anything") shouldBe false
+    allowed(b, "b", "/anything") shouldBe false
     // a null path decides as "": nothing for a rule to match
-    Robots.isAllowed("User-agent: *\nDisallow: /x", "a", null) shouldBe true
+    allowed("User-agent: *\nDisallow: /x", "a", null) shouldBe true
   }
 
   test("parse edge cases: comments, empty values, rules before any group") {
     // a rule before any User-agent line is ignored
-    Robots.isAllowed("Disallow: /\nUser-agent: *\nAllow: /", "x", "/a") shouldBe true
+    allowed("Disallow: /\nUser-agent: *\nAllow: /", "x", "/a") shouldBe true
     // empty Disallow is a no-op (allow all)
-    Robots.isAllowed("User-agent: *\nDisallow:", "x", "/a") shouldBe true
+    allowed("User-agent: *\nDisallow:", "x", "/a") shouldBe true
     // no robots at all / no applicable group → allowed
-    Robots.isAllowed("", "x", "/a") shouldBe true
-    Robots.isAllowed("User-agent: other\nDisallow: /", "x", "/a") shouldBe true
+    allowed("", "x", "/a") shouldBe true
+    allowed("User-agent: other\nDisallow: /", "x", "/a") shouldBe true
     // comments strip mid-line
-    Robots.isAllowed("User-agent: * # everyone\nDisallow: / # all", "x", "/a") shouldBe false
+    allowed("User-agent: * # everyone\nDisallow: / # all", "x", "/a") shouldBe false
   }
 
   test("crawl-delay surfaces per applicable group, minimum across merges") {
@@ -182,10 +188,6 @@ class RobotsSpec extends SparkTestBase {
     // by construction) — the frontier side must not shuffle again for it
     plan should include("BroadcastHashJoin")
     graft.pipeline.Dedup.clearCheckpoints()
-    // the session-conf default engages when maxPerWave is not passed
-    spark.conf.set("spark.graft.crawl.maxPerWave", "3")
-    try run(-1L) shouldBe single
-    finally spark.conf.unset("spark.graft.crawl.maxPerWave")
   }
 
   test("schedule keys on SURT: one registrable domain's URLs land contiguous") {

@@ -158,35 +158,4 @@ class SearchSpec extends SparkTestBase {
       Search.searchHybrid(docs, Seq("data"), "q", k = 5, poolK = 4) // k > poolK
   }
 
-  test("bucketed inverted index: lookups bucket-prune and agree with the ad hoc path") {
-    val s = spark
-    val real = Tables.df(s, "/root/testdata/sf0.001", "documents")
-    try {
-      val idx = Search.writeInvertedIndex(real, "graft_test_inv_idx", numBuckets = 8)
-      val terms = Seq("data", "query")
-      val viaIndex = Search.searchIndex(idx, terms)
-        .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-      val adHoc = Search.searchAll(real, terms)
-        .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1)))
-      viaIndex shouldBe adHoc
-      viaIndex.length should be > 0
-      // the IN filter reaches the parquet scan either way
-      val planDefault = Search.searchIndex(idx, terms).queryExecution.executedPlan.toString
-      planDefault should include("PushedFilters: [In(term")
-      // point-lookup configuration (autoBucketedScan off — Spark otherwise
-      // drops the bucketed scan, and with it bucket pruning, when no
-      // downstream operator wants the term distribution): the term filter
-      // prunes buckets AT THE SCAN — ≤2 of 8 buckets read for 2 terms
-      val was = s.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-      s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      try {
-        val pruned = Search.searchIndex(idx, terms)
-        pruned.orderBy("doc_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))) shouldBe adHoc
-        val plan = pruned.queryExecution.executedPlan.toString
-        plan should include("Bucketed: true")
-        plan should include regex "SelectedBucketsCount: [12] out of 8"
-      } finally s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", was)
-    } finally Tables.dropManaged(s, "graft_test_inv_idx")
-  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Snapshot
@@ -34,15 +35,15 @@ class SnapshotSpec extends SparkTestBase {
     flipped shouldBe "changed"
   }
 
-  test("diffCounts summarizes, empty sides degrade to all-added / all-removed") {
+  test("diff of an empty side degrades to all-added / all-removed") {
     val a = Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    Snapshot.diffCounts(empty, a).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap shouldBe Map("added" -> 2L)
-    Snapshot.diffCounts(a, empty).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap shouldBe Map("removed" -> 2L)
-    Snapshot.diffCounts(a, a).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap shouldBe Map("unchanged" -> 2L)
+    def counts(o: DataFrame, n: DataFrame): Map[String, Long] =
+      Snapshot.diff(o, n).groupBy("status").count().collect()
+        .map(r => (r.getString(0), r.getLong(1))).toMap
+    counts(empty, a) shouldBe Map("added" -> 2L)
+    counts(a, empty) shouldBe Map("removed" -> 2L)
+    counts(a, a) shouldBe Map("unchanged" -> 2L)
   }
 
   test("applyChangeLog: upsert, delete, insert, out-of-order seq, same-seq delete wins") {

@@ -19,7 +19,7 @@ class SqlFunctionsSpec extends SparkTestBase {
         |FROM fn_probe""".stripMargin).head()
     val viaApi = spark.table("fn_probe").select(
       VectorFunctions.cosineSimilarity(col("a"), col("b")).as("cos"),
-      VectorFunctions.dotProduct(col("a"), col("b")).as("dot"),
+      expr("dot_product(a, b)").as("dot"),
       TextFunctions.simhash64(split(col("text"), " ")).as("sh"),
       TextFunctions.rollingHash(col("text")).as("rh")).head()
     viaSql shouldBe viaApi

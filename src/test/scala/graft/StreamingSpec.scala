@@ -6,15 +6,17 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.{EventStreams, StreamingDedup}
-import graft.streaming.EventStreams.Event
+
+/** One row of the `events` stream table. */
+case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
 
 /** Drives the streaming operators through real micro-batches with a
-  * MemoryStream source and memory sinks: watermark-driven window emission,
-  * exactly-once dedup, session windows, and custom keyed state.
+  * MemoryStream source and memory sinks: session windows, stream-stream
+  * joins, and the stateless ingestion gates.
   */
 class StreamingSpec extends SparkTestBase {
 
-  private def ts(hour: Int, minute: Int = 0): Timestamp =
+  private def ts(hour: Int, minute: Int): Timestamp =
     Timestamp.valueOf(f"2026-01-15 $hour%02d:$minute%02d:00")
 
   private def ev(id: Long, t: Timestamp, user: Long = 1L, typ: String = "click", v: Double = 1.0) =
@@ -22,46 +24,6 @@ class StreamingSpec extends SparkTestBase {
 
   private def withQuery[T](q: StreamingQuery)(body: => T): T =
     try body finally q.stop()
-
-  test("windowed counts emit closed windows once the watermark passes") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = MemoryStream[Event]
-    val query = EventStreams.windowedCounts(input.toDF())
-      .writeStream.format("memory").queryName("wnd").outputMode("append").start()
-    withQuery(query) {
-      input.addData(ev(1, ts(1, 5)), ev(2, ts(1, 20)), ev(3, ts(1, 40), typ = "view"))
-      query.processAllAvailable()
-      // advance the watermark far past the hour-1 window, twice (watermark
-      // updates at batch end; emission happens the batch after)
-      input.addData(ev(4, ts(3, 0)))
-      query.processAllAvailable()
-      input.addData(ev(5, ts(3, 30)))
-      query.processAllAvailable()
-      val rows = s.table("wnd").collect()
-        .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-      rows should contain((ts(1, 0), "click", 2L))
-      rows should contain((ts(1, 0), "view", 1L))
-    }
-  }
-
-  test("streaming dedup drops repeated event ids") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = MemoryStream[Event]
-    val query = EventStreams.dedupedEvents(input.toDF())
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    withQuery(query) {
-      input.addData(ev(1, ts(1)), ev(1, ts(1)), ev(2, ts(1, 1)))
-      query.processAllAvailable()
-      input.addData(ev(2, ts(1, 2)), ev(3, ts(1, 3)))
-      query.processAllAvailable()
-      val ids = s.table("dedup").collect().map(_.getLong(0)).sorted
-      ids shouldBe Array(1L, 2L, 3L)
-    }
-  }
 
   test("session windows split on the idle gap (batch form)") {
     val s = spark
@@ -112,65 +74,6 @@ class StreamingSpec extends SparkTestBase {
       query.lastProgress.stateOperators shouldBe empty
     }
     idx.unpersist()
-  }
-
-  test("bucketed corpus band index: no index-side shuffle, matches agree") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog in the warm afternoon sun"),
-      (2L, "spark structured streaming keeps bounded state under an event time watermark"),
-      (3L, "minhash signatures bucket similar documents into shared candidate bands")
-    ).toDF("doc_id", "text")
-    val idx = StreamingDedup.writeBucketedCorpusBandIndex(
-      corpus, "neardup_idx_bucketed", numBuckets = 4)
-    try {
-      // Plan shape, batch form (a stream-static micro-batch plans the same
-      // join): force the non-broadcast path and assert the ONLY shuffle is
-      // the probe side's — the bucketed scan already satisfies the join's
-      // required distribution, so the index never moves. This is the claim
-      // that makes the layout viable for a corpus that outgrows broadcast.
-      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val probes = Seq(
-          (100L, "the quick brown fox jumps over the lazy dog in the warm afternoon sun graftdup"),
-          (101L, "entirely unrelated words about cooking pasta with garlic and olive oil")
-        ).toDF("doc_id", "text")
-        val matches = StreamingDedup.nearDupMatches(probes, idx)
-        // executed plan (post-EnsureRequirements — sparkPlan has no
-        // exchanges yet): the index scans its bucketed layout, and the one
-        // and only Exchange in the plan is the probe side's
-        val plan = matches.queryExecution
-          .explainString(org.apache.spark.sql.execution.SimpleMode)
-        plan should include("Bucketed: true")
-        // count SHUFFLE exchanges specifically ("Exchange hashpartitioning"
-        // is ShuffleExchangeExec's rendering) — a bare "Exchange" substring
-        // would also match BroadcastExchange/ReusedExchange node names.
-        // (Walking executedPlan.collect misses the inner plan under AQE's
-        // AdaptiveSparkPlanExec wrapper, so match the rendered plan.)
-        "Exchange hashpartitioning".r.findAllIn(plan).size shouldBe 1
-        matches.select("id", "corpus_id").distinct()
-          .as[(Long, Long)].collect().toSet shouldBe Set((100L, 1L))
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-      // stream form against the same bucketed table: match set agrees and
-      // the stream side still holds no state
-      val input = MemoryStream[(Long, String)]
-      val query = StreamingDedup
-        .nearDupMatches(input.toDF().toDF("doc_id", "text"), idx)
-        .writeStream.format("memory").queryName("neardup_bucketed").outputMode("append").start()
-      withQuery(query) {
-        input.addData(
-          (200L, "minhash signatures bucket similar documents into shared candidate bands graftdup"),
-          (201L, "completely different sentences about sailing across a cold northern sea"))
-        query.processAllAvailable()
-        val got = s.table("neardup_bucketed").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).distinct
-        got.toSet shouldBe Set((200L, 3L))
-        query.lastProgress.stateOperators shouldBe empty
-      }
-    } finally Tables.dropManaged(s, "neardup_idx_bucketed")
   }
 
   test("stream-stream interval join attributes purchases to prior clicks") {
@@ -308,159 +211,6 @@ class StreamingSpec extends SparkTestBase {
       rows(1L) shouldBe "reach me at [EMAIL] for details"
       rows(3L) shouldBe "server [IP] responded with a long body"
       query.lastProgress.stateOperators shouldBe empty
-    }
-  }
-
-  test("ingestion-time decontamination gate is stateless and matches the batch drop") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val evalDocs = Seq((100L, "the secret benchmark answer is forty two exactly"))
-      .toDF("doc_id", "text")
-    val hashes = graft.pipeline.Decontamination.evalShingleHashes(evalDocs, "text", n = 5)
-    hashes.length should be > 0
-    val incoming = Seq(
-      (1L, "a clean document about fishing boats and calm weather patterns"),
-      (2L, "we know the secret benchmark answer is forty two exactly as leaked"),
-      (3L, "another clean one talking about mountain trails in early spring"))
-    val input = MemoryStream[(Long, String)]
-    val gated = graft.pipeline.Decontamination.dropContaminatedStreaming(
-      input.toDF().toDF("doc_id", "text"), hashes, "text", n = 5)
-    val query = gated.writeStream.format("memory").queryName("decont")
-      .outputMode("append").start()
-    withQuery(query) {
-      input.addData(incoming: _*)
-      query.processAllAvailable()
-      val kept = s.table("decont").select("doc_id").as[Long].collect().toSet
-      kept shouldBe Set(1L, 3L)
-      query.lastProgress.stateOperators shouldBe empty
-      // same verdicts as the exact batch operator on the same rows
-      val batchKept = graft.pipeline.Decontamination.dropContaminated(
-        incoming.toDF("doc_id", "text"), evalDocs, "doc_id", "text", n = 5)
-        .select("doc_id").as[Long].collect().toSet
-      kept shouldBe batchKept
-    }
-  }
-
-  test("ingestion-time span masking is stateless: leaks mask in-stream, clean rows verbatim") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val evalDocs = Seq((100L, "the secret benchmark answer is forty two exactly"))
-      .toDF("doc_id", "text")
-    val hashes = graft.pipeline.Decontamination.evalShingleHashes(evalDocs, "text", n = 5)
-    val input = MemoryStream[(Long, String)]
-    val masked = graft.pipeline.Decontamination.maskContaminatedStreaming(
-      input.toDF().toDF("doc_id", "text"), hashes, "text", n = 5)
-    val query = masked.writeStream.format("memory").queryName("maskgate")
-      .outputMode("append").start()
-    withQuery(query) {
-      input.addData(
-        (1L, "a clean document about fishing boats and calm weather patterns"),
-        (2L, "we know the secret benchmark answer is forty two exactly as leaked"))
-      query.processAllAvailable()
-      val out = s.table("maskgate")
-        .select("doc_id", "masked_text", "n_masked_words")
-        .as[(Long, String, Long)].collect()
-        .map { case (k, v, n) => k -> ((v, n)) }.toMap
-      // the leaked 8-word span (word offsets 2..9) masks; neighbors keep
-      out(2L) shouldBe (("we know " + Seq.fill(8)("<mask>").mkString(" ") +
-        " as leaked", 8L))
-      // clean rows pass through verbatim with 0 — and the query is
-      // STATELESS (pure projection, no state operator)
-      out(1L) shouldBe (("a clean document about fishing boats and calm weather patterns", 0L))
-      query.lastProgress.stateOperators shouldBe empty
-    }
-  }
-
-  test("streaming media near-dup gate: phash bands against the static index") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    import graft.pipeline.Multimodal
-    val corpus = Multimodal.withPayload(Seq(
-      (1L, "the quick brown fox media payload"),
-      (2L, "spark structured streaming media payload"),
-      (3L, "minhash signatures media payload")).toDF("doc_id", "text"))
-    val idx = StreamingDedup.corpusPhashIndex(corpus).persist()
-    val input = MemoryStream[(Long, String)]
-    val gated = StreamingDedup.phashMatches(
-      Multimodal.withPayload(input.toDF().toDF("doc_id", "text")), idx)
-    val query = gated.writeStream.format("memory").queryName("phashgate")
-      .outputMode("append").start()
-    withQuery(query) {
-      input.addData(
-        (100L, "the quick brown fox media payload"),   // exact copy of 1
-        (101L, "an entirely novel media payload"))
-      query.processAllAvailable()
-      val got = s.table("phashgate").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).distinct
-      got.toSet shouldBe Set((100L, 1L, 0))
-      query.lastProgress.stateOperators shouldBe empty
-      // batch twin agrees: the self-join over corpus+copy finds the pair
-      val union = corpus.select("doc_id", "payload").unionByName(
-        Multimodal.withPayload(Seq((100L, "the quick brown fox media payload"))
-          .toDF("doc_id", "text")).select("doc_id", "payload"))
-      val batch = Multimodal.phashNearDupPairs(Multimodal.pHashStub(union))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      batch shouldBe Set((1L, 100L, 0))
-    }
-    idx.unpersist()
-  }
-
-  test("streaming perplexity gate: stateless, frozen model, matches the batch scorer") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    // reference corpus: repetitive in-domain prose; model with generous K
-    val reference = Seq(
-      (100L, "the cat sat on the mat and the cat sat again"),
-      (101L, "the dog sat on the mat and the dog sat again"),
-      (102L, "a cat and a dog sat on the mat")).toDF("doc_id", "text")
-    val model = graft.pipeline.TextAnalysis.bigramModel(reference,
-      bigramK = 100, contextK = 100)
-    model.bigramCounts("the cat") shouldBe 2L
-    model.vSize shouldBe 9L
-    val incoming = Seq(
-      (1L, "the cat sat on the mat"),          // in-domain: low perplexity
-      (2L, "zyx qwv jkl mno ptr stu"),         // out-of-model gibberish
-      (3L, "solo"),                            // one token: unscoreable
-      (4L, null.asInstanceOf[String]))         // null text: unscoreable
-    val input = MemoryStream[(Long, String)]
-    // threshold between the in-domain and gibberish scores, computed from
-    // the batch scorer over the same model constants
-    val gated = graft.pipeline.TextAnalysis.dropByPerplexityStreaming(
-      input.toDF().toDF("doc_id", "text"), model, maxPerplexity = 6.0)
-    val query = gated.writeStream.format("memory").queryName("pplgate")
-      .outputMode("append").start()
-    withQuery(query) {
-      input.addData(incoming: _*)
-      query.processAllAvailable()
-      val kept = s.table("pplgate").select("doc_id").as[Long].collect().toSet
-      kept shouldBe Set(1L)
-      query.lastProgress.stateOperators shouldBe empty
-      // the gate's verdicts replay the frozen model exactly: recompute each
-      // incoming doc's perplexity in plain Scala from the model maps
-      def ppl(text: String): Option[Double] = {
-        val ws = text.toLowerCase.split(" ", -1)
-        if (ws.length < 2) None
-        else {
-          val lps = ws.sliding(2).map { p =>
-            val bg = p.mkString(" ")
-            math.log((model.bigramCounts.getOrElse(bg, 0L) + 1.0) /
-              (model.contextCounts.getOrElse(p(0), 0L) + 1.0 * (model.vSize + 1.0)))
-          }.toSeq
-          val avg = BigDecimal(lps.sum / lps.length)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-          Some(BigDecimal(math.exp(-avg))
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
-      }
-      val expected = incoming.collect {
-        case (id, t) if t != null && ppl(t).exists(_ <= 6.0) => id
-      }.toSet
-      kept shouldBe expected
-      ppl(incoming(1)._2).get should be > 6.0 // gibberish really is high
     }
   }
 
@@ -630,102 +380,6 @@ class StreamingSpec extends SparkTestBase {
       // itself carries no state (the gate is a pure per-batch function)
       out.map(_._1).sorted shouldBe Seq(101L, 103L)
       query.lastProgress.stateOperators shouldBe empty
-    }
-  }
-
-  test("idleTimeout evicts a user's running state once the watermark passes the horizon") {
-    // the opt-in state bound for open-world key domains: a user idle past
-    // the horizon is evicted (their next event starts FRESH), while the
-    // default NoTimeout mode (previous test) accumulates forever
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = MemoryStream[Event]
-    val query = EventStreams.runningUserTotals(
-      input.toDS().withWatermark("ts", "0 seconds"),
-      idleTimeout = Some("2 hours"))
-      .writeStream.format("memory").queryName("running_ttl")
-      .outputMode("update").start()
-    withQuery(query) {
-      input.addData(ev(1, ts(1), user = 7, v = 2.0), ev(2, ts(1, 30), user = 7, v = 3.0))
-      query.processAllAvailable()
-      // another user's much-later event drives the watermark past user 7's
-      // horizon (1:30 + 2h); one more batch lets the timeout fire
-      input.addData(ev(3, ts(9), user = 8, v = 1.0))
-      query.processAllAvailable()
-      input.addData(ev(4, ts(9, 30), user = 8, v = 1.0))
-      query.processAllAvailable()
-      // user 7 returns AFTER eviction: a fresh total, not 3 events
-      input.addData(ev(5, ts(10), user = 7, v = 5.0))
-      query.processAllAvailable()
-      val u7 = s.table("running_ttl").collect()
-        .filter(_.getLong(0) == 7L).map(r => (r.getLong(1), r.getDouble(2)))
-      u7 should contain((2L, 5.0))  // pre-eviction accumulation
-      u7 should contain((1L, 5.0))  // post-eviction fresh start
-      u7.map(_._1) should not contain 3L // never accumulated across eviction
-    }
-  }
-
-  test("idleTimeout re-arms from the watermark when a batch carries only null-ts events") {
-    // r19 advice: a micro-batch updating a user's total from null-ts
-    // events could not refresh their event-time timeout (maxTs stayed
-    // unset), so a stale horizon evicted a key that was JUST active.
-    // The timeout now re-arms from the current watermark in that case.
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = MemoryStream[Event]
-    val query = EventStreams.runningUserTotals(
-      input.toDS().withWatermark("ts", "0 seconds"),
-      idleTimeout = Some("2 hours"))
-      .writeStream.format("memory").queryName("running_ttl_null")
-      .outputMode("update").start()
-    withQuery(query) {
-      // user 7 accumulates with real timestamps → horizon 1:30 + 2h = 3:30
-      input.addData(ev(1, ts(1), user = 7, v = 2.0), ev(2, ts(1, 30), user = 7, v = 3.0))
-      query.processAllAvailable()
-      // watermark moves to 3:00 (inside the horizon), then user 7 is
-      // ACTIVE again — but with a null event time: the stale 3:30 horizon
-      // must not survive this batch
-      input.addData(ev(3, ts(3), user = 8, v = 1.0))
-      query.processAllAvailable()
-      input.addData(EventStreams.Event(4L, null, 7L, "click", 5.0))
-      query.processAllAvailable()
-      // watermark passes the STALE horizon (4:00 > 3:30) and batches keep
-      // coming; the re-armed horizon (3:00 + 2h = 5:00) keeps user 7 live
-      input.addData(ev(5, ts(4), user = 8, v = 1.0))
-      query.processAllAvailable()
-      input.addData(ev(6, ts(4, 30), user = 8, v = 1.0))
-      query.processAllAvailable()
-      // user 7 returns with a real timestamp: the total CONTINUED (4
-      // events), not a fresh start
-      input.addData(ev(7, ts(4, 45), user = 7, v = 1.0))
-      query.processAllAvailable()
-      val u7 = s.table("running_ttl_null").collect()
-        .filter(_.getLong(0) == 7L).map(r => (r.getLong(1), r.getDouble(2)))
-      u7 should contain((3L, 10.0)) // the null-ts event still accumulated
-      u7 should contain((4L, 11.0)) // and the key survived the stale horizon
-      u7.map(_._1) should not contain 1L // never evicted-and-restarted
-    }
-  }
-
-  test("custom keyed state accumulates across micro-batches") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val input = MemoryStream[Event]
-    val query = EventStreams.runningUserTotals(input.toDS())
-      .writeStream.format("memory").queryName("running").outputMode("update").start()
-    withQuery(query) {
-      input.addData(ev(1, ts(1), user = 7, v = 2.5), ev(2, ts(1, 1), user = 7, v = 1.5))
-      query.processAllAvailable()
-      input.addData(ev(3, ts(1, 2), user = 7, v = 6.0), ev(4, ts(1, 3), user = 8, v = 1.0))
-      query.processAllAvailable()
-      val byUser = s.table("running").collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (u, rows) => u -> rows.map(_._2).maxBy(_._1) }
-      byUser(7L) shouldBe ((3L, 10.0))
-      byUser(8L) shouldBe ((1L, 1.0))
     }
   }
 }
