@@ -139,6 +139,9 @@ object Bench {
     canarySink = x
     (System.nanoTime() - t0) / 1000
   }
+  // written, never read: the volatile store keeps the JIT from eliding the
+  // canary loop as dead code
+  @annotation.nowarn("cat=unused-privates")
   @volatile private var canarySink: Long = 0L
 
   /** Drain the async listener bus so a snapshot covers every event of the
@@ -176,16 +179,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the eventTs contract (Tables.scala): the TIMESTAMP_NTZ parquet
-      // generation casts to session-zoned timestamps, so every entrypoint
-      // that reads events must pin UTC or the two parquet generations
-      // produce different instants/buckets (ADVICE r15 — Verify and the
-      // test base pinned it, Bench did not)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.start(cpus,
       // Long-session hygiene: the r9 official run showed the prepared path
       // ~2× slower in the post-loop bracket while unprepared stayed flat —
       // short jobs are the first casualty of driver-session state that
@@ -200,45 +194,9 @@ object Bench {
       // no ad-hoc workload would see, while prepared stayed flat — the
       // BoundParam source is bind-invariant, so one resident class per
       // stage suffices and even an eviction costs one recompile, not 50.)
-      .config("spark.sql.ui.retainedExecutions", "100")
-      .config("spark.ui.retainedJobs", "300")
-      .config("spark.ui.retainedStages", "300")
-      // AQE on cached plans (r21, guide §2.2): with this off (the
-      // default) every `Dedup.cache`/link-cache materialization keeps the
-      // static 32-partition layout and so does everything reading it —
-      // the dedup/text/crawl families ran 130-440 near-empty tasks per
-      // query behind those caches. On, the cache and its readers coalesce
-      // adaptively like any other exchange (task counts derive from data
-      // size at any scale). Deliberately NOT set:
-      // coalescePartitions.parallelismFirst=false — measured on this
-      // workload it over-coalesces CPU-dense candidate-verify joins down
-      // to single tasks (q_join_fuzzy_dfprefix 0.67 s → 6.96 s,
-      // q_join_interval 1.6 s → 3.3 s); the default parallelism-first
-      // coalescing already collapses the KB-dust exchanges once the
-      // cached plans participate.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // File-split count derives from SIZE, not core count (r21, guide §6):
-      // the default minPartitionNum = defaultParallelism shreds multi-file
-      // scans into per-file splits whenever totalBytes/cores < openCost —
-      // at sf0.1 a 30-directory LSH probe paid 30 task inits for ~1 MB of
-      // data (q_ann_lsh run_ms ~10 s). With the floor at 1 the packer is
-      // governed by maxPartitionBytes/openCostInBytes alone, which is the
-      // policy that holds at any scale (at 100 TB the default floor never
-      // binds — bytes/128 MB >> cores). Single-row-group single-file scans
-      // are unaffected (only one split ever carries rows).
-      .config("spark.sql.files.minPartitionNum", "1")
-      // ObjectHashAggregate sort fallback (r22, guide §1.2-step-2): every
-      // UDAF in this library is a BOUNDED top-k buffer (TopKByScore,
-      // TopKTermsByScore — ≤ k small rows per group), but the default
-      // fallback threshold (128 in-memory keys) flips any task holding
-      // more than 128 groups to SORT-based object aggregation — silently
-      // re-introducing the full-stream sort the bounded aggregates exist
-      // to remove. 64k keys × (k ≤ 10 × ~100 B) ≈ ≤64 MB per task worst
-      // case — safe at any executor sizing this library targets, and the
-      // value is scale-independent (it bounds keys per TASK, not data).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.ui.retainedExecutions" -> "100",
+      "spark.ui.retainedJobs" -> "300",
+      "spark.ui.retainedStages" -> "300")
 
     // Warmup: session init, catalog registration + schema inference, codegen
     // and the prepared-statement machinery are all paid here, so per-query

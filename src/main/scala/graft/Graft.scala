@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.graft.Internals
 
+import graft.functions.{CosineSimilarity, DotProduct, HtmlLinks, HtmlMainText, HtmlText, RepetitionProfile, RollingHash, SimHash64, UnicodeNormalize}
 import graft.plans.{DynamicFilterRule, DynamicFilterStrategy}
 
 /** Runtime installation of the graft extensions into an existing session.
@@ -27,51 +29,56 @@ object Graft {
     * `parameterized_statement.rs:30-49`): a SQL user gets the native
     * expressions, not a UDF shim. Idempotent (createOrReplace).
     */
-  def registerFunctions(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.Expression
+  private def registerFunctions(spark: SparkSession): Unit = {
     val reg = Internals.classicSession(spark).sessionState.functionRegistry
-    def one(name: String)(b: Expression => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, {
-        case Seq(x) => b(x)
-        case args => throw new IllegalArgumentException(
-          s"$name expects 1 argument, got ${args.length}")
-      }, "internal")
-    def two(name: String)(b: (Expression, Expression) => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, {
-        case Seq(x, y) => b(x, y)
-        case args => throw new IllegalArgumentException(
-          s"$name expects 2 arguments, got ${args.length}")
-      }, "internal")
-    two("cosine_similarity")(graft.functions.CosineSimilarity(_, _))
-    two("dot_product")(graft.functions.DotProduct(_, _))
-    one("simhash64")(graft.functions.SimHash64(_))
-    one("rolling_hash")(graft.functions.RollingHash(_))
-    one("html_text")(graft.functions.HtmlText(_))
-    one("html_main_text")(e => graft.functions.HtmlMainText(e))
-    one("html_links")(graft.functions.HtmlLinks(_))
-    // DuckDB's name for the same NFC form — SQL text ports both ways
-    one("nfc_normalize")(graft.functions.UnicodeNormalize(_, "NFC"))
-    one("nfkc_normalize")(graft.functions.UnicodeNormalize(_, "NFKC"))
-    // second arg must be a literal int (the gram size is a plan-time shape)
-    reg.createOrReplaceTempFunction("repetition_profile",
-      repetitionProfileBuilder, "internal")
+    sqlFunctions.foreach(f => reg.createOrReplaceTempFunction(f.name, f.builder, "internal"))
   }
 
-  /** SQL builder for `repetition_profile`, shared by both registries
-    * ([[registerFunctions]] and [[graft.plans.GraftExtensions]]). The
-    * fallbacks are SPLIT so two-arguments-but-wrong-type reports the type
-    * constraint, not a bogus "got 2 argument(s)" arity complaint.
+  /** One SQL-callable graft expression: its name, its expression class and
+    * an arity-checked builder.
     */
-  private[graft] val repetitionProfileBuilder:
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression = {
-    case Seq(x, org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _)) =>
-      graft.functions.RepetitionProfile(x, n)
-    case Seq(_, other) => throw new IllegalArgumentException(
-      "repetition_profile expects a LITERAL INT gram size as its second " +
-        s"argument (a plan-time shape), got ${other.sql}")
-    case args => throw new IllegalArgumentException(
-      "repetition_profile expects 2 arguments (tokens array, literal int n), " +
-        s"got ${args.length}")
-  }
+  private[graft] final case class SqlFunction(
+      name: String, clazz: Class[_], builder: Seq[Expression] => Expression)
+
+  private def unary(name: String, clazz: Class[_])(b: Expression => Expression) =
+    SqlFunction(name, clazz, {
+      case Seq(x) => b(x)
+      case args => throw new IllegalArgumentException(
+        s"$name expects 1 argument, got ${args.length}")
+    })
+
+  private def binary(name: String, clazz: Class[_])(b: (Expression, Expression) => Expression) =
+    SqlFunction(name, clazz, {
+      case Seq(x, y) => b(x, y)
+      case args => throw new IllegalArgumentException(
+        s"$name expects 2 arguments, got ${args.length}")
+    })
+
+  /** The function table both registrars read: [[registerFunctions]] for an
+    * existing session and [[graft.plans.GraftExtensions]] for a session
+    * built with `.withExtensions`.
+    */
+  private[graft] val sqlFunctions: Seq[SqlFunction] = Seq(
+    binary("cosine_similarity", classOf[CosineSimilarity])(CosineSimilarity(_, _)),
+    binary("dot_product", classOf[DotProduct])(DotProduct(_, _)),
+    unary("simhash64", classOf[SimHash64])(SimHash64(_)),
+    unary("rolling_hash", classOf[RollingHash])(RollingHash(_)),
+    unary("html_text", classOf[HtmlText])(HtmlText(_)),
+    unary("html_main_text", classOf[HtmlMainText])(e => HtmlMainText(e)),
+    unary("html_links", classOf[HtmlLinks])(HtmlLinks(_)),
+    // DuckDB's name for the same NFC form — SQL text ports both ways
+    unary("nfc_normalize", classOf[UnicodeNormalize])(UnicodeNormalize(_, "NFC")),
+    unary("nfkc_normalize", classOf[UnicodeNormalize])(UnicodeNormalize(_, "NFKC")),
+    // second arg must be a literal int (the gram size is a plan-time shape);
+    // the fallbacks are SPLIT so two-arguments-but-wrong-type reports the
+    // type constraint, not a bogus "got 2 argument(s)" arity complaint
+    SqlFunction("repetition_profile", classOf[RepetitionProfile], {
+      case Seq(x, Literal(n: Int, _)) => RepetitionProfile(x, n)
+      case Seq(_, other) => throw new IllegalArgumentException(
+        "repetition_profile expects a LITERAL INT gram size as its second " +
+          s"argument (a plan-time shape), got ${other.sql}")
+      case args => throw new IllegalArgumentException(
+        "repetition_profile expects 2 arguments (tokens array, literal int n), " +
+          s"got ${args.length}")
+    }))
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement probe for the optimization rounds: dumps
   * `.explain("formatted")` for selected [[SparkEntry.queries]] to files
   * (the committed `plans/rNN/<query>_{before,after}.txt` evidence) and,
@@ -34,30 +32,8 @@ object PlanDump {
       .split(';').toSeq.map(_.trim).filter(_.contains('='))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // session parity with Bench (r21) so probed plans/stage shapes match
-      // what the bench actually runs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // File-split count derives from SIZE, not core count (r21, guide §6):
-      // the default minPartitionNum = defaultParallelism shreds multi-file
-      // scans into per-file splits whenever totalBytes/cores < openCost —
-      // at sf0.1 a 30-directory LSH probe paid 30 task inits for ~1 MB of
-      // data (q_ann_lsh run_ms ~10 s). With the floor at 1 the packer is
-      // governed by maxPartitionBytes/openCostInBytes alone, which is the
-      // policy that holds at any scale (at 100 TB the default floor never
-      // binds — bytes/128 MB >> cores). Single-row-group single-file scans
-      // are unaffected (only one split ever carries rows).
-      .config("spark.sql.files.minPartitionNum", "1")
-      // bounded-UDAF hash aggregation stays hash-based past 128 keys/task
-      // (r22) — session parity with Bench; see Bench.scala for sizing
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
+    val spark = LocalSession.start(cpus)
     extraConf.foreach { case (k, v) => spark.conf.set(k, v) }
-    spark.sparkContext.setLogLevel("WARN")
     Tables.register(spark, sfDir)
     Graft.install(spark)
     pipeline.PipelineQueries.warmup(spark, sfDir)

@@ -165,16 +165,16 @@ object SparkEntry {
         "SELECT p_partkey, p_name, p_retailprice FROM kt_part WHERE p_partkey IN ($1, $2, $3)")
         .execute(Map("$1" -> 3L, "$2" -> 7L, "$3" -> 11L))
     }),
-    // AQE opt-in mode: the statement re-plans from the cached analyzed plan
-    // per execute (skew mitigation for heavy prepared shapes; see
-    // PreparedStatements.prepare scaladoc for the trade)
+    // A heavy shape that wants AQE (skew splitting, runtime coalescing) is
+    // not prepared: a frozen plan forgoes AQE, so it runs as Spark's own
+    // parameterized SQL, which plans per call (see the
+    // PreparedStatements.prepare scaladoc)
     "q_prep_adaptive" -> ((s, dir) => {
       Tables.register(s, dir); Graft.install(s)
-      PreparedStatements.prepare(s,
+      s.sql(
         """SELECT o_orderpriority, count(*) AS cnt FROM orders
-          |WHERE o_totalprice > $1 GROUP BY o_orderpriority""".stripMargin,
-        adaptive = true)
-        .execute(Map("$1" -> 1000.0))
+          |WHERE o_totalprice > :p GROUP BY o_orderpriority""".stripMargin,
+        Map("p" -> 1000.0))
     }),
     // Prepared pushdown through the DSv2 read path: with the v1 source list
     // cleared, the same prepare/bind/execute machinery re-pushes the bound

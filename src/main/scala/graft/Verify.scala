@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,31 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // session parity with Bench (r21): correctness must be validated
-      // under the same AQE partition-sizing the bench runs with — see
-      // Bench.scala for the rationale (none of these can change VALUES,
-      // only partitioning/task counts, and the driver compare sorts rows)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // File-split count derives from SIZE, not core count (r21, guide §6):
-      // the default minPartitionNum = defaultParallelism shreds multi-file
-      // scans into per-file splits whenever totalBytes/cores < openCost —
-      // at sf0.1 a 30-directory LSH probe paid 30 task inits for ~1 MB of
-      // data (q_ann_lsh run_ms ~10 s). With the floor at 1 the packer is
-      // governed by maxPartitionBytes/openCostInBytes alone, which is the
-      // policy that holds at any scale (at 100 TB the default floor never
-      // binds — bytes/128 MB >> cores). Single-row-group single-file scans
-      // are unaffected (only one split ever carries rows).
-      .config("spark.sql.files.minPartitionNum", "1")
-      // bounded-UDAF hash aggregation stays hash-based past 128 keys/task
-      // (r22) — session parity with Bench; see Bench.scala for sizing
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start(cpus)
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (driver leaves unset → all queries): run only
     // queries whose name matches one of the comma-separated substrings

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge.{colOf, exprOf}

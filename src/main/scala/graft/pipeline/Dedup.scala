@@ -325,7 +325,6 @@ object Dedup {
   def dropSeenBefore(
       incoming: DataFrame,
       history: DataFrame,
-      idCol: String = "doc_id",
       textCol: String = "text",
       expectedItems: Long = 1L << 20,
       fpp: Double = 0.03,

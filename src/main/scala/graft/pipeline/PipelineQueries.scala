@@ -625,7 +625,7 @@ object PipelineQueries {
         .unionByName(discovered)
         .select(Urls.canonicalizeUrl(col("url")).as("url")))
       val history = resp.select(Urls.canonicalizeUrl(col("target_uri")).as("url"))
-      val unseen = Dedup.dropSeenBefore(links, history, idCol = "url", textCol = "url",
+      val unseen = Dedup.dropSeenBefore(links, history, textCol = "url",
         expectedItems = 4096)
       val frontier = unseen.select(col("url"),
           Urls.hostOf(col("url")).as("host"),

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Intra-document repetition signals — the Gopher/MassiveText-style quality
@@ -125,7 +125,6 @@ object Repetition {
       n: Int,
       maxTopFraction: Double,
       maxDupFraction: Double,
-      idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     require(maxTopFraction > 0 && maxTopFraction <= 1, s"maxTopFraction in (0,1], got $maxTopFraction")
     require(maxDupFraction > 0 && maxDupFraction <= 1, s"maxDupFraction in (0,1], got $maxDupFraction")

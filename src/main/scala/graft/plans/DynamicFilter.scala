@@ -1,9 +1,8 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, BasePredicate, BindReferences, Expression, Predicate, PredicateHelper, SortOrder}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, BasePredicate, BindReferences, Expression, ExpressionInfo, Predicate, PredicateHelper, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
@@ -63,7 +62,7 @@ object DynamicFilterRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
-    case p @ Project(projList, Filter(cond, child)) if Params.containsPlaceholder(cond) =>
+    case Project(projList, Filter(cond, child)) if Params.containsPlaceholder(cond) =>
       val needed = AttributeSet(projList.flatMap(_.references)) ++ cond.references
       val prunedChild =
         if (child.output.forall(needed.contains)) child
@@ -193,38 +192,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     e.injectPlannerStrategy(_ => DynamicFilterStrategy)
     // the custom codegen expressions, available to SQL text in sessions
     // built with .withExtensions (Graft.install covers existing sessions)
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    def info(name: String, clazz: Class[_]) = new ExpressionInfo(clazz.getName, name)
-    // arity-checked builders, same error contract as Graft.registerFunctions
-    def one(name: String, clazz: Class[_])(b: Expression => Expression): Unit =
-      e.injectFunction((FunctionIdentifier(name), info(name, clazz), {
-        case Seq(x) => b(x)
-        case args => throw new IllegalArgumentException(
-          s"$name expects 1 argument, got ${args.length}")
-      }: Seq[Expression] => Expression))
-    def two(name: String, clazz: Class[_])(b: (Expression, Expression) => Expression): Unit =
-      e.injectFunction((FunctionIdentifier(name), info(name, clazz), {
-        case Seq(x, y) => b(x, y)
-        case args => throw new IllegalArgumentException(
-          s"$name expects 2 arguments, got ${args.length}")
-      }: Seq[Expression] => Expression))
-    two("cosine_similarity", classOf[graft.functions.CosineSimilarity])(
-      graft.functions.CosineSimilarity(_, _))
-    two("dot_product", classOf[graft.functions.DotProduct])(
-      graft.functions.DotProduct(_, _))
-    one("simhash64", classOf[graft.functions.SimHash64])(graft.functions.SimHash64(_))
-    one("rolling_hash", classOf[graft.functions.RollingHash])(graft.functions.RollingHash(_))
-    one("html_text", classOf[graft.functions.HtmlText])(graft.functions.HtmlText(_))
-    one("html_main_text", classOf[graft.functions.HtmlMainText])(
-      e => graft.functions.HtmlMainText(e))
-    one("html_links", classOf[graft.functions.HtmlLinks])(graft.functions.HtmlLinks(_))
-    one("nfc_normalize", classOf[graft.functions.UnicodeNormalize])(
-      graft.functions.UnicodeNormalize(_, "NFC"))
-    one("nfkc_normalize", classOf[graft.functions.UnicodeNormalize])(
-      graft.functions.UnicodeNormalize(_, "NFKC"))
-    e.injectFunction((FunctionIdentifier("repetition_profile"),
-      info("repetition_profile", classOf[graft.functions.RepetitionProfile]),
-      graft.Graft.repetitionProfileBuilder))
+    graft.Graft.sqlFunctions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.clazz.getName, f.name), f.builder))
+    }
   }
 }

@@ -4,8 +4,7 @@ import java.util.IdentityHashMap
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, SubqueryExpression}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.execution.{BaseSubqueryExec, ExecSubqueryExpression, ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
@@ -81,39 +80,6 @@ object Params {
       case NonFatal(e) =>
         throw new IllegalArgumentException(
           s"Placeholder '$id' expects ${dt.catalogString}, got ${v.getClass.getName} ($v)", e)
-    }
-
-  /** All placeholder ids in a LOGICAL plan, descending into subquery plans
-    * (the logical analog of the SparkPlan overload — [[SubqueryExpression]]
-    * holds its plan outside the node's `children`).
-    */
-  def placeholderIds(plan: LogicalPlan): Seq[String] = {
-    val b = Seq.newBuilder[String]
-    def scanExpr(root: Expression): Unit = root.foreach {
-      case ParamPlaceholder(id, _) => b += id
-      case s: SubqueryExpression   => b ++= placeholderIds(s.plan)
-      case _                       =>
-    }
-    plan.foreach(_.expressions.foreach(scanExpr))
-    b.result().distinct
-  }
-
-  /** Bind a cached LOGICAL plan (adaptive prepared statements): plain
-    * literal substitution, recursing into subquery plans. Literals (not
-    * [[BoundParam]]) are correct here — the plan goes back through the
-    * optimizer per execute, and literals let it constant-fold and push down
-    * with the concrete values.
-    */
-  def bindLogical(plan: LogicalPlan, params: Map[String, Any]): LogicalPlan = {
-    placeholderIds(plan).foreach(id => if (!params.contains(id)) missing(id))
-    bindLogicalUnchecked(plan, params)
-  }
-
-  private def bindLogicalUnchecked(plan: LogicalPlan, params: Map[String, Any]): LogicalPlan =
-    plan.transformAllExpressions {
-      case ParamPlaceholder(id, dt) => literal(id, dt, params(id))
-      case s: SubqueryExpression if placeholderIds(s.plan).nonEmpty =>
-        s.withNewPlan(bindLogicalUnchecked(s.plan, params))
     }
 
   /** Bind a cached physical plan: clone-and-substitute every placeholder with

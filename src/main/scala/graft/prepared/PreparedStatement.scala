@@ -31,25 +31,14 @@ class PreparedStatement(
     val spark: SparkSession,
     val sql: String,
     val physicalPlan: SparkPlan,
-    val output: Seq[Attribute],
-    adaptiveLogical: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = None) {
+    val output: Seq[Attribute]) {
 
-  /** Placeholder ids this statement expects (e.g. "$1", "$2"). */
-  lazy val parameterIds: Seq[String] = Params.placeholderIds(physicalPlan)
-
-  /** Bind `params` and return a lazy DataFrame over the bound plan.
-    *
-    * Static mode (default): no Catalyst work here — one cheap plan-tree
-    * clone of the cached physical plan, then straight to execution when an
-    * action runs. Adaptive mode: literals substitute into the cached
-    * analyzed plan, which re-plans through the optimizer + AQE.
+  /** Bind `params` and return a lazy DataFrame over the bound plan. No
+    * Catalyst work here — one cheap plan-tree clone of the cached physical
+    * plan, then straight to execution when an action runs.
     */
-  def execute(params: Map[String, Any] = Map.empty): DataFrame = adaptiveLogical match {
-    case Some(logical) =>
-      Internals.ofRows(spark, Params.bindLogical(logical, params))
-    case None =>
-      Internals.dfFromPhysical(spark, boundPlan(params))
-  }
+  def execute(params: Map[String, Any] = Map.empty): DataFrame =
+    Internals.dfFromPhysical(spark, boundPlan(params))
 
   /** Bind + re-push scan predicates, stamping the measured bind time onto
     * every [[graft.plans.DynamicFilterExec]]'s `bindTime` SQLMetric (set
@@ -57,7 +46,7 @@ class PreparedStatement(
     * metric accumulators and lose an earlier stamp). The exec posts the
     * value to the SQL listener when execution starts. Public: the returned
     * tree is the statement's per-execution plan, the inspection point for
-    * metrics and plan-shape assertions (static mode only).
+    * metrics and plan-shape assertions.
     */
   def boundPlan(params: Map[String, Any]): SparkPlan = {
     val start = System.nanoTime()
@@ -71,16 +60,12 @@ class PreparedStatement(
     pruned
   }
 
-  /** Convenience: positional binding — args(0) -> "$1", args(1) -> "$2", … */
-  def execute(args: Any*): DataFrame =
-    execute(args.zipWithIndex.map { case (v, i) => s"$$${i + 1}" -> v }.toMap)
-
   /** Hot-path collect: bind and run the physical plan directly, skipping the
     * DataFrame wrapper entirely (the reference's execute() likewise streams
     * record batches straight from the physical plan,
     * `parameterized_statement.rs:64-87`).
     *
-    * Static mode runs on one of two tiers ([[Internals.collectPhysical]]):
+    * Runs on one of two tiers ([[Internals.collectPhysical]]):
     * a bound plan that is a narrow project/filter chain over a driver-resident
     * leaf — a keyed mem table answering the bound keys, or a materialized
     * cached table whose blocks are all in the driver's block manager — is
@@ -88,8 +73,6 @@ class PreparedStatement(
     * job.
     * [[DriverTier]] states the eligibility rule.
     */
-  def executeCollect(params: Map[String, Any]): Array[Row] = adaptiveLogical match {
-    case Some(_) => execute(params).collect()
-    case None    => Internals.collectPhysical(boundPlan(params))
-  }
+  def executeCollect(params: Map[String, Any]): Array[Row] =
+    Internals.collectPhysical(boundPlan(params))
 }

@@ -231,22 +231,6 @@ object PreparedStatements {
     }
   }
 
-  /** Prepare `sql` for repeated execution.
-    *
-    * `adaptive = false` (default): the full Catalyst pipeline runs once and
-    * every execute re-binds the frozen physical plan — the amortization
-    * path, right for high-rate point lookups. AQE is off for the cached
-    * plan by necessity: adaptive re-planning would mutate the tree the
-    * statement re-binds.
-    *
-    * `adaptive = true`: parse + analysis are still amortized, but each
-    * execute substitutes literals into the cached analyzed plan and
-    * re-plans through the optimizer and AQE. Per-execute planning costs
-    * ~10s of ms — negligible for heavy shapes (a prepared fact⋈fact join
-    * over skewed keys) where losing AQE's skew-join splitting and runtime
-    * coalescing would cost far more at cluster scale. Pick per statement:
-    * static for lookups, adaptive for analytical shapes.
-    */
   /** Placeholders are supported anywhere a runtime value is legal —
     * predicates, projections, join conditions, subqueries, function
     * arguments. LIMIT/OFFSET/TAIL counts are NOT: Spark requires those to
@@ -271,12 +255,17 @@ object PreparedStatements {
         s"constant there at analysis time); inline the value into the SQL instead: $sql")
   }
 
+  /** Prepare `sql` for repeated execution: the full Catalyst pipeline runs
+    * once, and every execute re-binds the frozen physical plan. AQE is off
+    * for that plan: adaptive re-planning would mutate the tree the
+    * statement re-binds and bring back per-execute planning, the cost this
+    * amortizes. A heavy shape that wants AQE (a fact⋈fact join over skewed
+    * keys) runs as `spark.sql(text, args)` instead, which plans per call.
+    */
   def prepare(
       spark: SparkSession,
       sql: String,
-      paramTypes: Map[String, DataType] = Map.empty,
-      adaptive: Boolean = false): PreparedStatement = {
-    val cs = Internals.classicSession(spark)
+      paramTypes: Map[String, DataType] = Map.empty): PreparedStatement = {
     val parsed = Internals.parsePlan(spark, normalizePlaceholders(sql))
     rejectDdl(parsed, sql)
     rejectUnsupportedPositions(parsed, sql)
@@ -303,12 +292,7 @@ object PreparedStatements {
         ParamPlaceholder(id, typeOf(id))
     }
 
-    // Plan once, through the full Catalyst pipeline. AQE is disabled for the
-    // cached plan: re-binding mutates a finished physical tree, and adaptive
-    // re-planning would re-introduce per-execute planning work — the very
-    // cost prepare() exists to amortize. (The physical plan is also built in
-    // adaptive mode — one-time cost — so parameterIds and plan introspection
-    // behave identically in both modes.)
+    // Plan once, through the full Catalyst pipeline (AQE off: see above).
     val qe = Internals.queryExecution(spark, withPlaceholders)
     // AQE suspension through the shared refcounted guard: concurrent
     // prepare() calls on one session overlap safely (only the outermost
@@ -319,7 +303,6 @@ object PreparedStatements {
         qe.executedPlan
       }
 
-    new PreparedStatement(spark, sql, physical, physical.output,
-      adaptiveLogical = if (adaptive) Some(qe.analyzed) else None)
+    new PreparedStatement(spark, sql, physical, physical.output)
   }
 }

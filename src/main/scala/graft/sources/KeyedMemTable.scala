@@ -73,10 +73,6 @@ object KeyedMemTables {
     registry.remove(name).isDefined
   }
 
-  /** Drop every registered keyed table (see [[unregister]]). */
-  def clear(spark: SparkSession): Unit =
-    registry.keys.toSeq.foreach(unregister(spark, _))
-
   /** The keys a lookup ships: those every pushed key set allows, without
     * NULL. A NULL value never MATCHES under SQL semantics (`k = NULL` is
     * NULL, and `k IN ('a', NULL)` is NULL — filtered — for a NULL key), and

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sitemaps.org XML parsing — the crawl-DISCOVERY side of the frontier
@@ -23,7 +23,7 @@ object Sitemaps {
     * whether it came from an index file (a pointer to another sitemap)
     * rather than a leaf urlset.
     */
-  final case class SitemapEntry(loc: String, lastmod: String, is_index: Boolean)
+  private final case class SitemapEntry(loc: String, lastmod: String, is_index: Boolean)
 
   private def newFactory(): javax.xml.stream.XMLInputFactory = {
     val f = javax.xml.stream.XMLInputFactory.newInstance()
@@ -52,8 +52,6 @@ object Sitemaps {
   /** Parse one sitemap document. Namespace-agnostic on local names (the
     * sitemap namespace is frequently missing or wrong in the wild).
     */
-  def parse(xml: String): Seq[SitemapEntry] = parseWith(newFactory(), xml)
-
   private def parseWith(
       factory: javax.xml.stream.XMLInputFactory, xml: String): Seq[SitemapEntry] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[SitemapEntry]

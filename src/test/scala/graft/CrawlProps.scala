@@ -80,7 +80,9 @@ object CrawlProps extends Properties("Crawl") {
       // every parser's contract on garbage is "empty or partial result",
       // never an executor-killing exception
       Warc.parseRecords("f", bytes, 1 << 20)
-      graft.sources.Sitemaps.parse(text)
+      val spark = SparkTestBase.session
+      import spark.implicits._
+      graft.sources.Sitemaps.entries(Seq((1L, text)).toDF("doc_id", "xml")).collect()
       graft.pipeline.Robots.parse(text)
       htmlText(text)
       graft.pipeline.Urls.surtKeyString(text)

@@ -227,4 +227,40 @@ class DynamicFilterStrategySpec extends SparkTestBase {
       spark.catalog.dropTempView("dfs_lock_cached")
     }
   }
+
+  // a session built with .withExtensions(new GraftExtensions) gets the same
+  // SQL functions, builders and arity errors that Graft.install registers
+  // into an existing session: both read one function table
+  test("GraftExtensions exposes the same SQL functions as Graft.install") {
+    import org.apache.spark.sql.SparkSessionExtensions
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
+    // what a session built with the extensions registers
+    val injected = new SimpleFunctionRegistry
+    new graft.plans.GraftExtensions()(new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit =
+        injected.registerFunction(f._1, f._2, f._3)
+    })
+
+    val fresh = Internals.classicSession(spark.newSession())
+    val registry = fresh.sessionState.functionRegistry
+    val builtin = registry.listFunction().toSet
+    Graft.install(fresh)
+    val installed = registry.listFunction().toSet -- builtin
+
+    injected.listFunction().toSet shouldBe installed
+    installed.map(_.funcName) should contain allOf ("cosine_similarity", "simhash64",
+      "html_text", "nfkc_normalize", "repetition_profile")
+    installed should have size 10
+    injected.lookupFunction(FunctionIdentifier("simhash64")).get.getClassName shouldBe
+      classOf[graft.functions.SimHash64].getName
+    val arg = Literal("a")
+    injected.lookupFunction(FunctionIdentifier("simhash64"), Seq(arg)) shouldBe
+      registry.lookupFunction(FunctionIdentifier("simhash64"), Seq(arg))
+    Seq(injected, registry).foreach { reg =>
+      intercept[IllegalArgumentException] {
+        reg.lookupFunction(FunctionIdentifier("html_text"), Seq.empty)
+      }.getMessage shouldBe "html_text expects 1 argument, got 0"
+    }
+  }
 }

@@ -113,26 +113,6 @@ class KeyedMemTableSpec extends SparkTestBase {
     KeyedMemTables.unregister(spark, "kt_tmp") shouldBe false
   }
 
-  test("clear drops every registered keyed table") {
-    import spark.implicits._
-    val df = (0L until 5L).map(i => (i, i * 2)).toDF("k", "v")
-    KeyedMemTables.register(spark, "kt_a", df, "k")
-    KeyedMemTables.register(spark, "kt_b", df, "k")
-    KeyedMemTables.clear(spark)
-    KeyedMemTables.registry.isEmpty shouldBe true
-    spark.catalog.tableExists("kt_a") shouldBe false
-    spark.catalog.tableExists("kt_b") shouldBe false
-    // the shared fixture for the other tests is gone too — re-register
-    setup2()
-  }
-
-  // re-registration hook for tests ordered after clear()
-  private def setup2(): Unit = {
-    import spark.implicits._
-    val df = (0L until 1000L).map(i => (i, s"item_$i", (i % 50).toDouble)).toDF("k", "name", "score")
-    KeyedMemTables.register(spark, "kt", df, "k")
-  }
-
   test("prepared IN-list rebind intersects multiple key conjuncts") {
     setup
     val st = PreparedStatements.prepare(

@@ -50,13 +50,11 @@ class ParamsSpec extends SparkTestBase {
   }
 
   // a wrong-typed value is an error naming the placeholder, never a silent
-  // coercion — through the static (Params.bind) and adaptive (bindLogical)
-  // paths alike
+  // coercion
   test("wrong-typed bind value raises with the placeholder name and both types") {
     spark.range(0, 10).createOrReplaceTempView("params_t")
     val sql = "SELECT id FROM params_t WHERE id = $1"
     val static = graft.prepared.PreparedStatements.prepare(spark, sql)
-    val adaptive = graft.prepared.PreparedStatements.prepare(spark, sql, adaptive = true)
     Seq[(Any, String)](
       5 -> "java.lang.Integer (5)",
       "abc" -> "java.lang.String (abc)",
@@ -64,9 +62,6 @@ class ParamsSpec extends SparkTestBase {
       val expected = s"Placeholder '$$1' expects bigint, got $got"
       intercept[IllegalArgumentException] {
         static.executeCollect(Map("$1" -> v))
-      }.getMessage shouldBe expected
-      intercept[IllegalArgumentException] {
-        adaptive.execute(Map("$1" -> v))
       }.getMessage shouldBe expected
     }
     static.executeCollect(Map("$1" -> 5L)).map(_.getLong(0)) shouldBe Array(5L)

@@ -131,35 +131,16 @@ class ParquetPreparedSpec extends SparkTestBase {
     ex.getMessage should include("'$1' was not provided a value")
   }
 
-  // AQE opt-in (prepare(..., adaptive = true)): a prepared heavy shape —
-  // e.g. a fact⋈fact join over skewed keys at cluster scale — can trade
-  // per-execute planning (~10s of ms) for AQE's skew splitting / runtime
-  // coalescing, which the default frozen-physical-plan mode must forgo.
-  test("a prepared join can opt into AQE") {
-    parquetDir
-    val sql = """SELECT count(*) AS n FROM pusers a JOIN pusers b ON a.id = b.id
-                |WHERE a.score >= $1""".stripMargin
-    val st = PreparedStatements.prepare(spark, sql, adaptive = true)
-
-    val df = st.execute(Map("$1" -> 999.0))
-    df.collect() shouldBe Array(Row(200L))
-    // the executed plan really is adaptive — the frozen-plan mode never is
-    df.queryExecution.executedPlan shouldBe
+  // a prepared self-join with the placeholder on one side runs on the
+  // frozen physical plan, never an adaptive one, and rebinds like a lookup
+  test("a prepared self-join rebinds on the frozen plan") {
+    val st = prepare(
+      """SELECT count(*) AS n FROM pusers a JOIN pusers b ON a.id = b.id
+        |WHERE a.score >= $1""".stripMargin)
+    st.physicalPlan should not be
       a[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
-
-    // rebinding re-plans with the new literal
+    st.execute(Map("$1" -> 999.0)).collect() shouldBe Array(Row(200L))
     st.execute(Map("$1" -> 998.0)).collect() shouldBe Array(Row(400L))
-
-    val static = prepare(sql)
-    static.execute(Map("$1" -> 999.0)).collect() shouldBe Array(Row(200L))
-  }
-
-  test("adaptive prepare still fails fast on a missing param") {
-    parquetDir
-    val st = PreparedStatements.prepare(
-      spark, "SELECT count(*) AS n FROM pusers WHERE score >= $1", adaptive = true)
-    val ex = intercept[IllegalArgumentException] { st.execute(Map.empty[String, Any]) }
-    ex.getMessage should include("'$1' was not provided a value")
   }
 
   // identical parameterized subtrees on both sides of a self-join can be

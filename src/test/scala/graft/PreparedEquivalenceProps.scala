@@ -103,27 +103,6 @@ object PreparedEquivalenceProps extends Properties("PreparedEquivalence") {
         literalRows(s"SELECT id, tag, score FROM prop_cached WHERE id = $k")
     }
 
-  private lazy val adaptiveSt = {
-    spark
-    PreparedStatements.prepare(
-      SparkTestBase.session,
-      "SELECT count(*) AS n FROM prop_items WHERE id >= $1 AND id <= $2",
-      adaptive = true)
-  }
-
-  // the AQE opt-in mode re-plans per execute — its results must still be
-  // indistinguishable from the frozen-plan mode for every binding
-  property("adaptive prepared == static prepared == literal SQL") =
-    Prop.forAll(Gen.choose(-10L, 600L), Gen.choose(-10L, 600L)) { (a, b) =>
-      val params = Map[String, Any]("$1" -> a, "$2" -> b)
-      val adaptive = adaptiveSt.executeCollect(params).head.getLong(0)
-      val static = rangeSt.executeCollect(params).head.getLong(0)
-      val inline = spark
-        .sql(s"SELECT count(*) AS n FROM prop_items WHERE id >= $a AND id <= $b")
-        .head().getLong(0)
-      adaptive == static && static == inline
-    }
-
   private lazy val repetitionSt = {
     val s = SparkTestBase.session
     import s.implicits._

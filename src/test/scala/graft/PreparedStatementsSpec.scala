@@ -76,12 +76,6 @@ class PreparedStatementsSpec extends SparkTestBase {
       .execute(Map("$1" -> 3)).collect() shouldBe Array(Row(3L))
   }
 
-  test("positional execute maps args in order") {
-    val rows = prepare("SELECT id FROM users WHERE id >= $1 AND id <= $2")
-      .execute(2, 3).collect().map(_.getInt(0)).sorted
-    rows shouldBe Array(2, 3)
-  }
-
   test("named :param markers bind by name") {
     val rows = prepare("SELECT id FROM users WHERE name = :who")
       .execute(Map("$who" -> "cy")).collect()

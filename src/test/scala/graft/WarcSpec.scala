@@ -191,43 +191,48 @@ class WarcSpec extends SparkTestBase {
 
   test("sitemap parsing: urlset and index entries, entities, hostile input") {
     import graft.sources.Sitemaps
+    import spark.implicits._
+    // every case goes through the one public form: a one-row frame exploded
+    // by Sitemaps.entries into (loc, lastmod, is_index) rows, in order
+    def parsed(xml: String): Seq[(String, String, Boolean)] =
+      Sitemaps.entries(Seq((1L, xml)).toDF("doc_id", "xml")).collect().toSeq
+        .map(r => (r.getString(1), r.getString(2), r.getBoolean(3)))
+    def locs(xml: String): Seq[String] = parsed(xml).map(_._1)
     val leaf = """<?xml version="1.0" encoding="UTF-8"?>
       |<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
       |  <url><loc>https://ex.com/a?x=1&amp;y=2</loc><lastmod>2026-02-03</lastmod></url>
       |  <url><loc> https://ex.com/b </loc><priority>0.8</priority></url>
       |</urlset>""".stripMargin
-    Sitemaps.parse(leaf) shouldBe Seq(
-      Sitemaps.SitemapEntry("https://ex.com/a?x=1&y=2", "2026-02-03", false),
-      Sitemaps.SitemapEntry("https://ex.com/b", "", false))
+    parsed(leaf) shouldBe Seq(
+      ("https://ex.com/a?x=1&y=2", "2026-02-03", false),
+      ("https://ex.com/b", "", false))
     val index = "<sitemapindex><sitemap><loc>https://ex.com/s1.xml</loc></sitemap>" +
       "<sitemap><loc>https://ex.com/s2.xml</loc></sitemap></sitemapindex>"
-    Sitemaps.parse(index).map(e => (e.loc, e.is_index)) shouldBe
+    parsed(index).map(e => (e._1, e._3)) shouldBe
       Seq(("https://ex.com/s1.xml", true), ("https://ex.com/s2.xml", true))
     // malformed tail keeps whole entries; garbage yields none
-    Sitemaps.parse("<urlset><url><loc>https://ok/</loc></url><url><loc>truncated")
-      .map(_.loc) shouldBe Seq("https://ok/")
+    locs("<urlset><url><loc>https://ok/</loc></url><url><loc>truncated") shouldBe
+      Seq("https://ok/")
     // a stray child element inside <loc> is transparent, not URL-dropping
-    Sitemaps.parse("<urlset><url><loc>https://a/<br/>b</loc></url></urlset>")
-      .map(_.loc) shouldBe Seq("https://a/b")
+    locs("<urlset><url><loc>https://a/<br/>b</loc></url></urlset>") shouldBe Seq("https://a/b")
     // extension namespaces nest their own same-local-name elements DEEPER
     // (Google image sitemaps): an <image:loc> inside <image:image> must
     // not overwrite the page's <loc> — namespace-agnostic matching is
     // depth-guarded to direct children of <url> (r19 review catch: the
     // frontier was seeded with image URLs instead of pages)
-    Sitemaps.parse("<urlset><url><loc>https://site/page</loc>" +
+    locs("<urlset><url><loc>https://site/page</loc>" +
       "<image:image><image:loc>https://site/img.jpg</image:loc>" +
-      "<image:caption>x</image:caption></image:image></url></urlset>")
-      .map(_.loc) shouldBe Seq("https://site/page")
+      "<image:caption>x</image:caption></image:image></url></urlset>") shouldBe
+      Seq("https://site/page")
     // order-independent: extension block before the real loc
-    Sitemaps.parse("<urlset><url><image:image><image:loc>https://site/img.jpg" +
-      "</image:loc></image:image><loc>https://site/page2</loc></url></urlset>")
-      .map(_.loc) shouldBe Seq("https://site/page2")
-    Sitemaps.parse("not xml at all") shouldBe Seq.empty
+    locs("<urlset><url><image:image><image:loc>https://site/img.jpg" +
+      "</image:loc></image:image><loc>https://site/page2</loc></url></urlset>") shouldBe
+      Seq("https://site/page2")
+    parsed("not xml at all") shouldBe Seq.empty
     // a DOCTYPE (the XXE/billion-laughs vector) aborts the parse safely
-    Sitemaps.parse("<!DOCTYPE lolz [<!ENTITY a \"b\">]><urlset><url>" +
+    parsed("<!DOCTYPE lolz [<!ENTITY a \"b\">]><urlset><url>" +
       "<loc>https://x/&a;</loc></url></urlset>") shouldBe Seq.empty
     // the DataFrame explode keeps ids attached
-    import spark.implicits._
     val out = Sitemaps.entries(Seq((7L, leaf)).toDF("doc_id", "xml")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     out shouldBe Set((7L, "https://ex.com/a?x=1&y=2"), (7L, "https://ex.com/b"))

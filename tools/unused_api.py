@@ -1,18 +1,34 @@
 #!/usr/bin/env python3
-"""List every public `def` in src/main that nothing in src/main or perfbench/src
-references, and exit 1 if any is listed.
+"""List every public member of src/main (`def`, `val`, `lazy val`, `var`) that
+nothing in src/main or perfbench/src references, and exit 1 if any is listed.
 
-A def is public when it is a member of a class, object or trait whose own
-enclosing templates are all public, and it carries none of `private`,
-`protected` or `override`. Defs inside method bodies or anonymous classes are
-not public API.
+A member is public when it sits directly in the body of a class, object or
+trait whose own enclosing templates are all public, and it carries none of
+`private`, `protected` or `override`. Members inside method bodies, anonymous
+classes or constructor parameter lists are not public API.
 
-A reference is an identifier token with the def's name anywhere but at a
-definition site. Tokens come from a small Scala lexer, so names that appear
-only in comments (line, nested block) or string literals (plain, triple-quoted,
-interpolated, char) do not count; code inside `${...}` splices and `$name`
-splices does. The scan is by name: a reference to one overload or to a
-same-named member elsewhere keeps every def of that name alive.
+Tokens come from a small Scala lexer, so names that appear only in comments
+(line, nested block) or string literals (plain, triple-quoted, interpolated,
+char) do not count; code inside `${...}` splices and `$name` splices does. A
+token at a definition site (after `def`, `val`, `var`, `class`, `object`,
+`trait`, `type`) is not a reference. Every other token `name` is resolved:
+
+- `Q.name`, where `Q` is a template of the scanned sources, references the
+  member `name` of `Q` and of the templates `Q` extends, and nothing else.
+  So a dead `Sitemaps.parse` is not kept alive by a live `Robots.parse`.
+- `import ...Q.name` and `import ...Q.{name, ...}` reference `Q.name`;
+  `import ...Q._` makes every bare `name` in the file a reference to `Q.name`.
+- A bare `name` references the member `name` of every enclosing template and
+  of the templates they extend.
+- Any other `x.name`, and any bare `name`, references every class or trait
+  member called `name`: an instance member is reachable through any value of
+  its type, which a lexer cannot type. Object members are reached only by the
+  three rules above.
+- `apply` and `unapply` count as referenced wherever their owner's name
+  appears, since `Owner(...)` and `case Owner(...)` call them unnamed.
+
+Templates are keyed by simple name: a companion class and object, or two
+templates sharing a name, share one set of references.
 
 Allowed without a reference: methods named `main` (JVM entry points) and
 `SparkEntry.entry` (the driver's query-registry contract).
@@ -29,6 +45,9 @@ ALLOWED_QUALIFIED = {"SparkEntry.entry"}
 NON_PUBLIC_MODS = {"private", "protected", "override"}
 MODIFIERS = NON_PUBLIC_MODS | {"final", "implicit", "lazy", "abstract", "sealed", "case"}
 TEMPLATE_KWS = {"class", "object", "trait"}
+MEMBER_KWS = {"def", "val", "var"}
+DEFINING_KWS = MEMBER_KWS | TEMPLATE_KWS | {"type"}
+CALLED_BY_OWNER = {"apply", "unapply"}
 # Tokens that may sit between `class Foo` and its body's `{` at the template's
 # own paren depth; anything else means the template has no body.
 TEMPLATE_HEADER_WORDS = {"extends", "with", "private", "protected", "."}
@@ -235,51 +254,109 @@ def modifiers_before(toks, k):
     return mods
 
 
-def public_defs(path, toks):
-    """Yield (name, owner, line) for each public member def in one file."""
-    # scopes: one entry per open `{`: (is_template, is_public, owner name)
-    scopes = []
-    depth = 0  # paren/bracket depth
-    pending = None  # (name, public, depth) of a template header awaiting `{`
-    for k, t in enumerate(toks):
-        txt = t.text
-        if t.kind == "id" and txt in TEMPLATE_KWS and not (k > 0 and toks[k - 1].text == "."):
-            name = toks[k + 1].text if k + 1 < len(toks) else "?"
-            enclosing_public = all(s[1] for s in scopes)
-            public = enclosing_public and not (modifiers_before(toks, k) & {"private", "protected"})
-            pending = (name, public, depth)
-            continue
-        if t.kind == "punct" and txt in ("(", "["):
-            depth += 1
-            continue
-        if t.kind == "punct" and txt in (")", "]"):
-            depth -= 1
-            continue
-        if pending is not None and depth == pending[2]:
+class FileScan:
+    """One pass over a file's tokens: its templates, its template-level
+    members, its imports and, for every token, the enclosing template names."""
+
+    def __init__(self, toks):
+        self.toks = toks
+        self.templates = {}  # name -> set of parent names
+        self.members = []  # (name, owner, line, public, declared in an object)
+        self.owners = []  # per token: tuple of enclosing template names
+        self.imported = []  # (owner, name) named by an import
+        self.wildcards = set()  # owners whose members are imported with `_`
+        self._walk()
+        self._imports()
+
+    def _walk(self):
+        toks = self.toks
+        # scopes: one entry per open `{`:
+        # (is_template, is_public, owner, paren depth, is_object)
+        scopes = []
+        depth = 0  # paren/bracket depth
+        pending = None  # (name, public, depth, is_object) of a header awaiting `{`
+        owners = ()
+        for k, t in enumerate(toks):
+            self.owners.append(owners)
+            txt = t.text
+            if t.kind == "id" and txt in TEMPLATE_KWS and not (k > 0 and toks[k - 1].text == "."):
+                name = toks[k + 1].text if k + 1 < len(toks) else "?"
+                enclosing_public = all(s[1] for s in scopes)
+                public = enclosing_public and not (modifiers_before(toks, k) & {"private", "protected"})
+                self.templates.setdefault(name, set())
+                pending = (name, public, depth, txt == "object")
+                continue
+            if t.kind == "punct" and txt in ("(", "["):
+                depth += 1
+                continue
+            if t.kind == "punct" and txt in (")", "]"):
+                depth -= 1
+                continue
+            if pending is not None and depth == pending[2]:
+                if txt == "{":
+                    scopes.append((True, pending[1], pending[0], depth, pending[3]))
+                    owners = owners + (pending[0],)
+                    pending = None
+                    continue
+                prev = toks[k - 1].text
+                # the template's own name, a parent type's name, or a header word
+                in_header = (prev in TEMPLATE_KWS or prev in ("extends", "with", ".")
+                             or txt in TEMPLATE_HEADER_WORDS)
+                if not in_header:
+                    pending = None
+                elif t.kind == "id" and prev in ("extends", "with", "."):
+                    self.templates[pending[0]].add(txt)
             if txt == "{":
-                scopes.append((True, pending[1], pending[0]))
-                pending = None
+                scopes.append((False, False, None, depth, False))
+            elif txt == "}":
+                if scopes and scopes.pop()[0]:
+                    owners = owners[:-1]
+            elif t.kind == "id" and txt in MEMBER_KWS and k + 2 < len(toks):
+                nt = toks[k + 1]
+                if nt.kind != "id" or (txt != "def" and toks[k + 2].text == "("):
+                    continue  # a pattern definition: `val (a, b) = ...`
+                if not scopes or not scopes[-1][0] or scopes[-1][3] != depth:
+                    continue  # a local, or a constructor parameter
+                public = (all(s[0] and s[1] for s in scopes)
+                          and not (modifiers_before(toks, k) & NON_PUBLIC_MODS))
+                self.members.append((nt.text, scopes[-1][2], nt.line, public, scopes[-1][4]))
+
+    def _imports(self):
+        toks = self.toks
+        k = 0
+        while k < len(toks):
+            if not (toks[k].kind == "id" and toks[k].text == "import"):
+                k += 1
                 continue
-            prev = toks[k - 1].text
-            # the template's own name, a parent type's name, or a header word
-            in_header = (prev in TEMPLATE_KWS or prev in ("extends", "with", ".")
-                         or txt in TEMPLATE_HEADER_WORDS)
-            if not in_header:
-                pending = None
-        if txt == "{":
-            scopes.append((False, False, None))
-        elif txt == "}":
-            if scopes:
-                scopes.pop()
-        elif txt == "def" and t.kind == "id" and k + 1 < len(toks):
-            nt = toks[k + 1]
-            if nt.kind != "id":
-                continue
-            if not scopes or not all(s[0] and s[1] for s in scopes):
-                continue
-            if modifiers_before(toks, k) & NON_PUBLIC_MODS:
-                continue
-            yield nt.text, scopes[-1][2], nt.line
+            k += 1
+            # one clause per iteration: `a.b.C.name`, `a.b.C._` or `a.b.C.{x, y => z, _}`
+            while k < len(toks):
+                path = []
+                while k < len(toks) and toks[k].kind == "id":
+                    path.append(toks[k].text)
+                    k += 1
+                    if k < len(toks) and toks[k].text == ".":
+                        k += 1
+                    else:
+                        break
+                if k < len(toks) and toks[k].text == "{" and path:
+                    k += 1
+                    while k < len(toks) and toks[k].text != "}":
+                        sel = toks[k]
+                        if sel.kind == "id" and sel.text == "_":
+                            self.wildcards.add(path[-1])
+                        elif sel.kind == "id" and toks[k - 1].text != ">":
+                            self.imported.append((path[-1], sel.text))
+                        k += 1
+                    k += 1
+                elif len(path) > 1 and path[-1] == "_":
+                    self.wildcards.add(path[-2])
+                elif len(path) > 1:
+                    self.imported.append((path[-2], path[-1]))
+                if k < len(toks) and toks[k].text == ",":
+                    k += 1
+                else:
+                    break
 
 
 def scala_files(root, dirs):
@@ -293,32 +370,78 @@ def scala_files(root, dirs):
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(os.path.dirname(__file__), "..")
     root = os.path.abspath(root)
-    lexed = {}
+    scans = {}
     for p in scala_files(root, REF_DIRS):
         with open(p, encoding="utf-8") as fh:
-            lexed[p] = lex(fh.read())
+            scans[p] = FileScan(lex(fh.read()))
 
-    refs = {}
-    for toks in lexed.values():
+    templates = {}  # name -> set of parent names
+    declared = {}  # owner -> names of its members
+    instance_members = set()  # names of class and trait members
+    for sc in scans.values():
+        for name, parents in sc.templates.items():
+            templates.setdefault(name, set()).update(parents)
+        for name, owner, _, _, in_object in sc.members:
+            declared.setdefault(owner, set()).add(name)
+            if not in_object:
+                instance_members.add(name)
+
+    def with_ancestors(owner):
+        seen, todo = set(), [owner]
+        while todo:
+            o = todo.pop()
+            if o not in seen:
+                seen.add(o)
+                todo.extend(templates.get(o, ()))
+        return seen
+
+    refs = set()  # (owner, name); owner None stands for any class or trait
+    mentioned = set()  # template names used outside their definition
+    for sc in scans.values():
+        toks = sc.toks
+        refs.update(sc.imported)
         for k, t in enumerate(toks):
-            if t.kind == "id" and not (k > 0 and toks[k - 1].text == "def"):
-                refs[t.text] = refs.get(t.text, 0) + 1
-
-    main_paths = set(scala_files(root, MAIN_DIRS))
-    unused = []
-    for p in sorted(main_paths):
-        for name, owner, line in public_defs(p, lexed[p]):
-            if name in ALLOWED_NAMES or f"{owner}.{name}" in ALLOWED_QUALIFIED:
+            if t.kind != "id":
                 continue
-            if refs.get(name, 0) == 0:
+            prev = toks[k - 1].text if k > 0 else ""
+            if prev in DEFINING_KWS or prev == "import":
+                continue
+            if t.text in templates:
+                mentioned.add(t.text)
+            qual = toks[k - 2] if k > 1 and prev == "." else None
+            if qual is not None and qual.kind == "id" and qual.text in templates:
+                refs.update((o, t.text) for o in with_ancestors(qual.text))
+                continue
+            if qual is None or qual.text in ("this", "super"):
+                for enclosing in sc.owners[k]:
+                    for o in with_ancestors(enclosing):
+                        if t.text in declared.get(o, ()):
+                            refs.add((o, t.text))
+                for w in sc.wildcards:
+                    if t.text in declared.get(w, ()):
+                        refs.add((w, t.text))
+            if t.text in instance_members:
+                refs.add((None, t.text))
+
+    def referenced(owner, name, in_object):
+        return ((owner, name) in refs
+                or (name in CALLED_BY_OWNER and owner in mentioned)
+                or (not in_object and (None, name) in refs))
+
+    unused = []
+    for p in sorted(scala_files(root, MAIN_DIRS)):
+        for name, owner, line, public, in_object in scans[p].members:
+            if not public or name in ALLOWED_NAMES or f"{owner}.{name}" in ALLOWED_QUALIFIED:
+                continue
+            if not referenced(owner, name, in_object):
                 unused.append(f"{os.path.relpath(p, root)}:{line}: {owner}.{name}")
 
     for u in unused:
         print(u)
     if unused:
-        print(f"{len(unused)} public def(s) with no reference in {' or '.join(REF_DIRS)}")
+        print(f"{len(unused)} public member(s) with no reference in {' or '.join(REF_DIRS)}")
         return 1
-    print("no unreferenced public defs")
+    print("no unreferenced public members")
     return 0
 
 
