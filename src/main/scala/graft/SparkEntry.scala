@@ -256,20 +256,15 @@ object SparkEntry {
     * through the non-parquet source (memoized like the ANN index builds —
     * Bench's warmup pays the write, probes measure the read).
     */
-  private val convertedNationDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
   private def convertedNation(s: SparkSession, dir: String, fmt: String): String =
-    convertedNationDirs.getOrElseUpdate((dir, fmt), {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_src_${fmt}_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir(s"src_$fmt", dir) { path =>
       val w = t(s, dir, "nation").coalesce(1).write.mode("overwrite")
       fmt match {
         case "csv"  => w.option("header", "true").csv(path)
         case "json" => w.json(path)
         case "orc"  => w.orc(path)
       }
-      path
-    })
+    }
 
   /** A bounded slice of the documents table rendered as a member-gzipped
     * WARC file (each doc an HTTP `response` record, the Common Crawl
@@ -277,12 +272,8 @@ object SparkEntry {
     * by construction (doc_id < 500) so the driver-side render stays small
     * at any sf.
     */
-  private val convertedWarcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def convertedWarc(s: SparkSession, dir: String): String =
-    convertedWarcDirs.getOrElseUpdate(dir, {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_src_warc_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("src_warc", dir) { path =>
       val docs = t(s, dir, "documents").select("doc_id", "text")
         .filter(col("doc_id") < 500).collect().sortBy(_.getLong(0))
       val records = docs.toSeq.map { r =>
@@ -292,12 +283,8 @@ object SparkEntry {
             r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8),
             "text/plain; charset=utf-8"))
       }
-      val bytes = sources.Warc.render(records, gzipMembers = true)
-      val p = java.nio.file.Paths.get(path)
-      java.nio.file.Files.createDirectories(p)
-      java.nio.file.Files.write(p.resolve("part-00000.warc.gz"), bytes)
-      path
-    })
+      sources.Warc.writeGzipped(path, records)
+    }
 
   /** The same bounded documents slice written through the DISTRIBUTED
     * WARC sink ([[sources.WarcSink]] — DSv2 batch write, one archive file
@@ -307,12 +294,8 @@ object SparkEntry {
     * Content-Length), so the whole write path is executor-side — no
     * driver render anywhere.
     */
-  private val sinkWarcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def sinkWarc(s: SparkSession, dir: String): String =
-    sinkWarcDirs.getOrElseUpdate(dir, {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sink_warc_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("sink_warc", dir) { path =>
       val head = concat(
         lit("HTTP/1.1 200 OK\r\nContent-Type: text/plain; charset=utf-8\r\nContent-Length: "),
         length(col("text").cast("binary")).cast("string"), lit("\r\n\r\n"))
@@ -321,8 +304,7 @@ object SparkEntry {
         concat(head.cast("binary"), col("text").cast("binary")).as("payload"),
         lit("2026-01-01T00:00:00Z").as("warc_date"))
       sources.WarcSink.write(slice.repartition(4), path)
-      path
-    })
+    }
 
   /** The CDX-oracle fixture: the same documents slice through the sink
     * UNCOMPRESSED, one partition, doc_id-ordered — the one layout whose
@@ -333,12 +315,8 @@ object SparkEntry {
     * archive without parsing it. Production writes stay gzip +
     * multi-partition; this fixture isolates the index math.
     */
-  private val cdxWarcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def cdxWarc(s: SparkSession, dir: String): String =
-    cdxWarcDirs.getOrElseUpdate(dir, {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sink_cdx_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("sink_cdx", dir) { path =>
       val slice = t(s, dir, "documents").filter(col("doc_id") < 300).select(
         concat(lit("urn:graft:doc:"), col("doc_id")).as("target_uri"),
         col("text").cast("binary").as("payload"),
@@ -348,8 +326,7 @@ object SparkEntry {
       sources.WarcSink.write(
         slice.repartition(1).sortWithinPartitions("doc_id").drop("doc_id"),
         path, gzipMembers = false)
-      path
-    })
+    }
 
   /** The DAMAGED-INDEX fixture: a byte-for-byte copy of [[cdxWarc]]
     * (archive + index) plus one extra `.cdxj` file holding every shape of
@@ -362,14 +339,11 @@ object SparkEntry {
     * line-level damage is expected-case and one bad line must cost one
     * row, never a scan.
     */
-  private val cdxDamagedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def cdxDamaged(s: SparkSession, dir: String): String =
-    cdxDamagedDirs.getOrElseUpdate(dir, {
+    Tables.fixtureDir("cdx_dmg", dir) { path =>
       import java.nio.file.{Files, Paths, StandardCopyOption}
       val src = Paths.get(cdxWarc(s, dir))
-      val out = Paths.get(
-        s"${System.getProperty("java.io.tmpdir")}/graft_cdx_dmg_${math.abs(dir.hashCode)}")
+      val out = Paths.get(path)
       // a stale dir from a prior process is CLEARED first: the sink's
       // archive file names differ per run, so copying over leftovers
       // would accumulate a second archive+index generation (and a
@@ -408,22 +382,16 @@ object SparkEntry {
         rotted)
       Files.write(out.resolve("zz_damaged.cdxj"),
         damage.mkString("", "\n", "\n").getBytes("UTF-8"))
-      out.toString
-    })
+    }
 
   /** Zipnum compaction of the [[cdxWarc]] index — globally SURT-sorted
     * range-partitioned parts + the `cluster.idx` secondary index the
     * pruned prefix lookup reads.
     */
-  private val cdxCompactDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def cdxCompact(s: SparkSession, dir: String): String =
-    cdxCompactDirs.getOrElseUpdate(dir, {
-      val out =
-        s"${System.getProperty("java.io.tmpdir")}/graft_cdx_zip_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("cdx_zip", dir) { out =>
       sources.WarcCdx.compact(s, cdxWarc(s, dir), out, nParts = 3)
-      out
-    })
+    }
 
   /** The INCREMENTAL-MERGE fixture: the [[cdxWarc]] corpus index (docs
     * 0-299) compacted into a 3-part zipnum layout, then a SECOND crawl
@@ -434,23 +402,20 @@ object SparkEntry {
     * Both archives stay uncompressed/single-part/doc_id-ordered so every
     * merged index row remains pure doc_id arithmetic for the oracle.
     */
-  private val cdxMergedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def cdxMerged(s: SparkSession, dir: String): String =
-    cdxMergedDirs.getOrElseUpdate(dir, {
-      val tmp = System.getProperty("java.io.tmpdir")
-      val seg2 = s"$tmp/graft_cdx_seg2_${math.abs(dir.hashCode)}"
-      val out = s"$tmp/graft_cdx_merged_${math.abs(dir.hashCode)}"
-      val slice = t(s, dir, "documents")
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400).select(
-          concat(lit("urn:graft:doc:"), col("doc_id")).as("target_uri"),
-          col("text").cast("binary").as("payload"),
-          lit("2026-02-01T00:00:00Z").as("warc_date"),
-          lit("text/plain").as("content_type"),
-          col("doc_id"))
-      sources.WarcSink.write(
-        slice.repartition(1).sortWithinPartitions("doc_id").drop("doc_id"),
-        seg2, gzipMembers = false)
+    Tables.fixtureDir("cdx_merged", dir) { out =>
+      val seg2 = Tables.fixtureDir("cdx_seg2", dir) { seg2 =>
+        val slice = t(s, dir, "documents")
+          .filter(col("doc_id") >= 300 && col("doc_id") < 400).select(
+            concat(lit("urn:graft:doc:"), col("doc_id")).as("target_uri"),
+            col("text").cast("binary").as("payload"),
+            lit("2026-02-01T00:00:00Z").as("warc_date"),
+            lit("text/plain").as("content_type"),
+            col("doc_id"))
+        sources.WarcSink.write(
+          slice.repartition(1).sortWithinPartitions("doc_id").drop("doc_id"),
+          seg2, gzipMembers = false)
+      }
       sources.WarcCdx.compact(s, cdxWarc(s, dir), out, nParts = 3)
       sources.WarcCdx.mergeCompact(s, seg2, out)
       // the GC barrier runs too, so the oracle gates the VACUUMED layout:
@@ -458,8 +423,7 @@ object SparkEntry {
       // retain = 2 keeps the PRE-MERGE generation pinnable —
       // q_sink_cdx_pinned gates that snapshot against its own oracle
       sources.WarcCdx.vacuum(s, out, retain = 2)
-      out
-    })
+    }
 
   /** The MULTI-CAPTURE fixture for the wayback-style closest lookup:
     * docs 0-99 archived THREE times each (2026-01-01 / 03-01 / 06-01),
@@ -467,14 +431,9 @@ object SparkEntry {
     * stay doc_id×capture arithmetic — then zipnum-compacted so
     * [[sources.WarcCdx.lookupClosest]] prunes through `cluster.idx`.
     */
-  private val cdxMultiTsDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   /** Returns (archive dir, compacted index dir). */
-  private def cdxMultiTs(s: SparkSession, dir: String): (String, String) =
-    cdxMultiTsDirs.getOrElseUpdate(dir, {
-      val tmp = System.getProperty("java.io.tmpdir")
-      val arch = s"$tmp/graft_cdx_mts_${math.abs(dir.hashCode)}"
-      val out = s"$tmp/graft_cdx_mtsz_${math.abs(dir.hashCode)}"
+  private def cdxMultiTs(s: SparkSession, dir: String): (String, String) = {
+    val arch = Tables.fixtureDir("cdx_mts", dir) { arch =>
       val slice = t(s, dir, "documents").filter(col("doc_id") < 100)
         .select(col("doc_id"), col("text"),
           explode(array(lit("2026-01-01T00:00:00Z"), lit("2026-03-01T00:00:00Z"),
@@ -488,21 +447,17 @@ object SparkEntry {
       sources.WarcSink.write(
         slice.repartition(1).sortWithinPartitions("doc_id", "warc_date").drop("doc_id"),
         arch, gzipMembers = false)
-      sources.WarcCdx.compact(s, arch, out, nParts = 3)
-      (arch, out)
-    })
+    }
+    (arch, Tables.fixtureDir("cdx_mtsz", dir)(sources.WarcCdx.compact(s, arch, _, nParts = 3)))
+  }
 
   /** The revisit-dedup fixture: 200 docs where ids 100-199 carry the SAME
     * payload as id-100 — written through the sink with `dedupPayloads`,
     * so half the archive stores as revisit records. One partition:
     * co-located copies are the within-task dedup contract.
     */
-  private val revisitWarcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def revisitWarc(s: SparkSession, dir: String): String =
-    revisitWarcDirs.getOrElseUpdate(dir, {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sink_rv_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("sink_rv", dir) { path =>
       val docs = t(s, dir, "documents")
       val base = docs.filter(col("doc_id") < 200)
         .select(col("doc_id"), (col("doc_id") % 100).as("__src"))
@@ -516,8 +471,7 @@ object SparkEntry {
       sources.WarcSink.write(
         slice.repartition(1).sortWithinPartitions("doc_id").drop("doc_id"),
         path, dedupPayloads = true)
-      path
-    })
+    }
 
   /** The CROSS-ARCHIVE dedup fixture: two crawl segments under one
     * parent — segment 1 stores docs 0-99; segment 2 fetches docs 100-199
@@ -526,12 +480,8 @@ object SparkEntry {
     * repeats store as revisits whose referents live in the OTHER
     * archive. One partition each; the mark join touches only the index.
     */
-  private val revisitXDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def revisitXWarc(s: SparkSession, dir: String): String =
-    revisitXDirs.getOrElseUpdate(dir, {
-      val parent =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sink_rvx_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("sink_rvx", dir) { parent =>
       val docs = t(s, dir, "documents")
       def slice(lo: Int, hi: Int, srcOffset: Int) = {
         val base = docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
@@ -551,8 +501,7 @@ object SparkEntry {
         slice(100, 200, 100).repartition(1).sortWithinPartitions("doc_id"),
         sources.WarcCdx.read(s, s"$parent/c1"))
       sources.WarcSink.write(marked.drop("doc_id"), s"$parent/c2")
-      parent
-    })
+    }
 
   /** The DERIVATIVES fixture: documents doc_id < 400 as full HTML pages —
     * the q_html_extract chrome (script with a bare `<` and a decoy `<a`,
@@ -562,12 +511,8 @@ object SparkEntry {
     * from it, so the three together are the Common Crawl triplet
     * (WARC + WET + WAT) built end to end by graft's own jobs.
     */
-  private val htmlWarcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def htmlWarc(s: SparkSession, dir: String): String =
-    htmlWarcDirs.getOrElseUpdate(dir, {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sink_html_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("sink_html", dir) { path =>
       val esc = regexp_replace(regexp_replace(regexp_replace(
         col("text"), lit("&"), lit("&amp;")), lit("<"), lit("&lt;")), lit(">"), lit("&gt;"))
       val page = concat(
@@ -585,37 +530,26 @@ object SparkEntry {
         concat(head.cast("binary"), page.cast("binary")).as("payload"),
         lit("2026-01-01T00:00:00Z").as("warc_date"))
       sources.WarcSink.write(slice.repartition(4), path)
-      path
-    })
+    }
 
   /** WARC → WET over [[htmlWarc]]: `Warc.toWet` (main-text extraction —
     * the chrome and link-density boilerplate drop out) through the sink.
     */
-  private val wetWarcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def wetWarc(s: SparkSession, dir: String): String =
-    wetWarcDirs.getOrElseUpdate(dir, {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sink_wet_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("sink_wet", dir) { path =>
       sources.WarcSink.write(
         sources.Warc.toWet(
           sources.Warc.read(s, htmlWarc(s, dir)), mainTextOnly = true), path)
-      path
-    })
+    }
 
   /** WARC → WAT over [[htmlWarc]]: `Warc.toWat` (JSON metadata envelopes
     * with document-order outlinks) through the sink.
     */
-  private val watWarcDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def watWarc(s: SparkSession, dir: String): String =
-    watWarcDirs.getOrElseUpdate(dir, {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sink_wat_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("sink_wat", dir) { path =>
       sources.WarcSink.write(
         sources.Warc.toWat(sources.Warc.read(s, htmlWarc(s, dir))), path)
-      path
-    })
+    }
 
   /** Fixture ETL for the source/sink round-trip queries (format
     * conversions + the distributed WARC sink write) — memoized per sf

@@ -87,6 +87,21 @@ object Tables {
       (cName, oName)
     })
 
+  private val fixtureDirs = scala.collection.concurrent.TrieMap.empty[(String, String), String]
+
+  /** The query fixtures' one build-once rule: the directory
+    * `${java.io.tmpdir}/graft_<tag>_<abs(sfDir.hashCode)>`, filled by
+    * `build(path)` the first time this JVM asks for (tag, sfDir). Bench's
+    * warmup pays the build; later calls return the path at once.
+    */
+  private[graft] def fixtureDir(tag: String, sfDir: String)(build: String => Unit): String =
+    fixtureDirs.getOrElseUpdate((tag, sfDir), {
+      val path =
+        s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${math.abs(sfDir.hashCode)}"
+      build(path)
+      path
+    })
+
   /** Drop a managed table AND its warehouse directory: a previous JVM may
     * have left the managed location behind while this session's (in-memory)
     * catalog has no such table — `saveAsTable` would then fail on the

@@ -472,10 +472,10 @@ case class RollingHash(child: Expression)
   * Gram equality is 64-bit-hash equality, not string equality: a WITHIN-DOC
   * collision (the only kind that can shift a count) needs two distinct
   * grams of one document to collide, ≈ g²/2⁶⁵ per doc — ~10⁻¹⁵ for a
-  * 10k-gram doc, vanishing even corpus-wide. The relational
-  * [[graft.pipeline.Repetition.ngramRepetition]] twin compares exact
-  * strings, and the cross-implementation equality spec would surface any
-  * realized collision.
+  * 10k-gram doc, vanishing even corpus-wide. `CurationSpec`'s relational
+  * reference profile compares exact gram strings, and its equality check
+  * against [[graft.pipeline.Repetition.ngramRepetition]] would surface
+  * any realized collision.
   */
 case class RepetitionProfile(child: Expression, n: Int)
     extends UnaryExpression {

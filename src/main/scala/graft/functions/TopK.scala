@@ -4,14 +4,12 @@ import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Bounded top-k aggregate over (score, id) pairs — the aggregation-side
-  * answer to "k best per group" that a rank window cannot give you: an
-  * `Aggregator` participates in PARTIAL aggregation, so each map task
-  * reduces its slice of a group to at most k pairs before the shuffle,
-  * and the exchange carries O(partitions × k) rows per group instead of
-  * every scored row. A window, by contrast, must shuffle the entire group
-  * to one task and sort it. Same result set (ties broken by smaller id,
-  * spec-asserted equal to the window plan) — different scaling law.
+/** Bounded top-k aggregate over (score, id) pairs — "k best per group" as
+  * an `Aggregator`, which participates in PARTIAL aggregation: each map
+  * task reduces its slice of a group to at most k pairs before the
+  * shuffle, so the exchange carries O(partitions × k) rows per group
+  * instead of every scored row, and no task sorts a whole group. Ties
+  * break toward the smaller id.
   *
   * The buffer is kept sorted best-first and capped at k, so `reduce` is an
   * O(k) insert (with an O(1) reject of sub-threshold rows — the common
@@ -24,8 +22,8 @@ class TopKByScore(k: Int)
   require(k > 0, s"k must be positive, got $k")
 
   // total over NaN (java.lang.Double ordering ranks NaN greatest, matching
-  // Spark SQL's sort order for double, so the aggregate agrees with the
-  // row_number window variant even on NaN cosines from zero vectors)
+  // Spark SQL's sort order for double, so the result agrees with an
+  // `ORDER BY score DESC, id` ranking even on NaN cosines from zero vectors)
   private def better(a: (Double, Long), b: (Double, Long)): Boolean = {
     val c = java.lang.Double.compare(a._1, b._1)
     c > 0 || (c == 0 && a._2 < b._2)

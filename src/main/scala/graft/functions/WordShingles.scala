@@ -322,127 +322,6 @@ private[functions] object FuzzyGrams {
   }
 }
 
-/** Occurrence-tagged character q-grams as `(xxhash64(gram), occ)` rows —
-  * the prefix-filter signatures of [[graft.operators.FuzzyJoin]]. `occ` is
-  * the gram's 1-based occurrence index among EQUAL grams so far (string
-  * equality, matching the declarative
-  * `size(filter(slice(grams, 1, i - 1), x -> x = g)) + 1` tag, which the
-  * HOF form computed in O(G²) interpreted element-lambdas — this is one
-  * O(G) hash-map pass). With `sorted = true` the tags are ordered by
-  * `(hash asc, occ asc)` and cut to the first `prefixLen` — the
-  * `array_sort + slice` prefix pick fused in (ties beyond (h, o) equality
-  * don't exist: equal (h, o) pairs are identical signatures, so any sort
-  * order yields the same emitted multiset). `sorted = false` emits every
-  * tag in gram order (the df-order path picks its prefix after the stats
-  * join).
-  */
-case class TaggedGramPrefix(child: Expression, n: Int, prefixLen: Int, sorted: Boolean)
-    extends UnaryExpression with Generator with CodegenFallback {
-  require(n >= 1, "gram size must be >= 1")
-  require(prefixLen >= 1, "prefixLen must be >= 1")
-
-  override def elementSchema: StructType =
-    StructType(StructField("__h", org.apache.spark.sql.types.LongType, nullable = false) ::
-      StructField("__o", org.apache.spark.sql.types.IntegerType, nullable = false) :: Nil)
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val s = child.eval(input).asInstanceOf[UTF8String]
-    if (s == null) Nil
-    else {
-      val bytes = s.getBytes
-      val starts = FuzzyGrams.codePointStarts(bytes)
-      val nChars = starts.length - 1
-      if (nChars < n) Nil
-      else {
-        val nGrams = nChars - n + 1
-        val hs = new Array[Long](nGrams)
-        val os = new Array[Int](nGrams)
-        val occ = new java.util.HashMap[UTF8String, Integer]()
-        var i = 0
-        while (i < nGrams) {
-          val from = starts(i)
-          val len = starts(i + n) - from
-          val g = UTF8String.fromBytes(bytes, from, len)
-          val prev = occ.get(g)
-          val o = if (prev == null) 1 else prev + 1
-          occ.put(g, o)
-          hs(i) = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-            bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from, len, 42L)
-          os(i) = o
-          i += 1
-        }
-        if (!sorted) {
-          (0 until nGrams).map(j => InternalRow(hs(j), os(j)))
-        } else {
-          // bounded primitive selection (r22, ADVICE r21): the previous
-          // comparator sort boxed an Integer per gram and TimSorted all G
-          // even though only min(prefixLen, G) survive — on the corpus-wide
-          // fuzzy-join fan-out path. A size-p max-heap over parallel
-          // primitive arrays selects the p smallest (h, o) pairs in
-          // O(G log p) with zero allocation beyond the output, then
-          // heapsorts them ascending in place. Equal (h, o) pairs are
-          // identical signatures, so any tie handling emits the same
-          // multiset (the documented exactness argument, unchanged).
-          val take = math.min(prefixLen, nGrams)
-          val hh = new Array[Long](take)
-          val oo = new Array[Int](take)
-          @inline def less(h1: Long, o1: Int, h2: Long, o2: Int): Boolean =
-            h1 < h2 || (h1 == h2 && o1 < o2)
-          def siftDown(start: Int, size: Int): Unit = {
-            var j = start
-            var done = false
-            while (!done) {
-              val l = 2 * j + 1
-              val r = l + 1
-              var m = j
-              if (l < size && less(hh(m), oo(m), hh(l), oo(l))) m = l
-              if (r < size && less(hh(m), oo(m), hh(r), oo(r))) m = r
-              if (m == j) done = true
-              else {
-                val th = hh(j); val to = oo(j)
-                hh(j) = hh(m); oo(j) = oo(m); hh(m) = th; oo(m) = to
-                j = m
-              }
-            }
-          }
-          var size = 0
-          var i = 0
-          while (i < nGrams) {
-            val h = hs(i); val o = os(i)
-            if (size < take) {
-              var j = size
-              hh(j) = h; oo(j) = o
-              size += 1
-              while (j > 0 && less(hh((j - 1) / 2), oo((j - 1) / 2), hh(j), oo(j))) {
-                val p = (j - 1) / 2
-                val th = hh(p); val to = oo(p)
-                hh(p) = hh(j); oo(p) = oo(j); hh(j) = th; oo(j) = to
-                j = p
-              }
-            } else if (less(h, o, hh(0), oo(0))) {
-              hh(0) = h; oo(0) = o
-              siftDown(0, take)
-            }
-            i += 1
-          }
-          var e = take - 1
-          while (e > 0) {
-            val th = hh(0); val to = oo(0)
-            hh(0) = hh(e); oo(0) = oo(e); hh(e) = th; oo(e) = to
-            siftDown(0, e)
-            e -= 1
-          }
-          (0 until take).map(j => InternalRow(hh(j), oo(j)))
-        }
-      }
-    }
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 object FuzzyGramFunctions {
   def charGramCounts(s: Column, n: Int): Column = colOf(CharGramCounts(exprOf(s), n))
-  def taggedGramPrefix(s: Column, n: Int, prefixLen: Int, sorted: Boolean): Column =
-    colOf(TaggedGramPrefix(exprOf(s), n, prefixLen, sorted))
 }

@@ -26,9 +26,7 @@ import org.apache.spark.sql.functions._
   * Exactness: gram-path ∪ short-path is a provable superset of all
   * distance-≤k pairs (spec-checked against brute force), and the final
   * levenshtein makes the result exact. At 100 TB the join is dimension-
-  * shaped (name domains, hosts, titles — not the corpus body); for a
-  * web-scale fuzzy SELF-join add prefix filtering on rare grams, the
-  * standard next pruning level.
+  * shaped (name domains, hosts, titles — not the corpus body).
   */
 object FuzzyJoin {
 
@@ -89,160 +87,6 @@ object FuzzyJoin {
     val rs = r.filter(col("__rl") < shortLen)
     val shortVerified = verified(lit(true))(
       ls.join(broadcast(rs), abs(col("__ll") - col("__rl")) <= maxDistance))
-
-    gramVerified.unionByName(shortVerified)
-  }
-
-  /** [[fuzzyPairs]] with PREFIX FILTERING — the web-scale pruning level the
-    * count filter alone lacks. Same exact result; far fewer candidate pairs
-    * on large sides, because a pair must now share one of only `n·k + 1`
-    * designated grams per string instead of ANY gram:
-    *
-    * under any global total order on tagged grams (a gram tagged with its
-    * occurrence index, so the multiset lemma survives set form), if
-    * `ed(s, t) ≤ k` then the tagged-gram sets overlap by at least
-    * `α = max(|s|,|t|) − n + 1 − n·k`, and two sets overlapping by `α ≥ 1`
-    * must collide within their first `|G| − α + 1 ≤ n·k + 1` elements of
-    * the shared order. So each side keeps only the first `n·k + 1` tagged
-    * grams, and the candidate join runs on the 16-byte `(hash, occ)` key,
-    * signature-not-text over the shuffle. Hash collisions only ADD
-    * candidates; the exact early-exit levenshtein still decides every pair.
-    *
-    * TWO orders, both exact (the lemma holds for ANY shared total order):
-    *
-    *   - `dfOrder = false` (default): `(xxhash64(gram), occ)` — stats-free,
-    *     computed map-side, zero extra passes. Hash-uniform, so the prefix
-    *     keeps a RANDOM n·k+1 of each string's grams.
-    *   - `dfOrder = true`: `(df(gram), xxhash64(gram), occ)` ascending —
-    *     the prefix keeps each string's RAREST grams, so common grams
-    *     ("th", "er") stop generating candidates and the join fan-out on
-    *     Zipf-shaped text drops sharply. Costs one corpus stats pass (gram
-    *     document frequencies over BOTH sides, keyed by the 8-byte hash)
-    *     and a per-string row_number window; the df table is
-    *     vocabulary-sized (≤ alphabet^n) and broadcasts by default — pass
-    *     `broadcastDfTable = false` to sort-merge it instead. df is a pure
-    *     function of the hash, so the order stays a shared total order and
-    *     equal-key elements are identical signatures — exactness is
-    *     unconditional either way.
-    *
-    * The tagging pass is one O(G) native-generator scan per row in the
-    * gram count G (r21 — the previous declarative form re-filtered the
-    * gram prefix per element, O(G²) through interpreted lambdas), entirely
-    * map-side. The short×short corner is the same length-band join as
-    * [[fuzzyPairs]].
-    */
-  def fuzzyPairsPrefix(
-      left: DataFrame,
-      right: DataFrame,
-      leftId: String,
-      leftStr: String,
-      rightId: String,
-      rightStr: String,
-      maxDistance: Int,
-      n: Int = 2,
-      dfOrder: Boolean = false,
-      broadcastDfTable: Boolean = true): DataFrame = {
-    require(maxDistance >= 0, s"maxDistance must be >= 0, got $maxDistance")
-    require(n >= 1, s"n must be >= 1, got $n")
-    val shortLen = n * (maxDistance + 1)
-    val prefixLen = n * maxDistance + 1
-    val l = left.select(col(leftId).as("__lid"), col(leftStr).as("__ls"),
-      length(col(leftStr)).as("__ll"))
-    val r = right.select(col(rightId).as("__rid"), col(rightStr).as("__rs"),
-      length(col(rightStr)).as("__rl"))
-
-    // the first prefixLen tagged grams of each string in (hash, occ) order —
-    // one O(G) native pass (r21): the declarative tagging filtered the
-    // gram-prefix per element (O(G²)) through interpreted lambdas, then
-    // array_sort'ed per row; the generator hash-map-counts occurrences and
-    // fuses the sort+slice (equal (h, o) keys are identical signatures, so
-    // tie order cannot change the emitted multiset)
-    def prefixGrams(df: DataFrame, id: String, s: String, len: String): DataFrame =
-      df.filter(col(len) >= n)
-        .select(col(id), col(s), col(len),
-          graft.functions.FuzzyGramFunctions
-            .taggedGramPrefix(col(s), n, prefixLen, sorted = true)
-            .as(Seq("__h", "__o")))
-
-    // every tagged gram, unsliced — the df-order path picks its prefix
-    // AFTER the stats join
-    def allGrams(df: DataFrame, id: String, s: String, len: String): DataFrame =
-      df.filter(col(len) >= n)
-        .select(col(id), col(s), col(len),
-          graft.functions.FuzzyGramFunctions
-            .taggedGramPrefix(col(s), n, prefixLen, sorted = false)
-            .as(Seq("__h", "__o")))
-
-    val (lp, rp) = if (!dfOrder) {
-      (prefixGrams(l, "__lid", "__ls", "__ll"),
-        prefixGrams(r, "__rid", "__rs", "__rl"))
-    } else {
-      // ONE side-tagged gram stream feeds the df aggregation AND the prefix
-      // pick (r22, guide §2.4 — measured job-floor, not CPU: the r21 shape
-      // ran 16 driver jobs for 209 ms of task time because each SIDE paid
-      // its own cache materialization and its own row_number window
-      // exchange). Unioning the sides behind one cache and windowing on
-      // (side, id) halves the cache materializations, df-table reads and
-      // window exchanges; per-(side, id) pick order (__df, __h, __o asc) is
-      // unchanged, so the emitted prefix multisets are identical. (r21 note
-      // still holds: an explicit static-width repartition below the tagging
-      // was measured and REVERTED — the tagging follows the input's scan
-      // parallelism, the honest width at corpus scale.)
-      val lidT = l.schema("__lid").dataType
-      val ridT = r.schema("__rid").dataType
-      val grams = graft.pipeline.Dedup.cache(
-        allGrams(l, "__lid", "__ls", "__ll")
-          .select(lit(true).as("__left"),
-            col("__lid").as("__id_l"), lit(null).cast(ridT).as("__id_r"),
-            col("__ls").as("__s"), col("__ll").as("__len"),
-            col("__h"), col("__o"))
-          .unionByName(allGrams(r, "__rid", "__rs", "__rl")
-            .select(lit(false).as("__left"),
-              lit(null).cast(lidT).as("__id_l"), col("__rid").as("__id_r"),
-              col("__rs").as("__s"), col("__rl").as("__len"),
-              col("__h"), col("__o"))))
-      val dfTab = grams.groupBy(col("__h")).agg(count(lit(1)).as("__df"))
-      val dfSide = if (broadcastDfTable) broadcast(dfTab) else dfTab.hint("merge")
-      // one window over (side, id): the off-side id column is null within
-      // each partition, so the partitioning key is exactly (side, own id)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__left"), col("__id_l"), col("__id_r"))
-        .orderBy(col("__df").asc, col("__h").asc, col("__o").asc)
-      // cached: both join sides below read the picked prefixes — uncached,
-      // each side would replay the df join + window chain
-      val picked = graft.pipeline.Dedup.cache(
-        grams.join(dfSide, Seq("__h"))
-          .withColumn("__rk", row_number().over(w))
-          .filter(col("__rk") <= prefixLen)
-          .drop("__rk", "__df"))
-      (picked.filter(col("__left"))
-        .select(col("__id_l").as("__lid"), col("__s").as("__ls"),
-          col("__len").as("__ll"), col("__h"), col("__o")),
-        picked.filter(!col("__left"))
-          .select(col("__id_r").as("__rid"), col("__s").as("__rs"),
-            col("__len").as("__rl"), col("__h"), col("__o")))
-    }
-    val candidates = lp.join(rp,
-        lp("__h") === rp("__h") && lp("__o") === rp("__o"))
-      // a pair sharing several prefix elements must pay ONE levenshtein
-      .groupBy(col("__lid"), col("__ls"), col("__ll"),
-        col("__rid"), col("__rs"), col("__rl"))
-      .agg(count(lit(1)).as("__hits"))
-      .filter(greatest(col("__ll"), col("__rl")) >= shortLen)
-      .filter(abs(col("__ll") - col("__rl")) <= maxDistance)
-    val dist = levenshtein(col("__ls"), col("__rs"), maxDistance)
-    val gramVerified = candidates
-      .select(col("__lid").as("left_id"), col("__rid").as("right_id"),
-        dist.as("distance"))
-      .filter(col("distance") =!= -1)
-
-    val ls = l.filter(col("__ll") < shortLen)
-    val rs = r.filter(col("__rl") < shortLen)
-    val shortVerified =
-      ls.join(broadcast(rs), abs(col("__ll") - col("__rl")) <= maxDistance)
-        .select(col("__lid").as("left_id"), col("__rid").as("right_id"),
-          dist.as("distance"))
-        .filter(col("distance") =!= -1)
 
     gramVerified.unionByName(shortVerified)
   }

@@ -78,12 +78,12 @@ object SkewJoin {
     * retried tasks re-derive the same routing even under fetch-failure
     * partial recomputes.
     */
-  def saltedInnerJoin(
+  private def saltedInnerJoin(
       probe: DataFrame,
       build: DataFrame,
       key: String,
       hot: Seq[Any],
-      buckets: Int = 16): DataFrame = {
+      buckets: Int): DataFrame = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     if (hot.isEmpty) return probe.join(build, Seq(key))
     val isHot = col(key).isin(hot: _*)

@@ -175,8 +175,7 @@ object Dedup {
     */
   private[graft] def layoutPartitionsForBytes(
       sess: org.apache.spark.sql.SparkSession, bytes: BigInt): Int = {
-    val maxParts =
-      math.max(1, sess.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+    val maxParts = staticPartitions(sess)
     val advisory =
       sess.conf.get("spark.graft.layout.advisoryBytes", (64L << 20).toString).toLong
     if (advisory <= 0) maxParts
@@ -222,11 +221,12 @@ object Dedup {
     * At full width (`n == static`, the 100 TB regime) this is a no-op and
     * the r16 adaptive round planning is unchanged.
     */
-  private[graft] def pinToLayout(df: DataFrame, nParts: Int, key: String): DataFrame = {
-    val staticParts = math.max(
-      1, df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-    if (nParts < staticParts) df.repartition(nParts, col(key)) else df
-  }
+  private[graft] def pinToLayout(df: DataFrame, nParts: Int, key: String): DataFrame =
+    if (nParts < staticPartitions(df.sparkSession)) df.repartition(nParts, col(key)) else df
+
+  /** The static shuffle width, `spark.sql.shuffle.partitions` (at least 1). */
+  private def staticPartitions(sess: org.apache.spark.sql.SparkSession): Int =
+    math.max(1, sess.conf.get("spark.sql.shuffle.partitions", "200").toInt)
 
   /** Deduplicate `df` and lay it out hash-partitioned (and optionally
     * sorted) on `key` at `nParts` — the shared edge-layout shape of the
@@ -245,10 +245,8 @@ object Dedup {
     */
   private[graft] def distinctLayout(
       df: DataFrame, nParts: Int, key: String, sort: Boolean = true): DataFrame = {
-    val staticParts = math.max(
-      1, df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
     val laid =
-      if (nParts < staticParts) df.repartition(nParts, col(key)).distinct()
+      if (nParts < staticPartitions(df.sparkSession)) df.repartition(nParts, col(key)).distinct()
       else {
         val d = df.distinct()
         // a single-column frame's distinct already hash-partitions on the

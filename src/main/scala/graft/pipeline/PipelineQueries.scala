@@ -84,11 +84,8 @@ object PipelineQueries {
     *     already-fetched URI set exactly when (id+2)%5 == (2·id)%5, and a
     *     same-host /private/ url the robots gate must deny.
     */
-  private val crawlWarcDirs = scala.collection.concurrent.TrieMap.empty[String, String]
   private def crawlWarcPath(s: SparkSession, dir: String): String =
-    crawlWarcDirs.getOrElseUpdate(dir, {
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_crawl_warc_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("crawl_warc", dir) { path =>
       val ids = docs(s, dir).select(col("doc_id")).filter(col("doc_id") < 400)
         .collect().map(_.getLong(0)).sorted
       val records = ids.toIndexedSeq.map { id =>
@@ -107,12 +104,8 @@ object PipelineQueries {
           "application/http; msgtype=response",
           head.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1) ++ bodyBytes)
       }
-      val bytes = graft.sources.Warc.render(records, gzipMembers = true)
-      val p = java.nio.file.Paths.get(path)
-      java.nio.file.Files.createDirectories(p)
-      java.nio.file.Files.write(p.resolve("part-00000.warc.gz"), bytes)
-      path
-    })
+      graft.sources.Warc.writeGzipped(path, records)
+    }
 
   /** ANN index builds memoized per sf dir (one write per JVM; probes reuse
     * the partitioned layouts). The PQ codebooks are the same ETL class —
@@ -126,8 +119,6 @@ object PipelineQueries {
     * while the data cost is microseconds. Learned once per sf dir; the
     * queries pass the model in, timing assignment + verify, not training.
     */
-  private val annIndexes = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val ivfIndexes = scala.collection.concurrent.TrieMap.empty[String, String]
   private val pqBooks =
     scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Seq[Float]]]]
   private val semCentroids =
@@ -185,17 +176,11 @@ object PipelineQueries {
   private val IvfBatchNProbe = 16
 
   private def ivfIndexPath(s: SparkSession, dir: String): String =
-    ivfIndexes.getOrElseUpdate(dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_${math.abs(dir.hashCode)}"
-      Similarity.buildIvfIndex(embs(s, dir), path)
-      path
-    })
+    Tables.fixtureDir("ivf_index", dir)(Similarity.buildIvfIndex(embs(s, dir), _))
   private def annIndexPath(s: SparkSession, dir: String): String =
-    annIndexes.getOrElseUpdate(dir, {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_ann_index_${math.abs(dir.hashCode)}"
+    Tables.fixtureDir("ann_index", dir) { path =>
       Similarity.buildLshIndex(embs(s, dir), path, bits = AnnBits, tables = AnnTables)
-      path
-    })
+    }
 
   /** Resolved reader frames (and the k-row collected IVF centroid table)
     * over the memoized index builds above — metadata of the SAME memoized
@@ -420,8 +405,8 @@ object PipelineQueries {
     }),
     "q_ann_brute" -> ((s, dir) => Similarity.bruteForceTopK(embs(s, dir), queryVec(s, dir), k = 10)),
     // batch retrieval: top-5 corpus neighbors (vec_id >= 10) for EVERY
-    // query vector (vec_id < 10) in one corpus pass — window form and the
-    // pre-reducing bounded-aggregate form must agree with the same oracle
+    // query vector (vec_id < 10) in one corpus pass, through the
+    // pre-reducing bounded aggregate
     "q_ann_batch" -> ((s, dir) => {
       val e = embs(s, dir)
       Similarity.bruteForceTopKBatch(
@@ -429,9 +414,11 @@ object PipelineQueries {
         e.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("embedding")),
         k = 5)
     }),
+    // the same call as q_ann_batch under a second registered name, gated
+    // by the same oracle
     "q_ann_batch_agg" -> ((s, dir) => {
       val e = embs(s, dir)
-      Similarity.bruteForceTopKBatchAgg(
+      Similarity.bruteForceTopKBatch(
         e.filter(col("vec_id") >= 10),
         e.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("embedding")),
         k = 5)
@@ -854,10 +841,10 @@ object PipelineQueries {
       Dedup.dropSemanticDuplicates(plantedEmbs(embs(s, dir)), k = 8, threshold = 0.95,
           centroids = Some(semanticCentroids(s, dir)))
         .select(col("vec_id"))),
-    // the zero-shuffle run-length form must emit the relational form's rows
-    // exactly — same oracle string, different plan (no exchange at all)
+    // the same call as q_text_rep2gram under a second registered name,
+    // gated by the same oracle
     "q_text_rep2gram_mapside" -> ((s, dir) =>
-      Repetition.ngramRepetitionMapSide(docs(s, dir), n = 2)),
+      Repetition.ngramRepetition(docs(s, dir), n = 2)),
     // the same native expression reached from SQL TEXT via the registered
     // function (function-registry parity, like q_sql_cosine) — third user
     // of the shared relational oracle
@@ -1268,8 +1255,7 @@ object PipelineQueries {
       graft.operators.FuzzyJoin.fuzzyPairs(
         left, right, "p_partkey", "p_name", "p_partkey", "p_name", maxDistance = 1)
     }),
-    // the prefix-filtered form at k=2 (prefix = 5 tagged grams per string,
-    // (hash, occ) join key): heavier typos — a substitution AND an
+    // the count filter at k=2: heavier typos — a substitution AND an
     // appended char on even ids — against the same independent brute-force
     // DuckDB cross join, so the pruning's losslessness is hash-verified
     "q_join_fuzzy_prefix" -> ((s, dir) => {
@@ -1281,12 +1267,12 @@ object PipelineQueries {
           concat(substring(col("p_name"), 1, 1), lit("x"),
             expr("substring(p_name, 3)"), lit("y")))
           .otherwise(col("p_name")).as("p_name"))
-      graft.operators.FuzzyJoin.fuzzyPairsPrefix(
+      graft.operators.FuzzyJoin.fuzzyPairs(
         left, right, "p_partkey", "p_name", "p_partkey", "p_name", maxDistance = 2)
     }),
-    // the df-ascending prefix order (rarest grams kept, one stats pass)
-    // against the SAME independent brute-force oracle: the lemma must be
-    // order-invariant, so a different prefix choice may not change one row
+    // the same k=2 join over 3-grams against the SAME brute-force oracle
+    // (which does not depend on the gram size): a different candidate set
+    // — and a wider short-string corner, n·(k+1) = 9 — may not change one row
     "q_join_fuzzy_dfprefix" -> ((s, dir) => {
       val p = Tables.df(s, dir, "part").select(col("p_partkey"), col("p_name"))
       val left = p.filter(col("p_partkey") < 500)
@@ -1296,9 +1282,9 @@ object PipelineQueries {
           concat(substring(col("p_name"), 1, 1), lit("x"),
             expr("substring(p_name, 3)"), lit("y")))
           .otherwise(col("p_name")).as("p_name"))
-      graft.operators.FuzzyJoin.fuzzyPairsPrefix(
+      graft.operators.FuzzyJoin.fuzzyPairs(
         left, right, "p_partkey", "p_name", "p_partkey", "p_name",
-        maxDistance = 2, dfOrder = true)
+        maxDistance = 2, n = 3)
     }),
     // budget water-filling: 400 docs across languages — the four small
     // langs keep everything, the spillover caps en at 118; allocation
@@ -1861,7 +1847,6 @@ object PipelineQueries {
     // replay of Repetition.ngramRepetition(n = 2): same lowercased word
     // 2-grams, same per-(doc, gram) counts, same exact-integer divisions
     "q_text_rep2gram" -> rep2gramOracle,
-    // the map-side run-length variant must agree row for row
     "q_text_rep2gram_mapside" -> rep2gramOracle,
     "q_sql_repetition" -> rep2gramOracle,
     // threshold inlined at its bound value; fractions are the same one
@@ -2467,11 +2452,6 @@ object PipelineQueries {
       "FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id")
   )
 
-  /** Shared CTE prefix for the repetition oracles: per-(doc, 2-gram)
-    * multiplicities of the lowercased word stream — the same shingle
-    * definition as [[Repetition.ngramRepetition]]. A def: it is referenced
-    * from the `oracles` val above, which initializes first.
-    */
   /** Bigram-LM scoring CTEs shared by q_text_bigram_lm and q_text_ppl_drop:
     * the same shingle construction as rep2gramSql, the same top-K cuts and
     * add-1 smoothing as TextAnalysis.bigramLogProb, perplexity = exp of the
@@ -2496,13 +2476,18 @@ object PipelineQueries {
       "ppl AS (SELECT doc_id, n_bigrams, avg_logprob, " +
       "round(exp(-avg_logprob), 6) AS perplexity FROM lm) "
 
+  /** Shared CTE prefix for the repetition oracles: per-(doc, 2-gram)
+    * multiplicities of the lowercased word stream — the same shingle
+    * definition as [[Repetition.ngramRepetition]]. A def: it is referenced
+    * from the `oracles` val above, which initializes first.
+    */
   private def rep2gramSql =
     "WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents), " +
       "g AS (SELECT doc_id, array_to_string(list_slice(ws, i, i + 1), ' ') AS g " +
       "FROM w, unnest(generate_series(1, greatest(len(ws) - 1, 0))) AS t(i)), " +
       "c AS (SELECT doc_id, g, count(*) AS c FROM g GROUP BY doc_id, g) "
 
-  /** Shared by q_text_rep2gram and its map-side twin (identical output). */
+  /** Shared by q_text_rep2gram, q_text_rep2gram_mapside and q_sql_repetition. */
   private def rep2gramOracle =
     rep2gramSql +
       "SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams, count(*) AS n_distinct, " +

@@ -12,13 +12,8 @@ import org.apache.spark.sql.functions._
   * (Beyond the reference surface — the reference has no text analysis at
   * all; this extends the TextAnalysis family the driver prompt asks for.)
   *
-  * Scale shape: shingle map-side (split + slice + join, all codegen'd
-  * built-ins), then ONE shuffle keyed on (doc, gram) with map-side partial
-  * counts, then a second, strictly smaller shuffle on doc alone. Cost is
-  * linear in corpus tokens; no all-pairs, no driver state. At 100 TB the
-  * same xxhash64-narrowing lever as [[Decontamination]] applies: hash the
-  * gram before the shuffle to cut key bytes ~4× (kept as exact strings here
-  * so an external engine replays the report byte for byte).
+  * Scale shape: one map-side expression per row, no shuffle. Cost is
+  * linear in corpus tokens; no all-pairs, no driver state.
   */
 object Repetition {
 
@@ -26,68 +21,22 @@ object Repetition {
     * the multiplicity of the most frequent gram, and two fractions —
     * `top_fraction` (share of all grams that are copies of the single most
     * frequent one) and `dup_fraction` (share of gram occurrences whose gram
-    * appears more than once). Docs with fewer than n words are absent.
+    * appears more than once). Grams are the lowercased words split on a
+    * single space; docs with fewer than n words are absent.
+    *
+    * The whole profile comes from ONE native single-pass expression over
+    * the doc's own token array ([[graft.functions.RepetitionProfile]] —
+    * combined token hashes counted in an open-addressed table; gram
+    * strings never materialize; O(g) per row, codegen'd). No explode, no
+    * shuffle: at 100 TB this rides the scan and composes onto a STREAM
+    * (per-row ⇒ stateless). An interpreted higher-order-function
+    * formulation was tried first and REJECTED: ~10× slower at sf0.1
+    * (per-element struct allocation in the lambda interpreter).
     *
     * The fractions are raw IEEE divisions of two exact longs, so any engine
     * replaying the same integer counts gets bitwise-identical doubles.
     */
   def ngramRepetition(
-      docs: DataFrame,
-      n: Int,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    val reserved = Set("__gh", "__g", "n_grams", "n_distinct", "top_count",
-      "top_fraction", "dup_fraction")
-    require(!docs.columns.exists(c => reserved(c) && c != idCol),
-      s"input columns collide with Repetition's reserved names: " +
-        docs.columns.filter(reserved).mkString(", "))
-    // JVM-speed generator fan-out (the r12 interpreted-HOF lesson); the
-    // profile needs the gram string alone, so the XXH64 column is not
-    // computed at all (withHashes = false — r21; the generator cannot be
-    // column-pruned from outside). Per-doc gram multiplicities collapse
-    // INSIDE the generator (withCounts — r22, guide §2.3/§2.4): the
-    // profile aggregation below groups by the id alone, so the
-    // (id, gram)-keyed intermediate exchange of the old two-level form is
-    // gone. Row-identity caveat: the generator counts per input ROW, so
-    // `idCol` must be unique per row — the per-document contract every
-    // caller already satisfies.
-    val grams = docs
-      .select(col(idCol),
-        graft.functions.WordShingleHashesFunction
-          .wordShingleHashes(col(textCol), n, withHashes = false, withCounts = true)
-          .as(Seq("__g", "__c")))
-    grams
-      .groupBy(col(idCol))
-      .agg(
-        sum(col("__c")).as("n_grams"),
-        count(lit(1)).as("n_distinct"),
-        max(col("__c")).as("top_count"),
-        sum(when(col("__c") > 1, col("__c")).otherwise(lit(0L))).as("__dup"))
-      .select(
-        col(idCol),
-        col("n_grams"),
-        col("n_distinct"),
-        col("top_count"),
-        (col("top_count").cast("double") / col("n_grams").cast("double"))
-          .as("top_fraction"),
-        (col("__dup").cast("double") / col("n_grams").cast("double"))
-          .as("dup_fraction"))
-  }
-
-  /** The ZERO-shuffle form of [[ngramRepetition]]: the whole profile from
-    * ONE native single-pass expression over the doc's own token array
-    * ([[graft.functions.RepetitionProfile]] — combined token hashes counted
-    * in an open-addressed table; gram strings never materialize; O(g) per
-    * row, codegen'd). No explode, no shuffle: at 100 TB this rides the scan
-    * for free and composes onto a STREAM (per-row ⇒ stateless), where the
-    * relational form's aggregation cannot; the relational form remains the
-    * externally-replayable oracle twin. Output is row-for-row identical
-    * (spec-asserted). An interpreted higher-order-function formulation was
-    * tried first and REJECTED: ~10× slower at sf0.1 (per-element struct
-    * allocation in the lambda interpreter).
-    */
-  def ngramRepetitionMapSide(
       docs: DataFrame,
       n: Int,
       idCol: String = "doc_id",
@@ -116,7 +65,7 @@ object Repetition {
     * is a different filter's job.
     *
     * A pure map-side FILTER: each row's profile comes from the same native
-    * single-pass expression (spec-proven ≡ the relational profile), so the
+    * single-pass expression as [[ngramRepetition]], so the
     * drop decision never leaves the row — no explode, no shuffle, no
     * anti-join. At 100 TB this gate is free on the scan.
     */

@@ -142,7 +142,7 @@ object Similarity {
     * the contrastive-training recipe where the self-match and its copies
     * must be excluded before the cut, not after (a post-cut filter would
     * return k − dups rows). Same bounded-aggregate shape as
-    * [[bruteForceTopKBatchAgg]]: the near-dup filter runs map-side on the
+    * [[bruteForceTopKBatch]]: the near-dup filter runs map-side on the
     * scored stream, then at most k pairs per partition reach the
     * query-keyed exchange.
     */
@@ -155,17 +155,10 @@ object Similarity {
       vecCol: String = "embedding",
       queryIdCol: String = "query_id"): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    require(!corpus.columns.contains("__qvec"), "__qvec is reserved by hardNegatives")
-    val q = queries.select(col(queryIdCol), col(vecCol).as("__qvec"))
-    val scored = corpus.join(broadcast(q))
-      .select(col(queryIdCol), col(idCol),
-        round(cosineSimilarity(col(vecCol), col("__qvec")), 6).as("cosine"))
-      .filter(col("cosine") <= maxCosine)
-    val topk = udaf(new graft.functions.TopKByScore(k))
-    scored.groupBy(col(queryIdCol))
-      .agg(topk(col("cosine"), col(idCol)).as("__top"))
-      .select(col(queryIdCol), explode(col("__top")).as("__p"))
-      .select(col(queryIdCol), col("__p._2").as(idCol), col("__p._1").as("cosine"))
+    topKPerQuery(
+      scoredBatch(corpus, queries, idCol, vecCol, queryIdCol)
+        .filter(col("cosine") <= maxCosine),
+      k, idCol, queryIdCol)
   }
 
   /** Exact top-k by cosine similarity against a literal query vector. */
@@ -185,15 +178,13 @@ object Similarity {
     * batch shape real retrieval evaluation runs (thousands of benchmark
     * queries against the full corpus). The query set broadcasts (it is
     * benchmark-sized); each corpus partition scores all queries locally
-    * with the codegen'd cosine, then a per-query rank window keeps k.
-    * Corpus is scanned once total, not once per query — at 100 TB that is
-    * the difference between one job and thousands.
-    *
-    * The window shuffles |corpus|×|queries| scored rows on the query id;
-    * [[bruteForceTopKBatchAgg]] is the pre-reducing variant (bounded
-    * [[graft.functions.TopKByScore]] aggregate — at most k pairs per
-    * partition per query reach the shuffle) for when that product is the
-    * bottleneck; [[lshTopKIndexedOn]] prunes the corpus side itself.
+    * with the codegen'd cosine, then the bounded
+    * [[graft.functions.TopKByScore]] aggregate keeps k per query: partial
+    * aggregation caps each partition's contribution at k pairs per query
+    * BEFORE the shuffle, so O(partitions × k) rows per query cross it
+    * instead of the whole scored corpus. Corpus is scanned once total,
+    * not once per query — at 100 TB that is the difference between one
+    * job and thousands; [[lshTopKIndexedOn]] prunes the corpus side itself.
     */
   def bruteForceTopKBatch(
       corpus: DataFrame,
@@ -203,39 +194,31 @@ object Similarity {
       vecCol: String = "embedding",
       queryIdCol: String = "query_id"): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    require(!corpus.columns.contains("__qvec") && !corpus.columns.contains("__rn"),
-      "__qvec/__rn are reserved by bruteForceTopKBatch")
-    val q = queries.select(col(queryIdCol), col(vecCol).as("__qvec"))
-    val scored = corpus.join(broadcast(q))
-      .select(col(queryIdCol), col(idCol),
-        round(cosineSimilarity(col(vecCol), col("__qvec")), 6).as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(queryIdCol)).orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k).drop("__rn")
+    topKPerQuery(scoredBatch(corpus, queries, idCol, vecCol, queryIdCol),
+      k, idCol, queryIdCol)
   }
 
-  /** [[bruteForceTopKBatch]] with the pre-reducing bounded aggregate
-    * ([[graft.functions.TopKByScore]]): map-side partial aggregation caps
-    * each partition's contribution at k pairs per query BEFORE the
-    * shuffle — O(partitions × k) exchanged rows per query instead of the
-    * whole scored corpus. Result set identical to the window variant
-    * (spec-asserted).
+  /** (query id, corpus id, round-6 cosine) for every corpus row against
+    * every query vector, the query set broadcast.
     */
-  def bruteForceTopKBatchAgg(
+  private def scoredBatch(
       corpus: DataFrame,
       queries: DataFrame,
-      k: Int = 10,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      queryIdCol: String = "query_id"): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(!corpus.columns.contains("__qvec"),
-      "__qvec is reserved by bruteForceTopKBatchAgg")
+      idCol: String,
+      vecCol: String,
+      queryIdCol: String): DataFrame = {
+    require(!corpus.columns.contains("__qvec"), "__qvec is reserved by the batch top-k")
     val q = queries.select(col(queryIdCol), col(vecCol).as("__qvec"))
-    val scored = corpus.join(broadcast(q))
+    corpus.join(broadcast(q))
       .select(col(queryIdCol), col(idCol),
         round(cosineSimilarity(col(vecCol), col("__qvec")), 6).as("cosine"))
+  }
+
+  /** The k best (cosine desc, id asc) rows per query of a scored stream,
+    * through the bounded [[graft.functions.TopKByScore]] aggregate.
+    */
+  private def topKPerQuery(
+      scored: DataFrame, k: Int, idCol: String, queryIdCol: String): DataFrame = {
     val topk = udaf(new graft.functions.TopKByScore(k))
     scored.groupBy(col(queryIdCol))
       .agg(topk(col("cosine"), col(idCol)).as("__top"))
@@ -287,11 +270,7 @@ object Similarity {
       .join(broadcast(probes), Seq("cid"))
       .select(col(queryIdCol), col(idCol),
         round(cosineSimilarity(col(vecCol), col("__qvec")), 6).as("cosine"))
-    val topk = udaf(new graft.functions.TopKByScore(k))
-    scored.groupBy(col(queryIdCol))
-      .agg(topk(col("cosine"), col(idCol)).as("__top"))
-      .select(col(queryIdCol), explode(col("__top")).as("__p"))
-      .select(col(queryIdCol), col("__p._2").as(idCol), col("__p._1").as("cosine"))
+    topKPerQuery(scored, k, idCol, queryIdCol)
   }
 
   /** Same plane family as [[graft.functions.HyperplaneBucket]], evaluated

@@ -485,6 +485,16 @@ object Warc {
     out.toByteArray
   }
 
+  /** [[render]] `records` member-gzipped into `dir/part-00000.warc.gz`,
+    * creating `dir` — a driver-side archive for the query fixtures.
+    */
+  private[graft] def writeGzipped(
+      dir: String, records: Seq[(String, String, String, String, Array[Byte])]): Unit = {
+    val p = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.createDirectories(p)
+    java.nio.file.Files.write(p.resolve("part-00000.warc.gz"), render(records, gzipMembers = true))
+  }
+
   /** An HTTP/1.1 200 response payload wrapping `body` — what a crawler
     * stores in a `response` record.
     */

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Mixture, QuantileFilter, Redaction, Repetition, TextAnalysis}
@@ -10,6 +11,32 @@ import graft.pipeline.{Mixture, QuantileFilter, Redaction, Repetition, TextAnaly
 class CurationSpec extends SparkTestBase {
 
   import spark.implicits._
+
+  /** Relational reference profile for [[Repetition.ngramRepetition]]: the
+    * lowercased word n-grams as exact STRINGS, counted per doc by the
+    * shingle generator, then one aggregation by doc. The native profile
+    * compares 64-bit gram hashes instead, so a realized hash collision
+    * would show up here as a row mismatch.
+    */
+  private def relationalRepetition(docs: DataFrame, n: Int): DataFrame =
+    docs
+      .select(col("doc_id"),
+        graft.functions.WordShingleHashesFunction
+          .wordShingleHashes(col("text"), n, withHashes = false, withCounts = true)
+          .as(Seq("__g", "__c")))
+      .groupBy(col("doc_id"))
+      .agg(
+        sum(col("__c")).as("n_grams"),
+        count(lit(1)).as("n_distinct"),
+        max(col("__c")).as("top_count"),
+        sum(when(col("__c") > 1, col("__c")).otherwise(lit(0L))).as("__dup"))
+      .select(
+        col("doc_id"),
+        col("n_grams"),
+        col("n_distinct"),
+        col("top_count"),
+        (col("top_count").cast("double") / col("n_grams").cast("double")).as("top_fraction"),
+        (col("__dup").cast("double") / col("n_grams").cast("double")).as("dup_fraction"))
 
   test("ngramRepetition counts 2-gram structure exactly") {
     val docs = Seq(
@@ -115,13 +142,13 @@ class CurationSpec extends SparkTestBase {
     val crafted = Seq((9001L, "a b a b a"), (9002L, "t t t t"), (9003L, "solo"))
       .toDF("doc_id", "text").select(col("doc_id"), col("text"))
     for (docs <- Seq(real.select("doc_id", "text"), crafted); n <- Seq(1, 2, 3)) {
-      val rel = Repetition.ngramRepetition(docs, n).orderBy("doc_id").collect().toSeq
-      val map = Repetition.ngramRepetitionMapSide(docs, n).orderBy("doc_id").collect().toSeq
+      val rel = relationalRepetition(docs, n).orderBy("doc_id").collect().toSeq
+      val map = Repetition.ngramRepetition(docs, n).orderBy("doc_id").collect().toSeq
       map shouldBe rel
     }
-    // the run-length form rides the scan: nothing shuffles before the rows
+    // the native profile rides the scan: nothing shuffles before the rows
     // exist (the orderBy above is the only exchange a consumer would add)
-    val plan = Repetition.ngramRepetitionMapSide(real, 2).queryExecution.executedPlan.toString
+    val plan = Repetition.ngramRepetition(real, 2).queryExecution.executedPlan.toString
     plan should not include "Exchange"
   }
 
@@ -130,7 +157,7 @@ class CurationSpec extends SparkTestBase {
     val out = Repetition.dropRepetitive(docs, n = 2, maxTopFraction = 0.08, maxDupFraction = 0.2)
     out.queryExecution.executedPlan.toString should not include "Exchange"
     // and it must agree with the relational profile's verdict doc for doc
-    val flagged = Repetition.ngramRepetition(docs, 2)
+    val flagged = relationalRepetition(docs, 2)
       .filter(col("top_fraction") > 0.08 || col("dup_fraction") > 0.2)
       .select("doc_id").as[Long].collect().toSet
     val kept = out.select("doc_id").as[Long].collect().toSet

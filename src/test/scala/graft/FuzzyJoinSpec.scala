@@ -49,16 +49,16 @@ class FuzzyJoinSpec extends SparkTestBase {
       (12L, "smal ring"),                   // 1 delete
       (13L, "copper pipe"),                 // exact
       (14L, "entirely different"))
-    for (k <- 0 to 2) {
-      withClue(s"k=$k: ") { run(left, right, k) shouldBe brute(left, right, k) }
+    for (k <- 0 to 2; n <- Seq(2, 3)) {
+      withClue(s"k=$k n=$n: ") { run(left, right, k, n) shouldBe brute(left, right, k) }
     }
   }
 
   test("repeated-gram strings: the bag count filter keeps what sets would drop") {
     val left = Seq((1L, "aaaa"), (2L, "aaaaaaaa"), (3L, "abababab"))
     val right = Seq((10L, "aaab"), (11L, "aaaaaaa"), (12L, "babababa"), (13L, "aaaa"))
-    for (k <- 1 to 2) {
-      withClue(s"k=$k: ") { run(left, right, k) shouldBe brute(left, right, k) }
+    for (k <- 0 to 2; n <- Seq(2, 3)) {
+      withClue(s"k=$k n=$n: ") { run(left, right, k, n) shouldBe brute(left, right, k) }
     }
   }
 
@@ -84,99 +84,11 @@ class FuzzyJoinSpec extends SparkTestBase {
     (plan.split("BroadcastNestedLoopJoin").length - 1) should be <= 1
   }
 
-  private def runPrefix(
-      left: Seq[(Long, String)], right: Seq[(Long, String)], k: Int, n: Int = 2) =
-    FuzzyJoin.fuzzyPairsPrefix(left.toDF("id", "s"), right.toDF("id", "s"),
-        "id", "s", "id", "s", maxDistance = k, n = n)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-
-  test("prefix filtering is exact on every fixture family") {
-    val fixtures = Seq(
-      (Seq((1L, "red widget"), (2L, "blue bolt"), (3L, "small ring"),
-        (4L, "green gear"), (5L, "copper pipe")),
-        Seq((10L, "red widgit"), (11L, "blue bolts"), (12L, "smal ring"),
-          (13L, "copper pipe"), (14L, "entirely different"))),
-      // repeated grams: occurrence tagging must keep the multiset lemma
-      (Seq((1L, "aaaa"), (2L, "aaaaaaaa"), (3L, "abababab")),
-        Seq((10L, "aaab"), (11L, "aaaaaaa"), (12L, "babababa"), (13L, "aaaa"))),
-      // short / boundary corners
-      (Seq((1L, "ab"), (2L, "x"), (3L, "abc"), (4L, ""), (5L, "abcdefgh")),
-        Seq((10L, "ba"), (11L, "y"), (12L, "abd"), (13L, "a"), (14L, "zzzz"),
-          (15L, "abcdefg"), (16L, "abcd"))))
-    for (((l, r), fi) <- fixtures.zipWithIndex; k <- 0 to 2; n <- Seq(2, 3)) {
-      withClue(s"fixture=$fi k=$k n=$n: ") {
-        runPrefix(l, r, k, n) shouldBe brute(l, r, k)
-      }
-    }
-  }
-
-  test("df-order prefix is exact on every fixture family (both df-table paths)") {
-    // any shared total order preserves the lemma — df-ascending included;
-    // re-check every fixture family under dfOrder=true, and the
-    // sort-merge df-table lever on one of them
-    val fixtures = Seq(
-      (Seq((1L, "red widget"), (2L, "blue bolt"), (3L, "small ring"),
-        (4L, "green gear"), (5L, "copper pipe")),
-        Seq((10L, "red widgit"), (11L, "blue bolts"), (12L, "smal ring"),
-          (13L, "copper pipe"), (14L, "entirely different"))),
-      (Seq((1L, "aaaa"), (2L, "aaaaaaaa"), (3L, "abababab")),
-        Seq((10L, "aaab"), (11L, "aaaaaaa"), (12L, "babababa"), (13L, "aaaa"))),
-      (Seq((1L, "ab"), (2L, "x"), (3L, "abc"), (4L, ""), (5L, "abcdefgh")),
-        Seq((10L, "ba"), (11L, "y"), (12L, "abd"), (13L, "a"), (14L, "zzzz"),
-          (15L, "abcdefg"), (16L, "abcd"))))
-    for (((l, r), fi) <- fixtures.zipWithIndex; k <- 0 to 2; n <- Seq(2, 3)) {
-      withClue(s"fixture=$fi k=$k n=$n dfOrder: ") {
-        FuzzyJoin.fuzzyPairsPrefix(l.toDF("id", "s"), r.toDF("id", "s"),
-            "id", "s", "id", "s", maxDistance = k, n = n, dfOrder = true)
-          .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2)))
-          .toSet shouldBe brute(l, r, k)
-      }
-    }
-    val (l0, r0) = fixtures.head
-    // drop the loop's cached broadcast-variant prefix frames first: cache
-    // matching ignores join-strategy hints, so the merge-hinted plan would
-    // silently reuse the cached broadcast physical plan and hide the SMJ
-    graft.pipeline.Dedup.clearCaches()
-    val merged = FuzzyJoin.fuzzyPairsPrefix(l0.toDF("id", "s"), r0.toDF("id", "s"),
-      "id", "s", "id", "s", maxDistance = 1, dfOrder = true,
-      broadcastDfTable = false)
-    // r22: the df join runs inside the picked-prefix cache's child plan
-    // (one union-side window per call instead of two), so the SMJ pin must
-    // look through InMemoryRelation at the cached physical plan
-    val planText = merged.queryExecution.executedPlan.toString +
-      merged.queryExecution.optimizedPlan.collect {
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          m.cachedPlan.toString
-      }.mkString("\n")
-    planText should include ("SortMergeJoin")
-    merged.collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2)))
-      .toSet shouldBe brute(l0, r0, 1)
-    graft.pipeline.Dedup.clearCaches()
-  }
-
-  test("prefix candidates are a subset of the count-filter candidates' cost class") {
-    // the point of the prefix level: on sides where every string is long,
-    // each string contributes at most n·k+1 join rows instead of one per
-    // gram — assert the exploded prefix row count is exactly that bound
-    val left = (0L until 50L).map(i => (i, s"left name number $i padded"))
-    val ldf = left.toDF("id", "s")
-    val k = 1; val n = 2
-    val counted = FuzzyJoin.fuzzyPairsPrefix(ldf, ldf, "id", "s", "id", "s",
-      maxDistance = k, n = n)
-    // equal sides: the self-join must find at least every identity pair
-    val out = counted.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    left.map(p => (p._1, p._1)).toSet.subsetOf(out) shouldBe true
-    // and the plan is still equi-join shaped, no Cartesian product
-    val plan = counted.queryExecution.executedPlan.toString
-    plan should not include "CartesianProduct"
-  }
-
   test("native gram generators are bit-equal to the declarative HOF chains") {
-    // the r21 CharGramCounts / TaggedGramPrefix generators replaced the
-    // interpreted transform/filter/slice tagging; pinned over repeated
-    // grams, multi-byte code points, exactly-n and shorter-than-n strings
+    // pins the CharGramCounts generator to the declarative transform +
+    // explode + groupBy chain over repeated grams, multi-byte code points,
+    // exactly-n and shorter-than-n strings
     val n = 2
-    val prefixLen = 5
     val d = Seq((1L, "banana"), (2L, "ab"), (3L, "a"), (4L, "ααβγαα"),
       (5L, "aaaaaaa"), (6L, "mississippi river mississippi"))
       .toDF("id", "s").withColumn("len", org.apache.spark.sql.functions.length(col("s")))
@@ -191,30 +103,6 @@ class FuzzyJoinSpec extends SparkTestBase {
         .as(Seq("__g", "__c")))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted
     gotCounts shouldBe wantCounts
-    // occurrence-tagged prefixes, sorted and unsorted
-    def declarativeTagged(sliced: Boolean) = {
-      val tagged = d.filter(col("len") >= n)
-        .withColumn("__grams", expr(s"transform(sequence(1, len - ${n - 1}), i -> substring(s, i, $n))"))
-        .withColumn("__tagged", expr(
-          "transform(sequence(1, size(__grams)), i -> named_struct(" +
-            "'h', xxhash64(element_at(__grams, i)), " +
-            "'o', size(filter(slice(__grams, 1, i - 1), x -> x = element_at(__grams, i))) + 1))"))
-      val arr = if (sliced)
-        expr("slice(array_sort(__tagged, (a, b) -> " +
-          "CASE WHEN a.h < b.h THEN -1 WHEN a.h > b.h THEN 1 " +
-          "WHEN a.o < b.o THEN -1 WHEN a.o > b.o THEN 1 ELSE 0 END), " +
-          s"1, $prefixLen)")
-      else col("__tagged")
-      tagged.select(col("id"), explode(arr).as("__t"))
-        .select(col("id"), col("__t.h"), col("__t.o"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    }
-    def generated(sorted: Boolean) = d.filter(col("len") >= n)
-      .select(col("id"), graft.functions.FuzzyGramFunctions
-        .taggedGramPrefix(col("s"), n, prefixLen, sorted = sorted).as(Seq("__h", "__o")))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    generated(sorted = true) shouldBe declarativeTagged(sliced = true)
-    generated(sorted = false) shouldBe declarativeTagged(sliced = false)
   }
 
   test("validation and cross-length pairs spanning the short/gram boundary") {
@@ -222,8 +110,8 @@ class FuzzyJoinSpec extends SparkTestBase {
     // length argument — the operator must not lose or invent pairs there
     val left = Seq((1L, "abc"), (2L, "abcdefgh"))
     val right = Seq((10L, "abcdefg"), (11L, "ab"), (12L, "abcd"))
-    for (k <- 1 to 2) {
-      withClue(s"k=$k: ") { run(left, right, k) shouldBe brute(left, right, k) }
+    for (k <- 0 to 2; n <- Seq(2, 3)) {
+      withClue(s"k=$k n=$n: ") { run(left, right, k, n) shouldBe brute(left, right, k) }
     }
     an[IllegalArgumentException] should be thrownBy
       FuzzyJoin.fuzzyPairs(left.toDF("id", "s"), right.toDF("id", "s"),

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.FuzzyJoin
 import graft.pipeline.Sampling
 
-/** Property checks for the session-3 operators: fuzzy-join prefix
-  * filtering must be EXACT for any input (the superset argument is a
+/** Property checks for the session-3 operators: the fuzzy join's q-gram
+  * count filter must be EXACT for any input (the superset argument is a
   * theorem, so random search hunts for counterexamples harder than
   * fixtures can), and the water-filling allocation must hit the budget
   * exactly with fair levels for any group-size multiset.
@@ -19,8 +19,8 @@ object SessionThreeProps extends Properties("SessionThree") {
 
   private lazy val spark = SparkTestBase.session
 
-  // small alphabet → repeated grams are common, stressing the occurrence
-  // tagging; lengths straddle the short/gram boundary for n=2..3, k=0..2
+  // small alphabet → repeated grams are common, stressing the bag (not
+  // set) count; lengths straddle the short/gram boundary for n=2..3, k=0..2
   private val genWord = for {
     len <- Gen.choose(0, 9)
     cs <- Gen.listOfN(len, Gen.oneOf('a', 'b', 'c'))
@@ -48,12 +48,12 @@ object SessionThreeProps extends Properties("SessionThree") {
     } yield (li.toLong, ri.toLong, d)).toSet
   }
 
-  property("fuzzyPairsPrefix is exact for any strings, k, and n") =
+  property("fuzzyPairs is exact for any strings, k, and n") =
     Prop.forAll(genSide, genSide, Gen.choose(0, 2), Gen.oneOf(2, 3)) { (l, r, k, n) =>
       import spark.implicits._
       val ldf = l.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "s")
       val rdf = r.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "s")
-      val got = FuzzyJoin.fuzzyPairsPrefix(ldf, rdf, "id", "s", "id", "s", k, n)
+      val got = FuzzyJoin.fuzzyPairs(ldf, rdf, "id", "s", "id", "s", k, n)
         .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2))).toSet
       got == brute(l, r, k)
     }

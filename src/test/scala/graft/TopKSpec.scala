@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.cosineSimilarity
 import graft.pipeline.Similarity
 
 class TopKSpec extends SparkTestBase {
@@ -13,6 +15,23 @@ class TopKSpec extends SparkTestBase {
   private def embeddings = (0L until 200L).map(i => (i, vec()))
     .toDF("vec_id", "embedding")
 
+  /** Window reference for [[Similarity.bruteForceTopKBatch]]: every
+    * (query, corpus) pair scored, then a per-query `row_number` over
+    * (cosine desc, id asc) keeps the first k — the whole scored product
+    * crosses the shuffle.
+    */
+  private def windowTopKBatch(
+      corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("query_id"), col("embedding").as("__qvec"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
+    corpus.join(broadcast(q))
+      .select(col("query_id"), col("vec_id"),
+        round(cosineSimilarity(col("embedding"), col("__qvec")), 6).as("cosine"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= k).drop("__rn")
+  }
+
   test("bounded-aggregate top-k equals the window top-k") {
     // NB no .cache() here: the corpus is a driver-side literal
     // (LocalTableScan), and a lingering persisted RDD would trip
@@ -21,21 +40,21 @@ class TopKSpec extends SparkTestBase {
     val corpus = e.filter(col("vec_id") >= 8)
     val queries = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val viaWindow = Similarity.bruteForceTopKBatch(corpus, queries, k = 7)
+    val viaWindow = windowTopKBatch(corpus, queries, k = 7)
       .as[(Long, Long, Double)].collect().toSet
-    val viaAgg = Similarity.bruteForceTopKBatchAgg(corpus, queries, k = 7)
+    val viaAgg = Similarity.bruteForceTopKBatch(corpus, queries, k = 7)
       .as[(Long, Long, Double)].collect().toSet
     viaAgg shouldBe viaWindow
     viaAgg.groupBy(_._1).values.foreach(_.size shouldBe 7)
     // and stability under partitioning (merge path exercised differently)
-    val repart = Similarity.bruteForceTopKBatchAgg(corpus.repartition(13), queries, k = 7)
+    val repart = Similarity.bruteForceTopKBatch(corpus.repartition(13), queries, k = 7)
       .as[(Long, Long, Double)].collect().toSet
     repart shouldBe viaWindow
   }
 
   test("the aggregate form pre-reduces before the shuffle (partial aggregation)") {
     val e = embeddings
-    val plan = Similarity.bruteForceTopKBatchAgg(
+    val plan = Similarity.bruteForceTopKBatch(
         e.filter(col("vec_id") >= 8),
         e.filter(col("vec_id") < 8).select(col("vec_id").as("query_id"), col("embedding")),
         k = 5)
@@ -123,7 +142,7 @@ class TopKSpec extends SparkTestBase {
     val vecs = Similarity.hashEmbed(d.filter(col("doc_id") < 3), dim = 8)
       .select(col("doc_id").as("vec_id"),
         expr("transform(vec, x -> CAST(x AS FLOAT))").as("embedding"))
-    val pair = Similarity.bruteForceTopKBatchAgg(
+    val pair = Similarity.bruteForceTopKBatch(
       vecs, vecs.select(col("vec_id").as("query_id"), col("embedding")), k = 2)
       .filter(col("query_id") === 1L && col("vec_id") === 2L)
       .collect()(0).getDouble(2)
