@@ -218,11 +218,13 @@ object Bench {
     // Provider-story bench first (clean session; reference README.md:37-51 —
     // a source serving pushed key lookups vs scanning): 50 prepared point
     // lookups against the DSv2 keyed index vs the same data as a plain view.
-    // The keyed lookups run on the driver with no Spark job (DriverTier);
-    // the plain view pays a job per lookup and evaluates its predicate on
-    // every row. So wall-clock now shows the job floor as well as rows
-    // shipped (50) vs row-predicates evaluated (50 × 1M), which
-    // KeyedMemTableSpec asserts via scan metrics and job counts.
+    // The keyed lookups run on the driver with no Spark job (DriverTier).
+    // The plain view is a range, which is no driver-tier leaf (unlike a
+    // keyed scan, a driver-local cache or a selective parquet bind), so it
+    // pays a job per lookup and evaluates its predicate on every row. So
+    // wall-clock shows the job floor as well as rows shipped (50) vs
+    // row-predicates evaluated (50 × 1M), which KeyedMemTableSpec asserts
+    // via scan metrics and job counts.
     val bigN = 1000000L
     val big = spark.range(0, bigN, 1, 8).selectExpr(
       "id AS k", "concat('item_', id) AS name", "cast(id % 97 AS double) AS score")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.graft.Internals
 
@@ -27,11 +28,16 @@ object Graft {
   /** Expose the custom codegen expressions to `spark.sql` text (the
     * reference registers its UDFs into the session context the same way —
     * `parameterized_statement.rs:30-49`): a SQL user gets the native
-    * expressions, not a UDF shim. Idempotent (createOrReplace).
+    * expressions, not a UDF shim. Idempotent: a name whose registered
+    * builder is already this table's is left alone, so a repeated install
+    * neither re-registers nor logs a replacement.
     */
   private def registerFunctions(spark: SparkSession): Unit = {
     val reg = Internals.classicSession(spark).sessionState.functionRegistry
-    sqlFunctions.foreach(f => reg.createOrReplaceTempFunction(f.name, f.builder, "internal"))
+    sqlFunctions.foreach { f =>
+      if (!reg.lookupFunctionBuilder(FunctionIdentifier(f.name)).exists(_ eq f.builder))
+        reg.createOrReplaceTempFunction(f.name, f.builder, "internal")
+    }
   }
 
   /** One SQL-callable graft expression: its name, its expression class and

@@ -104,10 +104,12 @@ case class DynamicFilterExec(condition: Expression, child: SparkPlan)
   // :266-268); numOutputRows accumulates from tasks, bindTime is set
   // driver-side by the prepared-statement bind (PreparedStatement.execute)
   // and posted to the SQL listener when execution starts, so both surface
-  // in the Spark UI next to the exec
+  // in the Spark UI next to the exec; driverTier is set driver-side to 1
+  // when graft.prepared.DriverTier answered the execute without a job
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
-    "bindTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "time to bind parameters"))
+    "bindTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "time to bind parameters"),
+    "driverTier" -> SQLMetrics.createMetric(sparkContext, "answered on the driver"))
 
   /** Driver-set metrics (bindTime) only reach the UI through an explicit
     * driver-accum post inside the execution scope — the

@@ -1,7 +1,7 @@
 package graft.prepared
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.LeafExpression
+import org.apache.spark.sql.catalyst.expressions.{LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.DataType
@@ -45,4 +45,23 @@ case class BoundParam(id: String, dataType: DataType, value: Any)
         isNull = FalseLiteral)
     }
   }
+}
+
+/** A bound value in a scan's pushed predicates ([[ScanRebind]]).
+  *
+  * It is a [[Literal]], so Spark's data-source filter translation, cached
+  * batch pruning and the keyed-scan key rule all recognise it. Like
+  * [[BoundParam]], its generated code reads the value from the references
+  * array instead of inlining it: the batch-pruning predicate Spark compiles
+  * over a cache's column stats is then the same source for every bound
+  * value, and the generated-code cache hits on every execute.
+  */
+final class PushedParam(value: Any, dataType: DataType) extends Literal(value, dataType) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (value == null) super.doGenCode(ctx, ev)
+    else {
+      val ref = ctx.addReferenceObj("pushedParam", value, CodeGenerator.boxedType(dataType))
+      val javaType = CodeGenerator.javaType(dataType)
+      ev.copy(code = code"final $javaType ${ev.value} = $ref;", isNull = FalseLiteral)
+    }
 }

@@ -21,11 +21,11 @@ import org.apache.spark.sql.graft.Internals
   *   - No UDF snapshotting side channel: Spark function expressions live
   *     directly in the cached plan tree.
   *
-  * Parquet pruning parity: after binding, conjuncts of any dynamic filter are
-  * re-pushed into descendant parquet scans (`ScanRebind`), so row-group
-  * pruning sees the concrete literals — the moral equivalent of the
-  * reference's `DynamicFilterPhysicalExpr.update` pushdown
-  * (`src/physical.rs:240-264`).
+  * Scan pruning parity: after binding, conjuncts of any dynamic filter are
+  * re-pushed into descendant parquet, cached and keyed scans
+  * (`ScanRebind`), so row-group and batch pruning see the concrete values —
+  * the moral equivalent of the reference's `DynamicFilterPhysicalExpr.update`
+  * pushdown (`src/physical.rs:240-264`).
   */
 class PreparedStatement(
     val spark: SparkSession,
@@ -66,12 +66,16 @@ class PreparedStatement(
     * `parameterized_statement.rs:64-87`).
     *
     * Runs on one of two tiers ([[Internals.collectPhysical]]):
-    * a bound plan that is a narrow project/filter chain over a driver-resident
-    * leaf — a keyed mem table answering the bound keys, or a materialized
-    * cached table whose blocks are all in the driver's block manager — is
-    * evaluated on the driver with no Spark job; any other plan runs as one
-    * job.
-    * [[DriverTier]] states the eligibility rule.
+    * a bound plan that is a narrow project/filter chain over a leaf the
+    * driver reads cheaply — a keyed mem table answering the bound keys, a
+    * materialized cached table whose blocks are all in the driver's block
+    * manager, or a v1 parquet scan whose bound filters leave at most
+    * `ParquetLeaf.MaxDriverRows` rows in the surviving row groups (read
+    * with a reader built once per statement, on the first such execute) —
+    * is evaluated on the driver with no Spark job; any other plan runs as
+    * one job. [[DriverTier]] states the eligibility rule; each
+    * [[graft.plans.DynamicFilterExec]]'s `driverTier` metric reports which
+    * tier ran.
     */
   def executeCollect(params: Map[String, Any]): Array[Row] =
     Internals.collectPhysical(boundPlan(params))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NamedParameter, PosParameter, UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{Alias, BinaryExpression, Cast, Expression, In, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Command, GlobalLimit, InsertIntoStatement, LocalLimit, LogicalPlan, Offset, Project, Tail}
-import org.apache.spark.sql.graft.Internals
+import org.apache.spark.sql.graft.{Internals, ParquetLeaf}
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType}
 
 /** Entry point: `prepare(spark, sql, paramTypes)` → [[PreparedStatement]].
@@ -302,6 +302,7 @@ object PreparedStatements {
       graft.ConfGuard.withSessionConf(spark, "spark.sql.adaptive.enabled", "false") {
         qe.executedPlan
       }
+    ParquetLeaf.attach(physical)
 
     new PreparedStatement(spark, sql, physical, physical.output)
   }

@@ -3,7 +3,10 @@ package graft.prepared
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{
   AttributeReference, AttributeSet, EqualTo, Expression, In, Literal, PredicateHelper}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{
+  ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.graft.Internals
@@ -11,13 +14,15 @@ import org.apache.spark.sql.graft.Internals
 import graft.plans.DynamicFilterExec
 import graft.sources.{KeyedMemScan, KeyedMemTables}
 
-/** Execute-time parquet pushdown for freshly bound predicates.
+/** Execute-time scan pushdown for freshly bound predicates.
   *
   * At prepare time a parameterized predicate cannot be pushed into the scan
   * (no concrete value yet). After `Params.bind` turns placeholders into
-  * literals, this pass re-pushes the now-concrete conjuncts into descendant
-  * parquet scans' `dataFilters`, so the scan's own filter translation gives
-  * row-group / page-level pruning on every execute.
+  * literals, this pass re-pushes the now-concrete conjuncts into the scans
+  * below each filter, through row-preserving nodes only: parquet v1/v2
+  * `dataFilters` (row-group / page-level pruning from the scan's own filter
+  * translation), cached-table `predicates` (batch-stat pruning) and keyed
+  * mem scans' keys (an index lookup), on every execute.
   *
   * Moral equivalent of the reference's pushed `DynamicFilterPhysicalExpr`
   * being `update()`d with bound values before the scan runs
@@ -42,28 +47,45 @@ object ScanRebind extends PredicateHelper {
     }
   }
 
-  def rebind(bound: SparkPlan): SparkPlan = {
-    // Conjuncts of every (now concrete) dynamic filter in the plan. The
-    // data-source filter translation only understands Literal, so BoundParam
-    // values are materialized here — the scan's pushdown sees plain
-    // literals while the row-level predicates keep the codegen-cache-
-    // friendly BoundParam form.
-    val conjuncts: Seq[Expression] = bound.collect {
-      case DynamicFilterExec(cond, _) =>
-        splitConjunctivePredicates(cond).map(_.transform {
-          case BoundParam(_, dt, v) => Literal(v, dt)
-        })
-    }.flatten
+  /** `bound` with the conjuncts of each of its dynamic filters pushed into
+    * the scans below that filter, wherever every node in between passes its
+    * input rows through one to one ([[passesRows]]). Below a window, an
+    * aggregate, a join, an expand, a generate or a limit, the rows a scan
+    * drops would change the rows the filter keeps (their row numbers, their
+    * outer-join partners), so nothing is pushed past such a node.
+    */
+  def rebind(bound: SparkPlan): SparkPlan = push(bound, Nil)
 
-    if (conjuncts.isEmpty) bound
-    else bound.transformUp {
+  /** `plan` is deterministic and passes each input row through on its own:
+    * dropping a row that the filters above it would drop leaves the other
+    * rows as they were.
+    */
+  private def passesRows(plan: SparkPlan): Boolean = plan match {
+    case _: DynamicFilterExec | _: FilterExec | _: ProjectExec | _: WholeStageCodegenExec |
+        _: InputAdapter | _: ColumnarToRowExec =>
+      plan.expressions.forall(_.deterministic)
+    case _ => false
+  }
+
+  /** `plan` with `conjuncts`, the bound conjuncts of the dynamic filters
+    * above it, pushed into its scans.
+    */
+  private def push(plan: SparkPlan, conjuncts: Seq[Expression]): SparkPlan = {
+    // the conjuncts a scan over `output` can use and does not hold yet
+    def newConjuncts(output: AttributeSet, held: Seq[Expression]): Seq[Expression] =
+      conjuncts.filter(c => c.references.subsetOf(output) && !held.exists(_.semanticEquals(c)))
+
+    plan match {
       case scan: FileSourceScanExec =>
-        val applicable = conjuncts.filter { c =>
-          c.references.subsetOf(scan.outputSet) &&
-          !scan.dataFilters.exists(_.semanticEquals(c))
-        }
+        val applicable = newConjuncts(scan.outputSet, scan.dataFilters)
         if (applicable.isEmpty) scan
-        else scan.copy(dataFilters = scan.dataFilters ++ applicable)
+        else withTags(scan.copy(dataFilters = scan.dataFilters ++ applicable), scan)
+      // cached table: bound conjuncts join the scan's predicates, so its
+      // batch-stat pruning skips batches on both tiers
+      case scan: InMemoryTableScanExec =>
+        val applicable = newConjuncts(scan.outputSet, scan.predicates)
+        if (applicable.isEmpty) scan
+        else withTags(scan.copy(predicates = scan.predicates ++ applicable), scan)
       // DSv2 keyed mem table: bound key equality/IN conjuncts become an
       // index lookup — the scan ships only the matching rows, the prepared
       // analog of the reference provider serving pushed point lookups
@@ -73,7 +95,7 @@ object ScanRebind extends PredicateHelper {
             val keyCol = KeyedMemTables.registry(ks.table).keyCol
             val keySets = conjuncts.flatMap(keySet(_, keyCol, b.outputSet))
             if (keySets.isEmpty) b
-            else b.copy(scan = ks.withKeys(KeyedMemTables.intersectKeys(keySets)))
+            else withTags(b.copy(scan = ks.withKeys(KeyedMemTables.intersectKeys(keySets))), b)
           // DSv2 parquet: the protocol is source-agnostic (the reference
           // pushes its DynamicFilterPhysicalExpr to ANY provider,
           // physical.rs:270-336), so a session reading parquet through v2
@@ -81,19 +103,37 @@ object ScanRebind extends PredicateHelper {
           // above — bound conjuncts are translated to source Filters and a
           // copied scan carries them into the reader factory.
           case ps: ParquetScan =>
-            val applicable = conjuncts.filter { c =>
-              c.references.subsetOf(b.outputSet) &&
-              !ps.dataFilters.exists(_.semanticEquals(c))
-            }
+            val applicable = newConjuncts(b.outputSet, ps.dataFilters)
             val translated = applicable.flatMap(
               Internals.translateFilter(_, supportNestedPredicatePushdown = true))
               .filterNot(f => ps.pushedFilters.contains(f))
             if (translated.isEmpty) b
-            else b.copy(scan = ps.copy(
+            else withTags(b.copy(scan = ps.copy(
               pushedFilters = ps.pushedFilters ++ translated,
-              dataFilters = ps.dataFilters ++ applicable))
+              dataFilters = ps.dataFilters ++ applicable)), b)
           case _ => b
         }
+      case _ =>
+        // Conjuncts of every (now concrete) dynamic filter. The scans'
+        // filter translation and batch pruning only understand Literal, so
+        // BoundParam values become PushedParam literals here, which still
+        // keep the value out of any generated source.
+        val below = plan match {
+          case d: DynamicFilterExec if passesRows(d) =>
+            conjuncts ++ splitConjunctivePredicates(d.condition).map(_.transform {
+              case BoundParam(_, dt, v) => new PushedParam(v, dt)
+            })
+          case _ if passesRows(plan) => conjuncts
+          case _                     => Nil
+        }
+        plan.mapChildren(push(_, below))
     }
+  }
+
+  // a copied scan keeps the tags of the one it replaces (a parquet scan's
+  // driver-read state rides in one)
+  private def withTags(copy: SparkPlan, from: SparkPlan): SparkPlan = {
+    copy.copyTagsFrom(from)
+    copy
   }
 }

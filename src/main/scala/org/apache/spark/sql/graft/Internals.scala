@@ -76,21 +76,23 @@ object Internals {
     * of the reference streaming record batches straight out of
     * `ExecutionPlan::execute`.
     *
-    * Two tiers, chosen from the plan and the cache alone: a narrow
-    * project/filter chain over a driver-resident leaf (a keyed mem scan with
-    * pushed keys, or a row-based scan of a materialized cache whose blocks
-    * all sit in this JVM's block manager) is evaluated on the driver with no
-    * Spark job ([[DriverTier]] states the exact rule); every other plan runs
-    * as a job through `executeCollect()`, reading any cache dropped since the
-    * plan was built from its source ([[withoutDroppedCaches]]).
+    * Two tiers, chosen from the plan, the cache and the parquet footers: a
+    * narrow project/filter chain over a leaf the driver reads cheaply (a
+    * keyed mem scan with pushed keys, a row-based scan of a materialized
+    * cache whose blocks all sit in this JVM's block manager, or a prepared
+    * parquet scan whose bound filters leave few rows in the surviving row
+    * groups) is evaluated on the driver with no Spark job ([[DriverTier]]
+    * states the exact rule); every other plan runs as a job through
+    * `executeCollect()`, reading any cache dropped since the plan was built
+    * from its source ([[withoutDroppedCaches]]).
     */
   def collectPhysical(plan: SparkPlan): Array[org.apache.spark.sql.Row] = {
     val schema = org.apache.spark.sql.types.StructType(
       plan.output.map(a => org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable, a.metadata)))
     val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(schema)
-    val rows =
-      DriverTier.rows(plan).getOrElse(withoutDroppedCaches(plan).executeCollect().iterator)
-    rows.map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row]).toArray
+    val toRow = (r: InternalRow) => conv(r).asInstanceOf[org.apache.spark.sql.Row]
+    DriverTier.collect(plan)(toRow)
+      .getOrElse(withoutDroppedCaches(plan).executeCollect().map(toRow))
   }
 
   /** `plan` with each scan of a cache that was dropped since the plan was

@@ -2,12 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.graft.Internals
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.graft.{Internals, ParquetLeaf}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.plans.{DynamicFilterExec, DynamicFilterNode, DynamicFilterStrategy}
 import graft.prepared.{ParamPlaceholder, PreparedStatements}
@@ -69,19 +70,15 @@ class DynamicFilterStrategySpec extends SparkTestBase {
     exec.metrics("bindTime").value should be > 0L
   }
 
-  // plans whose leaf is neither a keyed scan with pushed keys nor a
-  // materialized driver-local cache (a local relation included), or whose
-  // expressions cannot be evaluated once on the driver, keep the job path
+  // plans whose leaf is not a keyed scan with pushed keys, a materialized
+  // driver-local cache or a selective prepared parquet scan (a local
+  // relation included), or whose expressions cannot be evaluated once on
+  // the driver, keep the job path
   test("other plans keep the Spark job") {
     import spark.implicits._
     val cached = (0L until 100L).map(i => (i, s"c_$i")).toDF("id", "name")
     cached.cache().count()
     cached.createOrReplaceTempView("dfs_cached")
-    val dir = Files.createTempDirectory("graft_dfs_parquet").toFile
-    dir.deleteOnExit()
-    spark.range(0, 100).selectExpr("id", "concat('p_', id) AS name")
-      .write.parquet(dir.getAbsolutePath + "/t")
-    spark.read.parquet(dir.getAbsolutePath + "/t").createOrReplaceTempView("dfs_parquet")
     spark.range(0, 100).createOrReplaceTempView("dfs_range")
     (0L until 200L).map(i => (i, s"t_${i % 7}")).toDF("id", "tag")
       .createOrReplaceTempView("dfs_local")
@@ -93,7 +90,6 @@ class DynamicFilterStrategySpec extends SparkTestBase {
       cachedJobs shouldBe 0
       cachedRows.map(_.toString).toSeq shouldBe Seq("[7,c_7]")
       val single = Seq(
-        "SELECT id, name FROM dfs_parquet WHERE id = $1",
         "SELECT id FROM dfs_range WHERE id = $1",
         "SELECT id, upper(tag) AS t FROM dfs_local WHERE id = $1",
         "SELECT id, rand() AS r FROM dfs_local WHERE id = $1")
@@ -120,8 +116,46 @@ class DynamicFilterStrategySpec extends SparkTestBase {
         spark.sql("SELECT id, name FROM dfs_cached WHERE id = 9").collect().map(_.toString).toSeq
     } finally {
       spark.catalog.uncacheTable("dfs_cached")
-      Seq("dfs_cached", "dfs_parquet", "dfs_range", "dfs_local").foreach(spark.catalog.dropTempView)
+      Seq("dfs_cached", "dfs_range", "dfs_local").foreach(spark.catalog.dropTempView)
     }
+  }
+
+  private def tierOf(plan: SparkPlan): Long =
+    plan.collectFirst { case d: DynamicFilterExec => d.metrics("driverTier").value }.get
+
+  // a bound parquet lookup whose surviving row groups hold few rows is read
+  // on the driver with the task's reader function: no job, and the dynamic
+  // filter reports the driver tier; a bind whose row groups all survive
+  // holds more rows than the cost bound and keeps its job
+  test("selective parquet lookups answer on the driver") {
+    val dir = Files.createTempDirectory("graft_dfs_parquet").toFile
+    dir.deleteOnExit()
+    spark.range(0, 100).selectExpr("id", "concat('p_', id) AS name")
+      .write.parquet(dir.getAbsolutePath + "/t")
+    spark.read.parquet(dir.getAbsolutePath + "/t").createOrReplaceTempView("dfs_parquet")
+    val wide = ParquetLeaf.MaxDriverRows + 1000
+    spark.range(0, wide, 1, 1).selectExpr("id", "concat('w_', id) AS name")
+      .write.parquet(dir.getAbsolutePath + "/wide")
+    spark.read.parquet(dir.getAbsolutePath + "/wide").createOrReplaceTempView("dfs_wide")
+    try {
+      val st = PreparedStatements.prepare(spark, "SELECT id, name FROM dfs_parquet WHERE id = $1")
+      val (rows, jobs) = jobsRun(st.executeCollect(Map("$1" -> 7L)))
+      jobs shouldBe 0
+      rows.map(_.toString).toSeq shouldBe Seq("[7,p_7]")
+      val plan = st.boundPlan(Map("$1" -> 8L))
+      Internals.collectPhysical(plan).map(_.toString).toSeq shouldBe Seq("[8,p_8]")
+      tierOf(plan) shouldBe 1L
+
+      // the modulus is not a scan filter, so every row group survives
+      val unselective = PreparedStatements.prepare(spark,
+        "SELECT id, name FROM dfs_wide WHERE id % 100000 = $1", Map("$1" -> LongType))
+      val (wideRows, wideJobs) = jobsRun(unselective.executeCollect(Map("$1" -> 7L)))
+      wideJobs shouldBe 1
+      wideRows.map(_.getLong(0)).sorted.toSeq shouldBe Seq(7L, 100007L)
+      val widePlan = unselective.boundPlan(Map("$1" -> 7L))
+      Internals.collectPhysical(widePlan) should have length 2
+      tierOf(widePlan) shouldBe 0L
+    } finally Seq("dfs_parquet", "dfs_wide").foreach(spark.catalog.dropTempView)
   }
 
   // a cache that was declared but never materialized has no blocks: the
@@ -206,6 +240,90 @@ class DynamicFilterStrategySpec extends SparkTestBase {
     }
   }
 
+  // a sorted multi-batch cache: the bound key joins the scan's predicates,
+  // so batch stats leave at most one batch to decode, on either tier
+  test("a point lookup on a multi-batch cache scans one batch on both tiers") {
+    val batch = spark.conf.get("spark.sql.inMemoryColumnarStorage.batchSize").toLong
+    val cached =
+      spark.range(0, 5 * batch, 1, 1).selectExpr("id", "concat('b_', id) AS name").cache()
+    cached.count()
+    cached.createOrReplaceTempView("dfs_batches")
+    try {
+      val sql = "SELECT id, name FROM dfs_batches WHERE id = "
+      val st = PreparedStatements.prepare(spark, sql + "$1")
+      def scanned(plan: SparkPlan)(collect: => Array[Row]): (Seq[String], Long) = {
+        val scan = plan.collectFirst { case m: InMemoryTableScanExec => m }.get
+        val before = scan.metrics("numOutputRows").value
+        val rows = collect.map(_.toString).toSeq
+        (rows, scan.metrics("numOutputRows").value - before)
+      }
+      Seq(0L, 2 * batch + 17, 5 * batch - 1, 7 * batch).foreach { k =>
+        val params = Map[String, Any]("$1" -> k)
+        val literal = spark.sql(sql + k).collect().map(_.toString).toSeq
+        val driverPlan = st.boundPlan(params)
+        val ((driverRows, driverScanned), jobs) =
+          jobsRun(scanned(driverPlan)(Internals.collectPhysical(driverPlan)))
+        val jobPlan = st.boundPlan(params)
+        val (jobRows, jobScanned) =
+          scanned(jobPlan)(Internals.dfFromPhysical(spark, jobPlan).collect())
+        withClue(s"key $k") {
+          jobs shouldBe 0
+          driverRows shouldBe literal
+          driverScanned should be <= batch
+          jobRows shouldBe literal
+          jobScanned should be <= batch
+        }
+      }
+    } finally {
+      cached.unpersist(blocking = true)
+      spark.catalog.dropTempView("dfs_batches")
+    }
+  }
+
+  // a filter Spark leaves above a window or on an outer join's
+  // null-supplying side must not prune the scan below it: the window would
+  // number only the surviving batch's rows, and the join would pair the
+  // pruned rows' partners with NULLs
+  test("bound conjuncts above a window or an outer join leave the scans unpruned") {
+    val batch = spark.conf.get("spark.sql.inMemoryColumnarStorage.batchSize").toLong
+    val rows = spark.range(0, 5 * batch, 1, 1).selectExpr("id", "id * 2 AS v")
+    val cached = rows.cache()
+    cached.count()
+    cached.createOrReplaceTempView("dfs_guard_cached")
+    val dir = Files.createTempDirectory("graft_guard").toFile
+    dir.deleteOnExit()
+    rows.write.option("parquet.block.size", 64 * 1024).parquet(dir.getAbsolutePath + "/t")
+    spark.read.parquet(dir.getAbsolutePath + "/t").createOrReplaceTempView("dfs_guard_parquet")
+    spark.range(0, 5 * batch, batch / 2).createOrReplaceTempView("dfs_guard_probe")
+    try {
+      for (table <- Seq("dfs_guard_cached", "dfs_guard_parquet")) {
+        val window = "SELECT id, rn FROM (SELECT id, row_number() OVER (ORDER BY id) AS rn " +
+          s"FROM $table) WHERE id = "
+        val outer = s"SELECT p.id, t.v FROM dfs_guard_probe p LEFT JOIN $table t ON p.id = t.id " +
+          "WHERE t.v = "
+        val tail = " OR t.v IS NULL"
+        val windowSt = PreparedStatements.prepare(spark, window + "$1")
+        val outerSt = PreparedStatements.prepare(spark, outer + "$1" + tail)
+        def canon(rs: Array[Row]) = rs.map(_.toString).sorted.toSeq
+        // a probed key, and one no probe row holds
+        Seq(3 * batch, batch + 5).foreach { k =>
+          withClue(s"$table, key $k") {
+            val windowRows = windowSt.executeCollect(Map("$1" -> k))
+            canon(windowRows) shouldBe canon(spark.sql(window + k).collect())
+            windowRows.map(_.getInt(1).toLong).toSeq shouldBe Seq(k + 1)
+            val outerRows = outerSt.executeCollect(Map("$1" -> 2 * k))
+            canon(outerRows) shouldBe canon(spark.sql(outer + 2 * k + tail).collect())
+            outerRows.length shouldBe (if (k % (batch / 2) == 0) 1 else 0)
+          }
+        }
+      }
+    } finally {
+      cached.unpersist(blocking = true)
+      Seq("dfs_guard_cached", "dfs_guard_parquet", "dfs_guard_probe")
+        .foreach(spark.catalog.dropTempView)
+    }
+  }
+
   // a driver-tier read that kept a block's read lock would make removing
   // the block wait forever
   test("driver-tier cached reads release their block locks") {
@@ -225,6 +343,25 @@ class DynamicFilterStrategySpec extends SparkTestBase {
       Await.result(Future(cached.unpersist(blocking = true)), 30.seconds)
     } finally {
       spark.catalog.dropTempView("dfs_lock_cached")
+    }
+  }
+
+  // a repeated install leaves the registry as it is: no function is
+  // replaced (each replacement would log a warning)
+  test("a second Graft.install leaves every registered function the same object") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val session = Internals.classicSession(spark.newSession())
+    val registry = session.sessionState.functionRegistry
+    def registered() = Graft.sqlFunctions.map { f =>
+      val id = FunctionIdentifier(f.name)
+      (registry.lookupFunctionBuilder(id).get, registry.lookupFunction(id).get)
+    }
+    Graft.install(session)
+    val first = registered()
+    Graft.install(session)
+    registered().zip(first).foreach { case ((builder, info), (firstBuilder, firstInfo)) =>
+      assert(builder eq firstBuilder)
+      assert(info eq firstInfo)
     }
   }
 

@@ -3,9 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.graft.Internals
 
+import graft.plans.DynamicFilterExec
 import graft.prepared.{Params, PreparedStatements, ScanRebind}
 
 /** End-to-end ports of the reference Parquet integration tests
@@ -152,5 +153,64 @@ class ParquetPreparedSpec extends SparkTestBase {
         |WHERE a.score >= $1 AND b.score >= $1""".stripMargin)
     st.execute(Map("$1" -> 999.0)).collect() shouldBe Array(Row(200L))
     st.execute(Map("$1" -> 998.0)).collect() shouldBe Array(Row(400L))
+  }
+
+  // the driver tier reads the surviving row groups with a task's reader
+  // function: the scan's row and file counters, the columnar-to-row
+  // conversion's and the dynamic filter's read as a job's do for the same
+  // bind, and only the tier counter tells the two apart
+  test("parquet driver-tier metrics equal the job path's") {
+    val st = prepare("SELECT id, name FROM pusers WHERE id >= $1 AND id <= $2")
+    val params = Map[String, Any]("$1" -> 150000L, "$2" -> 150009L)
+    def metricsOf(plan: SparkPlan) = {
+      val scan = plan.collectFirst { case s: FileSourceScanExec => s }.get
+      val toRows = plan.collectFirst { case c: ColumnarToRowExec => c }.get
+      val filter = plan.collectFirst { case d: DynamicFilterExec => d }.get
+      (scan.metrics("numOutputRows").value, scan.metrics("numFiles").value,
+        toRows.metrics("numOutputRows").value, filter.metrics("numOutputRows").value,
+        filter.metrics("driverTier").value)
+    }
+
+    val driverPlan = st.boundPlan(params)
+    val (rows, jobs) = jobsRun(Internals.collectPhysical(driverPlan))
+    jobs shouldBe 0
+    rows.map(_.getLong(0)).sorted.toSeq shouldBe (150000L to 150009L)
+    val (scanned, files, converted, returned, tier) = metricsOf(driverPlan)
+    scanned should (be >= 10L and be < 200000L / 10)
+    files shouldBe 1L
+    converted shouldBe scanned
+    returned shouldBe 10L
+    tier shouldBe 1L
+
+    val jobPlan = st.boundPlan(params)
+    jobPlan.executeCollect() should have length 10
+    metricsOf(jobPlan) shouldBe ((scanned, files, converted, returned, 0L))
+  }
+
+  // the driver tier takes its file list from the bound scan, as the job
+  // does, and caches only per-file footers: after every append to a catalog
+  // table it returns exactly what the job path returns for the same bind
+  test("after each insertInto append the driver tier returns what the job path returns") {
+    import spark.implicits._
+    Tables.dropManaged(spark, "pcat")
+    (0L until 5L).map(k => (k, s"c_$k")).toDF("k", "name")
+      .write.format("parquet").saveAsTable("pcat")
+    try {
+      val st = PreparedStatements.prepare(spark, "SELECT k, name FROM pcat WHERE k >= $1")
+      val point = PreparedStatements.prepare(spark, "SELECT k, name FROM pcat WHERE k = $1")
+      def canon(rows: Array[Row]) = rows.map(_.toString).sorted.toSeq
+      (1 to 4).foreach { n =>
+        Seq((100L + n, s"a_$n")).toDF("k", "name").write.insertInto("pcat")
+        Seq((st, Map[String, Any]("$1" -> 0L)), (point, Map[String, Any]("$1" -> (100L + n))))
+          .foreach { case (s, params) =>
+            val (driver, jobs) = jobsRun(s.executeCollect(params))
+            withClue(s"append $n, ${s.sql}") {
+              jobs shouldBe 0
+              val job = Internals.dfFromPhysical(spark, s.boundPlan(params)).collect()
+              canon(driver) shouldBe canon(job)
+            }
+          }
+      }
+    } finally Tables.dropManaged(spark, "pcat")
   }
 }

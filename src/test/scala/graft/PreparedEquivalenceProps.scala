@@ -103,6 +103,69 @@ object PreparedEquivalenceProps extends Properties("PreparedEquivalence") {
         literalRows(s"SELECT id, tag, score FROM prop_cached WHERE id = $k")
     }
 
+  /** A parquet file of many row groups, sorted by `id`, read through v1
+    * (the default) and through a DSv2 session.
+    */
+  private lazy val parquetSts = {
+    val s = SparkTestBase.session
+    val dir = java.nio.file.Files.createTempDirectory("graft_prop_parquet").toFile
+    dir.deleteOnExit()
+    val path = dir.getAbsolutePath + "/items"
+    s.range(0, 20000, 1, 1)
+      .selectExpr("id", "concat('p_', id % 53) AS tag", "CAST(id % 97 AS DOUBLE) AS score")
+      .write.option("parquet.block.size", 16 * 1024).parquet(path)
+    s.read.parquet(path).createOrReplaceTempView("prop_parquet")
+    def statements(view: String) = Seq(
+      PreparedStatements.prepare(s, s"SELECT id, tag, score FROM $view WHERE id = $$1"),
+      PreparedStatements.prepare(s, s"SELECT id, tag FROM $view WHERE id IN ($$1, $$2, $$3)"),
+      PreparedStatements.prepare(s, s"SELECT id, score FROM $view WHERE id BETWEEN $$1 AND $$2"))
+    val v1 = statements("prop_parquet")
+    val key = "spark.sql.sources.useV1SourceList"
+    val old = s.conf.get(key)
+    s.conf.set(key, "")
+    try {
+      s.read.parquet(path).createOrReplaceTempView("prop_parquet_v2")
+      (v1, statements("prop_parquet_v2"))
+    } finally s.conf.set(key, old)
+  }
+
+  private def jobsOf[T](body: => T): (T, Int) =
+    org.apache.spark.graft.JobCounter.jobsRun(SparkTestBase.session.sparkContext)(body)
+
+  private val parquetKey: Gen[Option[Long]] =
+    Gen.frequency(8 -> Gen.choose(-100L, 20100L).map(Some(_)), 1 -> Gen.const(None))
+
+  // point, IN and BETWEEN binds (present, absent and NULL values) over
+  // parquet: v1 answers on the driver tier (no job) and, for the same
+  // binds, on the job path; a DSv2 session keeps the job; every result
+  // equals the literal SQL
+  property("prepared parquet lookups == unprepared literal SQL on both tiers") =
+    Prop.forAll(parquetKey, parquetKey, parquetKey) { (a, b, c) =>
+      val (v1, v2) = parquetSts
+      def sqlOf(k: Option[Long]) = k.fold("NULL")(_.toString)
+      def bind(ks: Option[Long]*) =
+        ks.zipWithIndex.map { case (k, i) => s"$$${i + 1}" -> k.map(Long.box).orNull }.toMap
+      val (lo, hi) = (a.map(_ / 10 * 10), a.map(_ / 10 * 10 + 40))
+      val cases = Seq(
+        (0, bind(a), (v: String) => s"SELECT id, tag, score FROM $v WHERE id = ${sqlOf(a)}"),
+        (1, bind(a, b, c), (v: String) =>
+          s"SELECT id, tag FROM $v WHERE id IN (${sqlOf(a)}, ${sqlOf(b)}, ${sqlOf(c)})"),
+        (2, bind(lo, hi), (v: String) =>
+          s"SELECT id, score FROM $v WHERE id BETWEEN ${sqlOf(lo)} AND ${sqlOf(hi)}"))
+      cases.forall { case (i, params, literal) =>
+        val (driver, driverJobs) = jobsOf(v1(i).executeCollect(params))
+        val job = v1(i).execute(params).collect()
+        val (onV2, v2Jobs) = jobsOf(v2(i).executeCollect(params))
+        val expected = literalRows(literal("prop_parquet"))
+        val ok = driverJobs == 0 && v2Jobs >= 1 &&
+          driver.map(_.toString).sorted.toSeq == expected &&
+          job.map(_.toString).sorted.toSeq == expected &&
+          onV2.map(_.toString).sorted.toSeq == literalRows(literal("prop_parquet_v2"))
+        if (!ok) println(s"parquet mismatch: ${literal("prop_parquet")} jobs=$driverJobs/$v2Jobs")
+        ok
+      }
+    }
+
   private lazy val repetitionSt = {
     val s = SparkTestBase.session
     import s.implicits._

@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
+import graft.plans.DynamicFilterExec
 import graft.prepared.PreparedStatements
 
 /** End-to-end ports of the reference MemTable integration tests
@@ -257,10 +258,12 @@ class PreparedStatementsSpec extends SparkTestBase {
     results shouldBe (1 to 5).map(Seq(_))
   }
 
-  // both execution tiers under contention: the keyed and cached statements
-  // run on the driver, the parquet one as a Spark job; every result is checked against
-  // the literal-inlined query for its key (run once per key up front, so the
-  // threads contend on the prepared statements, not on SQL planning)
+  // both execution tiers under contention: the keyed, cached and selective
+  // parquet statements run on the driver, the unselective parquet one (every
+  // row group survives, over the cost bound) as a Spark job; every result
+  // is checked against the literal-inlined query for its key (run once per
+  // key up front, so the threads contend on the prepared statements, not on
+  // SQL planning)
   test("16 threads x 100 executeCollects stay independent on both tiers") {
     import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
     import spark.implicits._
@@ -270,17 +273,24 @@ class PreparedStatementsSpec extends SparkTestBase {
     dir.deleteOnExit()
     df.write.parquet(dir.getAbsolutePath + "/t")
     spark.read.parquet(dir.getAbsolutePath + "/t").createOrReplaceTempView("cc_parquet")
+    spark.range(0, org.apache.spark.sql.graft.ParquetLeaf.MaxDriverRows + 1000, 1, 1)
+      .selectExpr("id AS k", "concat('w_', id) AS name")
+      .write.parquet(dir.getAbsolutePath + "/wide")
+    spark.read.parquet(dir.getAbsolutePath + "/wide").createOrReplaceTempView("cc_wide")
     val cached = df.repartition(3).cache()
     cached.count()
     cached.createOrReplaceTempView("cc_cached")
-    val views = Seq("cc_keyed", "cc_parquet", "cc_cached")
-    val statements = views.map { view =>
-      PreparedStatements.prepare(spark, s"SELECT k, name FROM $view WHERE k = $$1")
+    val sqls = Seq("cc_keyed", "cc_parquet", "cc_cached", "cc_wide").map { v =>
+      if (v == "cc_wide") s"SELECT k, name FROM $v WHERE k % 100000 = "
+      else s"SELECT k, name FROM $v WHERE k = "
+    }
+    val statements = sqls.map { sql =>
+      PreparedStatements.prepare(spark, sql + "$1", Map("$1" -> LongType))
     }
     // present, absent and negative keys
     val keys = (0 until 40).map(i => i * 53L - 60L)
-    val literal = (for (view <- views; k <- keys) yield (view, k) ->
-      spark.sql(s"SELECT k, name FROM $view WHERE k = $k").collect().map(_.toString).toSeq).toMap
+    val literal = (for (sql <- sqls; k <- keys) yield (sql, k) ->
+      spark.sql(sql + k).collect().map(_.toString).sorted.toSeq).toMap
     val mismatches = new ConcurrentLinkedQueue[String]()
     val pool = Executors.newFixedThreadPool(16)
     try {
@@ -288,22 +298,32 @@ class PreparedStatementsSpec extends SparkTestBase {
         pool.submit(new Runnable {
           def run(): Unit = {
             val rnd = new scala.util.Random(t)
-            for (_ <- 0 until 100; (view, st) <- views.zip(statements)) {
+            // the job-path statement scans 193k rows per execute: a tenth
+            // of the rounds run it
+            for (round <- 0 until 100; (sql, st) <- sqls.zip(statements)
+                 if round % 10 == 0 || !sql.contains("cc_wide")) {
               val k = keys(rnd.nextInt(keys.length))
-              val got = st.executeCollect(Map("$1" -> k)).map(_.toString).toSeq
-              if (got != literal((view, k))) mismatches.add(s"$view k=$k: $got")
+              val got = st.executeCollect(Map("$1" -> k)).map(_.toString).sorted.toSeq
+              if (got != literal((sql, k))) mismatches.add(s"$sql$k: $got")
             }
           }
         })
       }
       runs.foreach(_.get(10, TimeUnit.MINUTES))
+      mismatches.toArray.toSeq shouldBe empty
+      // the tiers the statements ran on
+      val tiers = statements.map { st =>
+        val plan = st.boundPlan(Map("$1" -> 7L))
+        org.apache.spark.sql.graft.Internals.collectPhysical(plan)
+        plan.collectFirst { case d: DynamicFilterExec => d.metrics("driverTier").value }.get
+      }
+      tiers shouldBe Seq(1L, 1L, 1L, 0L)
     } finally {
       pool.shutdown()
       graft.sources.KeyedMemTables.unregister(spark, "cc_keyed")
-      spark.catalog.dropTempView("cc_parquet")
+      Seq("cc_parquet", "cc_wide").foreach(spark.catalog.dropTempView)
       cached.unpersist(blocking = true)
       spark.catalog.dropTempView("cc_cached")
     }
-    mismatches.toArray.toSeq shouldBe empty
   }
 }
