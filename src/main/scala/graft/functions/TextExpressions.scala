@@ -697,8 +697,9 @@ case class HashEmbedVector(child: Expression, dim: Int)
 object TextFunctions {
   def sha1Base32Digest(payload: Column): Column =
     colOf(Sha1Base32Digest(exprOf(payload)))
-  def minhashSignature(tokens: Column, numHashes: Int = 64, shingleSize: Int = 3, seed: Long = 42L): Column =
-    colOf(MinHashSignature(exprOf(tokens), numHashes, shingleSize, seed))
+  /** 64 minhashes of the token array's 3-token shingles, seed 42. */
+  def minhashSignature(tokens: Column): Column =
+    colOf(MinHashSignature(exprOf(tokens), 64, 3, 42L))
   def repetitionProfile(tokens: Column, n: Int): Column =
     colOf(RepetitionProfile(exprOf(tokens), n))
   def simhash64(tokens: Column): Column = colOf(SimHash64(exprOf(tokens)))

@@ -104,19 +104,12 @@ case class HyperplaneBucket(child: Expression, bits: Int, seed: Long)
   @transient private lazy val planeCache =
     new java.util.concurrent.ConcurrentHashMap[Integer, Array[Array[Double]]]()
 
-  private def splitmix64(x0: Long): Long = {
-    var x = x0 + 0x9e3779b97f4a7c15L
-    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-    x ^ (x >>> 31)
-  }
-
   private def planes(dim: Int): Array[Array[Double]] =
     planeCache.computeIfAbsent(dim, _ => {
       Array.tabulate(bits) { b =>
         Array.tabulate(dim) { d =>
           // uniform in [-1, 1) from a counter-mode splitmix64 stream
-          val h = splitmix64(seed + b.toLong * 1000003L + d.toLong)
+          val h = TextHashing.mix(seed + b.toLong * 1000003L + d.toLong)
           (h.toDouble / Long.MaxValue.toDouble)
         }
       }

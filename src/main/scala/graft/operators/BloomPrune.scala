@@ -78,16 +78,15 @@ object BloomPrune {
 
   /** Exact `fact ⋉ dim` with the bloom prefilter applied before the
     * shuffle: result ≡ `fact.join(dim, keys, "left_semi")`, but only
-    * bloom-passing fact rows (matches + ~fpp noise) reach the exchange.
+    * bloom-passing fact rows (matches + ~3% noise) reach the exchange.
     */
   def semiJoinPrune(
       fact: DataFrame,
       dim: DataFrame,
       factKey: String,
       dimKey: String,
-      expectedItems: Long,
-      fpp: Double = 0.03): DataFrame = {
-    val bytes = buildFilterBytes(dim, dimKey, expectedItems, fpp)
+      expectedItems: Long): DataFrame = {
+    val bytes = buildFilterBytes(dim, dimKey, expectedItems)
     prefilter(fact, factKey, bytes)
       .join(dim.select(col(dimKey)), col(factKey) === col(dimKey), "left_semi")
   }

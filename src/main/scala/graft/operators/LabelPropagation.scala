@@ -54,15 +54,12 @@ object LabelPropagation {
     * deterministic (count, smallest-label) tie-breaks, so the replay is
     * bit-parity with the distributed rounds — spec-pinned. Defaults to 2²⁰
     * directed edges; 0 forces the distributed rounds.
-    * Warm starts (`initialLabels`) always take the distributed rounds: the
-    * seed frame is label-sized, not bounded by the edge threshold.
     */
   def labelPropagation(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iterations: Int = 2,
-      initialLabels: Option[DataFrame] = None,
       driverFinishEdges: Long = 1L << 20): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val sess = edges.sparkSession
@@ -83,21 +80,11 @@ object LabelPropagation {
     val nParts = Dedup.layoutPartitionCount(symmetrized)
     val e = Dedup.withAqeOff(sess)(ckpt(
       Dedup.distinctLayout(symmetrized, nParts, "src")))
-    if (initialLabels.isEmpty && driverFinishEdges > 0 && e.count() <= driverFinishEdges)
+    if (driverFinishEdges > 0 && e.count() <= driverFinishEdges)
       return driverReplay(e, iterations)
     val verts =
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
-    // warm start (the PageRank incremental story, and — labels being pure
-    // integer functions of last round's labels — EXACT here: cold(a + b)
-    // == warm(cold(a), b) bit for bit); vertices absent from the seed
-    // (new hosts) start as their own community
-    var labels = Dedup.cache(initialLabels match {
-      case None => verts.select(col("id"), col("id").as("label"))
-      case Some(init) =>
-        verts.join(init.select(col("id"), col("community").as("__seed")),
-            Seq("id"), "left")
-          .select(col("id"), coalesce(col("__seed"), col("id")).as("label"))
-    })
+    var labels = Dedup.cache(verts.select(col("id"), col("id").as("label")))
     // narrow-regime pins ([[Dedup.pinToLayout]], no-ops at full width): the
     // label side of the edge join and the relabel join are explicitly
     // co-partitioned with the layout so the edge table never re-shuffles;

@@ -42,37 +42,18 @@ object PageRank {
   /** (id, rank) for every vertex of the graph, after `iterations` rounds
     * from the uniform start. Edges are deduplicated; self-loops are legal
     * (a self-loop feeds rank back to its own vertex).
-    *
-    * `initialRanks` warm-starts the power method from a previous result —
-    * the incremental story: after a crawl delta perturbs the graph, seed
-    * from yesterday's ranks and converge in a round or two instead of
-    * from-scratch iterations. Vertices absent from the seed (new hosts)
-    * enter at the uniform share; the seeded vector is renormalized to a
-    * probability vector in-plan, so the sum-to-1 invariant holds from
-    * round one whatever the seed.
     */
   def pageRank(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iterations: Int = 3,
-      damping: Double = 0.85,
-      initialRanks: Option[DataFrame] = None): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0, 1), got $damping")
-    pageRankLoop(edges, srcCol, dstCol, iterations, damping, initialRanks)
-  }
-
-  private def pageRankLoop(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      iterations: Int,
-      damping: Double,
-      initialRanks: Option[DataFrame]): DataFrame = {
     def ckpt(df: DataFrame): DataFrame = Dedup.lazyCheckpoint(df)
     // AQE suspended ONLY while the upfront graph layout is planned (r16,
-    // was loop-wide — the connectedComponentsLoop rationale verbatim):
+    // was loop-wide — the connectedComponentsIters rationale verbatim):
     // checkpoints created under AQE lose their outputPartitioning, and the
     // edge table is the one side whose re-shuffle per round is corpus-
     // sized. The per-round (vertex-sized) checkpoints stay ADAPTIVE so
@@ -110,23 +91,7 @@ object PageRank {
     // exchange-free over the src-partitioned edges; checkpoints hash(src)
     val outDeg = withAqeOff(ckpt(e.groupBy(col("src")).agg(count(lit(1)).as("deg"))))
 
-    var ranks = initialRanks match {
-      case None =>
-        verts.select(col("id"), (lit(1.0) / nVd).as("rank"))
-      case Some(init) =>
-        val seeded = ckpt(verts
-          .join(init.select(col("id"), col("rank").as("__seed")), Seq("id"), "left")
-          .select(col("id"),
-            coalesce(col("__seed"), lit(1.0) / nVd).as("__raw")))
-        // the renormalization total is one scalar over the seeded
-        // checkpoint — collected (materializing the checkpoint, same as
-        // the per-round dangling mass below) instead of broadcast
-        val totalRow = seeded.agg(sum(col("__raw"))).head
-        // sum over an empty seed is NULL; the value is unused then (ranks
-        // is empty) — 0.0 keeps the collect total-function like before
-        val total = if (totalRow.isNullAt(0)) 0.0 else totalRow.getDouble(0)
-        seeded.select(col("id"), (col("__raw") / lit(total)).as("rank"))
-    }
+    var ranks = verts.select(col("id"), (lit(1.0) / nVd).as("rank"))
     // In the narrow-layout regime ([[Dedup.pinToLayout]]) the round's
     // label-sized frames are explicitly pinned to the layout width so every
     // join against the checkpointed layouts stays co-partitioned and the

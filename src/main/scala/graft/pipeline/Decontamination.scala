@@ -16,11 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the join key is the shingle, so the heavy side shuffles
   * once on it; the eval side is typically benchmark-sized and broadcasts
-  * (AQE decides). At 100 TB the lever is key width — map each shingle to
-  * `xxhash64(shingle)` on BOTH sides before the join to cut shuffle bytes
-  * ~10× (a 64-bit collision flags a clean doc spuriously with negligible
-  * probability, acceptable for a drop-list); kept as exact strings here so
-  * an external engine can replay the report byte for byte.
+  * (AQE decides). The key is the exact shingle string, so an external
+  * engine can replay the report byte for byte.
   */
 object Decontamination {
 
@@ -37,24 +34,21 @@ object Decontamination {
         s"rule negates it), got ${dt.simpleString}")
   }
 
-  /** Explodes `textCol`'s shingles through the JVM-speed
+  /** Explodes `textCol`'s shingles into `__s` through the JVM-speed
     * [[graft.functions.WordShingleHashes]] generator — one tokenization
     * per row with no interpreted HOF in the corpus-wide fan-out (the r12
-    * lesson). Hash-keyed callers (`withHashes = true`) get `__sh` ALONE
-    * (the hash is bit-equal to `xxhash64` of the span string,
-    * parity-tested in CurationSpec) — every such caller keys on the hash
-    * and never reads the string, so since r21 the span column is not
-    * built at all. String-keyed callers pass `withHashes = false` and get
-    * `__s` alone, skipping the per-shingle XXH64 instead (ADVICE r15 —
-    * the unhashed paths were computing and discarding it).
+    * lesson), and no per-shingle XXH64, since every caller keys on the
+    * string.
     */
   private def explodedShingles(
-      df: DataFrame, textCol: String, n: Int, keep: Seq[Column],
-      withHashes: Boolean): DataFrame =
+      df: DataFrame, textCol: String, n: Int, keep: Seq[Column]): DataFrame =
     df.select(keep :+
       graft.functions.WordShingleHashesFunction
-        .wordShingleHashes(col(textCol), n, withHashes, withSpans = !withHashes)
-        .as(if (withHashes) Seq("__sh") else Seq("__s")): _*)
+        .wordShingleHashes(col(textCol), n, withHashes = false, withSpans = true)
+        .as(Seq("__s")): _*)
+
+  private def requireNoShingleColumn(dfs: DataFrame*): Unit =
+    require(dfs.forall(!_.columns.contains("__s")), "__s is reserved by Decontamination")
 
   /** One row per CONTAMINATED training doc: (`idCol`, n_shared) where
     * n_shared counts the distinct n-gram shingles the doc shares with the
@@ -65,25 +59,13 @@ object Decontamination {
       evalDocs: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int,
-      hashed: Boolean = false): DataFrame = {
+      n: Int): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    require(Seq(train, evalDocs).forall(d =>
-        !d.columns.contains("__sh") && !d.columns.contains("__s")),
-      "__sh/__s are reserved by Decontamination")
-    // the 100 TB form: join on the 64-bit hash of the shingle instead of
-    // the string — a 5-gram averages ~30 bytes, so hashing cuts the
-    // distinct + join shuffle bytes ~4× (and more for larger n); a
-    // collision can only ADD a spurious flag (never hide a real one), with
-    // ~n_shingles²/2⁶⁴ probability
-    // hashed=true keys on the generator's precomputed __sh (≡ xxhash64(__s));
-    // hashed=false skips the hash pass entirely (withHashes threads down)
-    val key: Column = if (hashed) col("__sh") else col("__s")
-    val evalShingles = explodedShingles(evalDocs, textCol, n, keep = Nil, withHashes = hashed)
-      .select(key.as("shingle")).distinct()
-    val trainShingles = explodedShingles(train, textCol, n, keep = Seq(col(idCol)),
-        withHashes = hashed)
-      .select(col(idCol), key.as("shingle"))
+    requireNoShingleColumn(train, evalDocs)
+    val evalShingles = explodedShingles(evalDocs, textCol, n, keep = Nil)
+      .select(col("__s").as("shingle")).distinct()
+    val trainShingles = explodedShingles(train, textCol, n, keep = Seq(col(idCol)))
+      .select(col(idCol), col("__s").as("shingle"))
     // join BEFORE deduplicating the train side: the eval set is small
     // (benchmark-sized), so the join broadcasts and filters ~every train
     // shingle map-side — only the matching (doc, shingle) pairs (tiny)
@@ -155,19 +137,13 @@ object Decontamination {
       evalDocs: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int,
-      hashed: Boolean = false): DataFrame = {
+      n: Int): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    require(Seq(train, evalDocs).forall(d =>
-        !d.columns.contains("__sh") && !d.columns.contains("__s")),
-      "__sh/__s are reserved by Decontamination")
-    val key: Column = if (hashed) col("__sh") else col("__s")
-    val evalShingles = explodedShingles(evalDocs, textCol, n,
-        keep = Seq(col(idCol)), withHashes = hashed)
-      .select(col(idCol).as("eval_id"), key.as("shingle")).distinct()
-    val trainShingles = explodedShingles(train, textCol, n,
-        keep = Seq(col(idCol)), withHashes = hashed)
-      .select(col(idCol).as("train_id"), key.as("shingle"))
+    requireNoShingleColumn(train, evalDocs)
+    val evalShingles = explodedShingles(evalDocs, textCol, n, keep = Seq(col(idCol)))
+      .select(col(idCol).as("eval_id"), col("__s").as("shingle")).distinct()
+    val trainShingles = explodedShingles(train, textCol, n, keep = Seq(col(idCol)))
+      .select(col(idCol).as("train_id"), col("__s").as("shingle"))
     trainShingles.join(broadcast(evalShingles), Seq("shingle"))
       .select(col("train_id"), col("eval_id"), col("shingle")).distinct()
       .groupBy(col("train_id"), col("eval_id"))
@@ -347,19 +323,13 @@ object Decontamination {
       evalDocs: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int,
-      hashed: Boolean = false): DataFrame = {
+      n: Int): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    require(Seq(train, evalDocs).forall(d =>
-        !d.columns.contains("__sh") && !d.columns.contains("__s")),
-      "__sh/__s are reserved by Decontamination")
-    val key: Column = if (hashed) col("__sh") else col("__s")
-    val evalShingles = explodedShingles(evalDocs, textCol, n, keep = Seq(col(idCol)),
-        withHashes = hashed)
-      .select(col(idCol).as("eval_id"), key.as("shingle")).distinct()
-    val trainShingles = explodedShingles(train, textCol, n, keep = Seq(col(idCol)),
-        withHashes = hashed)
-      .select(col(idCol).as("__train_id"), key.as("shingle"))
+    requireNoShingleColumn(train, evalDocs)
+    val evalShingles = explodedShingles(evalDocs, textCol, n, keep = Seq(col(idCol)))
+      .select(col(idCol).as("eval_id"), col("__s").as("shingle")).distinct()
+    val trainShingles = explodedShingles(train, textCol, n, keep = Seq(col(idCol)))
+      .select(col(idCol).as("__train_id"), col("__s").as("shingle"))
     val pairs = Dedup.cache(trainShingles
       .join(broadcast(evalShingles), Seq("shingle"))
       .select(col("eval_id"), col("__train_id"), col("shingle"))
@@ -405,8 +375,7 @@ object Decontamination {
     require(Seq(train, evalDocs).forall(d =>
         !d.columns.exists(Set("__s", "__pos", "__hits", "__shingle"))),
       "__s/__pos/__hits/__shingle are reserved by maskContaminatedSpans")
-    val evalShingles = explodedShingles(evalDocs, textCol, n, keep = Nil,
-        withHashes = false)
+    val evalShingles = explodedShingles(evalDocs, textCol, n, keep = Nil)
       .select(col("__s").as("__shingle")).distinct()
     val positioned = train.select(col(idCol),
       graft.functions.WordShingleHashesFunction

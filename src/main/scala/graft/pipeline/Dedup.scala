@@ -42,6 +42,12 @@ object Dedup {
     */
   val defaultBucketCap: Int = 128
 
+  // the columns the text and the vector operators read
+  private val DocId = "doc_id"
+  private val Text = "text"
+  private val VecId = "vec_id"
+  private val Embedding = "embedding"
+
   private val capSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Keep the first `cap` members (by ascending id — deterministic) of each
@@ -282,16 +288,16 @@ object Dedup {
   /** Exact dedup: hash-groupBy on the full text. Returns one row per
     * distinct text with the representative (minimum) id and the copy count.
     */
-  def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.groupBy(col(textCol))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
-      .select(col("keep_id"), col("n_copies"), col(textCol))
+  def exact(docs: DataFrame): DataFrame =
+    docs.groupBy(col(Text))
+      .agg(min(col(DocId)).as("keep_id"), count(lit(1)).as("n_copies"))
+      .select(col("keep_id"), col("n_copies"), col(Text))
 
   /** One row per DISTINCT text: (id = min doc id, text). The exact-duplicate
     * pre-pass all near-dup operators build on.
     */
-  private def distinctTexts(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.groupBy(col(textCol)).agg(min(col(idCol)).as("id"))
+  private def distinctTexts(docs: DataFrame): DataFrame =
+    docs.groupBy(col(Text)).agg(min(col(DocId)).as("id"))
 
   /** Incremental ingest dedup: drop every `incoming` row whose `textCol`
     * already exists in `history` — the continuous-crawl gate ("have we
@@ -358,16 +364,11 @@ object Dedup {
     * so `first(sig)` is deterministic.
     */
   def minhashSignatures(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 64,
-      shingleSize: Int = 3,
-      seed: Long = 42L): DataFrame =
+      docs: DataFrame): DataFrame =
     docs.select(
-        col(idCol).as("id"),
-        md5(col(textCol).cast("binary")).as("content_hash"),
-        minhashSignature(tokens(textCol), numHashes, shingleSize, seed).as("sig"))
+        col(DocId).as("id"),
+        md5(col(Text).cast("binary")).as("content_hash"),
+        minhashSignature(tokens(Text)).as("sig"))
       .groupBy(col("content_hash"))
       .agg(min(col("id")).as("id"), first(col("sig")).as("sig"))
       .select(col("id"), col("sig"))
@@ -377,13 +378,8 @@ object Dedup {
     * [[ngramJaccardPairs]]: shingle sets AND signatures) pay the full-text
     * shuffle of the dedup pre-pass once instead of once per derivation.
     */
-  private def signaturesOfReps(
-      reps: DataFrame,
-      textCol: String,
-      numHashes: Int,
-      shingleSize: Int = 3,
-      seed: Long = 42L): DataFrame =
-    reps.select(col("id"), minhashSignature(tokens(textCol), numHashes, shingleSize, seed).as("sig"))
+  private def signaturesOfReps(reps: DataFrame): DataFrame =
+    reps.select(col("id"), minhashSignature(tokens(Text)).as("sig"))
 
   /** LSH candidate pairs from banded signatures: slim (id, band, band_hash)
     * stream → bucket-capped self-join on (band, band_hash) → id pairs. With
@@ -402,8 +398,7 @@ object Dedup {
   def bandCandidates(
       sigs: DataFrame,
       numHashes: Int,
-      bands: Int,
-      bucketCap: Int = defaultBucketCap): DataFrame = {
+      bands: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     // bandHashes is a native codegen'd expression: one pass over the
     // signature, no per-band array slices (the r2 transform/hash(slice)
@@ -419,7 +414,7 @@ object Dedup {
     // sort+window chain ran twice per query). The cache is bounded like
     // the sigs cache it derives from: ≤ `bands` (id, band, hash) rows per
     // distinct doc — never corpus-text-sized.
-    val capped = cache(capBuckets(banded, bucketCap, "band", "band_hash"))
+    val capped = cache(capBuckets(banded, defaultBucketCap, "band", "band_hash"))
     val a = capped.as("a"); val b = capped.as("b")
     a.join(b,
         col("a.band") === col("b.band") &&
@@ -434,17 +429,12 @@ object Dedup {
     */
   def minhashPairs(
       docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.5,
-      bucketCap: Int = defaultBucketCap): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     // cached: read by the band stream and twice by the verify join. Tiny
     // (numHashes longs per distinct doc), so the cache never pressures
     // executor memory even at large n. Caller clears via [[clearCaches]].
-    val sigs = cache(minhashSignatures(docs, idCol, textCol, numHashes))
-    val candidates = bandCandidates(sigs, numHashes, bands, bucketCap)
+    val sigs = cache(minhashSignatures(docs))
+    val candidates = bandCandidates(sigs, numHashes = 64, bands = 16)
     candidates
       .join(sigs.select(col("id"), col("sig").as("sig_a")), col("id_a") === col("id"))
       .drop("id")
@@ -481,17 +471,14 @@ object Dedup {
     */
   def simhashPairs(
       docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      maxHamming: Int = 3,
-      bucketCap: Int = defaultBucketCap): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming must be in [0, 15] (chunks need >= 4 bits to stay selective), got $maxHamming")
-    val sims = docs.select(col(idCol).as("id"), simhash64(tokens(textCol)).as("sh"))
+    val sims = docs.select(col(DocId).as("id"), simhash64(tokens(Text)).as("sh"))
     val keyed = sims.select(
       col("id"), col("sh"),
       explode(simhashBucketKeys(col("sh"), maxHamming)).as("bkey"))
-    val capped = capBuckets(keyed, bucketCap, "bkey")
+    val capped = capBuckets(keyed, defaultBucketCap, "bkey")
     val a = capped.as("a"); val b = capped.as("b")
     a.join(b, col("a.bkey") === col("b.bkey") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -511,11 +498,8 @@ object Dedup {
     */
   def ngramJaccardPairs(
       docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
       n: Int = 3,
-      threshold: Double = 0.3,
-      bucketCap: Int = defaultBucketCap): DataFrame = {
+      threshold: Double = 0.3): DataFrame = {
     // one dedup pre-pass (full-text shuffle) feeds BOTH derivations.
     // Shingles are stored as 64-bit hashes, not strings: set operations and
     // shuffles carry 8 bytes per shingle instead of the n-gram text
@@ -526,19 +510,19 @@ object Dedup {
     // O(words²) per doc AND interpreted (higher-order fns are
     // CodegenFallback). Its sorted-distinct output feeds jaccardSorted's
     // O(|a|+|b|) merge below.
-    val reps = cache(distinctTexts(docs, idCol, textCol))
+    val reps = cache(distinctTexts(docs))
     // deliberately NOT cached (r22, probed): the verify join reads this
     // frame twice (sh_a and sh_b broadcast builds), but caching it
     // value-serializes every shingle-hash array into storage and measured
     // SLOWER than recomputing the map-side ShingleHashes pass over the
     // cached reps (run_ms 748 → 830 with the cache) — the same trade the
     // r21 bigram-cache removal documented.
-    val shingled = reps.select(col("id"), shingleHashes(tokens(textCol), n).as("shingles"))
+    val shingled = reps.select(col("id"), shingleHashes(tokens(Text), n).as("shingles"))
 
-    val sigs = cache(signaturesOfReps(reps, textCol, numHashes = 64))
+    val sigs = cache(signaturesOfReps(reps))
     // 32 bands of 2 hashes: band-match probability s² per band — high recall
     // down to low Jaccard, exact verify prunes false positives after.
-    val candidates = bandCandidates(sigs, numHashes = 64, bands = 32, bucketCap)
+    val candidates = bandCandidates(sigs, numHashes = 64, bands = 32)
 
     candidates
       .join(shingled.select(col("id"), col("shingles").as("sh_a")), col("id_a") === col("id")).drop("id")
@@ -599,9 +583,9 @@ object Dedup {
     * is set, or with the checkpoint directory itself.
     */
   def connectedComponents(
-      pairs: DataFrame, maxIters: Int = 20, jumps: Int = 2,
+      pairs: DataFrame, maxIters: Int = 20,
       driverFinishEdges: Long = 1L << 20): DataFrame =
-    connectedComponentsIters(pairs, maxIters, jumps, driverFinishEdges)._1
+    connectedComponentsIters(pairs, maxIters, driverFinishEdges = driverFinishEdges)._1
 
   /** [[connectedComponents]] also returning the round count it took to
     * converge (the final confirming no-change round included) — spec hook
@@ -645,12 +629,6 @@ object Dedup {
     require(jumps >= 1 && jumps <= 4,
       s"jumps must be in [1, 4] (each extra jump is a label-sized exchange " +
         s"per round; past ~4 the plan depth costs more than rounds save), got $jumps")
-    connectedComponentsLoop(pairs, maxIters, jumps, driverFinishEdges)
-  }
-
-  private def connectedComponentsLoop(
-      pairs: DataFrame, maxIters: Int, jumps: Int,
-      driverFinishEdges: Long): (DataFrame, Int) = {
     // Reliable checkpoints when the session has durable checkpoint storage
     // configured, executor-local otherwise (see the scaladoc trade-off).
     val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
@@ -964,9 +942,8 @@ object Dedup {
   def dropNearDuplicates(
       docs: DataFrame,
       pairs: DataFrame,
-      idCol: String = "doc_id",
-      maxIters: Int = 20): DataFrame = {
-    val nonReps = connectedComponents(pairs, maxIters)
+      idCol: String = "doc_id"): DataFrame = {
+    val nonReps = connectedComponents(pairs)
       .filter(col("component") =!= col("id"))
       .select(col("id").as("__drop_id"))
     docs.join(nonReps, docs(idCol) === col("__drop_id"), "left_anti")
@@ -977,23 +954,18 @@ object Dedup {
     * for recall), pairs are verified with exact cosine ≥ `threshold` inside
     * each (capped) bucket only.
     *
-    * Sizing at scale: buckets ≈ 2^bits, so choose
-    * bits ≈ log2(n / desired_bucket_size) — e.g. 10⁹ vectors and ~4k-vector
-    * buckets → bits ≈ 18. The cap bounds the worst bucket regardless.
+    * Each table codes 8 sign bits (256 buckets); the cap bounds the worst
+    * bucket.
     */
   def embeddingNearDupPairs(
       embeddings: DataFrame,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      bits: Int = 8,
-      threshold: Double = 0.95,
-      bucketCap: Int = defaultBucketCap): DataFrame = {
+      threshold: Double = 0.95): DataFrame = {
     def table(seed: Long): DataFrame = {
       val bucketed = capBuckets(
         embeddings.select(
-          col(idCol).as("id"), col(vecCol).as("v"),
-          hyperplaneBucket(col(vecCol), bits, seed).as("bucket")),
-        bucketCap, "bucket")
+          col(VecId).as("id"), col(Embedding).as("v"),
+          hyperplaneBucket(col(Embedding), 8, seed).as("bucket")),
+        defaultBucketCap, "bucket")
       val a = bucketed.as("a"); val b = bucketed.as("b")
       a.join(b, col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -1013,7 +985,7 @@ object Dedup {
     * clustering adapts the partition to the corpus's actual density — the
     * published SemDeDup recipe for paraphrase-level dedup of web corpora.
     *
-    * Scale: k ≈ sqrt(n) clusters learned on a sample (`learnFraction`),
+    * Scale: k ≈ sqrt(n) clusters learned in two Lloyd iterations,
     * assignment map-side, one shuffle on cid, pair budget bounded by
     * `bucketCap` per cluster.
     *
@@ -1034,11 +1006,10 @@ object Dedup {
     * the off-path model build ([[learnSemanticCentroids]]) so both learn
     * and pair over the same representative set.
     */
-  private def distinctVectors(
-      embeddings: DataFrame, idCol: String, vecCol: String): DataFrame =
+  private def distinctVectors(embeddings: DataFrame): DataFrame =
     embeddings.select(
-        col(idCol).as("id"), col(vecCol).as("v"),
-        struct(xxhash64(col(vecCol)).as("h1"), hash(col(vecCol)).as("h2")).as("ck"))
+        col(VecId).as("id"), col(Embedding).as("v"),
+        struct(xxhash64(col(Embedding)).as("h1"), hash(col(Embedding)).as("h2")).as("ck"))
       .groupBy(col("ck"))
       .agg(min(col("id")).as("id"), first(col("v")).as("v"))
 
@@ -1055,21 +1026,13 @@ object Dedup {
     */
   def learnSemanticCentroids(
       embeddings: DataFrame,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      k: Int = 16,
-      iters: Int = 2,
-      learnFraction: Double = 1.0): Seq[Seq[Float]] =
+      k: Int = 16): Seq[Seq[Float]] =
     Similarity.learnCentroids(
-      distinctVectors(embeddings, idCol, vecCol), k, iters, learnFraction, "id", "v")
+      distinctVectors(embeddings), k, 2, 1.0, "id", "v")
 
   def semanticNearDupPairs(
       embeddings: DataFrame,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
       k: Int = 16,
-      iters: Int = 2,
-      learnFraction: Double = 1.0,
       threshold: Double = 0.95,
       bucketCap: Int = defaultBucketCap,
       centroids: Option[Seq[Seq[Float]]] = None): DataFrame = {
@@ -1079,8 +1042,8 @@ object Dedup {
     // Cached: read by the rep aggregation and the copy→rep star join
     // (caller clears, [[clearCaches]]).
     val keyed = cache(embeddings.select(
-      col(idCol).as("id"), col(vecCol).as("v"),
-      struct(xxhash64(col(vecCol)).as("h1"), hash(col(vecCol)).as("h2")).as("ck")))
+      col(VecId).as("id"), col(Embedding).as("v"),
+      struct(xxhash64(col(Embedding)).as("h1"), hash(col(Embedding)).as("h2")).as("ck")))
     val reps = cache(keyed.groupBy(col("ck"))
       .agg(min(col("id")).as("id"), first(col("v")).as("v")))
     // star pairs: every non-representative exact copy ↔ its (min-id) rep.
@@ -1096,7 +1059,7 @@ object Dedup {
     // rep set [[learnSemanticCentroids]] uses, so both paths cluster
     // identically for a fixed input
     val cents = centroids.getOrElse(
-      Similarity.learnCentroids(reps, k, iters, learnFraction, "id", "v"))
+      Similarity.learnCentroids(reps, k, 2, 1.0, "id", "v"))
     val assigned = capBuckets(
       reps.select(col("id"), col("v"), nearestCentroid(col("v"), cents).as("cid")),
       bucketCap, "cid")
@@ -1116,18 +1079,12 @@ object Dedup {
     */
   def dropSemanticDuplicates(
       embeddings: DataFrame,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
       k: Int = 16,
-      iters: Int = 2,
-      learnFraction: Double = 1.0,
       threshold: Double = 0.95,
-      bucketCap: Int = defaultBucketCap,
       centroids: Option[Seq[Seq[Float]]] = None): DataFrame =
     dropNearDuplicates(
       embeddings,
-      semanticNearDupPairs(embeddings, idCol, vecCol, k, iters, learnFraction,
-          threshold, bucketCap, centroids)
+      semanticNearDupPairs(embeddings, k = k, threshold = threshold, centroids = centroids)
         .select(col("id_a"), col("id_b")),
-      idCol)
+      VecId)
 }

@@ -242,9 +242,8 @@ object Multimodal {
     * GIFs, the block index for the fallback. flatMap — the row-explosion
     * shape a real decoder produces, partition-wise, no shuffle.
     */
-  def frameSample(docs: DataFrame, maxFrames: Int = 5): Dataset[SampledFrame] =
-    frameSamplePayload(
-      docs.select(col("doc_id"), col("text").cast("binary").as("payload")), maxFrames)
+  def frameSample(docs: DataFrame): Dataset[SampledFrame] =
+    frameSamplePayload(docs.select(col("doc_id"), col("text").cast("binary").as("payload")))
 
   /** [[frameSample]] over an (doc_id, payload binary) frame. */
   def frameSamplePayload(media: DataFrame, maxFrames: Int = 5): Dataset[SampledFrame] = {
@@ -442,17 +441,16 @@ object Multimodal {
     * [[phashNearDupPairs]] is the real, production-shaped part — swap this
     * one projection for a real pHash and nothing downstream changes.
     */
-  def pHashStub(media: DataFrame, idCol: String = "doc_id"): DataFrame =
-    media.select(col(idCol),
+  def pHashStub(media: DataFrame): DataFrame =
+    media.select(col("doc_id"),
       conv(substring(md5(col("payload")), 1, 15), 16, 10).cast("long").as("phash"))
 
   /** The (id, phash, band, bits) band explode of [[phashNearDupPairs]] —
     * one struct per pigeonhole band of the 60-bit hash, map-side.
     */
   private def phashBands(
-      hashed: DataFrame,
-      maxHamming: Int,
-      idCol: String): DataFrame = {
+      phashes: DataFrame,
+      maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 59,
       s"maxHamming must be in [0, 59], got $maxHamming")
     val nBands = maxHamming + 1
@@ -463,8 +461,8 @@ object Multimodal {
         shiftrightunsigned(col("phash"), offsets(b))
           .bitwiseAND(lit((1L << widths(b)) - 1)).as("bits"))
     }
-    hashed
-      .select(col(idCol).as("id"), col("phash"),
+    phashes
+      .select(col("doc_id").as("id"), col("phash"),
         explode(array(bandCols: _*)).as("bd"))
       .select(col("id"), col("phash"),
         col("bd.band").as("band"), col("bd.bits").as("bits"))
@@ -481,12 +479,10 @@ object Multimodal {
     * set; returns (id_a < id_b, hamming).
     */
   def phashNearDupPairs(
-      hashed: DataFrame,
-      maxHamming: Int = 5,
-      idCol: String = "doc_id",
-      bucketCap: Int = Dedup.defaultBucketCap): DataFrame = {
-    val banded = phashBands(hashed, maxHamming, idCol)
-    val capped = Dedup.capBuckets(banded, bucketCap, "band", "bits")
+      phashes: DataFrame,
+      maxHamming: Int = 5): DataFrame = {
+    val banded = phashBands(phashes, maxHamming)
+    val capped = Dedup.capBuckets(banded, Dedup.defaultBucketCap, "band", "bits")
     capped.as("a").join(capped.as("b"),
         col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
           col("a.id") < col("b.id"))

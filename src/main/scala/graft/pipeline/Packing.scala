@@ -55,7 +55,7 @@ object Packing {
   }
 
   /** The materializing form of [[packSequences]]: one row per (shard, pack)
-    * with the documents' text CONCATENATED in layout order, `sep` between
+    * with the documents' text CONCATENATED in layout order, ` <eos> ` between
     * documents — the final-mile step that turns a curated corpus into the
     * training sequences a tokenizer consumes. Doc order inside a pack is
     * the layout's (start_offset asc), recovered deterministically by
@@ -74,8 +74,7 @@ object Packing {
       textCol: String,
       tokensCol: String,
       seqLen: Int,
-      shards: Int,
-      sep: String = " <eos> "): DataFrame = {
+      shards: Int): DataFrame = {
     val packed = packSequences(df, idCol, tokensCol, seqLen, shards)
     packed.groupBy(col("shard"), col("pack"))
       .agg(count(lit(1)).as("n_docs"),
@@ -84,7 +83,7 @@ object Packing {
           transform(
             array_sort(collect_list(struct(col("start_offset"), col(textCol).as("t")))),
             s => s.getField("t")),
-          sep).as("pack_text"))
+          " <eos> ").as("pack_text"))
   }
 
   /** Fixed-window document chunking with overlap — the context-window split
@@ -97,17 +96,15 @@ object Packing {
   def chunkDocuments(
       df: DataFrame,
       chunkTokens: Int,
-      overlap: Int,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      overlap: Int): DataFrame = {
     require(chunkTokens > 0, s"chunkTokens must be positive, got $chunkTokens")
     require(overlap >= 0 && overlap < chunkTokens,
       s"need 0 <= overlap < chunkTokens, got overlap=$overlap chunkTokens=$chunkTokens")
     require(!df.columns.exists(Set("__w", "chunk_idx", "chunk_text", "n_chunk_tokens")),
       "chunk_idx/chunk_text/n_chunk_tokens/__w are reserved by chunkDocuments")
     val stride = chunkTokens - overlap
-    df.select(col(idCol), split(col(textCol), " ").as("__w"))
-      .select(col(idCol), posexplode(expr(
+    df.select(col("doc_id"), split(col("text"), " ").as("__w"))
+      .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, size(__w) - 1, $stride), " +
           s"s -> array_join(slice(__w, s + 1, $chunkTokens), ' '))"))
         .as(Seq("chunk_idx", "chunk_text")))

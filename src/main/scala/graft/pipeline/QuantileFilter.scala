@@ -10,11 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one aggregation produces a GROUP-sized (tiny) bounds table,
   * broadcast-joined back onto the corpus for a map-side band filter — the
-  * corpus itself is never shuffled. The default uses Spark's exact
+  * corpus itself is never shuffled. The bounds are Spark's exact
   * `percentile` (sort-based per group, fine for group-sized aggregation
-  * state); pass `exact = false` to swap in `approx_percentile`
-  * (t-digest, bounded memory) for 100 TB groups — same schema, same plan
-  * shape, bounded error instead of a full per-group sort.
+  * state).
   */
 object QuantileFilter {
 
@@ -23,22 +21,10 @@ object QuantileFilter {
       groupCol: String,
       valueCol: String,
       lo: Double,
-      hi: Double,
-      exact: Boolean = true): DataFrame = {
-    require(lo >= 0 && hi <= 1 && lo < hi, s"need 0 <= lo < hi <= 1, got lo=$lo hi=$hi")
-    val reserved = Set("__plo", "__phi")
-    require(!df.columns.exists(reserved),
-      s"input columns collide with QuantileFilter's reserved names: " +
-        df.columns.filter(reserved).mkString(", "))
-    val (fLo, fHi) =
-      if (exact) (s"percentile($valueCol, $lo)", s"percentile($valueCol, $hi)")
-      else (s"approx_percentile($valueCol, $lo)", s"approx_percentile($valueCol, $hi)")
-    val bounds = df.groupBy(col(groupCol))
-      .agg(expr(fLo).as("__plo"), expr(fHi).as("__phi"))
-    df.join(broadcast(bounds), Seq(groupCol))
+      hi: Double): DataFrame =
+    withBounds(df, groupCol, valueCol, lo, hi)
       .filter(col(valueCol) >= col("__plo") && col(valueCol) <= col("__phi"))
       .drop("__plo", "__phi")
-  }
 
   /** The clamping variant: instead of dropping band outliers, pin them to
     * the band edge (winsorization — keeps corpus size while bounding the
@@ -51,21 +37,25 @@ object QuantileFilter {
       groupCol: String,
       valueCol: String,
       lo: Double,
-      hi: Double,
-      exact: Boolean = true): DataFrame = {
+      hi: Double): DataFrame =
+    withBounds(df, groupCol, valueCol, lo, hi)
+      .withColumn(valueCol,
+        greatest(least(col(valueCol).cast("double"), col("__phi")), col("__plo")))
+      .drop("__plo", "__phi")
+
+  /** `df` with its group's `lo` and `hi` percentiles of `valueCol` joined
+    * on as `__plo` and `__phi`.
+    */
+  private def withBounds(
+      df: DataFrame, groupCol: String, valueCol: String, lo: Double, hi: Double): DataFrame = {
     require(lo >= 0 && hi <= 1 && lo < hi, s"need 0 <= lo < hi <= 1, got lo=$lo hi=$hi")
     val reserved = Set("__plo", "__phi")
     require(!df.columns.exists(reserved),
       s"input columns collide with QuantileFilter's reserved names: " +
         df.columns.filter(reserved).mkString(", "))
-    val (fLo, fHi) =
-      if (exact) (s"percentile($valueCol, $lo)", s"percentile($valueCol, $hi)")
-      else (s"approx_percentile($valueCol, $lo)", s"approx_percentile($valueCol, $hi)")
     val bounds = df.groupBy(col(groupCol))
-      .agg(expr(fLo).as("__plo"), expr(fHi).as("__phi"))
+      .agg(expr(s"percentile($valueCol, $lo)").as("__plo"),
+        expr(s"percentile($valueCol, $hi)").as("__phi"))
     df.join(broadcast(bounds), Seq(groupCol))
-      .withColumn(valueCol,
-        greatest(least(col(valueCol).cast("double"), col("__phi")), col("__plo")))
-      .drop("__plo", "__phi")
   }
 }

@@ -44,25 +44,25 @@ object Redaction {
   val IpMask = "[IP]"
 
   /** Per-document PII hit counts (all zero ⇒ clean doc). */
-  def piiReport(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+  def piiReport(docs: DataFrame): DataFrame =
     docs.select(
-      col(idCol),
-      regexp_count(col(textCol), lit(EmailPattern)).cast("long").as("n_emails"),
-      regexp_count(col(textCol), lit(PhonePattern)).cast("long").as("n_phones"),
-      regexp_count(col(textCol), lit(Ipv4Pattern)).cast("long").as("n_ips"))
+      col("doc_id"),
+      regexp_count(col("text"), lit(EmailPattern)).cast("long").as("n_emails"),
+      regexp_count(col("text"), lit(PhonePattern)).cast("long").as("n_phones"),
+      regexp_count(col("text"), lit(Ipv4Pattern)).cast("long").as("n_ips"))
 
-  /** The input with `textCol` rewritten: every email/phone/IPv4 match
+  /** The input with `text` rewritten: every email/phone/IPv4 match
     * replaced by its typed mask token, other columns untouched. Masking
     * order is email → phone → IP, so a pattern can never match inside an
     * already-placed mask token (the masks contain no digits or @).
     */
-  def redactPii(docs: DataFrame, textCol: String = "text"): DataFrame = {
+  def redactPii(docs: DataFrame): DataFrame = {
     val masked =
       regexp_replace(
         regexp_replace(
-          regexp_replace(col(textCol), lit(EmailPattern), lit(EmailMask)),
+          regexp_replace(col("text"), lit(EmailPattern), lit(EmailMask)),
           lit(PhonePattern), lit(PhoneMask)),
         lit(Ipv4Pattern), lit(IpMask))
-    docs.withColumn(textCol, masked)
+    docs.withColumn("text", masked)
   }
 }

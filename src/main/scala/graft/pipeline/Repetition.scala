@@ -38,17 +38,15 @@ object Repetition {
     */
   def ngramRepetition(
       docs: DataFrame,
-      n: Int,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      n: Int): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     docs
-      .select(col(idCol),
+      .select(col("doc_id"),
         graft.functions.TextFunctions
-          .repetitionProfile(split(lower(col(textCol)), " "), n).as("__r"))
+          .repetitionProfile(split(lower(col("text")), " "), n).as("__r"))
       .filter(col("__r").isNotNull)
       .select(
-        col(idCol),
+        col("doc_id"),
         col("__r.n_grams").as("n_grams"),
         col("__r.n_distinct").as("n_distinct"),
         col("__r.top_count").as("top_count"),
@@ -73,8 +71,7 @@ object Repetition {
       docs: DataFrame,
       n: Int,
       maxTopFraction: Double,
-      maxDupFraction: Double,
-      textCol: String = "text"): DataFrame = {
+      maxDupFraction: Double): DataFrame = {
     require(maxTopFraction > 0 && maxTopFraction <= 1, s"maxTopFraction in (0,1], got $maxTopFraction")
     require(maxDupFraction > 0 && maxDupFraction <= 1, s"maxDupFraction in (0,1], got $maxDupFraction")
     require(!docs.columns.contains("__r"), "__r is reserved by Repetition")
@@ -86,7 +83,7 @@ object Repetition {
     docs
       .withColumn("__r",
         graft.functions.TextFunctions
-          .repetitionProfile(split(lower(col(textCol)), " "), n))
+          .repetitionProfile(split(lower(col("text")), " "), n))
       .filter(!flaggedRow)
       .drop("__r")
   }

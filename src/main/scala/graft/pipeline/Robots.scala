@@ -37,6 +37,11 @@ object Robots {
   final case class Group(
       agents: Seq[String], rules: Seq[Rule], crawlDelay: Option[Double] = None)
 
+  // the frontier columns the frame operators read
+  private val Host = "host"
+  private val Path = "path"
+  private val RobotsTxt = "robots_txt"
+
   /** Parse a robots.txt body into user-agent groups. Unknown fields and
     * comments are skipped.
     */
@@ -117,10 +122,9 @@ object Robots {
     */
   def discoverSitemaps(
       frontier: DataFrame,
-      idCol: String = "doc_id",
-      robotsCol: String = "robots_txt"): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-    val proj = frontier.select(col(idCol), col(robotsCol)).where(col(idCol).isNotNull)
+    val proj = frontier.select(col(idCol), col(RobotsTxt)).where(col(idCol).isNotNull)
     val outSchema = StructType(Seq(
       proj.schema.fields(0),
       StructField("sitemap_idx", IntegerType, nullable = false),
@@ -327,9 +331,6 @@ object Robots {
       frontier: DataFrame,
       userAgent: String,
       defaultDelaySec: Double = 1.0,
-      hostCol: String = "host",
-      pathCol: String = "path",
-      robotsCol: String = "robots_txt",
       maxPerWave: Long = 1L << 18,
       rowCount: Long = -1L): DataFrame = {
     require(defaultDelaySec >= 0, s"defaultDelaySec must be >= 0, got $defaultDelaySec")
@@ -339,8 +340,8 @@ object Robots {
       s"input columns collide with schedule's reserved names: ${frontier.columns.filter(reserved).mkString(", ")}")
     val spark = frontier.sparkSession
     import spark.implicits._
-    val hosted = frontier.where(col(hostCol).isNotNull)
-    val delays = hosted.select(col(hostCol), col(robotsCol)).distinct()
+    val hosted = frontier.where(col(Host).isNotNull)
+    val delays = hosted.select(col(Host), col(RobotsTxt)).distinct()
       .as[(String, String)]
       .mapPartitions { rows =>
         rows.map { case (host, robots) =>
@@ -349,10 +350,10 @@ object Robots {
           (host, d.getOrElse(defaultDelaySec))
         }
       }
-      .toDF(hostCol, "__delay")
-      .groupBy(col(hostCol)).agg(max(col("__delay")).as("__delay"))
-    val withDelay = hosted.join(delays, Seq(hostCol))
-      .withColumn("__surt", Urls.surtOf(col(hostCol), col(pathCol)))
+      .toDF(Host, "__delay")
+      .groupBy(col(Host)).agg(max(col("__delay")).as("__delay"))
+    val withDelay = hosted.join(delays, Seq(Host))
+      .withColumn("__surt", Urls.surtOf(col(Host), col(Path)))
     // one cheap aggregate job decides the plan: a frontier that fits one
     // wave keeps the plain per-host window (no extra exchanges). A caller
     // that already knows the frontier's row count passes it via rowCount
@@ -365,12 +366,12 @@ object Robots {
       }
     if (nWaves <= 1) {
       val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(hostCol)).orderBy(col("__surt"))
+        .partitionBy(col(Host)).orderBy(col("__surt"))
       withDelay
-        .select(col(hostCol), col(pathCol),
+        .select(col(Host), col(Path),
           row_number().over(w).as("fetch_seq"),
           col("__delay"), col("__surt"))
-        .select(col(hostCol), col(pathCol), col("fetch_seq"),
+        .select(col(Host), col(Path), col("fetch_seq"),
           ((col("fetch_seq") - 1).cast("double") * col("__delay")).as("not_before_sec"),
           col("__surt").as("surt"))
     } else {
@@ -399,24 +400,24 @@ object Robots {
       val sliced = Dedup.lazyCheckpoint(withDelay
         .repartitionByRange(nWaves.toInt, col("__surt"))
         .withColumn("__wave", spark_partition_id()))
-      val byHost = org.apache.spark.sql.expressions.Window.partitionBy(col(hostCol))
+      val byHost = org.apache.spark.sql.expressions.Window.partitionBy(col(Host))
       val offW = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(hostCol)).orderBy(col("__wave"))
+        .partitionBy(col(Host)).orderBy(col("__wave"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val offsets = sliced.groupBy(col("__wave"), col(hostCol))
+      val offsets = sliced.groupBy(col("__wave"), col(Host))
         .agg(count(lit(1)).as("__wave_rows"))
         .withColumn("__nw", count(lit(1)).over(byHost))
         .withColumn("__seq_off", coalesce(sum(col("__wave_rows")).over(offW), lit(0L)))
         .filter(col("__nw") > 1) // spanning hosts only — wave-bounded
-        .select(col("__wave"), col(hostCol), col("__seq_off"))
+        .select(col("__wave"), col(Host), col("__seq_off"))
       val localW = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("__wave"), col(hostCol)).orderBy(col("__surt"))
-      sliced.join(broadcast(offsets), Seq("__wave", hostCol), "left")
-        .select(col(hostCol), col(pathCol),
+        .partitionBy(col("__wave"), col(Host)).orderBy(col("__surt"))
+      sliced.join(broadcast(offsets), Seq("__wave", Host), "left")
+        .select(col(Host), col(Path),
           (row_number().over(localW) + coalesce(col("__seq_off"), lit(0L)))
             .cast("int").as("fetch_seq"),
           col("__delay"), col("__surt"))
-        .select(col(hostCol), col(pathCol), col("fetch_seq"),
+        .select(col(Host), col(Path), col("fetch_seq"),
           ((col("fetch_seq") - 1).cast("double") * col("__delay")).as("not_before_sec"),
           col("__surt").as("surt"))
     }
@@ -429,11 +430,9 @@ object Robots {
     */
   def filterAllowed(
       frontier: DataFrame,
-      userAgent: String,
-      pathCol: String = "path",
-      robotsCol: String = "robots_txt"): DataFrame = {
-    val pIdx = frontier.schema.fieldIndex(pathCol)
-    val rIdx = frontier.schema.fieldIndex(robotsCol)
+      userAgent: String): DataFrame = {
+    val pIdx = frontier.schema.fieldIndex(Path)
+    val rIdx = frontier.schema.fieldIndex(RobotsTxt)
     implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
       org.apache.spark.sql.Encoders.row(frontier.schema)
     frontier.mapPartitions { rows =>
@@ -450,13 +449,10 @@ object Robots {
     */
   def withAllowed(
       frontier: DataFrame,
-      userAgent: String,
-      idCol: String = "doc_id",
-      pathCol: String = "path",
-      robotsCol: String = "robots_txt"): Dataset[RobotsDecision] = {
+      userAgent: String): Dataset[RobotsDecision] = {
     val spark = frontier.sparkSession
     import spark.implicits._
-    frontier.select(col(idCol).cast("long"), col(pathCol), col(robotsCol))
+    frontier.select(col("doc_id").cast("long"), col(Path), col(RobotsTxt))
       .as[(Long, String, String)]
       .mapPartitions { rows =>
         val decide = newDecider(userAgent)

@@ -12,9 +12,13 @@ import org.apache.spark.sql.functions._
   */
 object Search {
 
-  private def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol), explode(split(lower(col(textCol)), " ")).as("term"))
-      .groupBy(col("term"), col(idCol))
+  // the corpus columns every search reads
+  private val DocId = "doc_id"
+  private val Text = "text"
+
+  private def postings(docs: DataFrame): DataFrame =
+    docs.select(col(DocId), explode(split(lower(col(Text)), " ")).as("term"))
+      .groupBy(col("term"), col(DocId))
       .agg(count(lit(1)).as("tf"))
 
   /** Conjunctive (AND) search: documents containing EVERY query term, with
@@ -24,17 +28,15 @@ object Search {
     */
   def searchAll(
       docs: DataFrame,
-      terms: Seq[String],
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      terms: Seq[String]): DataFrame = {
     val distinctTerms = terms.map(_.toLowerCase).distinct
     require(distinctTerms.nonEmpty, "terms must be non-empty")
-    postings(docs, idCol, textCol).filter(col("term").isin(distinctTerms: _*))
-      .groupBy(col(idCol))
+    postings(docs).filter(col("term").isin(distinctTerms: _*))
+      .groupBy(col(DocId))
       .agg(count(lit(1)).as("__hits"), sum(col("tf")).as("total_tf"))
       // postings are (term, doc)-unique, so count(*) counts distinct terms
       .filter(col("__hits") === distinctTerms.length)
-      .select(col(idCol), col("total_tf"))
+      .select(col(DocId), col("total_tf"))
   }
 
   /** Disjunctive ranked (OR) search: top-`k` documents by summed
@@ -49,9 +51,7 @@ object Search {
   def searchRanked(
       docs: DataFrame,
       terms: Seq[String],
-      k: Int = 10,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      k: Int = 10): DataFrame = {
     val distinctTerms = terms.map(_.toLowerCase).distinct
     require(distinctTerms.nonEmpty, "terms must be non-empty")
     require(k > 0, s"k must be positive, got $k")
@@ -60,17 +60,17 @@ object Search {
     // clears between queries). The isin prune keeps the cached frame
     // query-term-sized, not corpus-sized.
     val matched = Dedup.cache(
-      postings(docs, idCol, textCol).filter(col("term").isin(distinctTerms: _*)))
+      postings(docs).filter(col("term").isin(distinctTerms: _*)))
     val dfCounts = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     matched
       .join(broadcast(dfCounts), Seq("term"))
       .crossJoin(broadcast(nDocs))
-      .groupBy(col(idCol))
+      .groupBy(col(DocId))
       .agg(round(sum(col("tf").cast("double") * col("n_docs").cast("double") /
         col("df").cast("double")), 6).as("score"),
         count(lit(1)).as("n_terms"))
-      .orderBy(col("score").desc, col(idCol))
+      .orderBy(col("score").desc, col(DocId))
       .limit(k)
   }
 
@@ -92,22 +92,20 @@ object Search {
     */
   def searchPhrase(
       docs: DataFrame,
-      phrase: String,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      phrase: String): DataFrame = {
     val words = phrase.toLowerCase.split(" ").filter(_.nonEmpty)
     require(words.nonEmpty, "phrase must contain at least one word")
     val needle = words.mkString(" ")
     val pat = "(?=(?:^| )" + java.util.regex.Pattern.quote(needle) + "(?: |$))"
     docs
-      .select(col(idCol),
-        regexp_count(lower(col(textCol)), lit(pat)).cast("int").as("n_occurrences"))
+      .select(col(DocId),
+        regexp_count(lower(col(Text)), lit(pat)).cast("int").as("n_occurrences"))
       .filter(col("n_occurrences") > 0)
   }
 
   /** Okapi BM25 top-`k` — the length-normalized ranking [[searchRanked]]'s
     * ratio-idf deliberately is not: long documents stop winning on raw term
-    * count once tf saturates at `k1 + 1`, and per-term weight is the
+    * count once tf saturates at `k1 + 1` (k1 = 1.2), and per-term weight is the
     * always-positive Lucene idf `ln(1 + (N - df + ½)/(df + ½))`.
     *
     * Scale shape: document length is computed in the SAME map-side pass as
@@ -124,21 +122,18 @@ object Search {
       docs: DataFrame,
       terms: Seq[String],
       k: Int = 10,
-      k1: Double = 1.2,
-      b: Double = 0.75,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      b: Double = 0.75): DataFrame = {
     val distinctTerms = terms.map(_.toLowerCase).distinct
     require(distinctTerms.nonEmpty, "terms must be non-empty")
     require(k > 0, s"k must be positive, got $k")
-    require(k1 >= 0 && b >= 0 && b <= 1, s"need k1 >= 0, 0 <= b <= 1; got k1=$k1 b=$b")
-    val toks = docs.select(col(idCol),
-      split(lower(col(textCol)), " ").as("__toks"))
+    require(b >= 0 && b <= 1, s"need 0 <= b <= 1, got $b")
+    val toks = docs.select(col(DocId),
+      split(lower(col(Text)), " ").as("__toks"))
     val matched = Dedup.cache(toks
-      .select(col(idCol), size(col("__toks")).as("dl"),
+      .select(col(DocId), size(col("__toks")).as("dl"),
         explode(col("__toks")).as("term"))
       .filter(col("term").isin(distinctTerms: _*))
-      .groupBy(col(idCol), col("dl"), col("term"))
+      .groupBy(col(DocId), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf")))
     val dfCounts = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // N and avgdl come from the corpus, not the matched subset. avgdl is
@@ -151,21 +146,21 @@ object Search {
     // Null text yields NULL under both forms (size(null)=null) and avg
     // skips it; count(*) is row-count under both.
     val corpusStats = docs.agg(count(lit(1)).as("n_docs"),
-      avg((length(col(textCol)) -
-        length(translate(col(textCol), " ", "")) + 1)
+      avg((length(col(Text)) -
+        length(translate(col(Text), " ", "")) + 1)
         .cast("double")).as("avgdl"))
     val idf = log(lit(1.0) +
       (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
         (col("df").cast("double") + lit(0.5)))
-    val tfNorm = col("tf").cast("double") * (lit(k1) + 1.0) /
+    val tfNorm = col("tf").cast("double") * (lit(1.2) + 1.0) /
       (col("tf").cast("double") +
-        lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
+        lit(1.2) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
     matched
       .join(broadcast(dfCounts), Seq("term"))
       .crossJoin(broadcast(corpusStats))
-      .groupBy(col(idCol))
+      .groupBy(col(DocId))
       .agg(round(sum(idf * tfNorm), 6).as("score"), count(lit(1)).as("n_terms"))
-      .orderBy(col("score").desc, col(idCol))
+      .orderBy(col("score").desc, col(DocId))
       .limit(k)
   }
 
@@ -190,9 +185,10 @@ object Search {
     * semantic (hashed-doc-vector cosine) rankings, the standard two-tower
     * fusion a RAG-style curation stack runs when neither signal alone
     * suffices (lexical misses paraphrase, embedding misses rare exact
-    * terms). `rrf(d) = Σ_pools 1/(rrfK + rank_pool(d))` over the two
+    * terms). `rrf(d) = Σ_pools 1/(60 + rank_pool(d))` over the two
     * top-`poolK` pools (a doc absent from a pool contributes 0), the
-    * Cormack/Clarke/Buettcher formula with the customary K=60.
+    * Cormack/Clarke/Buettcher formula with the customary K=60. The
+    * semantic side uses 16-dimension [[Similarity.hashEmbed]] vectors.
     *
     * Scale shape: each pool is produced distributed (BM25's one corpus
     * pass + `TakeOrderedAndProject`; cosine against the driver-hashed
@@ -208,36 +204,31 @@ object Search {
       terms: Seq[String],
       queryText: String,
       k: Int = 10,
-      poolK: Int = 50,
-      rrfK: Int = 60,
-      dim: Int = 16,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      poolK: Int = 50): DataFrame = {
     require(k > 0 && poolK >= k, s"need 0 < k <= poolK, got k=$k poolK=$poolK")
-    require(rrfK >= 1, s"rrfK must be >= 1, got $rrfK")
     val w = org.apache.spark.sql.expressions.Window
-    val qv = hashQueryVec(queryText, dim)
+    val qv = hashQueryVec(queryText, 16)
     val qNormSq = qv.map(x => x.toDouble * x.toDouble).sum
     require(qNormSq > 0, "queryText hashed to the zero vector")
     // lexical pool: ranks over the bounded BM25 cut (single-partition
     // window over poolK rows, not the corpus)
-    val lex = searchBm25(docs, terms, poolK, idCol = idCol, textCol = textCol)
-      .select(col(idCol),
-        row_number().over(w.orderBy(col("score").desc, col(idCol))).as("r_lex"))
+    val lex = searchBm25(docs, terms, poolK)
+      .select(col(DocId),
+        row_number().over(w.orderBy(col("score").desc, col(DocId))).as("r_lex"))
     // semantic pool: cosine of each doc's hashed vector against the query
     // vector — fixed-order dot/norm folds over exact integer counts
-    val dims = 0 until dim
+    val dims = 0 until 16
     val vecD = dims.map(i => element_at(col("vec"), i + 1).cast("double"))
     val dot = dims.map(i => vecD(i) * lit(qv(i).toDouble)).reduce(_ + _)
     val normSq = vecD.map(e => e * e).reduce(_ + _)
     val cosine = when(normSq === 0.0, lit(0.0))
       .otherwise(dot / (sqrt(normSq) * lit(math.sqrt(qNormSq))))
-    val sem = Similarity.hashEmbed(docs, dim, idCol, textCol)
-      .select(col(idCol), cosine.as("c"))
-      .orderBy(col("c").desc, col(idCol))
+    val sem = Similarity.hashEmbed(docs)
+      .select(col(DocId), cosine.as("c"))
+      .orderBy(col("c").desc, col(DocId))
       .limit(poolK)
-      .select(col(idCol),
-        row_number().over(w.orderBy(col("c").desc, col(idCol))).as("r_sem"))
+      .select(col(DocId),
+        row_number().over(w.orderBy(col("c").desc, col(DocId))).as("r_sem"))
     // fuse as UNION + per-id aggregate (r21): the full-outer join form
     // planned a sort-merge join — two exchanges plus two sorts over the
     // 2·poolK pool rows. One exchange does the same work. Values are
@@ -247,15 +238,15 @@ object Search {
     // terms is commutative bitwise, so the arbitrary union order cannot
     // move the pre-round value.
     val contrib =
-      coalesce(lit(1.0) / (lit(rrfK) + col("r_lex")), lit(0.0)) +
-        coalesce(lit(1.0) / (lit(rrfK) + col("r_sem")), lit(0.0))
+      coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
+        coalesce(lit(1.0) / (lit(60) + col("r_sem")), lit(0.0))
     lex.withColumn("r_sem", lit(null).cast("int"))
       .unionByName(sem.withColumn("r_lex", lit(null).cast("int")))
-      .select(col(idCol), contrib.as("__c"), col("r_lex"), col("r_sem"))
-      .groupBy(col(idCol))
+      .select(col(DocId), contrib.as("__c"), col("r_lex"), col("r_sem"))
+      .groupBy(col(DocId))
       .agg(round(sum(col("__c")), 6).as("rrf_score"),
         max(col("r_lex")).as("r_lex"), max(col("r_sem")).as("r_sem"))
-      .orderBy(col("rrf_score").desc, col(idCol))
+      .orderBy(col("rrf_score").desc, col(DocId))
       .limit(k)
   }
 }

@@ -1,8 +1,11 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
+import graft.functions.HyperplaneBucket
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
@@ -16,6 +19,11 @@ import graft.functions.VectorFunctions._
   * the table is written bucketed/partitioned by the bucket id.
   */
 object Similarity {
+
+  // the corpus and query columns the vector operators read
+  private val VecId = "vec_id"
+  private val Embedding = "embedding"
+  private val QueryId = "query_id"
 
   /** L2-normalization of an embedding column (unit vectors make cosine a
     * plain dot product downstream, the usual pre-step before indexing).
@@ -70,13 +78,11 @@ object Similarity {
     */
   def hashEmbed(
       docs: DataFrame,
-      dim: Int = 16,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      dim: Int = 16): DataFrame = {
     require(dim >= 2 && dim <= 4096, s"dim must be in [2, 4096], got $dim")
-    docs.select(col(idCol),
+    docs.select(col("doc_id"),
       coalesce(
-        graft.functions.TextFunctions.hashEmbedVector(col(textCol), dim),
+        graft.functions.TextFunctions.hashEmbedVector(col("text"), dim),
         typedLit(Array.fill(dim)(0L))).as("vec"))
   }
 
@@ -124,9 +130,8 @@ object Similarity {
     */
   def groupDiversity(
       vectors: DataFrame,
-      groupCol: String,
-      vecCol: String = "embedding"): DataFrame = {
-    val unit = l2Normalize(vectors, vecCol, "__unit")
+      groupCol: String): DataFrame = {
+    val unit = l2Normalize(vectors, Embedding, "__unit")
     val cents = groupCentroids(unit.select(col(groupCol), col("__unit")),
       groupCol, "__unit")
     val n = col("n_vectors").cast("double")
@@ -138,7 +143,7 @@ object Similarity {
   }
 
   /** Hard-negative mining: for every query row, the `k` nearest corpus
-    * vectors that are NOT near-duplicates of it (cosine ≤ `maxCosine`) —
+    * vectors that are NOT near-duplicates of it (cosine ≤ 0.999) —
     * the contrastive-training recipe where the self-match and its copies
     * must be excluded before the cut, not after (a post-cut filter would
     * return k − dups rows). Same bounded-aggregate shape as
@@ -149,29 +154,20 @@ object Similarity {
   def hardNegatives(
       corpus: DataFrame,
       queries: DataFrame,
-      k: Int = 10,
-      maxCosine: Double = 0.999,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      queryIdCol: String = "query_id"): DataFrame = {
+      k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    topKPerQuery(
-      scoredBatch(corpus, queries, idCol, vecCol, queryIdCol)
-        .filter(col("cosine") <= maxCosine),
-      k, idCol, queryIdCol)
+    topKPerQuery(scoredBatch(corpus, queries).filter(col("cosine") <= 0.999), k)
   }
 
   /** Exact top-k by cosine similarity against a literal query vector. */
   def bruteForceTopK(
       embeddings: DataFrame,
       queryVec: Seq[Float],
-      k: Int = 10,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
+      k: Int = 10): DataFrame =
     embeddings.select(
-        col(idCol),
-        round(cosineSimilarity(col(vecCol), typedLit(queryVec)), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
+        col(VecId),
+        round(cosineSimilarity(col(Embedding), typedLit(queryVec)), 6).as("cosine"))
+      .orderBy(col("cosine").desc, col(VecId))
       .limit(k)
 
   /** Exact top-k neighbors for EVERY query row in ONE corpus pass — the
@@ -189,13 +185,9 @@ object Similarity {
   def bruteForceTopKBatch(
       corpus: DataFrame,
       queries: DataFrame,
-      k: Int = 10,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      queryIdCol: String = "query_id"): DataFrame = {
+      k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    topKPerQuery(scoredBatch(corpus, queries, idCol, vecCol, queryIdCol),
-      k, idCol, queryIdCol)
+    topKPerQuery(scoredBatch(corpus, queries), k)
   }
 
   /** (query id, corpus id, round-6 cosine) for every corpus row against
@@ -203,27 +195,24 @@ object Similarity {
     */
   private def scoredBatch(
       corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queryIdCol: String): DataFrame = {
+      queries: DataFrame): DataFrame = {
     require(!corpus.columns.contains("__qvec"), "__qvec is reserved by the batch top-k")
-    val q = queries.select(col(queryIdCol), col(vecCol).as("__qvec"))
+    val q = queries.select(col(QueryId), col(Embedding).as("__qvec"))
     corpus.join(broadcast(q))
-      .select(col(queryIdCol), col(idCol),
-        round(cosineSimilarity(col(vecCol), col("__qvec")), 6).as("cosine"))
+      .select(col(QueryId), col(VecId),
+        round(cosineSimilarity(col(Embedding), col("__qvec")), 6).as("cosine"))
   }
 
   /** The k best (cosine desc, id asc) rows per query of a scored stream,
     * through the bounded [[graft.functions.TopKByScore]] aggregate.
     */
   private def topKPerQuery(
-      scored: DataFrame, k: Int, idCol: String, queryIdCol: String): DataFrame = {
+      scored: DataFrame, k: Int): DataFrame = {
     val topk = udaf(new graft.functions.TopKByScore(k))
-    scored.groupBy(col(queryIdCol))
-      .agg(topk(col("cosine"), col(idCol)).as("__top"))
-      .select(col(queryIdCol), explode(col("__top")).as("__p"))
-      .select(col(queryIdCol), col("__p._2").as(idCol), col("__p._1").as("cosine"))
+    scored.groupBy(col(QueryId))
+      .agg(topk(col("cosine"), col(VecId)).as("__top"))
+      .select(col(QueryId), explode(col("__top")).as("__p"))
+      .select(col(QueryId), col("__p._2").as(VecId), col("__p._1").as("cosine"))
   }
 
   /** Batch probe of the IVF index: top-k for EVERY query row against the
@@ -252,52 +241,30 @@ object Similarity {
       queries: DataFrame,
       k: Int,
       nprobe: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      queryIdCol: String = "query_id",
       corpusFilter: Column = lit(true)): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(nprobe > 0, s"nprobe must be positive, got $nprobe")
-    val q = queries.select(col(queryIdCol), col(vecCol).as("__qvec"))
+    val q = queries.select(col(QueryId), col(Embedding).as("__qvec"))
     val probeW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(queryIdCol)).orderBy(col("__ccos").desc, col("cid"))
+      .partitionBy(col(QueryId)).orderBy(col("__ccos").desc, col("cid"))
     val probes = q.crossJoin(broadcast(centroids))
       .withColumn("__ccos", cosineSimilarity(col("centroid"), col("__qvec")))
       .withColumn("__cr", row_number().over(probeW))
       .filter(col("__cr") <= nprobe)
-      .select(col("cid"), col(queryIdCol), col("__qvec"))
+      .select(col("cid"), col(QueryId), col("__qvec"))
     val scored = index.filter(corpusFilter)
       .join(broadcast(probes), Seq("cid"))
-      .select(col(queryIdCol), col(idCol),
-        round(cosineSimilarity(col(vecCol), col("__qvec")), 6).as("cosine"))
-    topKPerQuery(scored, k, idCol, queryIdCol)
+      .select(col(QueryId), col(VecId),
+        round(cosineSimilarity(col(Embedding), col("__qvec")), 6).as("cosine"))
+    topKPerQuery(scored, k)
   }
 
-  /** Same plane family as [[graft.functions.HyperplaneBucket]], evaluated
-    * driver-side for the query vector.
+  /** The query vector's bucket, evaluated driver-side by the same
+    * [[graft.functions.HyperplaneBucket]] expression the index build runs.
     */
-  private def bucketOf(queryVec: Seq[Float], bits: Int, seed: Long): Int = {
-    def mix(x0: Long): Long = {
-      var x = x0 + 0x9e3779b97f4a7c15L
-      x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-      x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-      x ^ (x >>> 31)
-    }
-    val dim = queryVec.length
-    var bucket = 0
-    var b = 0
-    while (b < bits) {
-      var dot = 0.0
-      var d = 0
-      while (d < dim) {
-        dot += queryVec(d) * (mix(seed + b.toLong * 1000003L + d.toLong).toDouble / Long.MaxValue.toDouble)
-        d += 1
-      }
-      if (dot >= 0) bucket |= (1 << b)
-      b += 1
-    }
-    bucket
-  }
+  private def bucketOf(queryVec: Seq[Float], bits: Int, seed: Long): Int =
+    HyperplaneBucket(Literal.create(queryVec.toArray, ArrayType(FloatType, containsNull = false)),
+      bits, seed).eval().asInstanceOf[Int]
 
   /** The query bucket plus its Hamming-1 neighbors (multi-probe for recall). */
   def probesOf(queryVec: Seq[Float], bits: Int, seed: Long): Seq[Int] = {
@@ -326,12 +293,11 @@ object Similarity {
       path: String,
       bits: Int = 8,
       seed: Long = 7L,
-      tables: Int = 2,
-      vecCol: String = "embedding"): Unit =
+      tables: Int = 2): Unit =
     (0 until tables)
       .map(t => embeddings
         .withColumn("tbl", lit(t))
-        .withColumn("bucket", hyperplaneBucket(col(vecCol), bits, tableSeed(seed, t))))
+        .withColumn("bucket", hyperplaneBucket(col(Embedding), bits, tableSeed(seed, t))))
       .reduce(_ unionByName _)
       // co-locate each bucket in one task so the dynamic-partition write
       // emits one file per bucket directory instead of one per (task, bucket)
@@ -420,14 +386,12 @@ object Similarity {
       path: String,
       k: Int = 16,
       iters: Int = 2,
-      learnFraction: Double = 1.0,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
+      learnFraction: Double = 1.0): Unit = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val centroids = learnCentroids(embeddings, k, iters, learnFraction, idCol, vecCol)
+    val centroids = learnCentroids(embeddings, k, iters, learnFraction)
     embeddings
-      .withColumn("cid", nearestCentroid(col(vecCol), centroids))
+      .withColumn("cid", nearestCentroid(col(Embedding), centroids))
       .repartition(col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(path)
     centroids.zipWithIndex.map { case (v, i) => (i, v) }
@@ -451,19 +415,19 @@ object Similarity {
     */
   def quantizeInt8(
       embeddings: DataFrame,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      idCol: String = "vec_id"): DataFrame = {
     // maxabs is hoisted into its own column: aggregate() is an interpreted
     // higher-order fold with no subexpression elimination, so inlining it
     // in both the predicate and value of the scale CASE would run the full
     // pass over every vector twice per row
     val maxabs = expr(
-      s"aggregate($vecCol, 0.0D, (a, x) -> greatest(a, abs(CAST(x AS DOUBLE))))")
+      s"aggregate($Embedding, 0.0D, (a, x) -> greatest(a, abs(CAST(x AS DOUBLE))))")
     embeddings
       .withColumn("__maxabs", maxabs)
       .withColumn("scale", when(col("__maxabs") > 0.0, col("__maxabs") / 127.0).otherwise(lit(1.0)))
       .withColumn("codes",
-        expr(s"transform($vecCol, x -> CAST(floor(CAST(x AS DOUBLE) / scale + 0.5D) AS TINYINT))"))
+        expr(s"transform($Embedding, " +
+          "x -> CAST(floor(CAST(x AS DOUBLE) / scale + 0.5D) AS TINYINT))"))
       .select(col(idCol), col("scale"), col("codes"))
   }
 
@@ -479,13 +443,12 @@ object Similarity {
   def int8TopK(
       quantized: DataFrame,
       queryVec: Seq[Float],
-      k: Int = 10,
-      idCol: String = "vec_id"): DataFrame =
+      k: Int = 10): DataFrame =
     quantized.select(
-        col(idCol),
+        col(VecId),
         round(cosineSimilarity(
           dequantizeInt8(col("codes"), col("scale")), typedLit(queryVec)), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
+      .orderBy(col("cosine").desc, col(VecId))
       .limit(k)
 
   /** Product-quantization codebooks: the embedding space is split into `m`
@@ -503,20 +466,16 @@ object Similarity {
   def learnPqCodebooks(
       embeddings: DataFrame,
       m: Int = 8,
-      ksub: Int = 16,
-      iters: Int = 2,
-      learnFraction: Double = 1.0,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): Seq[Seq[Seq[Float]]] = {
+      ksub: Int = 16): Seq[Seq[Seq[Float]]] = {
     require(m > 0, s"m must be positive, got $m")
-    val dim = embeddings.select(size(col(vecCol))).head().getInt(0)
+    val dim = embeddings.select(size(col(Embedding))).head().getInt(0)
     require(dim % m == 0, s"embedding dim $dim must be divisible by m=$m subspaces")
     val sub = dim / m
     (0 until m).map { j =>
       // slice is 1-based; each subspace learns on its own slice view
       learnCentroids(
-        embeddings.select(col(idCol).as("id"), slice(col(vecCol), j * sub + 1, sub).as("v")),
-        ksub, iters, learnFraction, "id", "v")
+        embeddings.select(col(VecId).as("id"), slice(col(Embedding), j * sub + 1, sub).as("v")),
+        ksub, 2, 1.0, "id", "v")
     }
   }
 
@@ -527,15 +486,13 @@ object Similarity {
     */
   def encodePq(
       embeddings: DataFrame,
-      codebooks: Seq[Seq[Seq[Float]]],
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      codebooks: Seq[Seq[Seq[Float]]]): DataFrame = {
     val m = codebooks.length
     val sub = codebooks.head.head.length
     val codeCols = (0 until m).map { j =>
-      nearestCentroid(slice(col(vecCol), j * sub + 1, sub), codebooks(j)).cast("tinyint")
+      nearestCentroid(slice(col(Embedding), j * sub + 1, sub), codebooks(j)).cast("tinyint")
     }
-    embeddings.select(col(idCol), array(codeCols: _*).as("codes"))
+    embeddings.select(col(VecId), array(codeCols: _*).as("codes"))
   }
 
   /** Asymmetric-distance top-k over PQ codes: the query stays
@@ -591,11 +548,10 @@ object Similarity {
       encoded: DataFrame,
       codebooks: Seq[Seq[Seq[Float]]],
       queryVec: Seq[Float],
-      k: Int = 10,
-      idCol: String = "vec_id"): DataFrame = {
+      k: Int = 10): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    encoded.select(col(idCol), adcCosine(codebooks, queryVec).as("adc_cosine"))
-      .orderBy(col("adc_cosine").desc, col(idCol))
+    encoded.select(col(VecId), adcCosine(codebooks, queryVec).as("adc_cosine"))
+      .orderBy(col("adc_cosine").desc, col(VecId))
       .limit(k)
   }
 
@@ -611,15 +567,14 @@ object Similarity {
       centroids: Seq[(Int, Seq[Float])],
       queryVec: Seq[Float],
       k: Int,
-      nprobe: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      nprobe: Int): DataFrame = {
     val probed = centroids.sortBy { case (_, c) => -cosineLocal(queryVec, c) }
       .take(nprobe).map(_._1)
     index
       .filter(col("cid").isin(probed: _*))
-      .select(col(idCol), round(cosineSimilarity(col(vecCol), typedLit(queryVec)), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
+      .select(col(VecId),
+        round(cosineSimilarity(col(Embedding), typedLit(queryVec)), 6).as("cosine"))
+      .orderBy(col("cosine").desc, col(VecId))
       .limit(k)
   }
 
@@ -636,20 +591,19 @@ object Similarity {
       k: Int,
       bits: Int,
       seed: Long,
-      tables: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      tables: Int): DataFrame = {
     val probe = (0 until tables)
       .map(t => col("tbl") === t &&
         col("bucket").isin(probesOf(queryVec, bits, tableSeed(seed, t)): _*))
       .reduce(_ || _)
     index
       .filter(probe)
-      .select(col(idCol), round(cosineSimilarity(col(vecCol), typedLit(queryVec)), 6).as("cosine"))
+      .select(col(VecId),
+        round(cosineSimilarity(col(Embedding), typedLit(queryVec)), 6).as("cosine"))
       // same id through several tables has the same cosine; the aggregate
       // dedups over only the few probed-bucket rows, not the corpus
-      .groupBy(col(idCol)).agg(max(col("cosine")).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
+      .groupBy(col(VecId)).agg(max(col("cosine")).as("cosine"))
+      .orderBy(col("cosine").desc, col(VecId))
       .limit(k)
   }
 }

@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
   */
 object Snapshot {
 
+  private val DocId = "doc_id"
+
   /** Apply a change log to a base snapshot — the CDC merge that keeps an
     * incrementally-crawled corpus current without rewriting it from
     * scratch: `changes` carries (id, op ∈ {upsert, delete}, seq, payload
@@ -29,11 +31,8 @@ object Snapshot {
     */
   def applyChangeLog(
       base: DataFrame,
-      changes: DataFrame,
-      idCol: String = "doc_id",
-      opCol: String = "op",
-      seqCol: String = "seq"): DataFrame = {
-    val dataCols = base.columns.filterNot(_ == idCol)
+      changes: DataFrame): DataFrame = {
+    val dataCols = base.columns.filterNot(_ == DocId)
     require(dataCols.forall(changes.columns.contains), {
       val missing = dataCols.filterNot(changes.columns.contains)
       s"changes is missing base columns: ${missing.mkString(", ")}"
@@ -41,12 +40,12 @@ object Snapshot {
     require(!base.columns.contains("__base"),
       "__base is reserved by applyChangeLog (the base-presence marker)")
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol))
-      .orderBy(col(seqCol).desc, (col(opCol) === "delete").desc, col(opCol))
+      .partitionBy(col(DocId))
+      .orderBy(col("seq").desc, (col("op") === "delete").desc, col("op"))
     val latest = changes
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .select((col(idCol).as("__cid") +: col(opCol).as("__op") +:
+      .select((col(DocId).as("__cid") +: col("op").as("__op") +:
         dataCols.toIndexedSeq.map(c => col(c).as(s"__c_$c"))): _*)
     // base presence is tagged EXPLICITLY (__base) rather than inferred
     // from id nullability: a base row whose id is genuinely NULL
@@ -54,7 +53,7 @@ object Snapshot {
     // joins a change row, and an id-based guard would silently drop it —
     // null id plus null __op fails both branches (ADVICE r20)
     base.withColumn("__base", lit(1))
-      .join(latest, col(idCol) === col("__cid"), "full_outer")
+      .join(latest, col(DocId) === col("__cid"), "full_outer")
       .filter(coalesce(col("__op"), lit("keep")) =!= "delete")
       // an UNRECOGNIZED op is a no-op on an existing id (the otherwise
       // branch keeps the base payload) — but for an id absent from the
@@ -62,18 +61,15 @@ object Snapshot {
       // only an upsert can create a row (the malformed-feed tolerance the
       // tie rule above already promises)
       .filter(col("__base").isNotNull || col("__op") === "upsert")
-      .select(coalesce(col(idCol), col("__cid")).as(idCol) +:
+      .select(coalesce(col(DocId), col("__cid")).as(DocId) +:
         dataCols.toIndexedSeq.map(c =>
           when(col("__op") === "upsert", col(s"__c_$c")).otherwise(col(c)).as(c)): _*)
   }
 
   /** One row per id present in either snapshot, with the diff status.
-    * Content comparison is by `contentCol` equality (pass a precomputed
-    * hash column to diff 10-100 KB documents without shipping text — the
-    * md5 the [[TextAnalysis.fingerprints]] operator emits is the intended
-    * key at scale).
+    * Content comparison is by `text` equality.
     *
-    * Shape: ONE full-outer join keyed on `idCol` — both sides shuffle by
+    * Shape: ONE full-outer join keyed on `doc_id` — both sides shuffle by
     * id once, everything else is map-side. With both snapshots written
     * bucketed by id, the join is exchange-free end to end. Ids are assumed
     * unique within a snapshot (the corpus contract everywhere in this
@@ -82,14 +78,12 @@ object Snapshot {
     */
   def diff(
       oldSnap: DataFrame,
-      newSnap: DataFrame,
-      idCol: String = "doc_id",
-      contentCol: String = "text"): DataFrame = {
-    val o = oldSnap.select(col(idCol).as("__o_id"), col(contentCol).as("__o_c"))
-    val n = newSnap.select(col(idCol).as("__n_id"), col(contentCol).as("__n_c"))
+      newSnap: DataFrame): DataFrame = {
+    val o = oldSnap.select(col(DocId).as("__o_id"), col("text").as("__o_c"))
+    val n = newSnap.select(col(DocId).as("__n_id"), col("text").as("__n_c"))
     o.join(n, col("__o_id") === col("__n_id"), "full_outer")
       .select(
-        coalesce(col("__o_id"), col("__n_id")).as(idCol),
+        coalesce(col("__o_id"), col("__n_id")).as(DocId),
         when(col("__o_id").isNull, "added")
           .when(col("__n_id").isNull, "removed")
           .when(col("__o_c") <=> col("__n_c"), "unchanged")

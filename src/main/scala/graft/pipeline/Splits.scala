@@ -39,7 +39,7 @@ object Splits {
     * `fractions` like `Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)`
     * (each fraction in (0, 1], summing to 1 within 1e-9; fractions ×
     * `buckets` must be whole, so the advertised proportions are exact
-    * bucket counts, not roundings). Adds `splitCol` and keeps every input
+    * bucket counts, not roundings). Adds `split` and keeps every input
     * column. A NULL id hashes to NULL, every `when` comparison yields
     * NULL, and the row falls through to the LAST split — callers who
     * cannot tolerate null ids in the final split should filter them first.
@@ -48,8 +48,7 @@ object Splits {
       df: DataFrame,
       fractions: Seq[(String, Double)],
       bucket: Column,
-      buckets: Int = 100,
-      splitCol: String = "split"): DataFrame = {
+      buckets: Int = 100): DataFrame = {
     require(fractions.nonEmpty, "fractions must be non-empty")
     require(fractions.forall { case (_, f) => f > 0 && f <= 1 },
       s"every fraction must be in (0, 1], got ${fractions.map(_._2).mkString(", ")}")
@@ -66,7 +65,7 @@ object Splits {
       .foldRight(lit(cuts.last._1)) { case ((name, hi), rest) =>
         when(bucket < hi, name).otherwise(rest)
       }
-    df.withColumn(splitCol, labeled)
+    df.withColumn("split", labeled)
   }
 
   /** [[assign]] with the cross-engine [[md5Bucket]]. */
@@ -74,7 +73,6 @@ object Splits {
       df: DataFrame,
       idCol: String,
       fractions: Seq[(String, Double)],
-      buckets: Int = 100,
-      splitCol: String = "split"): DataFrame =
-    assign(df, fractions, md5Bucket(col(idCol), buckets), buckets, splitCol)
+      buckets: Int = 100): DataFrame =
+    assign(df, fractions, md5Bucket(col(idCol), buckets), buckets)
 }

@@ -372,26 +372,22 @@ object TextAnalysis {
   }
 
   /** Per-document bigram language-model score — the CCNet-style quality
-    * lever ([[unigramLogProb]] with one token of context): train add-`alpha`
+    * lever ([[unigramLogProb]] with one token of context): train add-1
     * bigram counts on the corpus itself, score each document by the average
     * `ln P(w_i | w_{i-1})` over its bigrams, and report perplexity
     * `exp(-avg)`. Prose written like the corpus scores low perplexity;
     * boilerplate, gibberish, and wrong-language text score high — the
     * standard keep/drop axis for web-scrape curation.
     *
-    * Model: `P(v | u) = (c(u,v) + α) / (c(u) + α·(V+1))` with the bigram
+    * Model: `P(v | u) = (c(u,v) + 1) / (c(u) + V + 1)` with the bigram
     * table cut to the top `bigramK` types and contexts to the top
     * `contextK` (count desc, key asc — deterministic cuts); an absent
     * entry contributes count 0, so every bigram gets positive mass. `V` is
     * the corpus's distinct-unigram count (one scalar aggregate).
     *
-    * Scale shape: both model tables are top-K-bounded broadcasts by
-    * default; when K must grow past broadcast size (a web-scale LM keeps
-    * hundreds of millions of bigram types), pass `broadcastModel = false`
-    * and both model joins plan shuffle-side (sort-merge on bigram / ctx —
-    * the [[tfIdfTopTerms]] `broadcastDf` lever verbatim), so no executor
-    * ever holds the whole model. The doc side is one map-side shingle
-    * explode and one doc-keyed aggregation either way. Documents
+    * Scale shape: both model tables are top-K-bounded broadcasts. The doc
+    * side is one map-side shingle explode and one doc-keyed aggregation.
+    * Documents
     * with fewer than 2 tokens have no bigrams and are absent from the
     * output. `avg_logprob` is rounded to 6 (summation-order drift);
     * `perplexity` is exp of that already-rounded value, rounded again.
@@ -399,12 +395,9 @@ object TextAnalysis {
   def bigramLogProb(
       docs: DataFrame,
       bigramK: Int = 5000,
-      contextK: Int = 1000,
-      alpha: Double = 1.0,
-      broadcastModel: Boolean = true): DataFrame = {
+      contextK: Int = 1000): DataFrame = {
     require(bigramK > 0, s"bigramK must be positive, got $bigramK")
     require(contextK > 0, s"contextK must be positive, got $contextK")
-    require(alpha > 0, s"alpha must be positive, got $alpha")
     // The corpus fan-out feeds the model aggregation AND the scoring
     // join; each consumer re-runs the map-side generator rather than
     // reading a cache (r21): caching value-serialized every bigram STRING
@@ -439,15 +432,12 @@ object TextAnalysis {
     val vSize = docs
       .select(explode(split(lower(col("text")), " ")).as("term"))
       .agg(countDistinct(col("term")).as("v_size"))
-    val lp = log((coalesce(col("c2"), lit(0L)).cast("double") + lit(alpha)) /
+    val lp = log((coalesce(col("c2"), lit(0L)).cast("double") + lit(1.0)) /
       (coalesce(col("c1"), lit(0L)).cast("double") +
-        lit(alpha) * (col("v_size").cast("double") + 1.0)))
-    val (bgSide, ctxSide) =
-      if (broadcastModel) (broadcast(bigramCounts), broadcast(contextCounts))
-      else (bigramCounts.hint("merge"), contextCounts.hint("merge"))
+        (col("v_size").cast("double") + 1.0)))
     bg
-      .join(bgSide, Seq("bigram"), "left")
-      .join(ctxSide, Seq("ctx"), "left")
+      .join(broadcast(bigramCounts), Seq("bigram"), "left")
+      .join(broadcast(contextCounts), Seq("ctx"), "left")
       .crossJoin(broadcast(vSize))
       .select(col("doc_id"), lp.as("__lp"))
       .groupBy(col("doc_id"))
@@ -465,10 +455,9 @@ object TextAnalysis {
       docs: DataFrame,
       maxPerplexity: Double,
       bigramK: Int = 5000,
-      contextK: Int = 1000,
-      alpha: Double = 1.0): DataFrame = {
+      contextK: Int = 1000): DataFrame = {
     require(maxPerplexity > 0, s"maxPerplexity must be positive, got $maxPerplexity")
-    val kept = bigramLogProb(docs, bigramK, contextK, alpha)
+    val kept = bigramLogProb(docs, bigramK, contextK)
       .filter(col("perplexity") <= maxPerplexity)
       .select(col("doc_id"), col("perplexity"))
     docs.join(kept, Seq("doc_id"))
@@ -507,22 +496,16 @@ object TextAnalysis {
     *
     * Scale shape: one explode → (doc, term) partial-agg (the only
     * corpus-sized shuffle), document frequencies from a second
-    * distinct-pair-sized aggregation joined back BROADCAST by default
+    * distinct-pair-sized aggregation joined back BROADCAST
     * (vocabulary-sized), then a BOUNDED per-doc top-k aggregate (r22 — the
     * rank window it replaces sorted the full scored stream per partition
     * to keep k rows; the aggregate partial-reduces to ≤k payload rows per
-    * doc per map task, bit-equal cut and rk). At open-web scale the distinct-term set
-    * outgrows a broadcast even after a `minDf` cut — pass
-    * `broadcastDf = false` and the df join plans shuffle-side (sort-merge
-    * on term): the (doc, term) stream is already term-keyed out of its
-    * partial agg, so the extra exchange is the df side's only, and no
-    * driver ever holds the vocabulary.
+    * doc per map task, bit-equal cut and rk).
     */
   def tfIdfTopTerms(
       docs: DataFrame,
       k: Int = 5,
-      minDf: Int = 1,
-      broadcastDf: Boolean = true): DataFrame = {
+      minDf: Int = 1): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
     // the (doc, term, tf) stream feeds BOTH the df aggregation and the
@@ -541,8 +524,6 @@ object TextAnalysis {
     val dfCounts = perDoc.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val dfSide = if (broadcastDf) broadcast(dfCounts)
-                 else dfCounts.hint("merge")
     // bounded per-doc top-k AGGREGATE, not a rank window (r22, guide
     // §2.3/§2.4 — the deferred r21 item): the window form sorted the whole
     // scored (doc, term) stream per partition (plus a doc-keyed exchange)
@@ -554,7 +535,7 @@ object TextAnalysis {
     // spec-pinned in CurationSpec.
     val topk = udaf(new graft.functions.TopKTermsByScore(k))
     perDoc
-      .join(dfSide, Seq("term"))
+      .join(broadcast(dfCounts), Seq("term"))
       .crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
         (col("tf").cast("double") * col("n_docs").cast("double") /

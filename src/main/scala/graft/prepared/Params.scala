@@ -4,8 +4,12 @@ import java.util.IdentityHashMap
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.execution.{BaseSubqueryExec, ExecSubqueryExpression, ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{
+  Attribute, Expression, LeafExpression, Literal, Unevaluable}
+import org.apache.spark.sql.execution.{
+  BaseSubqueryExec, ExecSubqueryExpression, LeafExecNode, ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
 import org.apache.spark.sql.types.DataType
@@ -32,39 +36,10 @@ object Params {
     e.exists(_.isInstanceOf[ParamPlaceholder])
 
   /** All placeholder ids appearing in an expression tree (not descending
-    * into physical subquery plans — see the SparkPlan overload for that).
+    * into physical subquery plans).
     */
   def placeholderIds(e: Expression): Seq[String] =
     e.collect { case ParamPlaceholder(id, _) => id }.distinct
-
-  /** All placeholder ids appearing anywhere in a physical plan, including
-    * inside subquery plans. [[ReusedSubqueryExec]] is a leaf whose child is
-    * NOT in `children`, so it needs its own hop.
-    */
-  def placeholderIds(plan: SparkPlan): Seq[String] = {
-    val b = Seq.newBuilder[String]
-    def scanExpr(root: Expression): Unit = root.foreach {
-      case ParamPlaceholder(id, _)     => b += id
-      case sub: ExecSubqueryExpression => b ++= placeholderIds(sub.plan)
-      case _                           =>
-    }
-    plan.foreach {
-      case reused: ReusedSubqueryExec => b ++= placeholderIds(reused.child)
-      case reused: ReusedExchangeExec => b ++= placeholderIds(reused.child)
-      case node =>
-        node match {
-          // broadcast key expressions live in the mode, outside `expressions`
-          case bc: BroadcastExchangeExec =>
-            bc.mode match {
-              case HashedRelationBroadcastMode(keys, _) => keys.foreach(scanExpr)
-              case _                                    =>
-            }
-          case _ =>
-        }
-        node.expressions.foreach(scanExpr)
-    }
-    b.result().distinct
-  }
 
   /** Error message parity with the reference (`src/param_resolver.rs:90-94`). */
   private def missing(id: String): Nothing =
@@ -83,11 +58,10 @@ object Params {
     }
 
   /** Bind a cached physical plan: clone-and-substitute every placeholder with
-    * a literal, recursing into subquery plans. Fails fast if any referenced
-    * placeholder has no value.
+    * a literal, recursing into subquery plans and reused exchanges. Fails,
+    * naming the placeholder, if a referenced placeholder has no value.
     */
   def bind(plan: SparkPlan, params: Map[String, Any]): SparkPlan = {
-    placeholderIds(plan).foreach(id => if (!params.contains(id)) missing(id))
     // identity cache: a subquery instance shared through ReusedSubqueryExec
     // binds to ONE new instance, so subquery reuse survives the clone and
     // the subquery still executes once per run
@@ -104,32 +78,62 @@ object Params {
       plan: SparkPlan,
       params: Map[String, Any],
       cache: IdentityHashMap[BaseSubqueryExec, BaseSubqueryExec]): SparkPlan = {
-    val exprRule: PartialFunction[Expression, Expression] = {
+    val placeholderRule: PartialFunction[Expression, Expression] = {
       case ParamPlaceholder(id, dt) =>
         // BoundParam (not Literal) so every execution of the statement hits
         // the generated-code cache — a Literal would inline the value into
         // the source and force a janino recompile per execute
-        BoundParam(id, dt, literal(id, dt, params(id)).value)
-      case sub: ExecSubqueryExpression if placeholderIds(sub.plan).nonEmpty =>
-        // clone the subquery plan with bound literals; the fresh instance
-        // re-executes on next run (its result future is per-instance)
-        sub.withNewPlan(bindSubquery(sub.plan, params, cache))
+        BoundParam(id, dt, literal(id, dt, params.getOrElse(id, missing(id))).value)
     }
-    plan.transformUp {
+    var rebound = false
+    val exprRule = placeholderRule.orElse[Expression, Expression] {
+      case sub: ExecSubqueryExpression =>
+        // a fresh subquery plan on every execute, placeholder or not: its
+        // result future and its scans' input partitions are per-instance
+        // state, so a shared instance would replay the first execute's
+        // result over data that has since changed
+        rebound = true
+        Rebound(sub.withNewPlan(bindSubquery(sub.plan, params, cache)))
+    }
+    val bound = plan.transformUp {
       // a reused exchange is a leaf whose referenced exchange is NOT in
-      // `children` — bind through it (reuse is dropped for parameterized
-      // exchanges; correctness over the marginal recompute)
-      case r: ReusedExchangeExec if placeholderIds(r.child).nonEmpty =>
-        r.copy(child = bindChecked(r.child, params, cache).asInstanceOf[Exchange])
+      // `children`, so the final clone does not reach it: bind and clone
+      // its target on every execute, like a subquery (the reused side is
+      // recomputed, not shared with the first execute)
+      case r: ReusedExchangeExec =>
+        rebound = true
+        ReboundExchange(r.output,
+          bindChecked(r.child, params, cache).clone().asInstanceOf[Exchange])
       // broadcast key expressions live in the mode, outside `expressions`,
       // so a placeholder in a broadcast-side join key needs its own rewrite
       case bc: BroadcastExchangeExec =>
         bc.mode match {
           case m @ HashedRelationBroadcastMode(keys, _) if keys.exists(containsPlaceholder) =>
-            bc.copy(mode = m.copy(key = keys.map(_.transform(exprRule))))
+            bc.copy(mode = m.copy(key = keys.map(_.transform(placeholderRule))))
           case _ => bc
         }
     }.transformAllExpressions(exprRule)
+    if (!rebound) bound
+    else bound
+      .transformUp { case ReboundExchange(output, child) => ReusedExchangeExec(output, child) }
+      .transformAllExpressions { case Rebound(sub) => sub }
+  }
+
+  /** A rebound subquery on its way into the plan. Catalyst's transforms keep
+    * a node that equals its replacement, and a rebound subquery equals the
+    * frozen one, so it is swapped in through this wrapper, which equals
+    * neither.
+    */
+  private case class Rebound(sub: ExecSubqueryExpression) extends LeafExpression with Unevaluable {
+    override def dataType: DataType = sub.dataType
+    override def nullable: Boolean = sub.nullable
+  }
+
+  /** The same for a reused exchange with a rebound target. */
+  private case class ReboundExchange(output: Seq[Attribute], child: Exchange)
+      extends LeafExecNode {
+    override protected def doExecute(): RDD[InternalRow] =
+      throw new IllegalStateException("a rebound exchange is replaced before it runs")
   }
 
   private def bindSubquery(

@@ -1,8 +1,6 @@
 package graft.prepared
 
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{
-  AttributeReference, AttributeSet, EqualTo, Expression, In, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression, PredicateHelper}
 import org.apache.spark.sql.execution.{
   ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SparkPlan,
   WholeStageCodegenExec}
@@ -12,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.graft.Internals
 
 import graft.plans.DynamicFilterExec
-import graft.sources.{KeyedMemScan, KeyedMemTables}
+import graft.sources.{KeyedMemScan, KeyedScanBuilder}
 
 /** Execute-time scan pushdown for freshly bound predicates.
   *
@@ -30,22 +28,6 @@ import graft.sources.{KeyedMemScan, KeyedMemTables}
   * scan node, so nothing shared is mutated.
   */
 object ScanRebind extends PredicateHelper {
-
-  /** The key values a bound conjunct pins, if it is `key = literal` (either
-    * side) or `key IN (literals)` on the scan's `keyCol`.
-    */
-  private def keySet(c: Expression, keyCol: String, output: AttributeSet): Option[Set[Any]] = {
-    val operands = c match {
-      case EqualTo(a: AttributeReference, l: Literal) => Some((a, Seq(l)))
-      case EqualTo(l: Literal, a: AttributeReference) => Some((a, Seq(l)))
-      case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        Some((a, vs.map(_.asInstanceOf[Literal])))
-      case _ => None
-    }
-    operands.collect { case (a, ls) if a.name.equalsIgnoreCase(keyCol) && output.contains(a) =>
-      ls.map(l => CatalystTypeConverters.convertToScala(l.value, l.dataType)).toSet[Any]
-    }
-  }
 
   /** `bound` with the conjuncts of each of its dynamic filters pushed into
     * the scans below that filter, wherever every node in between passes its
@@ -88,14 +70,21 @@ object ScanRebind extends PredicateHelper {
         else withTags(scan.copy(predicates = scan.predicates ++ applicable), scan)
       // DSv2 keyed mem table: bound key equality/IN conjuncts become an
       // index lookup — the scan ships only the matching rows, the prepared
-      // analog of the reference provider serving pushed point lookups
+      // analog of the reference provider serving pushed point lookups. The
+      // table's own scan builder decides which conjuncts pin keys, as it
+      // does for planning-time pushdown; conjuncts over other relations go
+      // first, since translation keeps only attribute names
       case b: BatchScanExec =>
         b.scan match {
           case ks: KeyedMemScan if ks.keys.isEmpty =>
-            val keyCol = KeyedMemTables.registry(ks.table).keyCol
-            val keySets = conjuncts.flatMap(keySet(_, keyCol, b.outputSet))
-            if (keySets.isEmpty) b
-            else withTags(b.copy(scan = ks.withKeys(KeyedMemTables.intersectKeys(keySets))), b)
+            val builder = new KeyedScanBuilder(ks.table)
+            builder.pushFilters(conjuncts.filter(_.references.subsetOf(b.outputSet))
+              .flatMap(Internals.translateFilter(_, supportNestedPredicatePushdown = true))
+              .toArray)
+            builder.build() match {
+              case keyed: KeyedMemScan if keyed.keys.nonEmpty => withTags(b.copy(scan = keyed), b)
+              case _                                          => b
+            }
           // DSv2 parquet: the protocol is source-agnostic (the reference
           // pushes its DynamicFilterPhysicalExpr to ANY provider,
           // physical.rs:270-336), so a session reading parquet through v2

@@ -25,12 +25,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Two pushdown paths:
   *   - planning-time ([[KeyedScanBuilder.pushFilters]]) for ordinary SQL,
   *     which ships the matching rows to an executor in a one-task job;
-  *   - execute-time for prepared statements: `ScanRebind` swaps a bound
-  *     key set into the scan via [[KeyedMemScan.withKeys]], so every
-  *     `execute(params)` is an index lookup even though the plan was built
-  *     with unresolved placeholders. `executeCollect` then evaluates a
-  *     narrow project/filter chain over the keyed scan on the driver with
-  *     no job at all (`graft.prepared.DriverTier`); a full scan
+  *   - execute-time for prepared statements: `ScanRebind` hands the bound
+  *     conjuncts to a fresh [[KeyedScanBuilder]] and swaps the scan it
+  *     builds into the plan, so every `execute(params)` is an index lookup
+  *     even though the plan was built with unresolved placeholders.
+  *     `executeCollect` then evaluates a narrow project/filter chain over
+  *     the keyed scan on the driver with no job at all (`graft.prepared.DriverTier`); a full scan
   *     (`keys = None`) or any wider plan still runs as a job.
   */
 object KeyedMemTables {
@@ -140,9 +140,6 @@ case class KeyedMemScan(table: String, keys: Option[Seq[Any]]) extends Scan with
   override def toBatch: Batch = this
   override def description(): String =
     s"KeyedMemScan(table=$table, keys=${keys.map(_.mkString("[", ",", "]")).getOrElse("ALL")})"
-
-  /** Execute-time rebind hook for the prepared-statement path. */
-  def withKeys(ks: Seq[Any]): KeyedMemScan = copy(keys = Some(ks))
 
   override def planInputPartitions(): Array[InputPartition] = {
     val e = KeyedMemTables.registry(table)

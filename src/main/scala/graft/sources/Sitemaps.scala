@@ -118,15 +118,13 @@ object Sitemaps {
     * StAX factory per partition.
     */
   def entries(
-      df: DataFrame,
-      idCol: String = "doc_id",
-      xmlCol: String = "xml"): DataFrame = {
+      df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     // rows whose id does not cast to long are skipped (hardening stance:
     // one bad row must not kill the partition)
-    df.select(col(idCol).cast("long").as(idCol), col(xmlCol))
-      .where(col(idCol).isNotNull)
+    df.select(col("doc_id").cast("long").as("doc_id"), col("xml"))
+      .where(col("doc_id").isNotNull)
       .as[(Long, String)]
       .mapPartitions { rows =>
         val factory = newFactory()
@@ -135,6 +133,6 @@ object Sitemaps {
           else parseWith(factory, xml).iterator.map(e => (id, e.loc, e.lastmod, e.is_index))
         }
       }
-      .toDF(idCol, "loc", "lastmod", "is_index")
+      .toDF("doc_id", "loc", "lastmod", "is_index")
   }
 }

@@ -20,11 +20,14 @@ import org.apache.spark.sql.functions._
   * same unit of parallelism the crawl ecosystem uses (a Common Crawl
   * segment is ~1 GiB so tasks are chunky but bounded; at 100 TB that is
   * ~100k files = ~100k tasks). Per-record payloads are capped at
-  * `maxRecordBytes` (truncated, stream stays aligned) so one hostile
+  * [[MaxRecordBytes]] (truncated, stream stays aligned) so one hostile
   * record cannot OOM a task. Malformed bytes stop the
   * file's parse at the last whole record instead of failing the task.
   */
 object Warc {
+
+  /** The payload cap of [[read]] and of a record read back through an index. */
+  private[graft] val MaxRecordBytes: Int = 64 << 20
 
   /** One parsed WARC record. `payload` is the raw record block (for
     * `response` records: HTTP status line + headers + body — split with
@@ -52,14 +55,12 @@ object Warc {
     * member-gzipped, `*.warc` / `*.warc.gz`).
     */
   def read(
-      spark: SparkSession, path: String,
-      maxRecordBytes: Int = 64 << 20): Dataset[WarcRecord] = {
-    require(maxRecordBytes >= 1, s"maxRecordBytes must be >= 1, got $maxRecordBytes")
+      spark: SparkSession, path: String): Dataset[WarcRecord] = {
     import spark.implicits._
     spark.read.format("binaryFile").load(path)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) => parseRecords(file, bytes, maxRecordBytes) }
+      .flatMap { case (file, bytes) => parseRecords(file, bytes, MaxRecordBytes) }
   }
 
   /** Parse one WARC file's bytes (gzip-sniffed) into records. */
@@ -416,12 +417,9 @@ object Warc {
     */
   def toWet(
       records: Dataset[WarcRecord],
-      mainTextOnly: Boolean = false,
-      maxLinkDensity: Double = 0.5,
-      minChars: Int = 0): DataFrame = {
+      mainTextOnly: Boolean = false): DataFrame = {
     val extract =
-      if (mainTextOnly)
-        graft.functions.HtmlFunctions.htmlMainText(col("body"), maxLinkDensity, minChars)
+      if (mainTextOnly) graft.functions.HtmlFunctions.htmlMainText(col("body"))
       else graft.functions.HtmlFunctions.htmlText(col("body"))
     responseEnvelopes(records).select(
       col("target_uri"),

@@ -1045,8 +1045,7 @@ object WarcCdx {
       conf: org.apache.hadoop.conf.Configuration,
       file: String,
       offset: Long,
-      length: Long,
-      maxRecordBytes: Int = 64 << 20): Option[Warc.WarcRecord] = {
+      length: Long): Option[Warc.WarcRecord] = {
     require(length <= Int.MaxValue, s"member length $length exceeds 2 GiB")
     val p = new org.apache.hadoop.fs.Path(file)
     val fs = p.getFileSystem(conf)
@@ -1055,7 +1054,7 @@ object WarcCdx {
       in.seek(offset)
       val buf = new Array[Byte](length.toInt)
       in.readFully(buf)
-      Warc.parseRecords(file, buf, maxRecordBytes)
+      Warc.parseRecords(file, buf, Warc.MaxRecordBytes)
         .headOption.filter(_.warc_type != "graft:truncated")
     } finally in.close()
   }
@@ -1097,7 +1096,7 @@ object WarcCdx {
     */
   def fetch(
       cdx: DataFrame, dir: String, verifyDigest: Boolean = false,
-      maxRecordBytes: Int = 64 << 20): Dataset[Warc.WarcRecord] = {
+      maxRecordBytes: Int = Warc.MaxRecordBytes): Dataset[Warc.WarcRecord] = {
     val spark = cdx.sparkSession
     import spark.implicits._
     val props = hadoopProps(spark)

@@ -60,7 +60,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * decodable member out of the archive: [[WarcCdx.readRecordAt]] reads
   * `length` bytes at `offset` and parses one record without touching
   * the rest of the file, and [[WarcCdx.fetch]] does the same
-  * distributed. Disable with `cdxIndex = false`.
+  * distributed.
   *
   * `SaveMode.Overwrite` (via `SupportsTruncate`) removes previous
   * `part-*` archives (and their indexes) in the commit that installs the
@@ -103,7 +103,6 @@ object WarcSink {
       path: String,
       gzipMembers: Boolean = true,
       overwrite: Boolean = true,
-      cdxIndex: Boolean = true,
       dedupPayloads: Boolean = false,
       dedupMinBytes: Int = 256,
       cdxFilenamePrefix: String = ""): Unit = {
@@ -112,7 +111,6 @@ object WarcSink {
         s"no scheme, no '.'/'..' segments), got '$cdxFilenamePrefix'")
     df.write.format(classOf[WarcSinkSource].getName)
       .option("gzip", gzipMembers.toString)
-      .option("cdx", cdxIndex.toString)
       .option("dedup", dedupPayloads.toString)
       .option("dedupMin", dedupMinBytes.toString)
       .option("cdxPrefix", cdxFilenamePrefix)
@@ -322,7 +320,6 @@ class WarcSinkSource extends TableProvider {
       properties: util.Map[String, String]): Table =
     new WarcSinkTable(schema, properties.get("path"),
       !"false".equalsIgnoreCase(properties.getOrDefault("gzip", "true")),
-      !"false".equalsIgnoreCase(properties.getOrDefault("cdx", "true")),
       if ("true".equalsIgnoreCase(properties.getOrDefault("dedup", "false")))
         math.max(0, properties.getOrDefault("dedupMin", "256").toInt)
       else -1,
@@ -330,7 +327,7 @@ class WarcSinkSource extends TableProvider {
 }
 
 class WarcSinkTable(
-    writeSchema: StructType, path: String, gzip: Boolean, cdx: Boolean, dedupMin: Int,
+    writeSchema: StructType, path: String, gzip: Boolean, dedupMin: Int,
     cdxPrefix: String = "")
     extends Table with SupportsWrite {
   require(path != null && path.nonEmpty, "WarcSink needs a path")
@@ -342,13 +339,13 @@ class WarcSinkTable(
     util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     WarcSink.validate(info.schema())
-    new WarcWriteBuilder(info.schema(), path, gzip, cdx, dedupMin, cdxPrefix,
+    new WarcWriteBuilder(info.schema(), path, gzip, dedupMin, cdxPrefix,
       info.queryId())
   }
 }
 
 class WarcWriteBuilder(
-    schema: StructType, path: String, gzip: Boolean, cdx: Boolean, dedupMin: Int,
+    schema: StructType, path: String, gzip: Boolean, dedupMin: Int,
     cdxPrefix: String, queryId: String)
     extends WriteBuilder with SupportsTruncate {
   private var truncateFirst = false
@@ -360,7 +357,7 @@ class WarcWriteBuilder(
     val doTruncate = truncateFirst
     new Write {
       override def toBatch: BatchWrite =
-        new WarcBatchWrite(schema, path, gzip, cdx, dedupMin, cdxPrefix, queryId,
+        new WarcBatchWrite(schema, path, gzip, dedupMin, cdxPrefix, queryId,
           doTruncate, props)
     }
   }
@@ -370,7 +367,7 @@ case class WarcCommit(partitionId: Int, tempPath: String, cdxTempPath: String = 
     extends WriterCommitMessage
 
 class WarcBatchWrite(
-    schema: StructType, path: String, gzip: Boolean, cdx: Boolean, dedupMin: Int,
+    schema: StructType, path: String, gzip: Boolean, dedupMin: Int,
     cdxPrefix: String, queryId: String, truncateFirst: Boolean,
     hadoopProps: Array[(String, String)]) extends BatchWrite {
 
@@ -381,7 +378,7 @@ class WarcBatchWrite(
   }
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    WarcWriterFactory(schema, path, gzip, cdx, dedupMin, cdxPrefix, queryId,
+    WarcWriterFactory(schema, path, gzip, dedupMin, cdxPrefix, queryId,
       hadoopProps)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -447,11 +444,11 @@ object WarcWriterFactory {
 }
 
 case class WarcWriterFactory(
-    schema: StructType, path: String, gzip: Boolean, cdx: Boolean, dedupMin: Int,
+    schema: StructType, path: String, gzip: Boolean, dedupMin: Int,
     cdxPrefix: String, queryId: String,
     hadoopProps: Array[(String, String)]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WarcDataWriter(schema, path, gzip, cdx, dedupMin, cdxPrefix, queryId,
+    new WarcDataWriter(schema, path, gzip, dedupMin, cdxPrefix, queryId,
       partitionId, taskId, hadoopProps)
 }
 
@@ -470,12 +467,12 @@ object WarcDataWriter {
 
 /** One task's writer: streams records into one temp WARC file (created
   * lazily — an empty partition contributes no file), each record its own
-  * gzip member when `gzip`; with `cdx`, buffers one ~200 B CDXJ index
+  * gzip member when `gzip`; buffers one ~200 B CDXJ index
   * line per record (bounded by the file's record count) and commits the
   * (urlkey, timestamp)-sorted index beside the archive.
   */
 class WarcDataWriter(
-    schema: StructType, path: String, gzip: Boolean, cdx: Boolean, dedupMin: Int,
+    schema: StructType, path: String, gzip: Boolean, dedupMin: Int,
     cdxPrefix: String, queryId: String, partitionId: Int, taskId: Long,
     hadoopProps: Array[(String, String)])
     extends DataWriter[InternalRow] {
@@ -494,8 +491,7 @@ class WarcDataWriter(
   // member's compressed extent
   private var pos: Long = 0L
   private var rowIdx: Long = 0L
-  private val cdxLines =
-    if (cdx) scala.collection.mutable.ArrayBuffer.empty[(String, String, String)] else null
+  private val cdxLines = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
 
   private final class Counting(o: java.io.OutputStream) extends java.io.FilterOutputStream(o) {
     override def write(b: Int): Unit = { o.write(b); pos += 1 }
@@ -599,32 +595,30 @@ class WarcDataWriter(
       gz.write(rec.toByteArray)
       gz.close()
     } else counted.write(rec.toByteArray)
-    if (cdx) {
-      // CDX urlkey encodes spaces (the line format is space-delimited);
-      // filename is this partition's final committed name, known here
-      // because names are (queryId, partitionId)-deterministic. A revisit
-      // row indexes with mime `warc/revisit` (the pywb convention) and
-      // the PAYLOAD's digest, so index-level copy analysis sees through
-      // the dedup.
-      val ext = if (gzip) ".warc.gz" else ".warc"
-      val urlkey = graft.pipeline.Urls.surtKeyString(uri).replace(" ", "%20")
-      val ts = WarcSink.cdxTimestamp(date)
-      val json = "{\"url\":\"" + WarcSink.jsonEscape(uri) + "\"," +
-        "\"mime\":\"" + (if (isRevisit) "warc/revisit" else WarcSink.jsonEscape(ctype)) + "\"," +
-        "\"digest\":\"" + digest + "\",\"rid\":\"" + rid + "\"," +
-        "\"offset\":\"" + offset + "\",\"length\":\"" + (pos - offset) + "\"," +
-        "\"filename\":\"" +
-        (if (cdxPrefix.isEmpty) "" else cdxPrefix + "/") +
-        f"part-$queryId-$partitionId%05d$ext" + "\"}"
-      cdxLines += ((urlkey, ts, json))
-    }
+    // CDX urlkey encodes spaces (the line format is space-delimited);
+    // filename is this partition's final committed name, known here
+    // because names are (queryId, partitionId)-deterministic. A revisit
+    // row indexes with mime `warc/revisit` (the pywb convention) and
+    // the PAYLOAD's digest, so index-level copy analysis sees through
+    // the dedup.
+    val ext = if (gzip) ".warc.gz" else ".warc"
+    val urlkey = graft.pipeline.Urls.surtKeyString(uri).replace(" ", "%20")
+    val ts = WarcSink.cdxTimestamp(date)
+    val json = "{\"url\":\"" + WarcSink.jsonEscape(uri) + "\"," +
+      "\"mime\":\"" + (if (isRevisit) "warc/revisit" else WarcSink.jsonEscape(ctype)) + "\"," +
+      "\"digest\":\"" + digest + "\",\"rid\":\"" + rid + "\"," +
+      "\"offset\":\"" + offset + "\",\"length\":\"" + (pos - offset) + "\"," +
+      "\"filename\":\"" +
+      (if (cdxPrefix.isEmpty) "" else cdxPrefix + "/") +
+      f"part-$queryId-$partitionId%05d$ext" + "\"}"
+    cdxLines += ((urlkey, ts, json))
     rowIdx += 1
   }
 
   override def commit(): WriterCommitMessage = {
     if (out != null) out.close()
     val cdxTemp =
-      if (cdx && cdxLines != null && cdxLines.nonEmpty) {
+      if (cdxLines.nonEmpty) {
         val c = new Configuration(false)
         hadoopProps.foreach { case (k, v) => c.set(k, v) }
         val p = new Path(WarcWriterFactory.tempDir(path, queryId), s"c-$partitionId-$taskId")

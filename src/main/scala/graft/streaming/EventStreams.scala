@@ -41,12 +41,11 @@ object EventStreams {
   def clickToPurchaseJoin(
       clicks: DataFrame,
       purchases: DataFrame,
-      horizon: String = "30 minutes",
-      lateness: String = "10 minutes"): DataFrame = {
-    val c = clicks.withWatermark("ts", lateness)
+      horizon: String = "30 minutes"): DataFrame = {
+    val c = clicks.withWatermark("ts", "10 minutes")
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
         col("value").as("click_value"))
-    val p = purchases.withWatermark("ts", lateness)
+    val p = purchases.withWatermark("ts", "10 minutes")
       .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
         col("ts").as("purchase_ts"))
     p.join(c,

@@ -28,43 +28,30 @@ import graft.pipeline.Dedup
   */
 object StreamingDedup {
 
-  private def tokens(textCol: String) = split(lower(col(textCol)), " ")
-
-  private def banded(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int,
-      bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+  /** (id, sig, band, band_hash): 64 minhashes of word 3-shingles in 16
+    * bands, the [[Dedup.minhashPairs]] signature family.
+    */
+  private def banded(docs: DataFrame): DataFrame =
     docs.select(
-        col(idCol).as("id"),
-        minhashSignature(tokens(textCol), numHashes, 3, 42L).as("sig"))
+        col("doc_id").as("id"),
+        minhashSignature(split(lower(col("text")), " ")).as("sig"))
       .select(col("id"), col("sig"),
-        posexplode(bandHashes(col("sig"), bands)).as(Seq("band", "band_hash")))
-  }
+        posexplode(bandHashes(col("sig"), 16)).as(Seq("band", "band_hash")))
 
   /** The static side: one row per band per corpus document —
     * (band, band_hash, corpus_id, corpus_sig). Build once offline when the
     * corpus changes; persist (or write bucketed by the two band columns)
-    * and hand it to [[nearDupMatches]]. Signature parameters MUST match
-    * between the two calls — same hash family, or nothing collides.
+    * and hand it to [[nearDupMatches]].
     */
-  def corpusBandIndex(
-      corpus: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 64,
-      bands: Int = 16,
-      bucketCap: Int = Dedup.defaultBucketCap): DataFrame =
-    Dedup.capBuckets(banded(corpus, idCol, textCol, numHashes, bands), bucketCap, "band", "band_hash")
+  def corpusBandIndex(corpus: DataFrame): DataFrame =
+    Dedup.capBuckets(banded(corpus), Dedup.defaultBucketCap, "band", "band_hash")
       .select(col("band"), col("band_hash"),
         col("id").as("corpus_id"), col("sig").as("corpus_sig"))
 
   /** Match incoming documents against the corpus index: map-side signature +
     * band explode on the stream side, stream-static equi join on
     * (band, band_hash), exact signature-agreement verify to estimated
-    * Jaccard ≥ `threshold`. Emits (id, corpus_id, est_jaccard).
+    * Jaccard ≥ 0.5. Emits (id, corpus_id, est_jaccard).
     *
     * Like [[Dedup.bandCandidates]] the result is a MULTISET — a pair
     * colliding in several bands appears once per colliding band, because
@@ -75,15 +62,10 @@ object StreamingDedup {
     */
   def nearDupMatches(
       docs: DataFrame,
-      bandIndex: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      numHashes: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.5): DataFrame =
-    banded(docs, idCol, textCol, numHashes, bands)
+      bandIndex: DataFrame): DataFrame =
+    banded(docs)
       .join(bandIndex, Seq("band", "band_hash"))
       .withColumn("est_jaccard", signatureAgreement(col("sig"), col("corpus_sig")))
-      .filter(col("est_jaccard") >= threshold)
+      .filter(col("est_jaccard") >= 0.5)
       .select(col("id"), col("corpus_id"), round(col("est_jaccard"), 4).as("est_jaccard"))
 }

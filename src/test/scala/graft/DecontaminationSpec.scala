@@ -56,19 +56,6 @@ class DecontaminationSpec extends SparkTestBase {
     batchKept should contain(9L)
   }
 
-  test("hashed-shingle variant matches the exact report") {
-    val docs = Tables.df(spark, "/root/testdata/sf0.001", "documents")
-    val exact = Decontamination.contaminationReport(
-        docs.filter(col("doc_id") >= 10), docs.filter(col("doc_id") < 10),
-        "doc_id", "text", n = 5)
-      .as[(Long, Long)].collect().toMap
-    val hashed = Decontamination.contaminationReport(
-        docs.filter(col("doc_id") >= 10), docs.filter(col("doc_id") < 10),
-        "doc_id", "text", n = 5, hashed = true)
-      .as[(Long, Long)].collect().toMap
-    hashed shouldBe exact
-  }
-
   test("evalExposureReport counts leaking docs and shingles per eval item") {
     val evals = Seq(
       (100L, "the quick brown fox jumps over the lazy dog"),
@@ -82,10 +69,6 @@ class DecontaminationSpec extends SparkTestBase {
     report(100L) shouldBe ((2L, 5L))
     // unexposed eval items are absent, not zero rows
     report.contains(101L) shouldBe false
-    // hashed variant agrees (collisions can only add, none at this size)
-    Decontamination.evalExposureReport(train, evals, "doc_id", "text", n = 5, hashed = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSeq shouldBe Seq((100L, 2L, 5L))
     Dedup.clearCaches()
   }
 

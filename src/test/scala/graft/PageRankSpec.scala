@@ -51,27 +51,6 @@ class PageRankSpec extends SparkTestBase {
     hr(2L) shouldBe hr(3L)
   }
 
-  test("warm start: composition, new-vertex fill, renormalization") {
-    val hub = Seq((1L, 9L), (2L, 9L), (3L, 9L), (9L, 1L)).toDF("src", "dst")
-    def run(it: Int, init: Option[org.apache.spark.sql.DataFrame]) =
-      PageRank.pageRank(hub, "src", "dst", iterations = it, initialRanks = init)
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    def asDF(m: Map[Long, Double]) = m.toSeq.toDF("id", "rank")
-    // cold 6 rounds == warm(cold 3, 3 more) up to renormalization ulp
-    val cold3 = run(3, None)
-    val cold6 = run(6, None)
-    val warm = run(3, Some(asDF(cold3)))
-    cold6.keySet shouldBe warm.keySet
-    cold6.foreach { case (id, r) => warm(id) shouldBe r +- 1e-12 }
-    // a seed missing a vertex (new host) still yields a probability vector
-    run(1, Some(asDF(cold3 - 2L))).values.sum shouldBe 1.0 +- 1e-12
-    // an unnormalized seed (counts, say) is renormalized before round one:
-    // scaling the seed by 1000 changes nothing
-    val a = run(1, Some(asDF(cold3)))
-    val b = run(1, Some(asDF(cold3.map { case (k, v) => k -> v * 1000.0 })))
-    a.foreach { case (id, r) => b(id) shouldBe r +- 1e-12 }
-  }
-
   test("checkpointed edge layout: the last round plans with ONE hash exchange") {
     // Mirrors PipelineSpec's CC invariant for the r14 PageRank rework: the
     // returned frame's plan IS the final round (earlier rounds are behind
@@ -239,16 +218,6 @@ class PageRankSpec extends SparkTestBase {
     so(2L) shouldBe 2L
     an[IllegalArgumentException] should be thrownBy
       labelPropagation(clique.toDF("src", "dst"), "src", "dst", iterations = 0)
-    // warm start: labels are pure integer functions of the previous round,
-    // so cold(1+2) == warm(cold(1), 2) EXACTLY
-    def lp(it: Int, init: Option[org.apache.spark.sql.DataFrame]) =
-      labelPropagation(clique.toDF("src", "dst"), "src", "dst", it, init)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cold1 = lp(1, None)
-    lp(2, Some(cold1.toSeq.toDF("id", "community"))) shouldBe lp(3, None)
-    // a seed missing vertices fills them with their own id
-    val partial = (cold1 - 1L).toSeq.toDF("id", "community")
-    lp(1, Some(partial)).keySet shouldBe cold1.keySet
   }
 
   test("label propagation small-graph driver replay is bit-parity with the rounds") {

@@ -326,4 +326,41 @@ class PreparedStatementsSpec extends SparkTestBase {
       spark.catalog.dropTempView("cc_cached")
     }
   }
+
+  // a subquery with no placeholder still gets a fresh plan on every
+  // execute: the frozen plan's subquery keeps its first result and its
+  // scan's first input partitions
+  test("a subquery without placeholders sees rows registered after the first execute") {
+    import spark.implicits._
+    def register(rows: Seq[(Int, Int)]): Unit =
+      graft.sources.KeyedMemTables.register(spark, "sq_t", rows.toDF("k", "v"), "k")
+    register(Seq((1, 10), (2, 20)))
+    val sql = "SELECT k, v FROM sq_t WHERE k = $1 AND v >= (SELECT max(v) FROM sq_t)"
+    val st = PreparedStatements.prepare(spark, sql)
+    st.executeCollect(Map("$1" -> 2)) shouldBe Array(Row(2, 20))
+    register(Seq((1, 10), (2, 20), (3, 30)))
+    spark.sql(sql.replace("$1", "2")).collect() shouldBe empty
+    st.executeCollect(Map("$1" -> 2)) shouldBe empty
+    st.execute(Map("$1" -> 2)).collect() shouldBe empty
+  }
+
+  // the same for the target of a reused exchange, which the bound plan's
+  // clone does not reach: it is recomputed on every execute
+  test("a reused exchange sees rows registered after the first execute") {
+    import spark.implicits._
+    def register(rows: Seq[(Int, String)]): Unit =
+      graft.sources.KeyedMemTables.register(spark, "rx_t", rows.toDF("k", "s"), "k")
+    register(Seq((1, "a")))
+    val sql = "SELECT a.k, a.c, b.c FROM (SELECT k, count(*) c FROM rx_t GROUP BY k) a " +
+      "JOIN (SELECT k, count(*) c FROM rx_t GROUP BY k) b ON a.k = b.k WHERE a.c >= $1"
+    val st = PreparedStatements.prepare(spark, sql, Map("$1" -> LongType))
+    st.physicalPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+    } shouldBe defined
+    st.executeCollect(Map("$1" -> 1L)) shouldBe Array(Row(1, 1L, 1L))
+    register(Seq((1, "a"), (1, "b")))
+    spark.sql(sql.replace("$1", "1")).collect() shouldBe Array(Row(1, 2L, 2L))
+    st.executeCollect(Map("$1" -> 1L)) shouldBe Array(Row(1, 2L, 2L))
+    st.execute(Map("$1" -> 1L)).collect() shouldBe Array(Row(1, 2L, 2L))
+  }
 }

@@ -30,15 +30,6 @@ class ProfileSpec extends SparkTestBase {
     (rows("score").getString(4), rows("score").getString(5)) shouldBe ("10", "30")
   }
 
-  test("approx variant keeps the same schema and exact-by-construction stats") {
-    val approx = Profile.profile(frame, Seq("id"), exact = false)
-    approx.columns.toSeq shouldBe
-      Seq("col_name", "n_rows", "n_nulls", "n_distinct", "min_val", "max_val")
-    val r = approx.collect().head
-    r.getLong(1) shouldBe 4L
-    r.getLong(2) shouldBe 0L // null count is exact regardless of the distinct sketch
-  }
-
   test("input validation") {
     an[IllegalArgumentException] should be thrownBy Profile.profile(frame, Nil)
     an[IllegalArgumentException] should be thrownBy Profile.profile(frame, Seq("nope"))

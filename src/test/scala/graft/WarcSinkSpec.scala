@@ -160,7 +160,7 @@ class WarcSinkSpec extends SparkTestBase {
       buf.toArray
     }
     val schema = new StructType().add("target_uri", StringType).add("payload", BinaryType)
-    val bw = new graft.sources.WarcBatchWrite(schema, dir, true, true, -1, "",
+    val bw = new graft.sources.WarcBatchWrite(schema, dir, true, -1, "",
       "abortq", truncateFirst = true, hadoopProps = props)
     val msgs: Array[org.apache.spark.sql.connector.write.WriterCommitMessage] =
       Array(graft.sources.WarcCommit(0, s"$dir/_graft_warc_tmp_abortq/t-0-0"))

@@ -1,6 +1,9 @@
 #!/usr/bin/env python3
 """List every public member of src/main (`def`, `val`, `lazy val`, `var`) that
-nothing in src/main or perfbench/src references, and exit 1 if any is listed.
+nothing in src/main or perfbench/src references, and every default parameter
+of a public src/main def that no call in src/main, perfbench/src or src/test
+passes; print how many default parameters the public src/main defs have, and
+exit 1 if anything is listed.
 
 A member is public when it sits directly in the body of a class, object or
 trait whose own enclosing templates are all public, and it carries none of
@@ -33,6 +36,16 @@ templates sharing a name, share one set of references.
 Allowed without a reference: methods named `main` (JVM entry points) and
 `SparkEntry.entry` (the driver's query-registry contract).
 
+A default parameter is passed by a call `name(...)(...)` (after optional
+`[...]` type arguments) whose argument list at the parameter's list index
+has more positional arguments than the parameter's position, or names it
+(`param = ...`). A call `Q.name`, where `Q` is a template of the scanned
+sources, binds only to the defs of `Q` and of the templates `Q` extends; any
+other call binds to every def of that name. A call binds to an overload only
+if it fits it: no list has too many positional arguments or an unknown name,
+and every parameter without a default is given. `tools/unused_api_check.py`
+checks this rule on a fixture.
+
 Usage: python3 tools/unused_api.py [repo_root]
 """
 import os
@@ -40,6 +53,7 @@ import sys
 
 MAIN_DIRS = ["src/main"]
 REF_DIRS = ["src/main", "perfbench/src"]
+CALL_DIRS = REF_DIRS + ["src/test"]
 ALLOWED_NAMES = {"main"}
 ALLOWED_QUALIFIED = {"SparkEntry.entry"}
 NON_PUBLIC_MODS = {"private", "protected", "override"}
@@ -262,6 +276,7 @@ class FileScan:
         self.toks = toks
         self.templates = {}  # name -> set of parent names
         self.members = []  # (name, owner, line, public, declared in an object)
+        self.public_defs = []  # (name, owner, line, index of the `def` token)
         self.owners = []  # per token: tuple of enclosing template names
         self.imported = []  # (owner, name) named by an import
         self.wildcards = set()  # owners whose members are imported with `_`
@@ -320,6 +335,8 @@ class FileScan:
                 public = (all(s[0] and s[1] for s in scopes)
                           and not (modifiers_before(toks, k) & NON_PUBLIC_MODS))
                 self.members.append((nt.text, scopes[-1][2], nt.line, public, scopes[-1][4]))
+                if txt == "def" and public:
+                    self.public_defs.append((nt.text, scopes[-1][2], nt.line, k))
 
     def _imports(self):
         toks = self.toks
@@ -359,6 +376,105 @@ class FileScan:
                     break
 
 
+def group_end(toks, k):
+    """Index just past the bracket group that opens at toks[k]."""
+    depth = 0
+    for j in range(k, len(toks)):
+        if toks[j].kind == "punct":
+            if toks[j].text in "([{":
+                depth += 1
+            elif toks[j].text in ")]}":
+                depth -= 1
+                if depth == 0:
+                    return j + 1
+    return len(toks)
+
+
+def top_level_items(toks, lo, hi):
+    """The comma-separated items of toks[lo:hi], as (start, end) index pairs."""
+    items, depth, start = [], 0, lo
+    for j in range(lo, hi):
+        t = toks[j]
+        if t.kind == "punct":
+            if t.text in "([{":
+                depth += 1
+            elif t.text in ")]}":
+                depth -= 1
+            elif t.text == "," and depth == 0:
+                items.append((start, j))
+                start = j + 1
+    if start < hi:
+        items.append((start, hi))
+    return items
+
+
+def is_assign(toks, j):
+    """toks[j] is a lone `=`: not part of `==`, `=>`, `<=`, `>=` or `!=`."""
+    return (toks[j].text == "=" and j + 1 < len(toks) and toks[j + 1].text not in ("=", ">")
+            and toks[j - 1].text not in ("=", "<", ">", "!"))
+
+
+def arg_lists(toks, j):
+    """The parenthesised lists from toks[j] on, after optional `[...]` type
+    arguments, as (start, end) pairs of their inner tokens."""
+    if j < len(toks) and toks[j].text == "[":
+        j = group_end(toks, j)
+    lists = []
+    while j < len(toks) and toks[j].text == "(":
+        end = group_end(toks, j)
+        lists.append((j + 1, end - 1))
+        j = end
+    return lists
+
+
+def def_params(toks, k):
+    """The parameter lists of the def at toks[k]: per list, a list of
+    (name, has default, repeated) triples."""
+    out = []
+    for lo, hi in arg_lists(toks, k + 2):
+        params = []
+        for a, b in top_level_items(toks, lo, hi):
+            ids = [t for t in toks[a:b] if t.kind == "id" and t.text not in ("implicit", "using")]
+            if not ids:
+                continue
+            params.append((ids[0].text, any(is_assign(toks, j) for j in range(a, b)),
+                           toks[b - 1].text == "*"))
+        out.append(params)
+    return out
+
+
+def call_args(toks, lists):
+    """Per argument list of a call: (number of positional arguments, names
+    of the named ones)."""
+    out = []
+    for lo, hi in lists:
+        positional, named = 0, set()
+        for a, b in top_level_items(toks, lo, hi):
+            if b - a > 2 and toks[a].kind == "id" and is_assign(toks, a + 1):
+                named.add(toks[a].text)
+            else:
+                positional += 1
+        out.append((positional, named))
+    return out
+
+
+def fits(params, args):
+    """A call's argument lists could bind to a def with these parameter
+    lists: no list has too many positional arguments, an unknown name, or a
+    parameter without a default left unset."""
+    for plist, (positional, named) in zip(params, args):
+        names = [p[0] for p in plist]
+        repeated = bool(plist) and plist[-1][2]
+        if positional > len(plist) and not repeated:
+            return False
+        if not named <= set(names):
+            return False
+        for i, (name, has_default, rep) in enumerate(plist):
+            if not (has_default or rep or i < positional or name in named):
+                return False
+    return True
+
+
 def scala_files(root, dirs):
     for d in dirs:
         for base, _, files in os.walk(os.path.join(root, d)):
@@ -367,13 +483,17 @@ def scala_files(root, dirs):
                     yield os.path.join(base, f)
 
 
-def main():
-    root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(os.path.dirname(__file__), "..")
-    root = os.path.abspath(root)
+def scan(root):
+    """Returns (unreferenced public members, number of default parameters of
+    public src/main defs, those of them that no call passes)."""
     scans = {}
     for p in scala_files(root, REF_DIRS):
         with open(p, encoding="utf-8") as fh:
             scans[p] = FileScan(lex(fh.read()))
+    call_toks = [sc.toks for sc in scans.values()]
+    for p in scala_files(root, [d for d in CALL_DIRS if d not in REF_DIRS]):
+        with open(p, encoding="utf-8") as fh:
+            call_toks.append(lex(fh.read()))
 
     templates = {}  # name -> set of parent names
     declared = {}  # owner -> names of its members
@@ -429,20 +549,67 @@ def main():
                 or (not in_object and (None, name) in refs))
 
     unused = []
+    defaulted = []  # (path, line, owner, name, parameter lists)
     for p in sorted(scala_files(root, MAIN_DIRS)):
-        for name, owner, line, public, in_object in scans[p].members:
+        sc = scans[p]
+        for name, owner, line, public, in_object in sc.members:
             if not public or name in ALLOWED_NAMES or f"{owner}.{name}" in ALLOWED_QUALIFIED:
                 continue
             if not referenced(owner, name, in_object):
                 unused.append(f"{os.path.relpath(p, root)}:{line}: {owner}.{name}")
+        for name, owner, line, k in sc.public_defs:
+            params = def_params(sc.toks, k)
+            if any(d for plist in params for _, d, _ in plist):
+                defaulted.append((p, line, owner, name, params))
 
+    # every call of a defaulted def's name: (owners the qualifier allows, or
+    # None for any, argument lists)
+    names = {d[3] for d in defaulted}
+    calls = {}
+    for toks in call_toks:
+        for k, t in enumerate(toks):
+            if t.kind != "id" or t.text not in names or k + 1 >= len(toks):
+                continue
+            if k > 0 and toks[k - 1].text in DEFINING_KWS:
+                continue
+            lists = arg_lists(toks, k + 1)
+            if not lists:
+                continue
+            qual = toks[k - 2] if k > 1 and toks[k - 1].text == "." else None
+            owners = (with_ancestors(qual.text)
+                      if qual is not None and qual.kind == "id" and qual.text in templates
+                      else None)
+            calls.setdefault(t.text, []).append((owners, call_args(toks, lists)))
+
+    total, unpassed = 0, []
+    for p, line, owner, name, params in defaulted:
+        matching = [args for owners, args in calls.get(name, ())
+                    if (owners is None or owner in owners) and fits(params, args)]
+        for li, plist in enumerate(params):
+            for i, (pname, has_default, _) in enumerate(plist):
+                if not has_default:
+                    continue
+                total += 1
+                if not any(li < len(args) and (args[li][0] > i or pname in args[li][1])
+                           for args in matching):
+                    unpassed.append(f"{os.path.relpath(p, root)}:{line}: {owner}.{name}({pname})")
+    return unused, total, unpassed
+
+
+def main():
+    root = sys.argv[1] if len(sys.argv) > 1 else os.path.join(os.path.dirname(__file__), "..")
+    unused, total, unpassed = scan(os.path.abspath(root))
     for u in unused:
         print(u)
     if unused:
         print(f"{len(unused)} public member(s) with no reference in {' or '.join(REF_DIRS)}")
-        return 1
-    print("no unreferenced public members")
-    return 0
+    else:
+        print("no unreferenced public members")
+    for u in unpassed:
+        print(u)
+    print(f"{total} default parameter(s) on public defs in {' or '.join(MAIN_DIRS)}, "
+          f"{len(unpassed)} of them passed by no call in {', '.join(CALL_DIRS)}")
+    return 1 if unused or unpassed else 0
 
 
 if __name__ == "__main__":
