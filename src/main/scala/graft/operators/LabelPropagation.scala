@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Internals
 
 import graft.pipeline.Dedup
 
@@ -26,12 +27,12 @@ import graft.pipeline.Dedup
   * edges⋈labels join sees the hash(src) distribution already satisfied on
   * the edge side, so the only per-round exchanges are label-sized — the
   * labels redistribution, the partially-aggregated (dst, label) vote
-  * counts, and the relabel join. AQE is suspended only while the upfront
-  * edge layout is planned (checkpoints created under AQE lose their
-  * carried partitioning); the rounds themselves plan adaptive. Labels
-  * cache per round (lineage one round deep). Isolated vertices and
-  * self-loop-only neighbors keep their own label (self-loops are
-  * dropped — a vertex does not vote for itself).
+  * counts, and the relabel join. Only the upfront edge layout is planned
+  * without AQE, by a static query execution of its own (checkpoints
+  * created under AQE lose their carried partitioning); the rounds
+  * themselves plan adaptive. Labels cache per round (lineage one round
+  * deep). Isolated vertices and self-loop-only neighbors keep their own
+  * label (self-loops are dropped — a vertex does not vote for itself).
   *
   * Checkpoint blocks register in the shared [[Dedup.clearCheckpoints]]
   * pool: consume the returned frame, then clear (the CC contract).
@@ -62,14 +63,13 @@ object LabelPropagation {
       iterations: Int = 2,
       driverFinishEdges: Long = 1L << 20): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val sess = edges.sparkSession
     def ckpt(df: DataFrame): DataFrame = Dedup.lazyCheckpoint(df)
     val directed = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
     // one edge shuffle for the whole run: symmetrize + distinct, then lay
     // out partitioned+sorted on src — the in-session bucketed edge table
-    // (the CC/PageRank layout; AQE off only while this checkpoint plans,
-    // see Dedup.withAqeOff)
+    // (the CC/PageRank layout; only this checkpoint plans without AQE,
+    // see Internals.planStatically)
     val symmetrized = directed
       .unionAll(directed.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
@@ -78,7 +78,7 @@ object LabelPropagation {
     // exchange, above-advisory graphs keep the static-width
     // distinct-then-repartition shape — same rationale as CC/PageRank
     val nParts = Dedup.layoutPartitionCount(symmetrized)
-    val e = Dedup.withAqeOff(sess)(ckpt(
+    val e = ckpt(Internals.planStatically(
       Dedup.distinctLayout(symmetrized, nParts, "src")))
     if (driverFinishEdges > 0 && e.count() <= driverFinishEdges)
       return driverReplay(e, iterations)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Internals
 
 import graft.pipeline.Dedup
 
@@ -22,8 +23,9 @@ import graft.pipeline.Dedup
   * aggregated) contribution groupBy(dst) and the one-row dangling-mass
   * aggregate — none edge-sized. Each round's (rank, degree) frame is a
   * lazy checkpoint: one materialization serves both its readers (dangling
-  * aggregate, contribution join) and lineage stays one round deep. AQE is
-  * suspended only while the UPFRONT edge/vertex/degree layout is planned
+  * aggregate, contribution join) and lineage stays one round deep. Only the
+  * UPFRONT edge/vertex/degree layout is planned without AQE, each
+  * checkpoint through a static query execution of its own
   * (`Dataset.localCheckpoint` plans at call time; under AQE the carried
   * partitioning comes back UNKNOWN — the CC loop's probe-verified
   * interaction); the rounds themselves plan ADAPTIVE since r16, trading
@@ -52,18 +54,18 @@ object PageRank {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0, 1), got $damping")
     def ckpt(df: DataFrame): DataFrame = Dedup.lazyCheckpoint(df)
-    // AQE suspended ONLY while the upfront graph layout is planned (r16,
-    // was loop-wide — the connectedComponentsIters rationale verbatim):
-    // checkpoints created under AQE lose their outputPartitioning, and the
-    // edge table is the one side whose re-shuffle per round is corpus-
-    // sized. The per-round (vertex-sized) checkpoints stay ADAPTIVE so
-    // their label-sized exchanges coalesce to real parallelism instead of
-    // the static shuffle-partition count.
-    val sess = edges.sparkSession
-    def withAqeOff[T](body: => T): T = Dedup.withAqeOff(sess)(body)
+    // ONLY the upfront graph layout is planned without AQE (r16, was
+    // loop-wide — the connectedComponentsIters rationale verbatim), each
+    // frame by a static query execution of its own, so the session stays
+    // adaptive: checkpoints created under AQE lose their
+    // outputPartitioning, and the edge table is the one side whose
+    // re-shuffle per round is corpus-sized. The per-round (vertex-sized)
+    // checkpoints stay ADAPTIVE so their label-sized exchanges coalesce to
+    // real parallelism instead of the static shuffle-partition count.
+    def layout(df: DataFrame): DataFrame = ckpt(Internals.planStatically(df))
     // one edge shuffle for the whole run: dedup, then lay out by src — the
     // in-session form of a bucketed+sorted edge table. Layout width is
-    // data-size-adaptive (r21, [[Dedup.layoutPartitionCount]]): the AQE-off
+    // data-size-adaptive (r21, [[Dedup.layoutPartitionCount]]): the static
     // planning pins every round stage co-partitioned with these tables at
     // this count, so a small graph runs narrow rounds (the 50-host bench
     // graph ran 588 thirty-two-task-wide stages before) while an
@@ -72,10 +74,10 @@ object PageRank {
     val raw = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
     val nParts = Dedup.layoutPartitionCount(raw)
-    val e = withAqeOff(ckpt(Dedup.distinctLayout(raw, nParts, "src")))
-    val verts = withAqeOff(ckpt(Dedup.distinctLayout(
+    val e = layout(Dedup.distinctLayout(raw, nParts, "src"))
+    val verts = layout(Dedup.distinctLayout(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))),
-      nParts, "id", sort = false)))
+      nParts, "id", sort = false))
     // |V| as a DRIVER SCALAR, not a per-round broadcast (r22, guide §2.4 /
     // VERDICT r21 item 4): the previous 1-row nV aggregate was embedded as
     // a BroadcastNestedLoopJoin in every round's rank expression, and
@@ -89,7 +91,7 @@ object PageRank {
     val nV = verts.count()
     val nVd = lit(nV).cast("double")
     // exchange-free over the src-partitioned edges; checkpoints hash(src)
-    val outDeg = withAqeOff(ckpt(e.groupBy(col("src")).agg(count(lit(1)).as("deg"))))
+    val outDeg = layout(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
 
     var ranks = verts.select(col("id"), (lit(1.0) / nVd).as("rank"))
     // In the narrow-layout regime ([[Dedup.pinToLayout]]) the round's

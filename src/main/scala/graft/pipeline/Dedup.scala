@@ -5,6 +5,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Internals
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -130,28 +132,12 @@ object Dedup {
     c
   }
 
-  /** Plan `body` with AQE suspended — the one-line shared form of the
-    * CC/PageRank/LPA upfront-layout rule: `Dataset.(local)checkpoint`
-    * plans at call time, and under AQE the checkpoint's carried
-    * outputPartitioning comes back UNKNOWN (probe-verified on this
-    * Spark), which would silently re-shuffle the corpus-sized edge table
-    * every round. Only the upfront graph layout plans AQE-off; the
-    * per-round (label-sized) frames stay adaptive.
-    */
-  private[graft] def withAqeOff[T](sess: org.apache.spark.sql.SparkSession)(body: => T): T =
-    // REENTRANT per session (r17 advice) via the shared refcounted guard:
-    // only the outermost entry flips the conf, only the last exit
-    // restores — an inner finally can never pin the session AQE-off.
-    // (Queries a caller runs concurrently on the same session still see
-    // AQE off during the window — inherent to a shared conf; holders only
-    // PLAN checkpoint layouts under it, never a job.)
-    graft.ConfGuard.withSessionConf(sess, "spark.sql.adaptive.enabled", "false")(body)
-
-  /** Data-size-adaptive partition count for the AQE-off checkpoint LAYOUTS
-    * (the CC/PageRank/LPA once-shuffled edge/vertex tables). Those layouts
-    * must plan with AQE suspended (a checkpoint planned under AQE carries
-    * UNKNOWN partitioning and the edge table would re-shuffle every round),
-    * which also pins them at the static `spark.sql.shuffle.partitions` —
+  /** Data-size-adaptive partition count for the statically planned
+    * checkpoint LAYOUTS (the CC/PageRank/LPA once-shuffled edge/vertex
+    * tables). Those layouts must plan without AQE (a checkpoint planned
+    * under AQE carries UNKNOWN partitioning and the edge table would
+    * re-shuffle every round), which also pins them at the static
+    * `spark.sql.shuffle.partitions` —
     * 32 tasks per stage over a KB-sized graph, and every per-round join
     * co-partitioned with the layout inherits that width (r21 baseline:
     * q_graph_pagerank ran 588 tasks for a 50-vertex graph). This applies
@@ -164,9 +150,9 @@ object Dedup {
     * mode is safe here: size-only estimation never shrinks below the scan
     * estimate through filters/aggregates and INFLATES through joins, so an
     * unknown or join-derived size keeps the configured partition count (no
-    * change from today) while a provably-small input coalesces. Tunables:
-    * `spark.graft.layout.advisoryBytes` (default 64 MB, the AQE advisory
-    * default; <= 0 disables and always uses the static count).
+    * change from today) while a provably-small input coalesces. The
+    * advisory size is AQE's own,
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (default 64 MB).
     */
   private[graft] def layoutPartitionCount(df: DataFrame): Int = {
     val bytes =
@@ -182,18 +168,15 @@ object Dedup {
   private[graft] def layoutPartitionsForBytes(
       sess: org.apache.spark.sql.SparkSession, bytes: BigInt): Int = {
     val maxParts = staticPartitions(sess)
-    val advisory =
-      sess.conf.get("spark.graft.layout.advisoryBytes", (64L << 20).toString).toLong
-    if (advisory <= 0) maxParts
-    else {
-      val n = (bytes + advisory - 1) / advisory
-      // floor at 2, not 1: `repartition(1, key)` plans as SinglePartition
-      // (not HashPartitioning(key, 1)), which the co-partitioning machinery
-      // does not match against a 1-partition hash layout — the pinned round
-      // joins would re-shuffle both sides back to the static width
-      // (probe-verified on this Spark)
-      if (n >= maxParts) maxParts else math.min(maxParts, math.max(2, n.toInt))
-    }
+    val advisory = math.max(1L, Internals.classicSession(sess)
+      .sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val n = (bytes + advisory - 1) / advisory
+    // floor at 2, not 1: `repartition(1, key)` plans as SinglePartition
+    // (not HashPartitioning(key, 1)), which the co-partitioning machinery
+    // does not match against a 1-partition hash layout — the pinned round
+    // joins would re-shuffle both sides back to the static width
+    // (probe-verified on this Spark)
+    if (n >= maxParts) maxParts else math.min(maxParts, math.max(2, n.toInt))
   }
 
   /** Persisted size (memory + disk) of `rdds`' storage blocks, when every
@@ -659,10 +642,12 @@ object Dedup {
     // exactly once for the whole run, in round 1's materializing job, where
     // the old round-1 groupBy shuffled them anyway.
     //
-    // AQE is suspended ONLY while this checkpoint is planned (r16, was
-    // loop-wide since r13): under AQE, Dataset.(local)checkpoint wraps an
-    // AdaptiveSparkPlanExec whose partitioning is not final at wrap time,
-    // so the LogicalRDD comes back with UNKNOWN partitioning
+    // ONLY this checkpoint is planned without AQE (r16, was loop-wide
+    // since r13), through a static query execution of its own
+    // ([[Internals.planStatically]]; the session's conf is not touched, so
+    // concurrent queries stay adaptive): under AQE, Dataset.(local)checkpoint
+    // wraps an AdaptiveSparkPlanExec whose partitioning is not final at wrap
+    // time, so the LogicalRDD comes back with UNKNOWN partitioning
     // (probe-verified on this Spark) and the corpus-sized edge table would
     // silently re-shuffle every round — the exact cost this layout
     // removes. The per-round LABEL frames are a different trade: their
@@ -677,9 +662,8 @@ object Dedup {
     // the join requirement with no exchange — verified both ways in
     // PipelineSpec's checkpointed-edge-table plan tests.
     val sess = pairs.sparkSession
-    def withAqeOff[T](body: => T): T = Dedup.withAqeOff(sess)(body)
     // The pair list materializes ADAPTIVELY first (r21): the edge-layout
-    // checkpoint below must plan with AQE suspended, and without this
+    // checkpoint below must plan without AQE, and without this
     // lineage cut that non-adaptive planning swallows the ENTIRE upstream
     // mining pipeline — LSH candidate generation, verify joins, pair
     // aggregation all pinned at the static shuffle width and shut out of
@@ -711,14 +695,14 @@ object Dedup {
       .filter(col("src").isNotNull)
     // layout width is data-size-adaptive (r21): sized from the MEASURED
     // pair-block bytes (×2 for the directed expansion) when available,
-    // plan stats otherwise. The AQE-off planning below pins every stage
+    // plan stats otherwise. The static planning below pins every stage
     // co-partitioned with this table at the chosen count, so a
     // provably-small graph lays out narrow instead of at the static
     // shuffle-partition width.
     val nParts = measuredPairBytes
       .map(b => layoutPartitionsForBytes(sess, BigInt(b) * 2))
       .getOrElse(layoutPartitionCount(directed))
-    val edges = withAqeOff(ckpt(directed
+    val edges = ckpt(Internals.planStatically(directed
       .repartition(nParts, col("src"))
       .sortWithinPartitions(col("src"))))
     // Round 1 degenerates: over identity labels (component = id), the
@@ -977,6 +961,42 @@ object Dedup {
       .agg(round(max(col("cos")), 6).as("cosine"))
   }
 
+  /** (id, v, ck) for every vector, where `ck` is the 96-bit content key: a
+    * false vector collision needs xxhash64 AND murmur3 to collide — the
+    * same negligible-error class as the 64-bit shingle hashing the text
+    * family documents.
+    */
+  private def keyedVectors(embeddings: DataFrame): DataFrame =
+    embeddings.select(
+      col(VecId).as("id"), col(Embedding).as("v"),
+      struct(xxhash64(col(Embedding)).as("h1"), hash(col(Embedding)).as("h2")).as("ck"))
+
+  /** The vector analog of [[distinctTexts]]: one row per DISTINCT vector of
+    * a [[keyedVectors]] frame — (96-bit content key, min id, vector). Shared
+    * by the pair mining and the off-path model build
+    * ([[learnSemanticCentroids]]) so both learn and pair over the same
+    * representative set.
+    */
+  private def distinctVectors(keyed: DataFrame): DataFrame =
+    keyed.groupBy(col("ck")).agg(min(col("id")).as("id"), first(col("v")).as("v"))
+
+  /** The k-means model build of [[semanticNearDupPairs]] split out: learns
+    * the coarse quantizer over the SAME distinct-vector representative set
+    * the pair mining clusters, so passing the result back in via that
+    * method's `centroids` parameter is behavior-identical to letting it
+    * learn inline. This is the reference's amortization thesis
+    * (datafusion-dynamic-filter README.md:29-33) applied to model-build
+    * work: centroid learning is a seed collect plus one driver-synchronized
+    * job per Lloyd iteration — index-build-class cost (the
+    * [[Similarity.buildIvfIndex]] / PQ-codebook protocol class), paid once
+    * per corpus, not once per dedup invocation.
+    */
+  def learnSemanticCentroids(
+      embeddings: DataFrame,
+      k: Int = 16): Seq[Seq[Float]] =
+    Similarity.learnCentroids(
+      distinctVectors(keyedVectors(embeddings)), k, 2, 1.0, "id", "v")
+
   /** SemDeDup-style semantic near-duplicate pairs: cluster the embedding
     * space with the IVF coarse quantizer ([[Similarity.learnCentroids]] —
     * k-means, deterministic seeding), then verify exact cosine ≥
@@ -1001,51 +1021,17 @@ object Dedup {
     * (non-identical) duplicate pairs are reported between representatives;
     * [[connectedComponents]] downstream closes the copies over them.
     */
-  /** The vector analog of [[distinctTexts]]: one row per DISTINCT vector —
-    * (96-bit content key, min id, vector). Shared by the pair mining and
-    * the off-path model build ([[learnSemanticCentroids]]) so both learn
-    * and pair over the same representative set.
-    */
-  private def distinctVectors(embeddings: DataFrame): DataFrame =
-    embeddings.select(
-        col(VecId).as("id"), col(Embedding).as("v"),
-        struct(xxhash64(col(Embedding)).as("h1"), hash(col(Embedding)).as("h2")).as("ck"))
-      .groupBy(col("ck"))
-      .agg(min(col("id")).as("id"), first(col("v")).as("v"))
-
-  /** The k-means model build of [[semanticNearDupPairs]] split out: learns
-    * the coarse quantizer over the SAME distinct-vector representative set
-    * the pair mining clusters, so passing the result back in via that
-    * method's `centroids` parameter is behavior-identical to letting it
-    * learn inline. This is the reference's amortization thesis
-    * (datafusion-dynamic-filter README.md:29-33) applied to model-build
-    * work: centroid learning is a seed collect plus one driver-synchronized
-    * job per Lloyd iteration — index-build-class cost (the
-    * [[Similarity.buildIvfIndex]] / PQ-codebook protocol class), paid once
-    * per corpus, not once per dedup invocation.
-    */
-  def learnSemanticCentroids(
-      embeddings: DataFrame,
-      k: Int = 16): Seq[Seq[Float]] =
-    Similarity.learnCentroids(
-      distinctVectors(embeddings), k, 2, 1.0, "id", "v")
-
   def semanticNearDupPairs(
       embeddings: DataFrame,
       k: Int = 16,
       threshold: Double = 0.95,
       bucketCap: Int = defaultBucketCap,
       centroids: Option[Seq[Seq[Float]]] = None): DataFrame = {
-    // 96-bit content key ([[distinctVectors]]): a false vector collision
-    // needs xxhash64 AND murmur3 to collide — the same negligible-error
-    // class as the 64-bit shingle hashing the text family documents.
-    // Cached: read by the rep aggregation and the copy→rep star join
-    // (caller clears, [[clearCaches]]).
-    val keyed = cache(embeddings.select(
-      col(VecId).as("id"), col(Embedding).as("v"),
-      struct(xxhash64(col(Embedding)).as("h1"), hash(col(Embedding)).as("h2")).as("ck")))
-    val reps = cache(keyed.groupBy(col("ck"))
-      .agg(min(col("id")).as("id"), first(col("v")).as("v")))
+    // content-keyed vectors ([[keyedVectors]]), cached: read by the rep
+    // aggregation and the copy→rep star join (caller clears,
+    // [[clearCaches]])
+    val keyed = cache(keyedVectors(embeddings))
+    val reps = cache(distinctVectors(keyed))
     // star pairs: every non-representative exact copy ↔ its (min-id) rep.
     // Identical vectors have cosine exactly 1 (a zero vector's cosine is
     // formally undefined, but identical zero vectors are still duplicates —

@@ -65,19 +65,46 @@ object Params {
     // identity cache: a subquery instance shared through ReusedSubqueryExec
     // binds to ONE new instance, so subquery reuse survives the clone and
     // the subquery still executes once per run
-    val bound = bindChecked(plan, params, new IdentityHashMap[BaseSubqueryExec, BaseSubqueryExec])
+    val (bound, rebound) =
+      bindChecked(plan, params, new IdentityHashMap[BaseSubqueryExec, BaseSubqueryExec])
     // deep-clone: transform is copy-on-write, so unchanged subtrees would be
     // SHARED between concurrent bound plans — and whole-stage codegen
     // mutates a `parent` pointer on child nodes during produce/consume,
     // which cross-contaminates concurrently generated spans. A full clone
     // gives every execution a private tree (cheap: pure driver-side copy).
-    bound.clone()
+    val cloned = bound.clone()
+    if (rebound) reuseExchanges(cloned) else cloned
   }
 
+  /** `plan` with each reused exchange pointed at the exchange of `plan`
+    * it reuses (the one canonically equal to its own bound target), so the
+    * reused side runs once per execute, as in the literal SQL, and never
+    * across executes (`plan` is this execute's private clone). A target
+    * that itself holds a reused exchange is rebuilt by the swaps below, so
+    * its reusers keep their own bound copy rather than an outdated instance
+    * that shares nodes with the rebuilt one; so does a reused exchange
+    * whose exchange sits in a subquery.
+    */
+  private def reuseExchanges(plan: SparkPlan): SparkPlan = {
+    val exchanges = plan.collect {
+      case e: Exchange if !e.exists(_.isInstanceOf[ReusedExchangeExec]) => e
+    }
+    plan
+      .transformUp {
+        case r: ReusedExchangeExec =>
+          exchanges.find(_.canonicalized == r.child.canonicalized)
+            .fold[SparkPlan](r)(ReboundExchange(r.output, _))
+      }
+      .transformUp { case ReboundExchange(output, child) => ReusedExchangeExec(output, child) }
+  }
+
+  /** The bound plan, and whether it holds a rebound subquery or reused
+    * exchange.
+    */
   private def bindChecked(
       plan: SparkPlan,
       params: Map[String, Any],
-      cache: IdentityHashMap[BaseSubqueryExec, BaseSubqueryExec]): SparkPlan = {
+      cache: IdentityHashMap[BaseSubqueryExec, BaseSubqueryExec]): (SparkPlan, Boolean) = {
     val placeholderRule: PartialFunction[Expression, Expression] = {
       case ParamPlaceholder(id, dt) =>
         // BoundParam (not Literal) so every execution of the statement hits
@@ -103,7 +130,7 @@ object Params {
       case r: ReusedExchangeExec =>
         rebound = true
         ReboundExchange(r.output,
-          bindChecked(r.child, params, cache).clone().asInstanceOf[Exchange])
+          bindChecked(r.child, params, cache)._1.clone().asInstanceOf[Exchange])
       // broadcast key expressions live in the mode, outside `expressions`,
       // so a placeholder in a broadcast-side join key needs its own rewrite
       case bc: BroadcastExchangeExec =>
@@ -113,10 +140,10 @@ object Params {
           case _ => bc
         }
     }.transformAllExpressions(exprRule)
-    if (!rebound) bound
-    else bound
+    if (!rebound) (bound, false)
+    else (bound
       .transformUp { case ReboundExchange(output, child) => ReusedExchangeExec(output, child) }
-      .transformAllExpressions { case Rebound(sub) => sub }
+      .transformAllExpressions { case Rebound(sub) => sub }, true)
   }
 
   /** A rebound subquery on its way into the plan. Catalyst's transforms keep
@@ -129,7 +156,7 @@ object Params {
     override def nullable: Boolean = sub.nullable
   }
 
-  /** The same for a reused exchange with a rebound target. */
+  /** The same for a reused exchange with a rebound or shared target. */
   private case class ReboundExchange(output: Seq[Attribute], child: Exchange)
       extends LeafExecNode {
     override protected def doExecute(): RDD[InternalRow] =
@@ -147,7 +174,7 @@ object Params {
         case r: ReusedSubqueryExec => ReusedSubqueryExec(bindSubquery(r.child, params, cache))
         case other =>
           // same sharing hazard as the top-level plan: private tree per bind
-          bindChecked(other, params, cache).clone().asInstanceOf[BaseSubqueryExec]
+          bindChecked(other, params, cache)._1.clone().asInstanceOf[BaseSubqueryExec]
       }
       cache.put(p, bound)
       bound

@@ -256,11 +256,14 @@ object PreparedStatements {
   }
 
   /** Prepare `sql` for repeated execution: the full Catalyst pipeline runs
-    * once, and every execute re-binds the frozen physical plan. AQE is off
-    * for that plan: adaptive re-planning would mutate the tree the
-    * statement re-binds and bring back per-execute planning, the cost this
-    * amortizes. A heavy shape that wants AQE (a fact⋈fact join over skewed
-    * keys) runs as `spark.sql(text, args)` instead, which plans per call.
+    * once, and every execute re-binds the frozen physical plan. That plan is
+    * planned statically, without AQE, by a query execution of its own
+    * ([[Internals.staticPlan]]): adaptive re-planning would mutate the tree
+    * the statement re-binds and bring back per-execute planning, the cost
+    * this amortizes. The session's conf is not touched, so queries planned
+    * on it meanwhile stay adaptive. A heavy shape that wants AQE (a
+    * fact⋈fact join over skewed keys) runs as `spark.sql(text, args)`
+    * instead, which plans per call.
     */
   def prepare(
       spark: SparkSession,
@@ -293,15 +296,7 @@ object PreparedStatements {
     }
 
     // Plan once, through the full Catalyst pipeline (AQE off: see above).
-    val qe = Internals.queryExecution(spark, withPlaceholders)
-    // AQE suspension through the shared refcounted guard: concurrent
-    // prepare() calls on one session overlap safely (only the outermost
-    // flips the conf; a naive save/restore pair here had the same
-    // pin-the-override race r17's advice flagged in the dedup tier)
-    val physical =
-      graft.ConfGuard.withSessionConf(spark, "spark.sql.adaptive.enabled", "false") {
-        qe.executedPlan
-      }
+    val physical = Internals.staticPlan(spark, withPlaceholders)
     ParquetLeaf.attach(physical)
 
     new PreparedStatement(spark, sql, physical, physical.output)

@@ -4,14 +4,17 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.columnar.CachedBatch
 import org.apache.spark.sql.execution.{
   ColumnarToRowExec, LogicalRDD, ProjectExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.InsertAdaptiveSparkPlan
 import org.apache.spark.sql.execution.columnar.{
   DefaultCachedBatch, DefaultCachedBatchSerializer, GenerateColumnAccessor, InMemoryTableScanExec}
 import org.apache.spark.sql.internal.SQLConf
@@ -38,9 +41,33 @@ object Internals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(classicSession(spark), plan)
 
-  /** Build a QueryExecution pipeline for an already-parsed plan. */
-  def queryExecution(spark: SparkSession, plan: LogicalPlan): QueryExecution =
-    new QueryExecution(classicSession(spark), plan)
+  /** A query execution that plans without AQE, whatever the session's AQE
+    * conf says: its physical preparations are the session's minus
+    * [[InsertAdaptiveSparkPlan]], which is what the session runs with AQE
+    * disabled (subqueries included, which then plan through
+    * `PlanSubqueries`). The decision is this query's alone; queries planned
+    * concurrently on the same session stay adaptive.
+    */
+  private class StaticQueryExecution(session: classic.SparkSession, plan: LogicalPlan)
+      extends QueryExecution(session, plan) {
+    override protected def preparations: Seq[Rule[SparkPlan]] =
+      super.preparations.filterNot(_.isInstanceOf[InsertAdaptiveSparkPlan])
+  }
+
+  /** The physical plan of a parsed `plan`, planned once without AQE: a
+    * prepared statement's frozen plan.
+    */
+  def staticPlan(spark: SparkSession, plan: LogicalPlan): SparkPlan =
+    new StaticQueryExecution(classicSession(spark), plan).executedPlan
+
+  /** `df` planned without AQE. An action on the result, or a checkpoint of
+    * it, runs the static plan, so a checkpoint carries the plan's output
+    * partitioning (under AQE it comes back unknown).
+    */
+  def planStatically(df: DataFrame): DataFrame = {
+    val qe = new StaticQueryExecution(classicSession(df.sparkSession), df.queryExecution.analyzed)
+    new classic.Dataset[Row](qe, ExpressionEncoder(qe.analyzed.schema))
+  }
 
   /** Wrap the output RDD of an executed physical plan as a DataFrame.
     * The rows are UnsafeRows produced by a Spark plan, which is exactly what

@@ -61,11 +61,13 @@ class PageRankSpec extends SparkTestBase {
     // AQE + broadcast off, as in the production loop / the CC test.
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // full-width layout regime (the 100 TB shape this test pins): disable
-    // the r21 size-adaptive narrowing so the fixture plans like a corpus
-    spark.conf.set("spark.graft.layout.advisoryBytes", "0")
+    // full-width layout regime (the 100 TB shape this test pins): at 2
+    // static partitions the r21 size-adaptive width (floored at 2) equals
+    // the static width, so the fixture plans like a corpus
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
     try {
       val edges = (0L until 500L).map(i => (i, (i + 1) % 500L)).toDF("src", "dst")
       val out = PageRank.pageRank(edges, "src", "dst", iterations = 3)
@@ -79,7 +81,7 @@ class PageRankSpec extends SparkTestBase {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
-      spark.conf.unset("spark.graft.layout.advisoryBytes")
+      spark.conf.set("spark.sql.shuffle.partitions", partitions)
     }
   }
 

@@ -241,7 +241,9 @@ class PipelineSpec extends SparkTestBase {
     // The edge CHECKPOINT is created AQE-off, as in connectedComponentsIters
     // itself: under AQE the checkpoint wraps a non-final adaptive plan and
     // the partitioning comes back UNKNOWN (probe-verified) — which is
-    // exactly why the production loop suspends AQE for that one plan. The
+    // exactly why the production loop plans that one checkpoint statically,
+    // through its own non-adaptive query execution
+    // (`Internals.planStatically`), with the session left adaptive. The
     // ROUNDS, by contrast, run adaptive since r16 (label-sized exchanges
     // coalesce); both planning modes must keep the edge side exchange-free.
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -363,4 +363,155 @@ class PreparedStatementsSpec extends SparkTestBase {
     st.executeCollect(Map("$1" -> 1L)) shouldBe Array(Row(1, 2L, 2L))
     st.execute(Map("$1" -> 1L)).collect() shouldBe Array(Row(1, 2L, 2L))
   }
+
+  /** `body` with the session's AQE set to `enabled`, restored after. */
+  private def withAqe[T](enabled: Boolean)(body: => T): T = {
+    val saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", enabled.toString)
+    try body
+    finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+  }
+
+  // the reused side runs once per execute, as in the literal SQL planned
+  // without AQE: the reused exchange points at the bound tree's own
+  // exchange, not at a second bound copy of it
+  test("a reused exchange runs once per execute, as in the literal SQL") {
+    import spark.implicits._
+    def register(rows: Seq[(Int, String)]): Unit =
+      graft.sources.KeyedMemTables.register(spark, "rx_t", rows.toDF("k", "s"), "k")
+    register(Seq((1, "a")))
+    val sql = "SELECT a.k, a.c, b.c FROM (SELECT k, count(*) c FROM rx_t GROUP BY k) a " +
+      "JOIN (SELECT k, count(*) c FROM rx_t GROUP BY k) b ON a.k = b.k WHERE a.c >= $1"
+    val st = PreparedStatements.prepare(spark, sql, Map("$1" -> LongType))
+    // planned (lazily, once) while AQE is off; the collect below runs it
+    val literal = spark.sql(sql.replace("$1", "1"))
+    withAqe(enabled = false)(literal.queryExecution.executedPlan).collectFirst {
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+    } shouldBe defined
+    val (literalRows, literalStages) = stagesRun(literal.collect())
+    literalRows shouldBe Array(Row(1, 1L, 1L))
+    stagesRun(st.executeCollect(Map("$1" -> 1L))) match {
+      case (rows, stages) =>
+        rows shouldBe Array(Row(1, 1L, 1L))
+        stages shouldBe literalStages
+    }
+    // still never shared across executes
+    register(Seq((1, "a"), (1, "b")))
+    stagesRun(st.executeCollect(Map("$1" -> 1L))) match {
+      case (rows, stages) =>
+        rows shouldBe Array(Row(1, 2L, 2L))
+        stages shouldBe literalStages
+    }
+  }
+
+  // a reused exchange whose target holds a reused exchange itself (the
+  // shuffle over a self-join of one aggregate) keeps its own bound copy of
+  // that target, and the plan still runs with every reuse in place
+  test("a nested reused exchange returns the literal SQL's rows on every execute") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def register(rows: Seq[(Int, String)]): Unit =
+      graft.sources.KeyedMemTables.register(spark, "nrx_t", rows.toDF("k", "s"), "k")
+    register(Seq((1, "a"), (2, "b")))
+    val sql = "WITH a AS (SELECT k, count(*) c FROM nrx_t GROUP BY k), " +
+      "b AS (SELECT a1.c + a2.c AS s FROM a a1 JOIN a a2 ON a1.k = a2.k), " +
+      "g AS (SELECT s, count(*) n FROM b GROUP BY s) " +
+      "SELECT g1.s, g1.n, g2.n FROM g g1 JOIN g g2 ON g1.s = g2.s WHERE g1.n >= $1"
+    val st = PreparedStatements.prepare(spark, sql, Map("$1" -> LongType))
+    st.physicalPlan.collect {
+      case r: ReusedExchangeExec if r.child.exists(_.isInstanceOf[ReusedExchangeExec]) => r
+    } should not be empty
+    def literal() = spark.sql(sql.replace("$1", "1")).collect().map(_.toString).sorted
+    st.executeCollect(Map("$1" -> 1L)).map(_.toString).sorted shouldBe literal()
+    register(Seq((1, "a"), (1, "c"), (2, "b")))
+    st.executeCollect(Map("$1" -> 1L)).map(_.toString).sorted shouldBe literal()
+    st.execute(Map("$1" -> 1L)).collect().map(_.toString).sorted shouldBe literal()
+  }
+
+  // the frozen plan is planned without AQE by prepare()'s own query
+  // execution: a test-only optimizer rule holds prepare() mid-planning,
+  // and meanwhile the session is still adaptive for every other query
+  test("prepare() plans without AQE and leaves the session adaptive meanwhile") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import java.util.concurrent.atomic.AtomicBoolean
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.functions.col
+    users
+    val paused = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val fired = new AtomicBoolean(false)
+    object PauseOnDynamicFilter extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (plan.exists(_.isInstanceOf[graft.plans.DynamicFilterNode]) &&
+          fired.compareAndSet(false, true)) {
+          paused.countDown()
+          release.await(2, TimeUnit.MINUTES)
+        }
+        plan
+      }
+    }
+    val exp = spark.experimental
+    exp.extraOptimizations = exp.extraOptimizations :+ PauseOnDynamicFilter
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val prepared = pool.submit(() => PreparedStatements.prepare(spark,
+        "SELECT id, count(*) AS n FROM users WHERE id >= $1 GROUP BY id"))
+      paused.await(2, TimeUnit.MINUTES) shouldBe true
+      spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true"
+      spark.range(100).groupBy(col("id") % 3).count()
+        .queryExecution.executedPlan shouldBe an[AdaptiveSparkPlanExec]
+      release.countDown()
+      val st = prepared.get(2, TimeUnit.MINUTES)
+      st.physicalPlan.find(_.isInstanceOf[AdaptiveSparkPlanExec]) shouldBe None
+      st.executeCollect(Map("$1" -> 4)).map(_.toString).sorted shouldBe Array("[4,1]", "[5,1]")
+    } finally {
+      release.countDown()
+      exp.extraOptimizations = exp.extraOptimizations.filterNot(_ eq PauseOnDynamicFilter)
+      pool.shutdown()
+    }
+  }
+
+  // filtering AQE's rule out of one query execution plans exactly what the
+  // session plans with AQE disabled, on every source and subquery shape
+  test("a frozen plan equals the plan the same SQL gets with AQE disabled") {
+    import spark.implicits._
+    users
+    val dir = java.nio.file.Files.createTempDirectory("graft_static_plan").toFile
+    dir.deleteOnExit()
+    val df = (0L until 200L).map(i => (i, s"v_$i")).toDF("k", "name")
+    df.write.parquet(dir.getAbsolutePath + "/t")
+    spark.read.parquet(dir.getAbsolutePath + "/t").createOrReplaceTempView("sp_parquet")
+    graft.sources.KeyedMemTables.register(spark, "sp_keyed", df, "k")
+    val cached = df.repartition(3).cache()
+    cached.count()
+    cached.createOrReplaceTempView("sp_cached")
+    try {
+      val sqls = Seq(
+        "SELECT k, name FROM sp_parquet WHERE k = $1",
+        "SELECT k, name FROM sp_cached WHERE k = $1",
+        "SELECT k, name FROM sp_keyed WHERE k = $1",
+        "SELECT k, name FROM sp_keyed WHERE k = $1 AND k < (SELECT max(k) FROM sp_parquet)",
+        "SELECT a.k, a.c, b.c FROM (SELECT k, count(*) c FROM sp_cached GROUP BY k) a " +
+          "JOIN (SELECT k, count(*) c FROM sp_cached GROUP BY k) b ON a.k = b.k " +
+          "WHERE a.k = $1")
+      val frozen = sqls.map { sql =>
+        val plan = PreparedStatements.prepare(spark, sql, Map("$1" -> LongType)).physicalPlan
+        val static = withAqe(enabled = false) {
+          PreparedStatements.prepare(spark, sql, Map("$1" -> LongType)).physicalPlan
+        }
+        withClue(sql) { plan.canonicalized shouldBe static.canonicalized }
+        plan
+      }
+      frozen(3).subqueriesAll should not be empty
+      frozen(4).collectFirst {
+        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
+      } shouldBe defined
+    } finally {
+      graft.sources.KeyedMemTables.unregister(spark, "sp_keyed")
+      Seq("sp_parquet", "sp_cached").foreach(spark.catalog.dropTempView)
+      cached.unpersist(blocking = true)
+    }
+  }
 }

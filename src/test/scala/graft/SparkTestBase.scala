@@ -14,6 +14,10 @@ trait SparkTestBase extends AnyFunSuite with Matchers {
   /** Runs `body` and counts the Spark jobs it started. */
   def jobsRun[T](body: => T): (T, Int) =
     org.apache.spark.graft.JobCounter.jobsRun(spark.sparkContext)(body)
+
+  /** Runs `body` and counts the Spark stages it submitted. */
+  def stagesRun[T](body: => T): (T, Int) =
+    org.apache.spark.graft.JobCounter.stagesRun(spark.sparkContext)(body)
 }
 
 object SparkTestBase {
