@@ -195,7 +195,7 @@ object SparkEntry {
       } finally s.conf.set(key, old)
     }),
     // Placeholders INSIDE a scalar subquery's own plan: binding recurses
-    // through ExecSubqueryExpression (Params.bindChecked). $1 has no column
+    // through ExecSubqueryExpression (Params.bind). $1 has no column
     // sibling so its type is declared explicitly — inference would
     // (deliberately) fail fast.
     "q_prep_subquery" -> ((s, dir) => {

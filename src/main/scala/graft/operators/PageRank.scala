@@ -117,7 +117,7 @@ object PageRank {
       // One row collected per round; the summation plan — and therefore
       // the IEEE value — is unchanged.
       val dm = withDeg.filter(col("deg").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0))).head.getDouble(0)
+        .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
       val shares = pin(withDeg.filter(col("deg").isNotNull)
         .select(col("id"), (col("rank") / col("deg").cast("double")).as("share")), "id")
       val contribs = pin(e.join(shares, e("src") === shares("id"))

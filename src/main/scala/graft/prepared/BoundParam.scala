@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.DataType
   * This is the Spark analog of the reference updating its shared
   * `DynamicFilterPhysicalExpr` in place instead of rebuilding the plan
   * (`src/physical.rs:76-92`) — same goal (no per-execute compilation), but
-  * as an immutable per-clone value, so concurrent executes stay safe.
+  * as an immutable per-bind value, so concurrent executes stay safe.
   *
   * `value` is the Catalyst-internal representation (e.g. UTF8String).
   */

@@ -4,12 +4,9 @@ import java.util.IdentityHashMap
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{
-  Attribute, Expression, LeafExpression, Literal, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, Literal, Unevaluable}
 import org.apache.spark.sql.execution.{
-  BaseSubqueryExec, ExecSubqueryExpression, LeafExecNode, ReusedSubqueryExec, SparkPlan}
+  BaseSubqueryExec, ExecSubqueryExpression, ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
 import org.apache.spark.sql.types.DataType
@@ -18,16 +15,16 @@ import org.apache.spark.sql.types.DataType
   * reference's `replace_placeholders`, `src/param_resolver.rs:77-100`, and
   * `contains_placeholder`, `src/rule.rs:16-30`).
   *
-  * Substitution is a pure tree rewrite producing an immutable bound plan —
-  * there is no shared mutable filter expression and therefore no
-  * single-partition restriction (the reference needs `target_partitions=1`,
-  * its `README.md:56`; this design does not).
+  * Substitution copies the frozen plan once per execute into a private
+  * bound plan — there is no shared mutable filter expression and therefore
+  * no single-partition restriction (the reference needs
+  * `target_partitions=1`, its `README.md:56`; this design does not).
   *
   * Subqueries: a physical plan holds its subquery plans *inside*
-  * [[ExecSubqueryExpression]]s, which `transformAllExpressions` does not
-  * descend into — both detection and substitution recurse through them
-  * explicitly, so `... WHERE x > (SELECT avg(y) FROM t WHERE z = $1)`
-  * binds like any other placeholder.
+  * [[ExecSubqueryExpression]]s, and a reused exchange or subquery holds its
+  * target outside its children; the bind follows both, so
+  * `... WHERE x > (SELECT avg(y) FROM t WHERE z = $1)` binds like any other
+  * placeholder, and a shared exchange or subquery binds once per execute.
   */
 object Params {
 
@@ -57,93 +54,82 @@ object Params {
           s"Placeholder '$id' expects ${dt.catalogString}, got ${v.getClass.getName} ($v)", e)
     }
 
-  /** Bind a cached physical plan: clone-and-substitute every placeholder with
-    * a literal, recursing into subquery plans and reused exchanges. Fails,
-    * naming the placeholder, if a referenced placeholder has no value.
+  /** Bind a cached physical plan: a new instance of every node, with every
+    * placeholder substituted by its value, in the plan, its subquery plans
+    * and its reused exchanges' targets. Fails, naming the placeholder, if a
+    * referenced placeholder has no value.
     */
-  def bind(plan: SparkPlan, params: Map[String, Any]): SparkPlan = {
-    // identity cache: a subquery instance shared through ReusedSubqueryExec
-    // binds to ONE new instance, so subquery reuse survives the clone and
-    // the subquery still executes once per run
-    val (bound, rebound) =
-      bindChecked(plan, params, new IdentityHashMap[BaseSubqueryExec, BaseSubqueryExec])
-    // deep-clone: transform is copy-on-write, so unchanged subtrees would be
-    // SHARED between concurrent bound plans — and whole-stage codegen
-    // mutates a `parent` pointer on child nodes during produce/consume,
-    // which cross-contaminates concurrently generated spans. A full clone
-    // gives every execution a private tree (cheap: pure driver-side copy).
-    val cloned = bound.clone()
-    if (rebound) reuseExchanges(cloned) else cloned
-  }
+  def bind(plan: SparkPlan, params: Map[String, Any]): SparkPlan = new Binder(params)(plan)
 
-  /** `plan` with each reused exchange pointed at the exchange of `plan`
-    * it reuses (the one canonically equal to its own bound target), so the
-    * reused side runs once per execute, as in the literal SQL, and never
-    * across executes (`plan` is this execute's private clone). A target
-    * that itself holds a reused exchange is rebuilt by the swaps below, so
-    * its reusers keep their own bound copy rather than an outdated instance
-    * that shares nodes with the rebuilt one; so does a reused exchange
-    * whose exchange sits in a subquery.
+  /** One bind: every node of the frozen plan is copied, never shared, since
+    * codegen `parent` pointers, scan input partitions, subquery result
+    * futures and metrics are per-instance state that an execute mutates or
+    * fills. Each exchange and subquery plan is bound once, through an
+    * identity memo, so a reused exchange or subquery points at the one copy
+    * its target got in this bind: it runs once per execute, as in the
+    * literal SQL, and never replays an earlier execute's result.
     */
-  private def reuseExchanges(plan: SparkPlan): SparkPlan = {
-    val exchanges = plan.collect {
-      case e: Exchange if !e.exists(_.isInstanceOf[ReusedExchangeExec]) => e
-    }
-    plan
-      .transformUp {
-        case r: ReusedExchangeExec =>
-          exchanges.find(_.canonicalized == r.child.canonicalized)
-            .fold[SparkPlan](r)(ReboundExchange(r.output, _))
-      }
-      .transformUp { case ReboundExchange(output, child) => ReusedExchangeExec(output, child) }
-  }
+  private final class Binder(params: Map[String, Any]) {
+    private val memo = new IdentityHashMap[SparkPlan, SparkPlan]
 
-  /** The bound plan, and whether it holds a rebound subquery or reused
-    * exchange.
-    */
-  private def bindChecked(
-      plan: SparkPlan,
-      params: Map[String, Any],
-      cache: IdentityHashMap[BaseSubqueryExec, BaseSubqueryExec]): (SparkPlan, Boolean) = {
-    val placeholderRule: PartialFunction[Expression, Expression] = {
+    private val placeholderRule: PartialFunction[Expression, Expression] = {
       case ParamPlaceholder(id, dt) =>
         // BoundParam (not Literal) so every execution of the statement hits
         // the generated-code cache — a Literal would inline the value into
         // the source and force a janino recompile per execute
         BoundParam(id, dt, literal(id, dt, params.getOrElse(id, missing(id))).value)
     }
-    var rebound = false
-    val exprRule = placeholderRule.orElse[Expression, Expression] {
+
+    private val expressionRule = placeholderRule.orElse[Expression, Expression] {
       case sub: ExecSubqueryExpression =>
-        // a fresh subquery plan on every execute, placeholder or not: its
-        // result future and its scans' input partitions are per-instance
-        // state, so a shared instance would replay the first execute's
-        // result over data that has since changed
-        rebound = true
-        Rebound(sub.withNewPlan(bindSubquery(sub.plan, params, cache)))
+        Rebound(sub.withNewPlan(apply(sub.plan).asInstanceOf[BaseSubqueryExec]))
     }
-    val bound = plan.transformUp {
-      // a reused exchange is a leaf whose referenced exchange is NOT in
-      // `children`, so the final clone does not reach it: bind and clone
-      // its target on every execute, like a subquery (the reused side is
-      // recomputed, not shared with the first execute)
-      case r: ReusedExchangeExec =>
-        rebound = true
-        ReboundExchange(r.output,
-          bindChecked(r.child, params, cache)._1.clone().asInstanceOf[Exchange])
+
+    def apply(plan: SparkPlan): SparkPlan = plan match {
+      case _: Exchange | _: BaseSubqueryExec =>
+        Option(memo.get(plan)).getOrElse {
+          val bound = copy(plan)
+          memo.put(plan, bound)
+          bound
+        }
+      case _ => copy(plan)
+    }
+
+    private def copy(plan: SparkPlan): SparkPlan = plan match {
+      // reuse nodes are leaves whose target is not among their children
+      case r: ReusedExchangeExec => r.copy(child = apply(r.child).asInstanceOf[Exchange])
+      case r: ReusedSubqueryExec => r.copy(child = apply(r.child).asInstanceOf[BaseSubqueryExec])
+      case leaf if leaf.children.isEmpty => expressions(leaf.clone())
+      case node =>
+        // makeCopy, not withNewChildren: that keeps a node whose new
+        // children equal its old ones, and a bound child equals its frozen one
+        def isChild(a: Any) = a match {
+          case c: SparkPlan => node.containsChild(c)
+          case _ => false
+        }
+        expressions(node.makeCopy(node.productIterator.map[AnyRef] {
+          case c: SparkPlan if isChild(c) => apply(c)
+          case cs: Seq[_] if cs.nonEmpty && cs.forall(isChild) =>
+            cs.map(c => apply(c.asInstanceOf[SparkPlan]))
+          case arg => arg.asInstanceOf[AnyRef]
+        }.toArray))
+    }
+
+    /** `node` (already a copy) with its placeholders bound and each subquery
+      * plan it holds bound through the memo.
+      */
+    private def expressions(node: SparkPlan): SparkPlan = {
       // broadcast key expressions live in the mode, outside `expressions`,
       // so a placeholder in a broadcast-side join key needs its own rewrite
-      case bc: BroadcastExchangeExec =>
-        bc.mode match {
-          case m @ HashedRelationBroadcastMode(keys, _) if keys.exists(containsPlaceholder) =>
-            bc.copy(mode = m.copy(key = keys.map(_.transform(placeholderRule))))
-          case _ => bc
-        }
-    }.transformAllExpressions(exprRule)
-    if (!rebound) (bound, false)
-    else (bound
-      .transformUp { case ReboundExchange(output, child) => ReusedExchangeExec(output, child) }
-      .transformAllExpressions { case Rebound(sub) => sub }, true)
+      val keyed = node match {
+        case bc @ BroadcastExchangeExec(m @ HashedRelationBroadcastMode(keys, _), _)
+            if keys.exists(containsPlaceholder) =>
+          bc.copy(mode = m.copy(key = keys.map(_.transform(placeholderRule))))
+        case other => other
+      }
+      val bound = keyed.transformExpressions(expressionRule)
+      if (bound eq keyed) bound else bound.transformExpressions { case Rebound(sub) => sub }
+    }
   }
 
   /** A rebound subquery on its way into the plan. Catalyst's transforms keep
@@ -154,31 +140,6 @@ object Params {
   private case class Rebound(sub: ExecSubqueryExpression) extends LeafExpression with Unevaluable {
     override def dataType: DataType = sub.dataType
     override def nullable: Boolean = sub.nullable
-  }
-
-  /** The same for a reused exchange with a rebound or shared target. */
-  private case class ReboundExchange(output: Seq[Attribute], child: Exchange)
-      extends LeafExecNode {
-    override protected def doExecute(): RDD[InternalRow] =
-      throw new IllegalStateException("a rebound exchange is replaced before it runs")
-  }
-
-  private def bindSubquery(
-      p: BaseSubqueryExec,
-      params: Map[String, Any],
-      cache: IdentityHashMap[BaseSubqueryExec, BaseSubqueryExec]): BaseSubqueryExec = {
-    val cached = cache.get(p)
-    if (cached != null) cached
-    else {
-      val bound = p match {
-        case r: ReusedSubqueryExec => ReusedSubqueryExec(bindSubquery(r.child, params, cache))
-        case other =>
-          // same sharing hazard as the top-level plan: private tree per bind
-          bindChecked(other, params, cache)._1.clone().asInstanceOf[BaseSubqueryExec]
-      }
-      cache.put(p, bound)
-      bound
-    }
   }
 
   /** Assert no placeholder remains (used by DynamicFilterExec before run). */

@@ -7,15 +7,15 @@ import org.apache.spark.sql.graft.Internals
 
 /** A prepared statement: SQL parsed, analyzed, optimized, and physically
   * planned exactly once; `execute(params)` re-binds placeholder values into a
-  * clone of the cached physical plan and runs it, skipping the entire
+  * copy of the cached physical plan and runs it, skipping the entire
   * Catalyst pipeline on the hot path.
   *
   * Engine-neutral equivalent of the reference's `ParameterizedStatement`
   * (`src/parameterized_statement.rs:12-163`), with two deliberate design
   * changes (SURVEY.md §7):
   *
-  *   - Binding is a pure clone-and-substitute on the driver
-  *     (`transformAllExpressions`), not an update of a shared mutable filter
+  *   - Binding is a pure copy-and-substitute on the driver
+  *     ([[Params.bind]]), not an update of a shared mutable filter
   *     expression — so concurrent executes and multi-partition plans are
   *     safe (the reference requires `target_partitions = 1`, README.md:56).
   *   - No UDF snapshotting side channel: Spark function expressions live
@@ -34,7 +34,7 @@ class PreparedStatement(
     val output: Seq[Attribute]) {
 
   /** Bind `params` and return a lazy DataFrame over the bound plan. No
-    * Catalyst work here — one cheap plan-tree clone of the cached physical
+    * Catalyst work here — one cheap plan-tree copy of the cached physical
     * plan, then straight to execution when an action runs.
     */
   def execute(params: Map[String, Any] = Map.empty): DataFrame =

@@ -1,12 +1,16 @@
 package graft.prepared
 
+import java.util.IdentityHashMap
+
 import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression, PredicateHelper}
+import org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION
 import org.apache.spark.sql.execution.{
-  ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SparkPlan,
-  WholeStageCodegenExec}
+  BaseSubqueryExec, ColumnarToRowExec, ExecSubqueryExpression, FileSourceScanExec, FilterExec,
+  InputAdapter, ProjectExec, ReusedSubqueryExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.graft.Internals
 
 import graft.plans.DynamicFilterExec
@@ -35,8 +39,13 @@ object ScanRebind extends PredicateHelper {
     * aggregate, a join, an expand, a generate or a limit, the rows a scan
     * drops would change the rows the filter keeps (their row numbers, their
     * outer-join partners), so nothing is pushed past such a node.
+    *
+    * Subquery plans are pushed into like the main plan. Each exchange and
+    * subquery plan is rebuilt once, so a reuse of it points at the same
+    * rebuilt copy as the plan it reuses, and runs once per execute.
     */
-  def rebind(bound: SparkPlan): SparkPlan = push(bound, Nil)
+  def rebind(bound: SparkPlan): SparkPlan =
+    push(bound, Nil, new IdentityHashMap[SparkPlan, SparkPlan])
 
   /** `plan` is deterministic and passes each input row through on its own:
     * dropping a row that the filters above it would drop leaves the other
@@ -52,7 +61,25 @@ object ScanRebind extends PredicateHelper {
   /** `plan` with `conjuncts`, the bound conjuncts of the dynamic filters
     * above it, pushed into its scans.
     */
-  private def push(plan: SparkPlan, conjuncts: Seq[Expression]): SparkPlan = {
+  private def push(
+      plan: SparkPlan,
+      conjuncts: Seq[Expression],
+      rebuilt: IdentityHashMap[SparkPlan, SparkPlan]): SparkPlan = plan match {
+    // no conjunct passes an exchange or enters a subquery plan, so each is
+    // rebuilt once, wherever it is reached
+    case _: Exchange | _: BaseSubqueryExec =>
+      Option(rebuilt.get(plan)).getOrElse {
+        val copy = pushNode(plan, Nil, rebuilt)
+        rebuilt.put(plan, copy)
+        copy
+      }
+    case _ => pushNode(plan, conjuncts, rebuilt)
+  }
+
+  private def pushNode(
+      plan: SparkPlan,
+      conjuncts: Seq[Expression],
+      rebuilt: IdentityHashMap[SparkPlan, SparkPlan]): SparkPlan = {
     // the conjuncts a scan over `output` can use and does not hold yet
     def newConjuncts(output: AttributeSet, held: Seq[Expression]): Seq[Expression] =
       conjuncts.filter(c => c.references.subsetOf(output) && !held.exists(_.semanticEquals(c)))
@@ -102,6 +129,12 @@ object ScanRebind extends PredicateHelper {
               dataFilters = ps.dataFilters ++ applicable)), b)
           case _ => b
         }
+      case r: ReusedExchangeExec =>
+        val target = push(r.child, Nil, rebuilt)
+        if (target eq r.child) r else r.copy(child = target.asInstanceOf[Exchange])
+      case r: ReusedSubqueryExec =>
+        val target = push(r.child, Nil, rebuilt)
+        if (target eq r.child) r else r.copy(child = target.asInstanceOf[BaseSubqueryExec])
       case _ =>
         // Conjuncts of every (now concrete) dynamic filter. The scans'
         // filter translation and batch pruning only understand Literal, so
@@ -115,7 +148,11 @@ object ScanRebind extends PredicateHelper {
           case _ if passesRows(plan) => conjuncts
           case _                     => Nil
         }
-        plan.mapChildren(push(_, below))
+        plan.mapChildren(push(_, below, rebuilt))
+          .transformExpressionsWithPruning(_.containsPattern(PLAN_EXPRESSION)) {
+            case sub: ExecSubqueryExpression =>
+              sub.withNewPlan(push(sub.plan, Nil, rebuilt).asInstanceOf[BaseSubqueryExec])
+          }
     }
   }
 

@@ -3,11 +3,10 @@ package org.apache.spark.sql.graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.SparkEnv
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
@@ -69,21 +68,13 @@ object Internals {
     new classic.Dataset[Row](qe, ExpressionEncoder(qe.analyzed.schema))
   }
 
-  /** Wrap the output RDD of an executed physical plan as a DataFrame.
-    * The rows are UnsafeRows produced by a Spark plan, which is exactly what
+  /** Execute a bound physical plan lazily, returning a DataFrame over its
+    * output RDD. No job runs until an action is invoked on the result. The
+    * rows are UnsafeRows produced by a Spark plan, which is exactly what
     * [[LogicalRDD]] expects.
     */
-  def dfFromInternalRDD(
-      spark: SparkSession,
-      output: Seq[Attribute],
-      rdd: RDD[InternalRow]): DataFrame =
-    ofRows(spark, LogicalRDD(output, rdd)(classicSession(spark)))
-
-  /** Execute a bound physical plan lazily, returning a DataFrame over its
-    * output RDD. No job runs until an action is invoked on the result.
-    */
-  def dfFromPhysical(spark: SparkSession, plan: SparkPlan): DataFrame =
-    dfFromInternalRDD(spark, plan.output, withoutDroppedCaches(plan).execute())
+  def dfFromPhysical(spark: SparkSession, plan: SparkPlan): DataFrame = ofRows(spark,
+    LogicalRDD(plan.output, withoutDroppedCaches(plan).execute())(classicSession(spark)))
 
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
     classicSession(spark).sessionState.sqlParser.parsePlan(sql)

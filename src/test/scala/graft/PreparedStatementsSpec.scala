@@ -280,17 +280,23 @@ class PreparedStatementsSpec extends SparkTestBase {
     val cached = df.repartition(3).cache()
     cached.count()
     cached.createOrReplaceTempView("cc_cached")
-    val sqls = Seq("cc_keyed", "cc_parquet", "cc_cached", "cc_wide").map { v =>
-      if (v == "cc_wide") s"SELECT k, name FROM $v WHERE k % 100000 = "
-      else s"SELECT k, name FROM $v WHERE k = "
-    }
+    // the fifth reuses one aggregate's exchange in a self-join and holds a
+    // scalar subquery, so concurrent binds copy the same frozen reuse
+    // target and subquery plan
+    val agg = "SELECT k, count(*) c FROM cc_cached GROUP BY k"
+    val sqls = Seq("cc_keyed", "cc_parquet", "cc_cached").map { v =>
+      s"SELECT k, name FROM $v WHERE k = $$1"
+    } ++ Seq(
+      "SELECT k, name FROM cc_wide WHERE k % 100000 = $1",
+      s"SELECT a.k, a.c, b.c FROM ($agg) a JOIN ($agg) b ON a.k = b.k " +
+        s"WHERE a.k = $$1 AND a.c <= (SELECT max(c) FROM ($agg) m)")
     val statements = sqls.map { sql =>
-      PreparedStatements.prepare(spark, sql + "$1", Map("$1" -> LongType))
+      PreparedStatements.prepare(spark, sql, Map("$1" -> LongType))
     }
     // present, absent and negative keys
     val keys = (0 until 40).map(i => i * 53L - 60L)
     val literal = (for (sql <- sqls; k <- keys) yield (sql, k) ->
-      spark.sql(sql + k).collect().map(_.toString).sorted.toSeq).toMap
+      spark.sql(sql.replace("$1", k.toString)).collect().map(_.toString).sorted.toSeq).toMap
     val mismatches = new ConcurrentLinkedQueue[String]()
     val pool = Executors.newFixedThreadPool(16)
     try {
@@ -298,10 +304,10 @@ class PreparedStatementsSpec extends SparkTestBase {
         pool.submit(new Runnable {
           def run(): Unit = {
             val rnd = new scala.util.Random(t)
-            // the job-path statement scans 193k rows per execute: a tenth
-            // of the rounds run it
-            for (round <- 0 until 100; (sql, st) <- sqls.zip(statements)
-                 if round % 10 == 0 || !sql.contains("cc_wide")) {
+            // the job-path statements (193k rows scanned, or three
+            // aggregates) run in a tenth of the rounds
+            for (round <- 0 until 100; ((sql, st), i) <- sqls.zip(statements).zipWithIndex
+                 if round % 10 == 0 || i < 3) {
               val k = keys(rnd.nextInt(keys.length))
               val got = st.executeCollect(Map("$1" -> k)).map(_.toString).sorted.toSeq
               if (got != literal((sql, k))) mismatches.add(s"$sql$k: $got")
@@ -317,7 +323,7 @@ class PreparedStatementsSpec extends SparkTestBase {
         org.apache.spark.sql.graft.Internals.collectPhysical(plan)
         plan.collectFirst { case d: DynamicFilterExec => d.metrics("driverTier").value }.get
       }
-      tiers shouldBe Seq(1L, 1L, 1L, 0L)
+      tiers shouldBe Seq(1L, 1L, 1L, 0L, 0L)
     } finally {
       pool.shutdown()
       graft.sources.KeyedMemTables.unregister(spark, "cc_keyed")
@@ -344,8 +350,8 @@ class PreparedStatementsSpec extends SparkTestBase {
     st.execute(Map("$1" -> 2)).collect() shouldBe empty
   }
 
-  // the same for the target of a reused exchange, which the bound plan's
-  // clone does not reach: it is recomputed on every execute
+  // the same for the target of a reused exchange: every execute binds a
+  // fresh copy of it, shared by the exchange and its reuse
   test("a reused exchange sees rows registered after the first execute") {
     import spark.implicits._
     def register(rows: Seq[(Int, String)]): Unit =
@@ -373,40 +379,64 @@ class PreparedStatementsSpec extends SparkTestBase {
   }
 
   // the reused side runs once per execute, as in the literal SQL planned
-  // without AQE: the reused exchange points at the bound tree's own
-  // exchange, not at a second bound copy of it
+  // without AQE: a reused exchange points at the one bound copy of its
+  // target, also when the target holds a reuse itself or the reuse crosses
+  // into a subquery
   test("a reused exchange runs once per execute, as in the literal SQL") {
     import spark.implicits._
-    def register(rows: Seq[(Int, String)]): Unit =
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def register(rows: Seq[(Long, String)]): Unit =
       graft.sources.KeyedMemTables.register(spark, "rx_t", rows.toDF("k", "s"), "k")
-    register(Seq((1, "a")))
-    val sql = "SELECT a.k, a.c, b.c FROM (SELECT k, count(*) c FROM rx_t GROUP BY k) a " +
-      "JOIN (SELECT k, count(*) c FROM rx_t GROUP BY k) b ON a.k = b.k WHERE a.c >= $1"
-    val st = PreparedStatements.prepare(spark, sql, Map("$1" -> LongType))
-    // planned (lazily, once) while AQE is off; the collect below runs it
-    val literal = spark.sql(sql.replace("$1", "1"))
-    withAqe(enabled = false)(literal.queryExecution.executedPlan).collectFirst {
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => r
-    } shouldBe defined
-    val (literalRows, literalStages) = stagesRun(literal.collect())
-    literalRows shouldBe Array(Row(1, 1L, 1L))
-    stagesRun(st.executeCollect(Map("$1" -> 1L))) match {
-      case (rows, stages) =>
-        rows shouldBe Array(Row(1, 1L, 1L))
-        stages shouldBe literalStages
-    }
-    // still never shared across executes
-    register(Seq((1, "a"), (1, "b")))
-    stagesRun(st.executeCollect(Map("$1" -> 1L))) match {
-      case (rows, stages) =>
-        rows shouldBe Array(Row(1, 2L, 2L))
-        stages shouldBe literalStages
+    val agg = "SELECT k, count(*) c FROM rx_t GROUP BY k"
+    val lookup = "SELECT k, count(*) c FROM rx_t WHERE k = $1 GROUP BY k"
+    // each statement with its rows before and after a row is appended
+    val cases = Seq(
+      (s"SELECT a.k, a.c, b.c FROM ($agg) a JOIN ($agg) b ON a.k = b.k WHERE a.c >= $$1",
+        "[1,1,1]", "[1,2,2]"),
+      // the shuffle over a self-join of one aggregate, joined to itself
+      (s"WITH a AS ($agg), b AS (SELECT a1.c + a2.c AS s FROM a a1 JOIN a a2 ON a1.k = a2.k), " +
+        "g AS (SELECT s, count(*) n FROM b GROUP BY s) " +
+        "SELECT g1.s, g1.n, g2.n FROM g g1 JOIN g g2 ON g1.s = g2.s WHERE g1.n >= $1",
+        "[2,1,1]", "[4,1,1]"),
+      // one aggregate inside and outside a scalar subquery
+      (s"SELECT k, c FROM ($agg) a WHERE c >= $$1 AND c <= (SELECT max(c) FROM ($agg) m)",
+        "[1,1]", "[1,2]"),
+      // a key lookup below the reused exchange: the scan re-push rebuilds
+      // the exchange, and each reuse must follow it, also from a subquery
+      (s"SELECT a.k, a.c, b.c FROM ($agg) a JOIN ($agg) b ON a.k = b.k WHERE a.k = $$1",
+        "[1,1,1]", "[1,2,2]"),
+      (s"SELECT k, c FROM ($lookup) a WHERE c <= (SELECT max(c) FROM ($lookup) m)",
+        "[1,1]", "[1,2]"))
+    cases.foreach { case (sql, before, after) =>
+      withClue(sql) {
+        register(Seq((1L, "a")))
+        val st = PreparedStatements.prepare(spark, sql, Map("$1" -> LongType))
+        // planned (lazily, once) while AQE is off; the collect runs it
+        def literal(): (Seq[String], Int) = {
+          val df = spark.sql(sql.replace("$1", "1"))
+          withAqe(enabled = false)(df.queryExecution.executedPlan).collectWithSubqueries {
+            case r: ReusedExchangeExec => r
+          } should not be empty
+          stagesRun(df.collect().map(_.toString).sorted.toSeq)
+        }
+        def prepared(): (Seq[String], Int) =
+          stagesRun(st.executeCollect(Map("$1" -> 1L)).map(_.toString).sorted.toSeq)
+        // the second execute reads the appended row: nothing is shared
+        // across executes
+        Seq(before -> Seq((1L, "a")), after -> Seq((1L, "a"), (1L, "b"))).foreach {
+          case (rows, table) =>
+            register(table)
+            val expected = literal()
+            expected._1 shouldBe Seq(rows)
+            prepared() shouldBe expected
+        }
+      }
     }
   }
 
   // a reused exchange whose target holds a reused exchange itself (the
-  // shuffle over a self-join of one aggregate) keeps its own bound copy of
-  // that target, and the plan still runs with every reuse in place
+  // shuffle over a self-join of one aggregate) binds with every reuse in
+  // place, and each execute reads the rows registered by then
   test("a nested reused exchange returns the literal SQL's rows on every execute") {
     import spark.implicits._
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
