@@ -102,27 +102,14 @@ case class DynamicFilterExec(condition: Expression, child: SparkPlan)
 
   // the reference exec carries an ExecutionPlanMetricsSet (physical.rs:27,
   // :266-268); numOutputRows accumulates from tasks, bindTime is set
-  // driver-side by the prepared-statement bind (PreparedStatement.execute)
-  // and posted to the SQL listener when execution starts, so both surface
-  // in the Spark UI next to the exec; driverTier is set driver-side to 1
-  // when graft.prepared.DriverTier answered the execute without a job
+  // driver-side by the prepared-statement bind (PreparedStatement.boundPlan)
+  // and read from the node: a prepared plan runs outside any SQL execution,
+  // so no listener sees it; driverTier is set driver-side to 1 when
+  // graft.prepared.DriverTier answered the execute without a job
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
     "bindTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "time to bind parameters"),
     "driverTier" -> SQLMetrics.createMetric(sparkContext, "answered on the driver"))
-
-  /** Driver-set metrics (bindTime) only reach the UI through an explicit
-    * driver-accum post inside the execution scope — the
-    * BroadcastExchangeExec pattern. No-op outside an execution (e.g. a bare
-    * `plan.execute()` with no action yet).
-    */
-  private def postDriverMetrics(): Unit = {
-    val executionId =
-      sparkContext.getLocalProperty(org.apache.spark.sql.execution.SQLExecution.EXECUTION_ID_KEY)
-    if (executionId != null && metrics("bindTime").value > 0) {
-      SQLMetrics.postDriverMetricUpdates(sparkContext, executionId, metrics("bindTime") :: Nil)
-    }
-  }
 
   // Whole-stage codegen participation: the bound predicate compiles into the
   // surrounding span (BoundParam keeps the generated source binding-
@@ -131,10 +118,8 @@ case class DynamicFilterExec(condition: Expression, child: SparkPlan)
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     child.asInstanceOf[CodegenSupport].inputRDDs()
 
-  override protected def doProduce(ctx: CodegenContext): String = {
-    postDriverMetrics()
+  override protected def doProduce(ctx: CodegenContext): String =
     child.asInstanceOf[CodegenSupport].produce(ctx, this)
-  }
 
   override def doConsume(ctx: CodegenContext, input: Seq[ExprCode], row: ExprCode): String = {
     Params.requireBound(condition)
@@ -153,7 +138,6 @@ case class DynamicFilterExec(condition: Expression, child: SparkPlan)
 
   override protected def doExecute(): RDD[InternalRow] = {
     Params.requireBound(condition)
-    postDriverMetrics()
     val numOutputRows = longMetric("numOutputRows")
     val cond = condition
     val childOutput = child.output

@@ -4,19 +4,23 @@ import java.util.IdentityHashMap
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, Literal, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{
+  Expression, LeafExpression, Literal, PredicateHelper, Unevaluable}
 import org.apache.spark.sql.execution.{
   BaseSubqueryExec, ExecSubqueryExpression, ReusedSubqueryExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
 import org.apache.spark.sql.types.DataType
 
+import graft.plans.DynamicFilterExec
+
 /** Placeholder detection and substitution (engine-neutral equivalent of the
   * reference's `replace_placeholders`, `src/param_resolver.rs:77-100`, and
   * `contains_placeholder`, `src/rule.rs:16-30`).
   *
   * Substitution copies the frozen plan once per execute into a private
-  * bound plan — there is no shared mutable filter expression and therefore
+  * bound plan, pushing the bound conjuncts into its scans in the same walk
+  * — there is no shared mutable filter expression and therefore
   * no single-partition restriction (the reference needs
   * `target_partitions=1`, its `README.md:56`; this design does not).
   *
@@ -56,10 +60,11 @@ object Params {
 
   /** Bind a cached physical plan: a new instance of every node, with every
     * placeholder substituted by its value, in the plan, its subquery plans
-    * and its reused exchanges' targets. Fails, naming the placeholder, if a
-    * referenced placeholder has no value.
+    * and its reused exchanges' targets, and with the bound conjuncts of each
+    * dynamic filter pushed into the scans below it ([[ScanRebind.push]]).
+    * Fails, naming the placeholder, if a referenced placeholder has no value.
     */
-  def bind(plan: SparkPlan, params: Map[String, Any]): SparkPlan = new Binder(params)(plan)
+  def bind(plan: SparkPlan, params: Map[String, Any]): SparkPlan = new Binder(params)(plan, Nil)
 
   /** One bind: every node of the frozen plan is copied, never shared, since
     * codegen `parent` pointers, scan input partitions, subquery result
@@ -68,8 +73,14 @@ object Params {
     * identity memo, so a reused exchange or subquery points at the one copy
     * its target got in this bind: it runs once per execute, as in the
     * literal SQL, and never replays an earlier execute's result.
+    *
+    * The same walk pushes: the bound conjuncts of the dynamic filters above
+    * a node travel down through row-preserving nodes
+    * ([[ScanRebind.passesRows]]) to each copied leaf. No conjunct passes an
+    * exchange or enters a subquery plan, so the memo's copy serves every
+    * path that reaches it.
     */
-  private final class Binder(params: Map[String, Any]) {
+  private final class Binder(params: Map[String, Any]) extends PredicateHelper {
     private val memo = new IdentityHashMap[SparkPlan, SparkPlan]
 
     private val placeholderRule: PartialFunction[Expression, Expression] = {
@@ -82,25 +93,38 @@ object Params {
 
     private val expressionRule = placeholderRule.orElse[Expression, Expression] {
       case sub: ExecSubqueryExpression =>
-        Rebound(sub.withNewPlan(apply(sub.plan).asInstanceOf[BaseSubqueryExec]))
+        Rebound(sub.withNewPlan(apply(sub.plan, Nil).asInstanceOf[BaseSubqueryExec]))
     }
 
-    def apply(plan: SparkPlan): SparkPlan = plan match {
+    def apply(plan: SparkPlan, conjuncts: Seq[Expression]): SparkPlan = plan match {
       case _: Exchange | _: BaseSubqueryExec =>
         Option(memo.get(plan)).getOrElse {
-          val bound = copy(plan)
+          val bound = copy(plan, Nil)
           memo.put(plan, bound)
           bound
         }
-      case _ => copy(plan)
+      case _ => copy(plan, conjuncts)
     }
 
-    private def copy(plan: SparkPlan): SparkPlan = plan match {
+    private def copy(plan: SparkPlan, conjuncts: Seq[Expression]): SparkPlan = plan match {
       // reuse nodes are leaves whose target is not among their children
-      case r: ReusedExchangeExec => r.copy(child = apply(r.child).asInstanceOf[Exchange])
-      case r: ReusedSubqueryExec => r.copy(child = apply(r.child).asInstanceOf[BaseSubqueryExec])
-      case leaf if leaf.children.isEmpty => expressions(leaf.clone())
+      case r: ReusedExchangeExec => r.copy(child = apply(r.child, Nil).asInstanceOf[Exchange])
+      case r: ReusedSubqueryExec => r.copy(child = apply(r.child, Nil).asInstanceOf[BaseSubqueryExec])
+      case leaf if leaf.children.isEmpty => ScanRebind.push(expressions(leaf.clone()), conjuncts)
+      // the condition binds first, so the conjuncts pushed below hold this
+      // bind's subquery copies; the scans' filter translation and batch
+      // pruning only understand Literal, so bound values travel down as
+      // PushedParam literals, which still keep them out of generated source
+      case d: DynamicFilterExec =>
+        val condition = bindExpression(d.condition)
+        val below =
+          if (!ScanRebind.passesRows(d)) Nil
+          else conjuncts ++ splitConjunctivePredicates(condition).map(_.transform {
+            case BoundParam(_, dt, v) => new PushedParam(v, dt)
+          })
+        d.makeCopy(Array(condition, apply(d.child, below)))
       case node =>
+        val below = if (conjuncts.nonEmpty && ScanRebind.passesRows(node)) conjuncts else Nil
         // makeCopy, not withNewChildren: that keeps a node whose new
         // children equal its old ones, and a bound child equals its frozen one
         def isChild(a: Any) = a match {
@@ -108,9 +132,9 @@ object Params {
           case _ => false
         }
         expressions(node.makeCopy(node.productIterator.map[AnyRef] {
-          case c: SparkPlan if isChild(c) => apply(c)
+          case c: SparkPlan if isChild(c) => apply(c, below)
           case cs: Seq[_] if cs.nonEmpty && cs.forall(isChild) =>
-            cs.map(c => apply(c.asInstanceOf[SparkPlan]))
+            cs.map(c => apply(c.asInstanceOf[SparkPlan], below))
           case arg => arg.asInstanceOf[AnyRef]
         }.toArray))
     }
@@ -129,6 +153,11 @@ object Params {
       }
       val bound = keyed.transformExpressions(expressionRule)
       if (bound eq keyed) bound else bound.transformExpressions { case Rebound(sub) => sub }
+    }
+
+    private def bindExpression(e: Expression): Expression = {
+      val bound = e.transform(expressionRule)
+      if (bound eq e) bound else bound.transform { case Rebound(sub) => sub }
     }
   }
 

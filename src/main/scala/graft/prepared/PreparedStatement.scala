@@ -21,11 +21,11 @@ import org.apache.spark.sql.graft.Internals
   *   - No UDF snapshotting side channel: Spark function expressions live
   *     directly in the cached plan tree.
   *
-  * Scan pruning parity: after binding, conjuncts of any dynamic filter are
-  * re-pushed into descendant parquet, cached and keyed scans
-  * (`ScanRebind`), so row-group and batch pruning see the concrete values —
-  * the moral equivalent of the reference's `DynamicFilterPhysicalExpr.update`
-  * pushdown (`src/physical.rs:240-264`).
+  * Scan pruning parity: the bind pushes the bound conjuncts of each dynamic
+  * filter into the parquet, cached and keyed scans below it, in the same
+  * walk (`ScanRebind.push`), so row-group and batch pruning see the concrete
+  * values — the moral equivalent of the reference's
+  * `DynamicFilterPhysicalExpr.update` pushdown (`src/physical.rs:240-264`).
   */
 class PreparedStatement(
     val spark: SparkSession,
@@ -40,24 +40,21 @@ class PreparedStatement(
   def execute(params: Map[String, Any] = Map.empty): DataFrame =
     Internals.dfFromPhysical(spark, boundPlan(params))
 
-  /** Bind + re-push scan predicates, stamping the measured bind time onto
-    * every [[graft.plans.DynamicFilterExec]]'s `bindTime` SQLMetric (set
-    * AFTER the rebind — a rebind that copies the exec would re-create its
-    * metric accumulators and lose an earlier stamp). The exec posts the
-    * value to the SQL listener when execution starts. Public: the returned
-    * tree is the statement's per-execution plan, the inspection point for
-    * metrics and plan-shape assertions.
+  /** Bind, stamping the measured bind time onto every
+    * [[graft.plans.DynamicFilterExec]]'s `bindTime` SQLMetric, where a
+    * caller reads it from the node. Public: the returned tree is the
+    * statement's per-execution plan, the inspection point for metrics and
+    * plan-shape assertions.
     */
   def boundPlan(params: Map[String, Any]): SparkPlan = {
     val start = System.nanoTime()
     val bound = Params.bind(physicalPlan, params)
-    val pruned = ScanRebind.rebind(bound)
     val elapsed = System.nanoTime() - start
-    pruned.foreach {
+    bound.foreach {
       case d: graft.plans.DynamicFilterExec => d.longMetric("bindTime").set(elapsed)
       case _ => ()
     }
-    pruned
+    bound
   }
 
   /** Hot-path collect: bind and run the physical plan directly, skipping the

@@ -94,6 +94,17 @@ object PreparedStatements {
       case s: SubqueryExpression => s.withNewPlan(rewriteAll(s.plan)(pf))
     })
 
+  /** Each name's type, where every source of the name agrees on it. The
+    * names are scope-blind (a column of two joined relations, an alias in
+    * two subqueries), so a name typed differently by two sources is dropped
+    * (declare the placeholder via paramTypes) rather than resolved to
+    * whichever source happened to collect last.
+    */
+  private def unambiguous(named: Seq[(String, DataType)]): Map[String, DataType] =
+    named.groupBy(_._1).collect {
+      case (n, ts) if ts.map(_._2).distinct.sizeIs == 1 => (n, ts.head._2)
+    }
+
   /** Infer placeholder types from `col <op> $n` / `col IN ($n,…)` shapes by
     * resolving the sibling column name against the schemas of the referenced
     * temp views / tables. Best-effort; explicit `paramTypes` wins.
@@ -102,12 +113,11 @@ object PreparedStatements {
       spark: SparkSession,
       parsed: LogicalPlan,
       posOrdinals: Map[Int, Int]): Map[String, DataType] = {
-    val colTypes: Map[String, DataType] = withSubqueryPlans(parsed)
+    val colTypes: Map[String, DataType] = unambiguous(withSubqueryPlans(parsed)
       .flatMap(_.collect { case r: UnresolvedRelation => r.name })
       .distinct
       .flatMap(n => Try(spark.table(n).schema).toOption.toSeq.flatMap(_.fields))
-      .map(f => f.name.toLowerCase -> f.dataType)
-      .toMap
+      .map(f => f.name.toLowerCase -> f.dataType))
 
     // aliases over statically-typed children — the reference's
     // rule.rs:110-113 shape filters a projection of LITERAL aliases
@@ -121,18 +131,12 @@ object PreparedStatements {
         case a: UnresolvedAttribute => colTypes.get(a.nameParts.last.toLowerCase)
         case _                      => None
       }
-      val all = withSubqueryPlans(parsed)
+      unambiguous(withSubqueryPlans(parsed)
         .flatMap(_.collect { case p: Project =>
           p.projectList.collect { case al: Alias => al.name.toLowerCase -> staticType(al.child) }
         })
         .flatten
-        .collect { case (n, Some(t)) => (n, t) }
-      // the map is scope-blind; a name aliased to DIFFERENT types in two
-      // subqueries is ambiguous here — drop it (declare via paramTypes)
-      // rather than resolve to whichever scope happened to collect last
-      all.groupBy(_._1).collect {
-        case (n, ts) if ts.map(_._2).distinct.sizeIs == 1 => (n, ts.head._2)
-      }
+        .collect { case (n, Some(t)) => (n, t) })
     }
 
     // Sibling types carry a RANK: schema-anchored sources (table columns,

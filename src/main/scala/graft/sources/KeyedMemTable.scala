@@ -25,9 +25,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Two pushdown paths:
   *   - planning-time ([[KeyedScanBuilder.pushFilters]]) for ordinary SQL,
   *     which ships the matching rows to an executor in a one-task job;
-  *   - execute-time for prepared statements: `ScanRebind` hands the bound
-  *     conjuncts to a fresh [[KeyedScanBuilder]] and swaps the scan it
-  *     builds into the plan, so every `execute(params)` is an index lookup
+  *   - execute-time for prepared statements: the bind (`ScanRebind.push`)
+  *     hands the bound conjuncts to a fresh [[KeyedScanBuilder]] and puts
+  *     the scan it builds into the bound plan, so every `execute(params)` is an index lookup
   *     even though the plan was built with unresolved placeholders.
   *     `executeCollect` then evaluates a narrow project/filter chain over
   *     the keyed scan on the driver with no job at all (`graft.prepared.DriverTier`); a full scan

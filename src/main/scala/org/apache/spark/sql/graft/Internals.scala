@@ -74,7 +74,7 @@ object Internals {
     * [[LogicalRDD]] expects.
     */
   def dfFromPhysical(spark: SparkSession, plan: SparkPlan): DataFrame = ofRows(spark,
-    LogicalRDD(plan.output, withoutDroppedCaches(plan).execute())(classicSession(spark)))
+    LogicalRDD(plan.output, plan.execute())(classicSession(spark)))
 
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
     classicSession(spark).sessionState.sqlParser.parsePlan(sql)
@@ -101,8 +101,8 @@ object Internals {
     * parquet scan whose bound filters leave few rows in the surviving row
     * groups) is evaluated on the driver with no Spark job ([[DriverTier]]
     * states the exact rule); every other plan runs as a job through
-    * `executeCollect()`, reading any cache dropped since the plan was built
-    * from its source ([[withoutDroppedCaches]]).
+    * `executeCollect()`. A bound plan already reads any cache dropped since
+    * `prepare()` from its source ([[droppedCacheSource]]).
     */
   def collectPhysical(plan: SparkPlan): Array[org.apache.spark.sql.Row] = {
     val schema = org.apache.spark.sql.types.StructType(
@@ -110,12 +110,12 @@ object Internals {
     val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(schema)
     val toRow = (r: InternalRow) => conv(r).asInstanceOf[org.apache.spark.sql.Row]
     DriverTier.collect(plan)(toRow)
-      .getOrElse(withoutDroppedCaches(plan).executeCollect().map(toRow))
+      .getOrElse(plan.executeCollect().map(toRow))
   }
 
-  /** `plan` with each scan of a cache that was dropped since the plan was
-    * built replaced by the cache's own source plan. A frozen prepared plan
-    * keeps its `InMemoryRelation` after `uncacheTable`, and scanning it
+  /** The cache's own source plan in place of `scan`, when the cache was
+    * dropped since the plan was built; `None` otherwise. A frozen prepared
+    * plan keeps its `InMemoryRelation` after `uncacheTable`, and scanning it
     * calls `cachedColumnBuffers`, which would rebuild and persist the
     * cleared buffers outside the cache manager. A scan counts as dropped
     * when its buffers are not loaded and the session's cache manager no
@@ -124,25 +124,20 @@ object Internals {
     * row-based scans are replaced: a columnar one feeds a `ColumnarToRowExec`
     * that cannot take rows.
     */
-  private def withoutDroppedCaches(plan: SparkPlan): SparkPlan = {
-    def dropped(scan: InMemoryTableScanExec): Boolean = {
-      val builder = scan.relation.cacheBuilder
-      !builder.isCachedColumnBuffersLoaded && {
-        val session = classicSession(SparkSession.active)
-        !session.sharedState.cacheManager.lookupCachedData(session, builder.logicalPlan)
-          .exists(_.cachedRepresentation.cacheBuilder eq builder)
-      }
+  def droppedCacheSource(scan: InMemoryTableScanExec): Option[SparkPlan] = {
+    val builder = scan.relation.cacheBuilder
+    val dropped = !scan.supportsColumnar && !builder.isCachedColumnBuffersLoaded && {
+      val session = classicSession(SparkSession.active)
+      !session.sharedState.cacheManager.lookupCachedData(session, builder.logicalPlan)
+        .exists(_.cachedRepresentation.cacheBuilder eq builder)
     }
-    // the relation's output maps position for position onto its cached
-    // plan's; the projection keeps the scan's attribute ids for the parents
-    def source(scan: InMemoryTableScanExec): ProjectExec = {
-      val cached = scan.relation.cacheBuilder.cachedPlan.clone()
+    Option.when(dropped) {
+      // the relation's output maps position for position onto its cached
+      // plan's; the projection keeps the scan's attribute ids for the parents
+      val cached = builder.cachedPlan.clone()
       val rows = if (cached.supportsColumnar) ColumnarToRowExec(cached) else cached
       val byId = scan.relation.output.map(_.exprId).zip(rows.output).toMap
       ProjectExec(scan.attributes.map(a => Alias(byId(a.exprId), a.name)(a.exprId)), rows)
-    }
-    plan.transformUp {
-      case scan: InMemoryTableScanExec if !scan.supportsColumnar && dropped(scan) => source(scan)
     }
   }
 

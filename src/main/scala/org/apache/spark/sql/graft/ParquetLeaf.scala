@@ -181,8 +181,8 @@ object ParquetLeaf {
   private val Tag = TreeNodeTag[ParquetLeaf]("graft.parquetLeaf")
 
   /** Gives every eligible scan of a freshly planned statement its driver-read
-    * state. The tag rides every copy the bind and the rebind make of the
-    * scan, so each execute's bound scan finds its statement's state.
+    * state. The tag rides every copy the bind makes of the scan, so each
+    * execute's bound scan finds its statement's state.
     *
     * Eligible: a plain [[ParquetFileFormat]] scan read as columnar batches
     * (the vectorized reader, whose row iterator can be closed), not

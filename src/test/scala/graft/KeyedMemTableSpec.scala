@@ -88,13 +88,13 @@ class KeyedMemTableSpec extends SparkTestBase {
     st.execute(Map("$1" -> 7L)).collect() shouldBe Array(Row(7L, "item_7"))
     st.execute(Map("$1" -> 999L)).collect() shouldBe Array(Row(999L, "item_999"))
 
-    // the rebound scan carries the key; with rebind disabled it scans all
+    // the bound scan carries the key; the frozen one scans all
     val bound = Params.bind(st.physicalPlan, Map("$1" -> 7L))
     val rebound = ScanRebind.rebind(bound)
     val ks = rebound.collectFirst { case b: BatchScanExec => b }.get
       .scan.asInstanceOf[KeyedMemScan]
     ks.keys shouldBe Some(Seq(7L))
-    val unbound = bound.collectFirst { case b: BatchScanExec => b }.get
+    val unbound = st.physicalPlan.collectFirst { case b: BatchScanExec => b }.get
       .scan.asInstanceOf[KeyedMemScan]
     unbound.keys shouldBe None
   }

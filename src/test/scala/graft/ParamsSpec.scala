@@ -150,6 +150,11 @@ class ParamsSpec extends SparkTestBase {
           case r: ReusedExchangeExec => exchanges.exists(_ eq r.child) shouldBe true
           case _ =>
         }
+        // a keyed scan below `a.k = $1` carries the bound key, pushed in the bind
+        nodes(bound, targets = true).collect {
+          case b: BatchScanExec if b.scan.isInstanceOf[KeyedMemScan] =>
+            b.scan.asInstanceOf[KeyedMemScan].keys
+        } should contain(Some(Seq(1L)))
       }
     } finally KeyedMemTables.unregister(spark, "pb_t")
   }

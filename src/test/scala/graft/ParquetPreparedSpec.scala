@@ -7,11 +7,11 @@ import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, Sp
 import org.apache.spark.sql.graft.Internals
 
 import graft.plans.DynamicFilterExec
-import graft.prepared.{Params, PreparedStatements, ScanRebind}
+import graft.prepared.{Params, PreparedStatements, PushedParam, ScanRebind}
 
 /** End-to-end ports of the reference Parquet integration tests
   * (`/root/reference/datafusion-dynamic-filter/tests/preparable_context_parquet_test.rs:86-232`),
-  * plus the execute-time pushdown proof: ScanRebind must make the parquet
+  * plus the execute-time pushdown proof: the bind must make the parquet
   * scan itself skip data, not merely keep results correct.
   */
 class ParquetPreparedSpec extends SparkTestBase {
@@ -58,33 +58,32 @@ class ParquetPreparedSpec extends SparkTestBase {
   }
 
   /** The moral equivalent of parquet_test.rs:86-131's pushdown assertion:
-    * after binding, ScanRebind re-pushes the concrete conjuncts into the
-    * scan's dataFilters, and the scan's own numOutputRows metric shows
-    * row-group pruning actually fired. Fails if `ScanRebind.rebind` is
-    * replaced with identity.
+    * the bind pushes the concrete conjuncts into the scan's dataFilters,
+    * which the frozen scan does not hold, and the scan's own numOutputRows
+    * metric shows row-group pruning actually fired. Fails if the bind stops
+    * pushing.
     */
   test("ScanRebind makes the parquet scan prune") {
     val st = prepare("SELECT id, name FROM pusers WHERE id = $1")
     val total = 200000L
 
-    def scanRows(withRebind: Boolean): (Long, Long) = {
+    def scanRows(): (Long, Long) = {
       val bound = Params.bind(st.physicalPlan, Map("$1" -> 123456L))
-      val plan = if (withRebind) ScanRebind.rebind(bound) else bound
+      val plan = ScanRebind.rebind(bound)
       val df = Internals.dfFromPhysical(spark, plan)
       val n = df.count()
       val scan = plan.collectFirst { case s: FileSourceScanExec => s }.get
       (n, scan.metrics("numOutputRows").value)
     }
 
-    val (hit, prunedRows) = scanRows(withRebind = true)
+    val (hit, prunedRows) = scanRows()
     hit shouldBe 1L
     // with rebind the scan emits only the surviving row group(s)
     prunedRows should be < total / 10
 
-    val (hitNo, fullRows) = scanRows(withRebind = false)
-    hitNo shouldBe 1L
-    // identity rebind: the scan reads everything, the filter runs above it
-    fullRows shouldBe total
+    // the frozen scan holds no bound conjunct: the pruning is the bind's
+    val frozen = st.physicalPlan.collectFirst { case s: FileSourceScanExec => s }.get
+    frozen.dataFilters.exists(_.exists(_.isInstanceOf[PushedParam])) shouldBe false
   }
 
   test("column pruning survives the opaque dynamic-filter node") {

@@ -196,6 +196,21 @@ class PreparedStatementsSpec extends SparkTestBase {
     ex.getMessage should include("Cannot infer the type of placeholder '$1'")
   }
 
+  // the sibling column's name is all inference sees, so a name two joined
+  // relations type differently must not take whichever relation came last
+  test("a column name two relations type differently leaves the placeholder to a declaration") {
+    import spark.implicits._
+    Seq((1, 1)).toDF("id", "k").createOrReplaceTempView("ps_ta")
+    Seq((1, "x")).toDF("id", "k").createOrReplaceTempView("ps_tb")
+    Seq("ps_tb b JOIN ps_ta a", "ps_ta a JOIN ps_tb b").foreach { from =>
+      val sql = s"SELECT b.id FROM $from ON a.id = b.id WHERE b.k = $$1"
+      val ex = intercept[IllegalArgumentException](PreparedStatements.prepare(spark, sql))
+      ex.getMessage should include("Cannot infer the type of placeholder '$1'")
+      PreparedStatements.prepare(spark, sql, Map("$1" -> StringType))
+        .execute(Map("$1" -> "x")).collect() shouldBe Array(Row(1))
+    }
+  }
+
   test("declared paramTypes override inference failure") {
     users
     val st = PreparedStatements.prepare(
